@@ -276,11 +276,14 @@ Datasketches HLL sketches — the mergeable re-aggregation form).
 
 from __future__ import annotations
 
+import contextvars
 import math
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, field, replace
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from azure_kusto_parquet_conv_spark.session import prepare_session
@@ -428,32 +431,32 @@ def _timespan_us_to_text(us: int) -> str:
 # Pratt expression parser → Spark SQL text
 # ----------------------------------------------------------------------
 
-#: percentile()/percentiles() compile mode for the CURRENT query:
-#: "exact" (interpolated fold, oracle-able) or "approx" (GK sketch,
-#: bounded state — Kusto's own semantics). Set per-query by
-#: `set percentile_mode = ...;`, saved/restored by compile().
-_PERCENTILE_MODE = "exact"
+@dataclass
+class _CompileContext:
+    """State of ONE ``KqlCompiler.compile()`` frame on one thread.
 
-#: bin_auto() bin size / anchor for the CURRENT query, as raw KQL
-#: literal text (re-tokenized at the use site so timespan/datetime
-#: literals keep their schema-aware bin handling). Set per-query by
-#: `set query_bin_auto_size = ...;` / `set query_bin_auto_minimum =
-#: ...;` (the real Kusto request properties); saved/restored by
-#: compile().
-_BIN_AUTO_SIZE: str | None = None
-_BIN_AUTO_MIN: str | None = None
+    ``percentile_mode`` ("exact" interpolated fold, oracle-able, or
+    "approx" GK sketch with bounded state — Kusto's own semantics) and
+    ``bin_auto_size``/``bin_auto_min`` (raw KQL literal text for
+    bin_auto(), re-tokenized at the use site so timespan/datetime
+    literals keep their schema-aware bin handling) are the query's
+    ``set`` options. ``compiler`` lets the expression parser reach
+    operand resolution for tabular in() subqueries; ``views`` are the
+    temp views backing them, dropped when the frame exits: they are
+    consumed at ANALYSIS time — DataFrame construction is eager — so
+    the resolved plan no longer references them, and a long-lived
+    session's catalog stays clean."""
+    percentile_mode: str = "exact"
+    bin_auto_size: str | None = None
+    bin_auto_min: str | None = None
+    compiler: "KqlCompiler | None" = None
+    views: list = field(default_factory=list)
 
-# The compiler whose compile() frame is innermost — lets the expression
-# parser reach operand resolution for tabular in() subqueries. Saved
-# and restored per compile() like the mode flags above.
-_ACTIVE_COMPILER = None
-_INQ_SEQ = [0]
-# Temp views backing tabular in() subqueries, pending cleanup. Each
-# compile() frame drops the views it created on exit (r12 verdict #3:
-# they are consumed at ANALYSIS time — DataFrame construction is eager
-# — so by the time compile() returns, the resolved plan no longer
-# references the view and a long-lived session's catalog stays clean).
-_INQ_VIEWS: list = []
+
+# The innermost compile() frame of the CURRENT thread/task; outside any
+# compile (kql_stream stages) the defaults apply.
+_COMPILE_CTX: contextvars.ContextVar[_CompileContext] = \
+    contextvars.ContextVar("kql_compile_ctx", default=_CompileContext())
 
 _FN_RENAME = {
     "strlen": "length",
@@ -947,7 +950,8 @@ class _ExprParser:
         bitwise-or operator token) or is a single identifier that is
         not a column of the current frame but resolves as a table/let
         operand."""
-        comp = _ACTIVE_COMPILER
+        ctx = _COMPILE_CTX.get()
+        comp = ctx.compiler
         if comp is None:
             return None
         j, depth, top_comma, has_pipe = self.i, 0, False, False
@@ -990,15 +994,15 @@ class _ExprParser:
         self.i = j
         self.expect(")")
         col = sub.columns[0]
-        _INQ_SEQ[0] += 1
-        view = f"__kql_inq_{_INQ_SEQ[0]}"
+        # unique among live frames of every thread sharing the session
+        view = f"__kql_inq_{id(ctx):x}_{len(ctx.views)}"
         # nulls never match membership in Kusto; under SQL three-valued
         # logic a single NULL in the set turns NOT IN into an empty
         # result (r12 review) — drop them from the value set
         sub.select(F.col(col).alias("__v")) \
            .where(F.col(col).isNotNull()) \
            .createOrReplaceTempView(view)
-        _INQ_VIEWS.append((view, sub.sparkSession))
+        ctx.views.append((view, sub.sparkSession))
         neg = "NOT " if low.startswith("!") else ""
         if low.endswith("~"):
             return (f"(lower({_str_if_variant(lhs)}) {neg}IN "
@@ -1727,7 +1731,7 @@ class _ExprParser:
             # semantics).
             if len(args) != 2:
                 raise ValueError("KQL: percentile(col, P) takes 2 args")
-            if _PERCENTILE_MODE == "approx":
+            if _COMPILE_CTX.get().percentile_mode == "approx":
                 return (f"approx_percentile({args[0]}, "
                         f"({args[1]}) / 100.0, 10000)")
             return f"percentile({args[0]}, ({args[1]}) / 100.0)"
@@ -6151,8 +6155,7 @@ def _warn_global_serialize(what: str, df: DataFrame | None = None) -> None:
 
 
 def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
-                         order_sql: list[str] | None = None,
-                         partition_sql: list[str] | None = None) -> str:
+                         scope: _SerialScope | None = None) -> str:
     """Expression compile with schema-aware bin() and serialized-order
     prev()/next() interception. Inside ``partition by key ( ... )``
     scope the window partitions on the key; otherwise it is a GLOBAL
@@ -6164,7 +6167,8 @@ def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
     while i < len(toks):
         t = toks[i]
         if (t.kind == "ident" and t.text.lower() in ("prev", "next")
-                and order_sql and i + 1 < len(toks)
+                and scope is not None and scope.order
+                and i + 1 < len(toks)
                 and toks[i + 1].text == "("):
             depth, j = 0, i + 1
             while j < len(toks):
@@ -6180,22 +6184,17 @@ def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
             if not 1 <= len(argg) <= 3:
                 raise ValueError(
                     f"KQL: {t.text.lower()}(x [, offset [, default]])")
-            inner = _compile_expr_tokens(argg[0], df, order_sql,
-                                         partition_sql)
+            inner = _compile_expr_tokens(argg[0], df, scope)
             off = (_compile_expr_tokens(argg[1], df)
                    if len(argg) >= 2 else "1")
             dflt = (", " + _compile_expr_tokens(argg[2], df)
                     if len(argg) == 3 else "")
             fn = "lag" if t.text.lower() == "prev" else "lead"
-            if partition_sql:
-                over = (f"PARTITION BY {', '.join(partition_sql)} "
-                        f"ORDER BY {', '.join(order_sql)}")
-            else:
+            if not scope.keys:
                 _warn_global_serialize(t.text.lower() + "()", df)
-                over = f"ORDER BY {', '.join(order_sql)}"
             out.append(Tok("rendered",
                            f"{fn}({inner}, {off}{dflt}) "
-                           f"OVER ({over})"))
+                           f"OVER ({scope.over_sql()})"))
             i = j + 1
             continue
         if (t.kind == "ident" and t.text.lower() == "pack_all"
@@ -6263,16 +6262,17 @@ def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
                 # sizes keep the schema-aware datetime handling
                 if len(groups) != 1:
                     raise ValueError("KQL: bin_auto(expr)")
-                if _BIN_AUTO_SIZE is None:
+                ctx = _COMPILE_CTX.get()
+                if ctx.bin_auto_size is None:
                     raise ValueError(
                         "KQL: bin_auto() needs "
                         "`set query_bin_auto_size = ...;`")
-                size_toks = _tokenize(_BIN_AUTO_SIZE)
+                size_toks = _tokenize(ctx.bin_auto_size)
                 if len(size_toks) != 1:
                     raise ValueError(
                         "KQL: query_bin_auto_size must be a single "
-                        f"literal, got {_BIN_AUTO_SIZE!r}")
-                if _BIN_AUTO_MIN is None:
+                        f"literal, got {ctx.bin_auto_size!r}")
+                if ctx.bin_auto_min is None:
                     if size_toks[0].kind == "timespan":
                         raise ValueError(
                             "KQL: a timespan query_bin_auto_size needs "
@@ -6280,7 +6280,7 @@ def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
                             "datetime(...);`")
                     min_toks = _tokenize("0")
                 else:
-                    min_toks = _tokenize(_BIN_AUTO_MIN)
+                    min_toks = _tokenize(ctx.bin_auto_min)
                 fn = "bin_at"
                 groups = [groups[0], [size_toks[0]], min_toks]
             if fn == "bin":
@@ -7785,6 +7785,75 @@ def _register_persist(compiler, df: DataFrame) -> DataFrame:
     return df
 
 
+class _OrderKey(NamedTuple):
+    """One serialized-order key: the expression's SQL, its direction,
+    and its explicit nulls placement ("first"/"last"; None keeps
+    Spark's default — first for asc, last for desc)."""
+    sql: str
+    desc: bool
+    nulls: str | None
+
+    def on(self, c: Column) -> Column:
+        """``c`` sorted the way this key sorts."""
+        way = "desc" if self.desc else "asc"
+        return getattr(c, f"{way}_nulls_{self.nulls}"
+                       if self.nulls else way)()
+
+    def __str__(self) -> str:
+        """The key as a Spark SQL ORDER BY item."""
+        return (f"{self.sql} {'DESC' if self.desc else 'ASC'}"
+                + (f" NULLS {self.nulls.upper()}" if self.nulls else ""))
+
+
+@dataclass(frozen=True)
+class _SerialScope:
+    """Serialized-order state of the pipeline being compiled.
+
+    ``keys`` are the ``partition by`` scope columns (empty: unscoped, so
+    serialized ops run one global window); ``order`` is set by ``sort
+    by``/``top``/``serialize`` (None: no serialized order yet).
+    ``laid_out`` holds while the scoped rows are ALREADY hash-partitioned
+    by ``keys`` and sorted (keys, order) within partitions — right after
+    the scoped ``sort by`` and through order/partition-preserving narrow
+    stages. The scan / row_window_session kernels then skip their own
+    repartition + sortWithinPartitions: an explicit REPARTITION_BY_COL
+    exchange can never be elided by Catalyst, so without it every
+    scoped kernel paid a second shuffle + sort of rows already laid out
+    (one exchange is shared between operations keyed the same way)."""
+    keys: tuple[str, ...] = ()
+    order: tuple[_OrderKey, ...] | None = None
+    laid_out: bool = False
+    # Column renderings by key: each F.col/F.expr is a py4j round trip,
+    # and every scope value derived by replace() shares the memo
+    _cols: dict = field(default_factory=dict, compare=False, repr=False)
+
+    def _col(self, key: str | _OrderKey) -> Column:
+        c = self._cols.get(key)
+        if c is None:
+            c = self._cols[key] = (F.col(key) if isinstance(key, str)
+                                   else key.on(F.expr(key.sql)))
+        return c
+
+    def key_cols(self) -> list[Column]:
+        return [self._col(k) for k in self.keys]
+
+    def order_cols(self) -> list[Column]:
+        return [self._col(k) for k in self.order or ()]
+
+    def window(self):
+        """The serialized-order Window spec, key-partitioned in scope."""
+        w = Window.partitionBy(*self.key_cols()) if self.keys else Window
+        return w.orderBy(*self.order_cols())
+
+    def over_sql(self) -> str:
+        """The same window as SQL ``OVER (...)`` body text."""
+        order = f"ORDER BY {', '.join(map(str, self.order))}"
+        if not self.keys:
+            return order
+        return (f"PARTITION BY {', '.join(f'`{k}`' for k in self.keys)} "
+                f"{order}")
+
+
 class KqlCompiler:
     """Compiles one KQL tabular pipeline against a table resolver."""
 
@@ -7802,26 +7871,10 @@ class KqlCompiler:
         # (KQL's serialized-order semantics made explicit and
         # deterministic — a window over an unordered table would be both
         # nondeterministic and a single-partition bottleneck at scale).
-        self._order: list | None = None
-        self._order_sql: list[str] | None = None
-        # `partition by key ( ... )` sets these for the subquery scope:
-        # serialized ops (prev/next/row_number, sort, take) then compile
-        # to key-partitioned windows instead of a global sort.
-        self._partition: list | None = None
-        self._partition_sql: list[str] | None = None
-        # True while the current scoped pipeline's rows are ALREADY
-        # hash-partitioned by the `partition by` keys and sorted
-        # (keys, serialized order) within partitions — i.e. right
-        # after the scoped `sort by` stage and through any
-        # order/partition-preserving narrow stage. The serialized
-        # kernels (scan, row_window_session) consume it to skip their
-        # own repartition + sortWithinPartitions: an explicit
-        # REPARTITION_BY_COL exchange can never be elided by Catalyst,
-        # so without this flag every scoped kernel paid a second
-        # shuffle + sort of data already laid out correctly
-        # (guide §2.4 — share one exchange between operations keyed
-        # the same way).
-        self._scoped_sorted = False
+        # `partition by key ( ... )` scopes it: serialized ops
+        # (prev/next/row_number, sort, take) then compile to
+        # key-partitioned windows instead of a global sort.
+        self._scope = _SerialScope()
         # let-statement bindings: tabular -> DataFrame, scalar -> KQL
         # text, function -> (params, body) expanded macro-style
         self._lets: dict[str, DataFrame] = {}
@@ -7864,29 +7917,31 @@ class KqlCompiler:
         per-group state) — mirroring real Kusto, whose percentile() is
         always a T-digest estimate. The exact interpolated fold stays
         the default because only it can be hash-checked against a SQL
-        oracle; the save/restore keeps toscalar sub-compiles from
-        leaking the option across queries."""
-        global _PERCENTILE_MODE, _BIN_AUTO_SIZE, _BIN_AUTO_MIN
-        global _ACTIVE_COMPILER
-        prev = (_PERCENTILE_MODE, _BIN_AUTO_SIZE, _BIN_AUTO_MIN)
-        prev_comp = _ACTIVE_COMPILER
-        _ACTIVE_COMPILER = self
-        inq_mark = len(_INQ_VIEWS)
+        oracle. ``set`` options (percentile_mode, query_bin_auto_size,
+        query_bin_auto_minimum) are scoped to ONE compile on one
+        thread: concurrent compiles never see each other's options,
+        and nested ``toscalar``/tabular ``in()`` compiles start from a
+        copy of their parent's options without leaking their own back.
+
+        ``sort by ... [asc|desc] [nulls first|last]`` fixes the
+        serialized order, nulls placement included, that prev()/next(),
+        row_number() and the ``scan`` and ``row_window_session``
+        kernels walk."""
+        ctx = replace(_COMPILE_CTX.get(), compiler=self, views=[])
+        token = _COMPILE_CTX.set(ctx)
         try:
             return self._compile_stmts(query)
         finally:
-            _PERCENTILE_MODE, _BIN_AUTO_SIZE, _BIN_AUTO_MIN = prev
-            _ACTIVE_COMPILER = prev_comp
-            # drop tabular-in() temp views created in THIS frame: the
-            # returned DataFrame's plan was analyzed eagerly, so the
-            # view reference is already resolved away (nested toscalar
-            # compiles clean their own slice the same way)
-            for view, sess in _INQ_VIEWS[inq_mark:]:
+            _COMPILE_CTX.reset(token)
+            # drop the tabular-in() temp views created in THIS frame:
+            # the returned DataFrame's plan was analyzed eagerly, so the
+            # view reference is already resolved away (nested compiles
+            # drop their own the same way)
+            for view, sess in ctx.views:
                 try:
                     sess.catalog.dropTempView(view)
                 except Exception:
                     pass
-            del _INQ_VIEWS[inq_mark:]
 
     def _compile_stmts(self, query: str) -> DataFrame:
         stmts = _split_top_semis(query)
@@ -7895,22 +7950,21 @@ class KqlCompiler:
         for s in stmts[:-1]:
             pm = re.match(r"set\s+percentile_mode\s*=\s*(\w+)\s*$", s)
             if pm:
-                global _PERCENTILE_MODE
                 mode = pm.group(1).lower()
                 if mode not in ("exact", "approx"):
                     raise ValueError(
                         f"KQL: percentile_mode must be exact|approx, "
                         f"got {mode!r}")
-                _PERCENTILE_MODE = mode
+                _COMPILE_CTX.get().percentile_mode = mode
                 continue
             ba = re.match(r"set\s+query_bin_auto_(size|minimum)\s*=\s*"
                           r"(.+?)\s*$", s, re.DOTALL)
             if ba:
-                global _BIN_AUTO_SIZE, _BIN_AUTO_MIN
+                ctx = _COMPILE_CTX.get()
                 if ba.group(1) == "size":
-                    _BIN_AUTO_SIZE = ba.group(2)
+                    ctx.bin_auto_size = ba.group(2)
                 else:
-                    _BIN_AUTO_MIN = ba.group(2)
+                    ctx.bin_auto_min = ba.group(2)
                 continue
             if re.match(r"set\s+\w+", s):
                 # Kusto client request properties (`set notruncation;`,
@@ -8425,13 +8479,13 @@ class KqlCompiler:
             # matching Kusto's "current order" contract as closely as a
             # distributed engine can (r12 probe find). The helper
             # column is dropped at pipeline end.
-            if self._order is None:
+            if self._scope.order is None:
                 # unmaterialized: a helper COLUMN would leak into
                 # getschema / distinct * / project wildcards; the bare
                 # expression orders windows identically (partition
                 # index, then row position) without touching the schema
-                self._order = [F.monotonically_increasing_id().asc()]
-                self._order_sql = ["monotonically_increasing_id() ASC"]
+                self._scope = replace(self._scope, order=(_OrderKey(
+                    "monotonically_increasing_id()", False, None),))
             if rest.strip():
                 # Kusto: `serialize name = expr, ...` — the operator
                 # takes extend-style assignments evaluated AFTER the
@@ -8507,8 +8561,7 @@ class KqlCompiler:
                     name, body = g[0].text, g[2:]
                 else:
                     name, body = f"col{i}", g
-                sql = _compile_expr_tokens(body, df, self._order_sql,
-                                           self._partition_sql)
+                sql = _compile_expr_tokens(body, df, self._scope)
                 mcs = re.match(r"row_cumsum\s*\((.*)\)\s*$", sql.strip(),
                                re.DOTALL)
                 mrr = re.match(r"row_rank_(dense|min)\s*\((.*)\)\s*$",
@@ -8521,19 +8574,9 @@ class KqlCompiler:
                     # equal Term values. On input sorted by Term these
                     # coincide with classic DENSE_RANK / RANK. Null-safe
                     # change detection (<=>).
-                    if self._order is None:
-                        raise ValueError(
-                            f"KQL: row_rank_{mrr.group(1)}() needs a "
-                            "preceding 'sort by' (serialized order)")
-                    from pyspark.sql import Window
+                    w = self._serial_guard(
+                        f"row_rank_{mrr.group(1)}()", df).window()
                     term = F.expr(mrr.group(2))
-                    if self._partition:
-                        w = Window.partitionBy(*self._partition) \
-                                  .orderBy(*self._order)
-                    else:
-                        _warn_global_serialize(
-                            f"row_rank_{mrr.group(1)}()", df)
-                        w = Window.orderBy(*self._order)
                     # first row is always a change (rank starts at 1,
                     # even for a null Term — lag of a constant detects
                     # the window start null-safely)
@@ -8551,13 +8594,12 @@ class KqlCompiler:
                         # the run-id window repartitions on
                         # (keys, run): scope-key rows may now span
                         # partitions — scoped layout no longer holds
-                        self._scoped_sorted = False
+                        self._scope = replace(self._scope, laid_out=False)
                         df = df.withColumn("__rr_run", dense) \
                                .withColumn("__rr_rn",
                                            F.row_number().over(w))
                         wmin = Window.partitionBy(
-                            *(list(self._partition or [])
-                              + [F.col("__rr_run")]))
+                            *self._scope.key_cols(), F.col("__rr_run"))
                         df = (df.withColumn(
                                   name,
                                   F.min("__rr_rn").over(wmin)
@@ -8574,18 +8616,9 @@ class KqlCompiler:
                                    r"(?:,(?P<restart>.+))?\)",
                                    sql.strip(), re.DOTALL)
                 if mrn or mcs:
-                    what = "row_cumsum()" if mcs else "row_number()"
-                    if self._order is None:
-                        raise ValueError(
-                            f"KQL: {what} needs a preceding "
-                            "'sort by' (serialized order)")
-                    from pyspark.sql import Window
-                    if self._partition:
-                        w = Window.partitionBy(*self._partition) \
-                                  .orderBy(*self._order)
-                    else:
-                        _warn_global_serialize(what, df)
-                        w = Window.orderBy(*self._order)
+                    w = self._serial_guard(
+                        "row_cumsum()" if mcs else "row_number()",
+                        df).window()
                     if mcs:
                         # running sum over the serialized order; the
                         # two-arg form row_cumsum(x, restart) resets
@@ -8614,16 +8647,17 @@ class KqlCompiler:
                         if len(parts) == 2:
                             # (keys, run) window repartitions — scoped
                             # layout no longer holds past this stage
-                            self._scoped_sorted = False
+                            self._scope = replace(self._scope,
+                                                  laid_out=False)
                             df = df.withColumn(
                                 "__rc_run",
                                 F.sum(F.expr(
                                     f"IF({parts[1]}, 1, 0)"))
                                  .over(wrun))
                             w2 = Window.partitionBy(
-                                *(list(self._partition or [])
-                                  + [F.col("__rc_run")])) \
-                                .orderBy(*self._order) \
+                                *self._scope.key_cols(),
+                                F.col("__rc_run")) \
+                                .orderBy(*self._scope.order_cols()) \
                                 .rowsBetween(
                                     Window.unboundedPreceding,
                                     Window.currentRow)
@@ -8648,19 +8682,20 @@ class KqlCompiler:
                         if mrn.group("restart"):
                             # (keys, run) window repartitions — scoped
                             # layout no longer holds past this stage
-                            self._scoped_sorted = False
-                            from pyspark.sql import Window as _W
+                            self._scope = replace(self._scope,
+                                                  laid_out=False)
                             wrun = w.rowsBetween(
-                                _W.unboundedPreceding, _W.currentRow)
+                                Window.unboundedPreceding,
+                                Window.currentRow)
                             df = df.withColumn(
                                 "__rn_run",
                                 F.sum(F.expr(
                                     f"IF({mrn.group('restart')}, "
                                     f"1, 0)")).over(wrun))
-                            w2 = _W.partitionBy(
-                                *(list(self._partition or [])
-                                  + [F.col("__rn_run")])) \
-                                .orderBy(*self._order)
+                            w2 = Window.partitionBy(
+                                *self._scope.key_cols(),
+                                F.col("__rn_run")) \
+                                .orderBy(*self._scope.order_cols())
                             df = (df.withColumn(
                                       name,
                                       (F.row_number().over(w2)
@@ -8682,15 +8717,18 @@ class KqlCompiler:
             return df.select(*names).distinct()
         if op == "sort" or op == "order":
             rest = re.sub(r"^by\s+", "", rest)
-            cols = self._sort_cols(df, rest)
-            self._order = cols
-            return df.orderBy(*cols)
+            self._scope = replace(self._scope,
+                                  order=self._sort_keys(df, rest))
+            return df.orderBy(*self._scope.order_cols())
         if op == "top":
             m2 = re.match(r"(\d+)\s+by\s+(.*)", rest, re.DOTALL)
             if not m2:
                 raise ValueError("KQL: top N by expr")
             n = int(m2.group(1))
-            return df.orderBy(*self._sort_cols(df, m2.group(2))).limit(n)
+            # top's output is serialized by its keys, like sort's
+            self._scope = replace(self._scope,
+                                  order=self._sort_keys(df, m2.group(2)))
+            return df.orderBy(*self._scope.order_cols()).limit(n)
         if op in ("take", "limit"):
             # tolerate wrapping parens: scalar-let / function-arg
             # substitution parenthesizes for precedence safety
@@ -9424,8 +9462,7 @@ class KqlCompiler:
                 f"KQL: {fname} yields {len(keys)} values, "
                 f"{len(names)} names given")
         call = [Tok("ident", dyn_name)] + call[1:]
-        sql = _compile_expr_tokens(call, df, self._order_sql,
-                                   self._partition_sql)
+        sql = _compile_expr_tokens(call, df, self._scope)
         tmp = "__ma_bag"
         df = df.withColumn(tmp, F.expr(sql))
         for name, (key, is_array) in zip(names, keys):
@@ -9447,9 +9484,8 @@ class KqlCompiler:
         unsorted order."""
         if argtext.strip():
             raise ValueError("KQL: evaluate narrow() takes no args")
-        from pyspark.sql import Window
-        if self._order:
-            w = Window.orderBy(*self._order)
+        if self._scope.order:
+            w = Window.orderBy(*self._scope.order_cols())
             base = df.withColumn(
                 "Row", (F.row_number().over(w) - 1).cast("long"))
         else:
@@ -9685,12 +9721,8 @@ class KqlCompiler:
         if len(groups) not in (2, 3):
             raise ValueError(
                 "KQL: rows_near(condition, rows_before[, rows_after])")
-        if self._order is None:
-            raise ValueError("KQL: rows_near needs a preceding "
-                             "'sort by' (serialized order)")
-        cond_sql = _compile_expr_tokens(groups[0], df,
-                                        self._order_sql,
-                                        self._partition_sql)
+        w = self._serial_guard("rows_near()", df).window()
+        cond_sql = _compile_expr_tokens(groups[0], df, self._scope)
 
         def n_of(toks, what):
             sql2 = _compile_expr_tokens(toks, df)
@@ -9705,13 +9737,6 @@ class KqlCompiler:
         before = n_of(groups[1], "rows_before")
         after = n_of(groups[2], "rows_after") if len(groups) == 3 \
             else before
-        from pyspark.sql import Window
-        if self._partition:
-            w = Window.partitionBy(*self._partition) \
-                      .orderBy(*self._order)
-        else:
-            _warn_global_serialize("rows_near()", df)
-            w = Window.orderBy(*self._order)
         w = w.rowsBetween(-after, before)
         mark = F.max(F.expr(cond_sql).cast("boolean")
                       .cast("int")).over(w)
@@ -11158,7 +11183,8 @@ class KqlCompiler:
                 if not m2:
                     raise ValueError("KQL: top N by expr")
                 w = Window.partitionBy(rid).orderBy(
-                    *self._sort_cols(out, m2.group(2)))
+                    *[k.on(F.expr(k.sql))
+                      for k in self._sort_keys(out, m2.group(2))])
                 out = (out.withColumn("__mv_rn", F.row_number().over(w))
                           .where(F.col("__mv_rn") <= int(m2.group(1)))
                           .drop("__mv_rn"))
@@ -11634,20 +11660,17 @@ class KqlCompiler:
         outs = []
         for j, (nm, sub) in enumerate(zip(names, children)):
             # Each child compiles in an ISOLATED serialized scope: a
-            # `sort by`/`top` inside one child must not leak
-            # _order/_order_sql (or a partition scope) into sibling
-            # children or post-fork stages — mirror of _partition's
-            # snapshot/restore (r7 advice #1).
-            saved = (self._partition, self._partition_sql,
-                     self._order, self._order_sql)
+            # `sort by`/`top` inside one child must not leak its order
+            # into sibling children or post-fork stages — mirror of
+            # _partition_by's snapshot/restore.
+            saved = self._scope
             try:
                 child = df
                 for stage in _split_pipes(sub.strip().lstrip("|")):
                     if stage.strip():
                         child = self._apply(child, stage.strip())
             finally:
-                (self._partition, self._partition_sql,
-                 self._order, self._order_sql) = saved
+                self._scope = saved
             outs.append(child.select(
                 F.lit(nm or f"fork_{j}").alias("fork_name"), "*"))
         out = outs[0]
@@ -12657,9 +12680,9 @@ class KqlCompiler:
                 name, F.transform("__packed", extract(f"__v{i}")))
         return out.select(*keys, *[n for n, _s, _d in aggs], "bins")
 
-    def _sort_cols(self, df: DataFrame, rest: str):
-        cols = []
-        sqls = []
+    def _sort_keys(self, df: DataFrame,
+                   rest: str) -> tuple[_OrderKey, ...]:
+        keys = []
         for g in _split_top_commas(_tokenize(rest)):
             # Kusto default sort direction is DESCENDING (sort by / top)
             # with nulls first for asc / last for desc (Spark's own
@@ -12675,21 +12698,8 @@ class KqlCompiler:
                     "asc", "desc"):
                 desc = g[-1].text.lower() == "desc"
                 g = g[:-1]
-            sql = _compile_expr_tokens(g, df)
-            suffix = (" DESC" if desc else " ASC") + (
-                f" NULLS {nulls.upper()}" if nulls else "")
-            sqls.append(sql + suffix)
-            c = F.expr(sql)
-            if nulls == "first":
-                cols.append(c.desc_nulls_first() if desc
-                            else c.asc_nulls_first())
-            elif nulls == "last":
-                cols.append(c.desc_nulls_last() if desc
-                            else c.asc_nulls_last())
-            else:
-                cols.append(c.desc() if desc else c.asc())
-        self._order_sql = sqls
-        return cols
+            keys.append(_OrderKey(_compile_expr_tokens(g, df), desc, nulls))
+        return tuple(keys)
 
     def _summarize_percentilew_fast(self, df: DataFrame,
                                     agg_groups: list[list["Tok"]],
@@ -13022,6 +13032,54 @@ class KqlCompiler:
             out = out.drop(alias)
         return out
 
+    def _serial_guard(self, what: str, df: DataFrame) -> _SerialScope:
+        """The scope for serialized op ``what``: it needs a serialized
+        order, and unscoped it runs ONE global window behind the
+        warn-then-error row-limit guard."""
+        if not self._scope.order:
+            raise ValueError(f"KQL: {what} needs a preceding 'sort by' "
+                             "(serialized order)")
+        if not self._scope.keys:
+            _warn_global_serialize(what, df)
+        return self._scope
+
+    def _serial_layout(self, df: DataFrame, what: str, prefix: str,
+                       pre=(), post=()):
+        """Shared prelude of the scan / row_window_session kernels.
+
+        Materializes each order key as ``{prefix}_o{i}`` between the
+        kernel's own ``pre`` and ``post`` SQL columns (ONE selectExpr:
+        each withColumn would be 2-4 py4j round trips + a full analysis
+        pass of driver-side build cost), groups by the scope
+        keys or, unscoped, by a constant ``{prefix}_g`` column, and lays
+        the rows out for a kernel that walks each partition, detects
+        group boundaries itself and carries state across Arrow batches:
+        ``repartition(groups)`` + ``sortWithinPartitions(groups,
+        order)``, each order key with its own direction and nulls
+        placement. groupBy().applyInPandas would pay one pandas-frame
+        construction per GROUP — measured 2.8 s of pure per-group
+        overhead on 1500 small groups at sf0.1, vs 0.57 s for the same
+        JVM shuffle+sort. Returns ``(work, laid-out frame, group
+        columns)``; ``work`` is the unshuffled projection."""
+        sc = self._serial_guard(what, df)
+        order = [f"({k.sql}) AS {prefix}_o{i}"
+                 for i, k in enumerate(sc.order)]
+        group_cols, const = ((list(sc.keys), []) if sc.keys else
+                             ([f"{prefix}_g"], [f"1 AS {prefix}_g"]))
+        work = df.selectExpr("*", *pre, *order, *post, *const)
+        if sc.keys and sc.laid_out:
+            # the scoped `sort by` already hash-partitioned on the scope
+            # keys and sorted (keys, order) within partitions, and only
+            # layout-preserving narrow stages ran since — a second
+            # Exchange+Sort would redo it. The rows keep
+            # that order even when a later extend redefined an order
+            # column.
+            return work, work, group_cols
+        sort_cols = [F.col(c).asc() for c in group_cols] + [
+            k.on(F.col(f"{prefix}_o{i}")) for i, k in enumerate(sc.order)]
+        return work, (work.repartition(*[F.col(c) for c in group_cols])
+                          .sortWithinPartitions(*sort_cols)), group_cols
+
     def _partition_by(self, df: DataFrame, rest: str):
         """``partition by key ( subquery )`` — Kusto's scoping operator:
         the subquery runs per key value, and its results union. This is
@@ -13035,8 +13093,6 @@ class KqlCompiler:
         summarize (matching the serialized-pipeline use cases; Kusto's
         legacy strategy caps at 64 partitions, the native strategy —
         modeled here — does not)."""
-        from pyspark.sql import Window
-
         m = re.match(r"(?:hint\.\S+\s+)*by\s+"
                      r"(?P<keys>[A-Za-z_][A-Za-z0-9_]*"
                      r"(?:\s*,\s*[A-Za-z_][A-Za-z0-9_]*)*)"
@@ -13050,13 +13106,9 @@ class KqlCompiler:
             if key not in df.columns:
                 raise ValueError(
                     f"KQL: partition key {key!r} not in input")
-        key_cols = [F.col(k) for k in keys]
-        saved = (self._partition, self._partition_sql,
-                 self._order, self._order_sql, self._scoped_sorted)
-        self._partition = key_cols
-        self._partition_sql = [f"`{k}`" for k in keys]
-        self._order = self._order_sql = None
-        self._scoped_sorted = False
+        saved = self._scope
+        self._scope = _SerialScope(keys=tuple(keys))
+        key_cols = self._scope.key_cols()
         # stages that keep rows hash-partitioned by the scope keys and
         # sorted within partitions: filters, projections, parsers, and
         # the serialized kernels themselves (they emit rows in input
@@ -13081,41 +13133,43 @@ class KqlCompiler:
                            "mv-expand", "scan", "evaluate"):
                     # evaluate plugins that honor serialized/partition
                     # scope (rows_near, sequence_detect, scan-family)
-                    # read self._partition/_order like any stage
+                    # read self._scope like any stage
                     if sop not in _LAYOUT_PRESERVING:
-                        self._scoped_sorted = False
+                        self._scope = replace(self._scope, laid_out=False)
                     out = self._apply(out, stage)
                 elif sop in ("sort", "order"):
-                    cols = self._sort_cols(
-                        out, re.sub(r"^by\s+", "", srest))
-                    self._order = cols
+                    self._scope = replace(
+                        self._scope, laid_out=True,
+                        order=self._sort_keys(
+                            out, re.sub(r"^by\s+", "", srest)))
                     # per-key serialized order, never a global sort
                     out = (out.repartition(*key_cols)
-                              .sortWithinPartitions(*key_cols, *cols))
-                    self._scoped_sorted = True
+                              .sortWithinPartitions(
+                                  *key_cols, *self._scope.order_cols()))
                 elif sop in ("take", "limit"):
-                    self._scoped_sorted = False
+                    self._scope = replace(self._scope, laid_out=False)
                     n = int(srest)
-                    order = self._order or [F.monotonically_increasing_id()]
+                    order = (self._scope.order_cols()
+                             or [F.monotonically_increasing_id()])
                     w = Window.partitionBy(*key_cols).orderBy(*order)
                     out = (out.withColumn("__p_rn",
                                           F.row_number().over(w))
                               .where(F.col("__p_rn") <= n)
                               .drop("__p_rn"))
                 elif sop == "top":
-                    self._scoped_sorted = False
                     m2 = re.match(r"(\d+)\s+by\s+(.*)", srest, re.DOTALL)
                     if not m2:
                         raise ValueError("KQL: top N by expr")
-                    cols = self._sort_cols(out, m2.group(2))
-                    self._order = cols
-                    w = Window.partitionBy(*key_cols).orderBy(*cols)
+                    self._scope = replace(
+                        self._scope, laid_out=False,
+                        order=self._sort_keys(out, m2.group(2)))
+                    w = self._scope.window()
                     out = (out.withColumn("__p_rn",
                                           F.row_number().over(w))
                               .where(F.col("__p_rn") <= int(m2.group(1)))
                               .drop("__p_rn"))
                 elif sop == "summarize":
-                    self._scoped_sorted = False
+                    self._scope = replace(self._scope, laid_out=False)
                     # every partition key is implicitly a grouping column
                     stripped = _STR_LIT_RE.sub("", srest)
                     add = list(keys)
@@ -13137,8 +13191,7 @@ class KqlCompiler:
                         f"take/summarize are)")
             return out
         finally:
-            (self._partition, self._partition_sql,
-             self._order, self._order_sql, self._scoped_sorted) = saved
+            self._scope = saved
 
     def _scan(self, df: DataFrame, rest: str) -> DataFrame:
         """``scan [with_match_id=name] [declare (v:type = init, ...)]
@@ -13283,8 +13336,7 @@ class KqlCompiler:
             else:
                 steps.append((sm.group(1),
                               _compile_expr_tokens(ptoks, df,
-                                                   self._order_sql,
-                                                   self._partition_sql)))
+                                                   self._scope)))
             if assign_text is not None:
                 if not var_set:
                     raise ValueError(
@@ -13307,34 +13359,13 @@ class KqlCompiler:
                 assigns[i_step] = alist
         if not steps:
             raise ValueError("KQL: scan needs at least one step")
-        if not self._order_sql:
-            raise ValueError(
-                "KQL: scan needs a preceding 'sort by' (serialized order)")
         mid_name = m.group("mid") or "match_id"
-        # order keys -> materialized columns + ascending flags (pandas
-        # sorts inside each group; Spark does not guarantee group
-        # order). All materialized columns ride ONE selectExpr (r15:
-        # each withColumn was 2-4 py4j round trips + a full analysis
-        # pass; guide §7.3 driver-side build cost).
-        order_names, asc_flags = [], []
-        new_cols = []
-        for i, osql in enumerate(self._order_sql):
-            expr_sql, direction = osql.rsplit(" ", 1)
-            order_names.append(f"__scan_o{i}")
-            asc_flags.append(direction.upper() != "DESC")
-            new_cols.append(f"({expr_sql}) AS __scan_o{i}")
-        for i, (_, psql) in enumerate(steps):
-            new_cols.append(
+        work, part, group_cols = self._serial_layout(
+            df, "scan", "__scan", post=[
                 f"CAST(({psql}) AS BOOLEAN) AS __scan_p{i}"
                 if psql is not None
-                else f"CAST(NULL AS BOOLEAN) AS __scan_p{i}")
-        if self._partition_sql:
-            group_cols = [s.strip("`") for s in self._partition_sql]
-        else:
-            _warn_global_serialize("scan", df)
-            new_cols.append("1 AS __scan_g")
-            group_cols = ["__scan_g"]
-        work = df.selectExpr("*", *new_cols)
+                else f"CAST(NULL AS BOOLEAN) AS __scan_p{i}"
+                for i, (_, psql) in enumerate(steps)])
         keep = [c for c in df.columns]
         step_names = [n for n, _ in steps]
         n_steps = len(steps)
@@ -13349,29 +13380,6 @@ class KqlCompiler:
             out_schema = out_schema.add(v, decl_types[v])
         out_schema = out_schema.add("step", "string") \
                                .add(mid_name, "long")
-
-        # Partition on the scan key and sort key-then-order WITHIN each
-        # partition, then walk the whole partition with ONE mapInPandas
-        # kernel that detects group boundaries itself and carries the
-        # automaton state (key, step, match_id) across Arrow batches.
-        # groupBy().applyInPandas pays one pandas-DataFrame construction
-        # per GROUP — measured 2.8 s of pure per-group overhead on 1500
-        # small groups at sf0.1 (vs 0.57 s for the identical JVM
-        # shuffle+sort); per-Arrow-batch overhead amortizes over the
-        # default 10k rows instead.
-        sort_cols = [F.col(c).asc() for c in group_cols]
-        for nm, asc in zip(order_names, asc_flags):
-            sort_cols.append(F.col(nm).asc() if asc else F.col(nm).desc())
-        if self._partition_sql and self._scoped_sorted:
-            # the scoped `sort by` already hash-partitioned on the scope
-            # keys and sorted (keys, order) within partitions, and only
-            # layout-preserving narrow stages ran since — the kernel's
-            # own repartition+sort would be a redundant second
-            # Exchange+Sort of identically laid-out rows (guide §2.4)
-            part = work
-        else:
-            part = (work.repartition(*[F.col(c) for c in group_cols])
-                        .sortWithinPartitions(*sort_cols))
 
         init_st = dict(decl_inits)
 
@@ -13471,9 +13479,6 @@ class KqlCompiler:
         warn-then-error serialize guard as every serialized op."""
         import pandas as pd
 
-        if self._order is None:
-            raise ValueError("KQL: row_window_session needs a "
-                             "preceding 'sort by' (serialized order)")
         parts = _split_top_commas_text(args_sql)
         if len(parts) not in (3, 4):
             raise ValueError(
@@ -13508,33 +13513,10 @@ class KqlCompiler:
         new_cols.append(
             f"CAST(({restart_sql}) AS BOOLEAN) AS __rws_r"
             if restart_sql else "false AS __rws_r")
-        order_names, asc_flags = [], []
-        for i, osql in enumerate(self._order_sql):
-            e_sql, direction = osql.rsplit(" ", 1)
-            order_names.append(f"__rws_o{i}")
-            asc_flags.append(direction.upper() != "DESC")
-            new_cols.append(f"({e_sql}) AS __rws_o{i}")
-        if self._partition_sql:
-            group_cols = [s.strip("`") for s in self._partition_sql]
-        else:
-            _warn_global_serialize("row_window_session()", df)
-            new_cols.append("1 AS __rws_g")
-            group_cols = ["__rws_g"]
-        work = df.selectExpr("*", *new_cols)
+        work, part, group_cols = self._serial_layout(
+            df, "row_window_session()", "__rws", pre=new_cols)
         keep = list(df.columns)
         out_schema = work.select(*keep).schema.add(name, vtype)
-        sort_cols = [F.col(c).asc() for c in group_cols]
-        for nm, asc in zip(order_names, asc_flags):
-            sort_cols.append(F.col(nm).asc() if asc
-                             else F.col(nm).desc())
-        if self._partition_sql and self._scoped_sorted:
-            # input already partitioned by the scope keys and sorted
-            # (keys, serialized order) by the scoped `sort by` — skip
-            # the kernel's redundant Exchange+Sort (guide §2.4)
-            part = work
-        else:
-            part = (work.repartition(*[F.col(c) for c in group_cols])
-                        .sortWithinPartitions(*sort_cols))
 
         def kernel(batches):
             state_key = object()

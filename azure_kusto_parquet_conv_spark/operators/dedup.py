@@ -304,7 +304,8 @@ def minhash_dedup_incremental(new_df: DataFrame, corpus_sigs: DataFrame,
     # verification join, and without the checkpoint the whole
     # corpus-sized band join + distinct ran twice per invocation (the
     # two subtrees group by different keys, so exchange reuse never
-    # fires — plan evidence in plans/r14/q_dedup_incremental_*.txt).
+    # fires; q_dedup_incremental's plan is pinned in tests/test_plans.py,
+    # test_no_forced_broadcast_of_fact_scale_frames).
     # Candidates are bounded by the batch's LSH collisions, so the
     # checkpoint is tiny; no .distinct() before the semi join — a semi
     # join ignores build-side duplicates.

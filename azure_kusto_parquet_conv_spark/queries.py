@@ -9198,11 +9198,11 @@ def q_kql_graph_match(spark, sf_dir):
     """)
 
 
-@query("q_kql_graph_undirected", """
+@query("q_kql_graph_undirected", r"""
 SELECT n.n_name AS nation_name, s.s_name AS supplier_name
 FROM supplier s
 JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE n.n_name LIKE 'NATION\_%' ESCAPE '\\'
+WHERE n.n_name LIKE 'NATION\_%' ESCAPE '\'
 """)
 def q_kql_graph_undirected(spark, sf_dir):
     """UNDIRECTED graph-match edges ``-[e]-`` (r13 verdict #5): the
@@ -10125,17 +10125,7 @@ DRIVER_WINDOW = [
     "convert_jsonl_region", "convert_csv_lineitem",
     "q_missing_column_fill", "csl_schema_lineitem", "q_schema_lineitem",
     "q_convert_binary", "rowgroups_lineitem", "q_filter_projection",
-    # ---- round-15 rotation. Priority queue (enforced from the banked
-    # CORRECTNESS files by
-    # test_attestation_rotation_is_priority_ordered, never from this
-    # comment):
-    #   1. never-checked obligation: none — no new entries this round
-    #      (optimization round; DEFERRED_NEVER_CHECKED stays empty).
-    #   2. the full r7 oldest vintage — all 29 members outstanding the
-    #      moment CORRECTNESS_r14 banked (the 28 named in the r14
-    #      planner note plus the third tail fill displaced mid-r14,
-    #      q_kql_bag_ops). Seating all of them clears the r7 vintage
-    #      completely, with slots to spare:
+    # rotating slots
     "q_approx_percentiles", "q_bm25", "q_date_parts",
     "q_dedup_clusters", "q_dedup_embedding", "q_dedup_incremental",
     "q_dedup_minhash_exact", "q_dedup_simhash", "q_freq_items",
@@ -10145,79 +10135,11 @@ DRIVER_WINDOW = [
     "q_kql_row_rank", "q_kql_scan_funnel", "q_kql_sequence_detect",
     "q_kql_split_version", "q_media_real_headers",
     "q_multimodal_frames", "q_sample_by", "q_url_dedup_real",
-    #   3. remaining 8 slots -> changed-code entries (r14 verdict #8:
-    #      the r14 optimizations' targets were all outside the r14
-    #      sample — q_tfidf (single-tokenize rewrite), q_kql_percentilew
-    #      (single-pass spine), q_kql_geo_measures / q_kql_ipv4_compare
-    #      (bind-once families) — plus this round's own touched paths:
-    #      the partition-scoped serialized kernels (q_kql_scan_declare,
-    #      q_kql_scan_funnel_exact, q_kql_row_window_session) and the
-    #      q_dedup_exact record the r14 verdict flagged (#3):
     "q_tfidf", "q_kql_percentilew", "q_kql_geo_measures",
     "q_kql_ipv4_compare", "q_kql_scan_declare",
     "q_kql_scan_funnel_exact", "q_kql_row_window_session",
     "q_dedup_exact",
 ]
-
-# Rotation ledger: r1-r11 windows are banked driver-green in
-# CORRECTNESS_r{01..11}.json. ROTATION ARITHMETIC: the window is 50
-# rows, 13 are permanent parity slots, so 37 entries refresh per round
-# against ~258 rotating entries — a 7-round steady-state cycle.
-#
-# PRIORITY POLICY (r11, supersedes the pure oldest-first rule after
-# the r10 window proved the two obligations can exceed 37 slots;
-# enforced by tests/test_queries_oracle.py::
-# test_attestation_rotation_is_priority_ordered, derived from the
-# banked CORRECTNESS files, never from this comment):
-#   1. never-checked entries take slots first (r7 verdict #8: the
-#      attestation gap may not exceed one round's additions; an entry
-#      may be deferred via DEFERRED_NEVER_CHECKED at most ONE round);
-#   2. remaining slots go to the oldest outstanding vintage,
-#      changed-code entries first; members that do not fit are named
-#      in tests' DEFERRED_OLDEST and are FORCED into the next window
-#      by the hard staleness ceiling (attested <= newest-7 rounds
-#      must hold a slot).
-#
-# The r15 window (this round): no never-checked obligation (an
-# optimization round adds no entries), then ALL 29 r7-vintage members
-# — the 28 named in the r14 planner note plus q_kql_bag_ops (the third
-# tail fill displaced mid-r14) — clearing the r7 vintage completely,
-# then 8 changed-code fills per the r14 verdict #8: the four entries
-# the r14 optimizations touched that sat outside the r14 sample
-# (q_tfidf, q_kql_percentilew, q_kql_geo_measures,
-# q_kql_ipv4_compare), the three partition-scoped serialized kernels
-# this round's scoped-layout fix re-plans (q_kql_scan_declare,
-# q_kql_scan_funnel_exact, q_kql_row_window_session), and
-# q_dedup_exact (the r14 verdict #3 record under investigation).
-# 29 + 8 = 37 rotating slots exactly; both deferral ledgers in
-# tests/test_queries_oracle.py are EMPTY at HEAD, so the rotation
-# meta-test is green with CORRECTNESS_r14 as the newest banked file.
-#
-# r16 planner (written now so the obligation is explicit): the moment
-# CORRECTNESS_r15 banks, the oldest vintage becomes r8; its
-# outstanding members are the r8-attested entries not re-seated since
-# (derive them from the banked files as always — the meta-test is the
-# source of truth, this comment is not).
-#
-# HYGIENE RULE (r7 verdict #8, enforced by
-# tests/test_queries_oracle.py::test_driver_window_is_first_and_covers_families):
-# every catalog entry with no driver CORRECTNESS row yet MUST occupy a
-# window slot in the round it lands, while rotating slots remain — the
-# attestation gap can never exceed one round's additions. An entry
-# added mid-r14 displaces the current TAIL slot in the same commit
-# (displacement order, last out first: the r7 changed-code fills in
-# reverse listing order — never an r6-obligation or never-checked
-# slot; a displaced r7 fill simply rejoins the r15 obligation).
-#
-# DISPLACEMENT CAP (r12 verdict #6, enforced by
-# tests/test_queries_oracle.py::test_displacement_happens_at_most_once):
-# an already-attested oracled entry may be displaced from a window it
-# was owed AT MOST ONCE — the displaced name must hold a slot in the
-# very next round's window (q_weighted_sample is the precedent:
-# displaced r12, seated r13). Window pressure can never silently age
-# an oracled entry twice. DISPLACED_ONCE in tests/test_queries_oracle.py
-# is the ledger.
-
 
 
 def _window_order(d: dict) -> dict:

@@ -408,22 +408,33 @@ def main() -> None:
                      "nokeepdirty"),
         "full_detail": full_path,
     }
+    print(fit_line(compact))
+
+
+def fit_line(compact: dict, limit: int = 1900) -> str:
+    """The contract line as JSON, trimmed to at most ``limit`` chars.
+
+    Belt-and-braces: never exceed the driver's 2000-char tail buffer.
+    The diagnostics shrink before the queries dict: first the exo and
+    retries dicts entry by entry, then the contaminated list collapses
+    to its count, and only then are the fastest queries omitted."""
     line = json.dumps(compact)
-    # belt-and-braces: never exceed the driver's 2000-char tail buffer.
-    # Trim the diagnostic dicts before touching the queries dict.
-    while len(line) > 1900 and (compact["exo"] or compact["retries"]):
+    while len(line) > limit and (compact["exo"] or compact["retries"]):
         for key in ("retries", "exo"):
             if compact[key]:
                 compact[key].pop(next(iter(compact[key])))
                 break
         line = json.dumps(compact)
-    while len(line) > 1900 and compact["queries"]:
+    if len(line) > limit:
+        compact["contaminated"] = len(compact["contaminated"])
+        line = json.dumps(compact)
+    while len(line) > limit and compact["queries"]:
         drop = min(compact["queries"], key=compact["queries"].get)
         del compact["queries"][drop]
         compact["queries_omitted"] = (
             compact.get("queries_omitted", 0) + 1)
         line = json.dumps(compact)
-    print(line)
+    return line
 
 
 if __name__ == "__main__":

@@ -9,15 +9,16 @@ from azure_kusto_parquet_conv_spark.kql import kql
 
 
 def test_exact_is_default_and_mode_does_not_leak(spark, sf_dir):
-    import azure_kusto_parquet_conv_spark.kql as K
+    q = "lineitem | summarize p = percentile(l_quantity, 51)"
 
-    assert K._PERCENTILE_MODE == "exact"
-    kql(spark, sf_dir, """
-      set percentile_mode = approx;
-      lineitem | summarize p = percentile(l_quantity, 51)
-    """).collect()
-    # compile() restores the module flag after every query
-    assert K._PERCENTILE_MODE == "exact"
+    def plan(text):
+        return kql(spark, sf_dir,
+                   text)._jdf.queryExecution().analyzed().toString()
+
+    assert "approx_percentile" not in plan(q)
+    kql(spark, sf_dir, "set percentile_mode = approx;\n" + q).collect()
+    # the option is scoped to its own compile: the next query is exact
+    assert "approx_percentile" not in plan(q)
 
 
 def test_approx_plan_uses_sketch_not_exact_buffer(spark, sf_dir):
