@@ -12208,11 +12208,16 @@ class KqlCompiler:
         own ids are arbitrary), so results hash-compare across engines.
 
         Implementation: the dedup family's iterative min-label
-        propagation (operators/dedup.py dedup_clusters) — per round
-        one join + grouped min across edges, localCheckpoint lineage
-        truncation, O(component diameter) rounds. Output: node id +
-        component column (+ node properties when a node table is
-        bound)."""
+        propagation (operators/dedup.py dedup_clusters) — edges in both
+        orientations plus a self-loop per node, then per round one
+        join + one grouped min (round 1 is the grouped min alone),
+        localCheckpoint lineage truncation, O(component diameter)
+        rounds, capped at 20. A node 20 or more hops from its
+        component's minimum id still changes label in round 20, so
+        such a component raises dedup.ConvergenceError naming the cap
+        rather than returning wrong components.
+        Output: node id + component column (+ node properties when a
+        node table is bound)."""
         if not getattr(self, "_graph", None):
             raise ValueError("KQL: graph-mark-components needs a "
                              "preceding make-graph stage")

@@ -228,6 +228,11 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     same shared-pass fix the incremental variant got earlier — this
     path previously ran the full scan->normalize->shingle chain a
     second time just to re-derive the sets it already had).
+
+    Both persisted frames are shuffle outputs. The session lets AQE
+    coalesce persisted plans (``session._RUNTIME_CONFS``), so the stages
+    that read them run as many tasks as their rows need, not
+    ``spark.sql.shuffle.partitions``.
     """
     sets = shingle_hash_sets(df, text_col, id_col, shingle_n).persist()
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n,
@@ -333,19 +338,38 @@ def minhash_dedup_incremental(new_df: DataFrame, corpus_sigs: DataFrame,
                  .where(F.col("jaccard") >= threshold))
 
 
+class ConvergenceError(RuntimeError):
+    """An iterative operator used up its round cap while its result was
+    still changing, so the result it has is not a fixed point."""
+
+
 def dedup_clusters(ids: DataFrame, pairs: DataFrame,
                    id_col: str = "doc_id", max_iter: int = 20) -> DataFrame:
     """Connected components over near-dup pairs: every document gets
     ``cluster_id`` = the min id reachable through dup edges (the cluster's
     canonical representative; keep rows where id == cluster_id to dedup).
 
-    Iterative min-label propagation: each round joins labels across
-    edges and keeps the smaller label, converging in O(component
-    diameter) rounds — dup clusters are near-cliques, so 2-3 rounds in
-    practice. ``localCheckpoint`` truncates the growing lineage each
-    round (the standard Spark iterative-algorithm pattern); the
-    convergence check is the per-round action that would otherwise be a
-    wasted extra job.
+    Only edges with both ends in ``ids`` take part: an endpoint outside
+    ``ids`` gets no label and carries none across. The output has one
+    row per ``ids`` row; a document without such edges labels itself.
+
+    Iterative min-label propagation over the edges in both orientations
+    plus one self-loop per endpoint. A round is one join + one
+    aggregate: edges ⋈ labels on the source, then ``min`` label per
+    destination. The self-loop row carries the node's old label, so the
+    old and new label come out of the same aggregate and no join back to
+    the label table is needed. Round 1 is fused: every label starts as
+    the node's own id, so it is ``min(__src)`` per ``__dst`` over the
+    edges alone. Each round is ``localCheckpoint``ed (lineage
+    truncation, the standard Spark iterative-algorithm pattern) and the
+    convergence check is an ``isEmpty()`` over its changed rows.
+    Propagation takes O(component diameter) rounds — dup clusters are
+    near-cliques, so 2-3 rounds in practice.
+
+    ``max_iter`` caps the label-update rounds, the fused first round
+    included. If the last allowed round still changed a label, the
+    labels are not final and :class:`ConvergenceError` is raised
+    instead of returning them.
 
     The end-to-end pipeline this stage sits in (signatures -> pairs ->
     clusters -> canonical keep), its per-stage shuffle count, its skew
@@ -353,50 +377,51 @@ def dedup_clusters(ids: DataFrame, pairs: DataFrame,
     the large-star/small-star algorithm are documented in PLANS.md
     ("The dedup end-to-end pipeline at 100 TB").
     """
-    # both orientations via ONE explode, not a self-union: the union
-    # form re-executes the whole candidate-generation + verification
-    # subtree once per branch (pairs is not persisted — at 100 TB
-    # that is a second full LSH bucket join), the explode emits the
-    # swapped twin from the same pass (r15; guide §2.4, same shape as
-    # embedding_near_dup's posexplode rewrite)
+    if max_iter < 1:
+        raise ValueError(f"dedup_clusters: max_iter must be >= 1, "
+                         f"got {max_iter}")
+    # both orientations and both self-loops via ONE explode, not a
+    # self-union: the union form re-executes the whole candidate-
+    # generation + verification subtree once per branch (pairs is not
+    # persisted — at 100 TB that is a second full LSH bucket join)
+    a, b = F.col("id_a"), F.col("id_b")
     e = pairs.select(F.explode(F.array(
-        F.struct(F.col("id_a").alias("__src"),
-                 F.col("id_b").alias("__dst")),
-        F.struct(F.col("id_b").alias("__src"),
-                 F.col("id_a").alias("__dst")))).alias("__e"))
+        F.struct(a.alias("__src"), b.alias("__dst")),
+        F.struct(b.alias("__src"), a.alias("__dst")),
+        F.struct(a.alias("__src"), a.alias("__dst")),
+        F.struct(b.alias("__src"), b.alias("__dst")))).alias("__e"))
+    # Only nodes with at least one dup edge can ever change labels, so
+    # the rounds carry |endpoints| rows, not |corpus|; the untouched
+    # majority joins once at the end with label = id. No distinct():
+    # a repeated edge or self-loop cannot change a min, the rounds'
+    # partial aggregates fold repeats before their shuffle, and the
+    # distinct cost a shuffle stage per call.
     edges = (e.select("__e.__src", "__e.__dst")
-             .distinct().localCheckpoint())
-    # Only nodes with at least one dup edge can ever change labels —
-    # an isolated node's min reachable id is itself. Restrict the
-    # iterative joins to the edge endpoints (dup pairs are a small
-    # fraction of any real corpus) and attach the untouched majority
-    # once at the end with label = id; output is identical, but each
-    # round's two shuffles carry |endpoints| rows instead of |corpus|
-    # (r14 optimization; guide §2.3 — shuffle fewer bytes).
-    # semi-join on ids: an endpoint outside ``ids`` held no label row
-    # under the old full-corpus loop (it neither propagated nor
-    # appeared in the output) — keep that contract exactly
-    labels = (edges.select(F.col("__src").alias("__id")).distinct()
-              .join(ids.select(F.col(id_col).alias("__id")), "__id",
-                    "left_semi")
-              .withColumn("__label", F.col("__id"))
-              .localCheckpoint())
+             .join(ids.select(F.col(id_col).alias("__src")), "__src",
+                   "left_semi")
+             .join(ids.select(F.col(id_col).alias("__dst")), "__dst",
+                   "left_semi")
+             .localCheckpoint())
+    # (__src, __dst, __lab): each edge with its source's current label
+    sent = edges.withColumn("__lab", F.col("__src"))
     for _ in range(max_iter):
-        nbr = (edges.join(labels, edges["__src"] == labels["__id"])
-               .groupBy("__dst").agg(F.min("__label").alias("__nbr")))
-        merged = (labels.join(nbr, labels["__id"] == nbr["__dst"], "left")
-                  .select(F.col("__id"),
-                          F.col("__label").alias("__old"),
-                          F.least(F.col("__label"),
-                                  F.coalesce(F.col("__nbr"), F.col("__label")))
-                           .alias("__label")))
-        merged = merged.localCheckpoint()
-        changed = merged.where(F.col("__label") != F.col("__old")).count()
-        labels = merged.drop("__old")
-        if changed == 0:
+        labels = (sent.groupBy("__dst").agg(
+                      F.min("__lab").alias("__label"),
+                      F.min(F.when(F.col("__src") == F.col("__dst"),
+                                   F.col("__lab"))).alias("__old"))
+                  .localCheckpoint())
+        if labels.where(F.col("__label") < F.col("__old")).isEmpty():
             break
+        sent = edges.join(
+            labels.select(F.col("__dst").alias("__src"),
+                          F.col("__label").alias("__lab")), "__src")
+    else:
+        raise ConvergenceError(
+            f"dedup_clusters: labels still changed in round {max_iter}, "
+            f"the round cap (max_iter={max_iter}); a component is longer "
+            f"than the cap allows")
     return (ids.select(F.col(id_col))
-            .join(labels, ids[id_col] == labels["__id"], "left")
+            .join(labels, ids[id_col] == labels["__dst"], "left")
             .select(F.col(id_col),
                     F.coalesce(F.col("__label"), F.col(id_col))
                      .alias("cluster_id")))

@@ -14,8 +14,9 @@ from pyspark.sql import SparkSession
 
 # Confs that must be set before the JVM starts.
 _BUILD_TIME_CONFS = {
-    # One shuffle partition per core at local test scale; AQE coalesces
-    # further. On a real cluster this would be ~2-3x total cores.
+    # 32 shuffle partitions whatever the core count (SPARK_GRAFT_SHUFFLE
+    # overrides); AQE coalesces them down to the data at runtime. On a
+    # real cluster this would be ~2-3x total cores.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -42,6 +43,12 @@ _RUNTIME_CONFS = {
     # semantics line up with the reference's UTC rendering.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.adaptive.enabled": "true",
+    # Let AQE coalesce the shuffle output of persisted plans. Spark's
+    # default (false) freezes a cached frame at spark.sql.shuffle.partitions,
+    # so every stage reading it runs that many tasks however few rows it
+    # holds (minhash_dedup_pairs' shingle sets and signatures, the KQL
+    # fork/facet/materialize persists).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # untruncated PushedFilters/ReadSchema in plan strings, so plan
     # assertions (plans/explain.py) see the full metadata
     "spark.sql.maxMetadataStringLength": "10000",

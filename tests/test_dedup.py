@@ -101,6 +101,92 @@ def test_dedup_clusters_transitive_chain(spark):
     assert got == {0: 0, 4: 0, 1: 1, 3: 1, 5: 1, 2: 2}
 
 
+def _components(ids, pairs):
+    """Pure-Python union-find: each id -> the min id of its component,
+    over the pairs whose two ends are both in ``ids``."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
+
+
+@pytest.mark.parametrize("seed", range(12))
+def test_dedup_clusters_random_differential(spark, seed):
+    """dedup_clusters against union-find over seeded random graphs:
+    ``ids`` covers a subset of the nodes, pair endpoints fall outside
+    ``ids``, pairs come in both orientations and repeated, a cycle is
+    planted, and seed 0 has no pairs at all."""
+    import random
+
+    rnd = random.Random(seed)
+    n = rnd.randint(8, 40)
+    nodes = list(range(n))
+    ids = sorted(rnd.sample(nodes, rnd.randint(1, n)))
+    outside = list(range(n, n + 5))
+    pairs = [] if seed == 0 else [
+        (rnd.choice(nodes + outside), rnd.choice(nodes))
+        for _ in range(rnd.randint(1, 2 * n))]
+    if pairs:
+        pairs += [(b, a) for a, b in pairs[:3]] + pairs[:2]
+        ring = rnd.sample(ids, min(len(ids), 4))
+        pairs += list(zip(ring, ring[1:] + ring[:1]))
+    rnd.shuffle(pairs)
+    ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    pairs_df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    out = D.dedup_clusters(ids_df, pairs_df, max_iter=n + 1).collect()
+    assert len(out) == len(ids)
+    assert {r["doc_id"]: r["cluster_id"] for r in out} == \
+        _components(ids, pairs)
+
+
+def test_dedup_clusters_raises_at_round_cap(spark):
+    """On a 30-node path the labels change for 29 rounds. Under the
+    default cap of 20 the labels are partial (9 nodes wrong), so the
+    call must raise, naming the cap. max_iter counts every label-update
+    round, the first included: 30 rounds converge (the 30th changes
+    nothing), 29 do not."""
+    ids = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
+    path = spark.createDataFrame([(i, i + 1) for i in range(29)],
+                                 "id_a long, id_b long")
+    with pytest.raises(D.ConvergenceError, match="max_iter=20"):
+        D.dedup_clusters(ids, path).collect()
+    with pytest.raises(D.ConvergenceError, match="max_iter=29"):
+        D.dedup_clusters(ids, path, max_iter=29).collect()
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in D.dedup_clusters(ids, path, max_iter=30).collect()}
+    assert got == {i: 0 for i in range(30)}
+
+
+def test_minhash_pairs_stages_are_right_sized(spark, sf_dir):
+    """The shingle sets and signatures minhash_dedup_pairs persists are
+    shuffle outputs. Unless AQE may coalesce persisted plans, they stay
+    at spark.sql.shuffle.partitions and every stage reading them runs
+    that many tasks over a few hundred documents."""
+    sc = spark.sparkContext
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    group = "test-minhash-stage-sizes"
+    docs = load_table(spark, sf_dir, "documents")
+    sc.setJobGroup(group, "minhash_dedup_pairs stage sizes")
+    try:
+        D.minhash_dedup_pairs(docs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    tasks = [info.numTasks for job in st.getJobIdsForGroup(group)
+             for stage in st.getJobInfo(job).stageIds
+             if (info := st.getStageInfo(stage)) is not None]
+    assert tasks and n not in tasks, tasks
+
+
 def test_peek_dim_distrusts_footer_for_aliased_column(spark, sf_dir):
     """If vec_col was ALIASED from a different expression, the on-disk
     column of the same name may have another width — the peek must fall

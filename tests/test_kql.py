@@ -3550,6 +3550,21 @@ def test_graph_mark_components(spark, sf_dir):
         kql(spark, sf_dir, "nation | graph-mark-components")
 
 
+def test_graph_mark_components_round_cap(spark, sf_dir):
+    """A 30-node path needs 29 label-changing rounds, over the cap of
+    20. Its partial labels would report 10 components for one path, so
+    the stage must raise instead, naming the cap."""
+    from azure_kusto_parquet_conv_spark.operators.dedup import (
+        ConvergenceError)
+
+    edges = ", ".join(f"{i},{i + 1}" for i in range(29))
+    with pytest.raises(ConvergenceError, match="max_iter=20"):
+        kql(spark, sf_dir, f"""
+          let E = datatable (src:long, dst:long) [ {edges} ];
+          E | make-graph src --> dst | graph-mark-components
+        """).collect()
+
+
 def test_graph_match_rejections(spark, sf_dir):
     """Documented subset boundaries fail loudly: graph-match without
     make-graph, disconnected patterns (a cartesian at scale), missing
