@@ -194,19 +194,6 @@ def decimal_string(c: Column | str) -> Column:
 # Nested types (converter.rs:214-281) and whole-row rendering
 # --------------------------------------------------------------------------
 
-def empty_bag_to_null(c: Column | str) -> Column:
-    """Struct/map rendered as ``{}`` becomes null under --omit-empty-bags
-    (converter.rs:225-229, 276-280). Works on a pre-rendered JSON string."""
-    col = _col(c)
-    return F.when(col != "{}", col)
-
-
-def empty_list_to_null(c: Column | str) -> Column:
-    """Array: ``[] -> null`` under --omit-empty-lists (converter.rs:240-244)."""
-    col = _col(c)
-    return F.when(F.size(col) != 0, col)
-
-
 def kusto_rendered_column(c: Column, dtype: T.DataType, *,
                           timestamp: TimestampRendering = TimestampRendering.ISO_STR,
                           convert_types: bool = False) -> Column:

@@ -26,10 +26,13 @@ Supported surface (each line maps to one DataFrame verb):
     | parse [kind=simple|regex [flags=ims]] col with pattern
     | project c1, alias=expr, ...
     | project-away | project-keep | project-rename | project-reorder
-    | extend alias=expr, ...   (row_number()/row_cumsum(x [, restart])/
-        prev|next(x [, offset [, default]])/
-        row_window_session(ts, maxDur, maxGap [, restart])
-        after sort — key-partitioned inside `partition by`)
+    | extend alias=expr, ...   (after sort, the serialized functions
+        row_number([start [, restart]]) / row_cumsum(x [, restart]) /
+        prev|next(x [, offset [, default]]) / row_rank_dense|min(t)
+        are expressions in extend, project and where — each one SQL
+        window, key-partitioned inside `partition by`; the
+        row_window_session(ts, maxDur, maxGap [, restart]) kernel is
+        the whole right-hand side of an extend)
     | summarize [hint.shufflekey=k] a=agg(x), ...
         by k1, name=expr, bin(ts, 1h), bin_at(x, size, anchor)
     | make-series a=agg(x), b=agg2(y), ... [default=v|null]
@@ -5689,9 +5692,12 @@ def _explodable(df: DataFrame, sql: str, bag_kind: str = "bag"):
     return c
 
 
-def _split_top_semis(q: str) -> list[str]:
-    """Split a multi-statement query on top-level ';' (KQL let-statement
-    separators), respecting parens/brackets/strings."""
+def _split_top(q: str, sep: str) -> list[str]:
+    """Split raw text on top-level ``sep`` — ';' between statements,
+    '|' between pipeline stages, ',' between plugin arguments or
+    graph-match patterns (where the token-based splitter does not apply
+    because edge arrows are not expression tokens) — respecting
+    parens/brackets/strings. Parts are stripped; empty ones dropped."""
     parts, depth, start, i, n = [], 0, 0, 0, len(q)
     while i < n:
         c = q[i]
@@ -5704,31 +5710,7 @@ def _split_top_semis(q: str) -> list[str]:
             i += 1
             while i < n and q[i] != quote:
                 i += 2 if q[i] == "\\" else 1
-        elif c == ";" and depth == 0:
-            parts.append(q[start:i].strip())
-            start = i + 1
-        i += 1
-    parts.append(q[start:].strip())
-    return [p for p in parts if p]
-
-
-def _split_top_commas_text(q: str) -> list[str]:
-    """Split raw text on top-level ',' respecting parens/brackets/
-    strings (graph-match pattern lists, where the token-based splitter
-    does not apply because edge arrows are not expression tokens)."""
-    parts, depth, start, i, n = [], 0, 0, 0, len(q)
-    while i < n:
-        c = q[i]
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c in "'\"":
-            quote = c
-            i += 1
-            while i < n and q[i] != quote:
-                i += 2 if q[i] == "\\" else 1
-        elif c == "," and depth == 0:
+        elif c == sep and depth == 0:
             parts.append(q[start:i].strip())
             start = i + 1
         i += 1
@@ -6024,28 +6006,6 @@ def _scalar_literal_sql(v) -> str:
     return f"'{s}'"
 
 
-def _split_pipes(q: str) -> list[str]:
-    """Split on top-level '|' (not inside parens/brackets/strings)."""
-    parts, depth, start, i, n = [], 0, 0, 0, len(q)
-    while i < n:
-        c = q[i]
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c in "'\"":
-            quote = c
-            i += 1
-            while i < n and q[i] != quote:
-                i += 2 if q[i] == "\\" else 1
-        elif c == "|" and depth == 0:
-            parts.append(q[start:i].strip())
-            start = i + 1
-        i += 1
-    parts.append(q[start:].strip())
-    return [p for p in parts if p]
-
-
 def _split_top_commas(toks: list[Tok]) -> list[list[Tok]]:
     groups, cur, depth = [], [], 0
     for t in toks:
@@ -6063,18 +6023,21 @@ def _split_top_commas(toks: list[Tok]) -> list[list[Tok]]:
     return groups
 
 
+def _split_named(toks: list[Tok], auto: str) -> tuple[str, list[Tok]]:
+    """Split `name = expr` or bare `expr` into (alias, expr tokens); a
+    bare column keeps its name, any other bare expr is named ``auto``."""
+    if len(toks) >= 2 and toks[0].kind == "ident" and toks[1].text == "=":
+        return toks[0].text, toks[2:]
+    if len(toks) == 1 and toks[0].kind == "ident":
+        return toks[0].text, toks
+    return auto, toks
+
+
 def _named_expr(toks: list[Tok], df: DataFrame,
                 auto: str) -> tuple[str, str]:
     """Parse `name = expr` or bare `expr`; returns (alias, sql)."""
-    if len(toks) >= 2 and toks[0].kind == "ident" and toks[1].text == "=":
-        name, body = toks[0].text, toks[2:]
-    else:
-        name, body = None, toks
-    sql = _compile_expr_tokens(body, df)
-    if name is None:
-        name = body[0].text if len(body) == 1 and body[0].kind == "ident" \
-            else auto
-    return name, sql
+    name, body = _split_named(toks, auto)
+    return name, _compile_expr_tokens(body, df)
 
 
 def _expand_col_patterns(groups: list[list[Tok]],
@@ -6154,47 +6117,147 @@ def _warn_global_serialize(what: str, df: DataFrame | None = None) -> None:
         f"'spark.kql.globalSerialize.allow', 'true').")
 
 
+#: Kusto's serialized functions -> (usage, min args, max args). Each
+#: call compiles to ONE SQL window expression (_render_serial).
+_SERIAL_FNS = {
+    "prev": ("x [, offset [, default]]", 1, 3),
+    "next": ("x [, offset [, default]]", 1, 3),
+    "row_number": ("[StartingIndex [, Restart]]", 0, 2),
+    "row_cumsum": ("x [, Restart]", 1, 2),
+    "row_rank_dense": ("Term", 1, 1),
+    "row_rank_min": ("Term", 1, 1),
+}
+_ROWS_TO_HERE = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+#: token kinds that _parse_expr_with_atoms passes through as atoms; the
+#: "window" kinds mark a rendered serialized call ("window_run": its
+#: window partitions on a restart run id besides the scope keys)
+_ATOM_KINDS = ("rendered", "window", "window_run")
+
+
+def _close_paren(toks: list[Tok], i: int) -> int:
+    """Index of the ')' matching the '(' at ``toks[i]`` (len(toks) when
+    unbalanced)."""
+    depth = 0
+    for j in range(i, len(toks)):
+        if toks[j].text == "(":
+            depth += 1
+        elif toks[j].text == ")":
+            depth -= 1
+            if depth == 0:
+                return j
+    return len(toks)
+
+
+def _call_args(toks: list[Tok], name: str) -> list[list[Tok]] | None:
+    """The argument groups when ``toks`` is exactly one call of
+    ``name``, else None."""
+    if (len(toks) >= 3 and toks[0].kind == "ident"
+            and toks[0].text.lower() == name and toks[1].text == "("
+            and _close_paren(toks, 1) == len(toks) - 1):
+        return _split_top_commas(toks[2:-1])
+    return None
+
+
+def _render_serial(fn: str, args: list[list[Tok]], df: DataFrame | None,
+                   scope: _SerialScope | None) -> Tok:
+    """One serialized call as ONE window expression over the scope's
+    serialized order: prev/next -> lag/lead; row_number -> row_number()
+    shifted to StartingIndex; row_cumsum -> a running sum;
+    row_rank_dense -> a running count of Term changes (null-safe
+    ``<=>``; the first row is always a change); row_rank_min -> the
+    least row number of the row's dense run. A Restart argument adds
+    the running restart count as an extra partition expression, and
+    row_rank_min partitions by the dense run: those windows repartition
+    on (keys, run), so they render as kind "window_run". An argument
+    may itself hold a serialized call (``row_number(1, k !=
+    prev(k))``): Spark nests windows in window arguments and PARTITION
+    BY. Unscoped calls go through the global-serialize guard."""
+    usage, lo, hi = _SERIAL_FNS[fn]
+    if not lo <= len(args) <= hi:
+        raise ValueError(f"KQL: {fn}({usage})")
+    if scope is None:
+        raise ValueError(f"KQL: {fn}() works in extend, project and "
+                         "where after a 'sort by' (serialized order)")
+    if not scope.order:
+        raise ValueError(f"KQL: {fn}() needs a preceding 'sort by' "
+                         "(serialized order)")
+    run = False
+
+    def sql(g: list[Tok]) -> str:
+        nonlocal run
+        toks = _render_tokens(g, df, scope)
+        run = run or any(t.kind == "window_run" for t in toks)
+        return _parse_expr_with_atoms(toks, df)
+
+    over = scope.over_sql()
+    if fn in ("prev", "next"):
+        x = sql(args[0])
+        rest = [sql(g) for g in args[1:]] or ["1"]
+        text = (f"{'lag' if fn == 'prev' else 'lead'}({x}, "
+                f"{', '.join(rest)}) OVER ({over})")
+    elif fn in ("row_rank_dense", "row_rank_min"):
+        t = sql(args[0])
+        text = (f"sum(CASE WHEN lag(1, 1) OVER ({over}) IS NULL THEN 1 "
+                f"WHEN lag({t}, 1) OVER ({over}) <=> ({t}) THEN 0 "
+                f"ELSE 1 END) OVER ({over}{_ROWS_TO_HERE})")
+        if fn == "row_rank_min":
+            run = True
+            text = (f"min(row_number() OVER ({over})) "
+                    f"OVER ({scope.over_sql(text)})")
+        text = f"CAST({text} AS BIGINT)"
+    else:
+        if len(args) == 2:
+            # Restart: the run id is the running count of restarts
+            run = True
+            over = scope.over_sql(f"sum(IF({sql(args[1])}, 1, 0)) "
+                                  f"OVER ({over}{_ROWS_TO_HERE})")
+        if fn == "row_cumsum":
+            text = f"sum({sql(args[0])}) OVER ({over}{_ROWS_TO_HERE})"
+        else:
+            start = f" + ({sql(args[0])}) - 1" if args else ""
+            text = f"CAST(row_number() OVER ({over}){start} AS BIGINT)"
+    if not scope.keys:
+        _warn_global_serialize(f"{fn}()", df)
+    return Tok("window_run" if run else "window", text)
+
+
 def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
                          scope: _SerialScope | None = None) -> str:
-    """Expression compile with schema-aware bin() and serialized-order
-    prev()/next() interception. Inside ``partition by key ( ... )``
-    scope the window partitions on the key; otherwise it is a GLOBAL
-    (single-partition) window — correct KQL serialized semantics, but a
-    scale hazard, so a loud warning fires unless the input was bounded
-    first (Kusto's own answer is `partition by` scoping)."""
+    """Expression compile with the token-level interceptions (see
+    _render_tokens), then the Pratt parse with rendered atoms."""
+    return _parse_expr_with_atoms(_render_tokens(toks, df, scope), df)
+
+
+def _render_tokens(toks: list[Tok], df: DataFrame | None,
+                   scope: _SerialScope | None = None) -> list[Tok]:
+    """Render the calls that need more than the token text into atom
+    tokens: schema-aware bin()/bin_at()/bin_auto(), pack_all(), dynamic
+    member access, and the serialized functions
+    prev/next/row_number/row_cumsum/row_rank_dense/row_rank_min — each
+    ONE window expression over ``scope`` (_render_serial), so they
+    compose inside any extend/project/where expression. Inside
+    ``partition by key ( ... )`` scope the window partitions on the key;
+    otherwise it is a GLOBAL (single-partition) window — correct KQL
+    serialized semantics, but a scale hazard, so a loud warning fires
+    unless the input was bounded first (Kusto's own answer is
+    `partition by` scoping)."""
     out: list[Tok] = []
     i = 0
     while i < len(toks):
         t = toks[i]
-        if (t.kind == "ident" and t.text.lower() in ("prev", "next")
-                and scope is not None and scope.order
-                and i + 1 < len(toks)
-                and toks[i + 1].text == "("):
-            depth, j = 0, i + 1
-            while j < len(toks):
-                if toks[j].text == "(":
-                    depth += 1
-                elif toks[j].text == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            # prev(x [, offset [, default]]) — Kusto's full signature
-            argg = _split_top_commas(toks[i + 2:j])
-            if not 1 <= len(argg) <= 3:
+        if (t.kind == "ident" and i + 1 < len(toks)
+                and toks[i + 1].text == "("
+                and t.text.lower() in (*_SERIAL_FNS,
+                                       "row_window_session")):
+            fn = t.text.lower()
+            if fn == "row_window_session":
                 raise ValueError(
-                    f"KQL: {t.text.lower()}(x [, offset [, default]])")
-            inner = _compile_expr_tokens(argg[0], df, scope)
-            off = (_compile_expr_tokens(argg[1], df)
-                   if len(argg) >= 2 else "1")
-            dflt = (", " + _compile_expr_tokens(argg[2], df)
-                    if len(argg) == 3 else "")
-            fn = "lag" if t.text.lower() == "prev" else "lead"
-            if not scope.keys:
-                _warn_global_serialize(t.text.lower() + "()", df)
-            out.append(Tok("rendered",
-                           f"{fn}({inner}, {off}{dflt}) "
-                           f"OVER ({scope.over_sql()})"))
+                    "KQL: row_window_session() is an extend kernel: use "
+                    "it as the whole right-hand side, `extend s = "
+                    "row_window_session(...)`")
+            j = _close_paren(toks, i + 1)
+            out.append(_render_serial(
+                fn, _split_top_commas(toks[i + 2:j]), df, scope))
             i = j + 1
             continue
         if (t.kind == "ident" and t.text.lower() == "pack_all"
@@ -6205,15 +6268,7 @@ def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
             # ignore_null_empty=true, null / '' / [] / {} values are
             # dropped (Kusto semantics); otherwise nulls are kept
             # (to_json's ignoreNullFields is explicitly disabled).
-            depth, j = 0, i + 1
-            while j < len(toks):
-                if toks[j].text == "(":
-                    depth += 1
-                elif toks[j].text == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            j = _close_paren(toks, i + 1)
             inner = [x for x in toks[i + 2:j]]
             arg = "".join(x.text for x in inner).strip().lower()
             if arg not in ("", "true", "false"):
@@ -6242,16 +6297,7 @@ def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
                 and t.text.lower() in ("bin", "bin_at", "bin_auto")
                 and i + 1 < len(toks) and toks[i + 1].text == "("):
             fn = t.text.lower()
-            # find matching close paren
-            depth, j = 0, i + 1
-            while j < len(toks):
-                if toks[j].text == "(":
-                    depth += 1
-                elif toks[j].text == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            j = _close_paren(toks, i + 1)
             inner = toks[i + 2:j]
             groups = _split_top_commas(inner)
             if fn == "bin_auto":
@@ -6331,8 +6377,7 @@ def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
                 continue
         out.append(t)
         i += 1
-    # re-parse with rendered fragments treated as atoms
-    return _parse_expr_with_atoms(out, df)
+    return out
 
 
 def _parse_expr_with_atoms(toks: list[Tok],
@@ -6341,7 +6386,7 @@ def _parse_expr_with_atoms(toks: list[Tok],
     class P(_ExprParser):
         def _prefix(self):
             t = self.peek()
-            if t is not None and t.kind == "rendered":
+            if t is not None and t.kind in _ATOM_KINDS:
                 self.next()
                 return t.text
             return super()._prefix()
@@ -7845,13 +7890,14 @@ class _SerialScope:
         w = Window.partitionBy(*self.key_cols()) if self.keys else Window
         return w.orderBy(*self.order_cols())
 
-    def over_sql(self) -> str:
-        """The same window as SQL ``OVER (...)`` body text."""
+    def over_sql(self, run: str | None = None) -> str:
+        """The same window as SQL ``OVER (...)`` body text, the body
+        every serialized function renders over. ``run`` is an extra
+        partition expression after the keys: the restart run id of
+        row_number/row_cumsum, the dense run of row_rank_min."""
         order = f"ORDER BY {', '.join(map(str, self.order))}"
-        if not self.keys:
-            return order
-        return (f"PARTITION BY {', '.join(f'`{k}`' for k in self.keys)} "
-                f"{order}")
+        part = [f"`{k}`" for k in self.keys] + ([run] if run else [])
+        return f"PARTITION BY {', '.join(part)} {order}" if part else order
 
 
 class KqlCompiler:
@@ -7944,7 +7990,7 @@ class KqlCompiler:
                     pass
 
     def _compile_stmts(self, query: str) -> DataFrame:
-        stmts = _split_top_semis(query)
+        stmts = _split_top(query, ";")
         if not stmts:
             raise ValueError("KQL: empty query")
         for s in stmts[:-1]:
@@ -8146,7 +8192,7 @@ class KqlCompiler:
                 or head in TABLES)
 
     def _compile_tabular(self, query: str) -> DataFrame:
-        stages = _split_pipes(query)
+        stages = _split_top(query, "|")
         if not stages:
             raise ValueError("KQL: empty query")
         df = self._source(stages[0].strip())
@@ -8434,11 +8480,18 @@ class KqlCompiler:
             raise ValueError(f"KQL: bad stage {stage!r}")
         op, rest = m.group(1).lower(), m.group(2).strip()
         if op == "where":
-            return df.where(F.expr(_compile_expr_tokens(_tokenize(rest), df)))
+            sql, windowed = self._serial_expr(_tokenize(rest), df)
+            if not windowed:
+                return df.where(F.expr(sql))
+            # Spark rejects window functions in WHERE: filter on a
+            # helper column instead
+            return (df.withColumn("__kql_where", F.expr(sql))
+                      .where(F.col("__kql_where")).drop("__kql_where"))
         if op == "project":
             cols = []
             for i, g in enumerate(_split_top_commas(_tokenize(rest))):
-                name, sql = _named_expr(g, df, f"col{i}")
+                name, body = _split_named(g, f"col{i}")
+                sql = self._serial_expr(body, df)[0]
                 cols.append(F.expr(sql).alias(name))
             if not cols:
                 # a bare `project` would silently yield a ZERO-column
@@ -8561,151 +8614,15 @@ class KqlCompiler:
                     name, body = g[0].text, g[2:]
                 else:
                     name, body = f"col{i}", g
-                sql = _compile_expr_tokens(body, df, self._scope)
-                mcs = re.match(r"row_cumsum\s*\((.*)\)\s*$", sql.strip(),
-                               re.DOTALL)
-                mrr = re.match(r"row_rank_(dense|min)\s*\((.*)\)\s*$",
-                               sql.strip(), re.DOTALL)
-                if mrr:
-                    # Kusto row_rank_dense / row_rank_min: serialized
-                    # RUN-based ranks — dense starts at 1 and advances
-                    # whenever Term changes vs the previous row;
-                    # min is the first row number of the current run of
-                    # equal Term values. On input sorted by Term these
-                    # coincide with classic DENSE_RANK / RANK. Null-safe
-                    # change detection (<=>).
-                    w = self._serial_guard(
-                        f"row_rank_{mrr.group(1)}()", df).window()
-                    term = F.expr(mrr.group(2))
-                    # first row is always a change (rank starts at 1,
-                    # even for a null Term — lag of a constant detects
-                    # the window start null-safely)
-                    chg = F.when(
-                        F.lag(F.lit(1), 1).over(w).isNull(), F.lit(1)
-                    ).when(
-                        F.lag(term, 1).over(w).eqNullSafe(term),
-                        F.lit(0)).otherwise(F.lit(1))
-                    wrun = w.rowsBetween(Window.unboundedPreceding,
-                                         Window.currentRow)
-                    dense = F.sum(chg).over(wrun).cast("long")
-                    if mrr.group(1) == "dense":
-                        df = df.withColumn(name, dense)
-                    else:
-                        # the run-id window repartitions on
-                        # (keys, run): scope-key rows may now span
-                        # partitions — scoped layout no longer holds
-                        self._scope = replace(self._scope, laid_out=False)
-                        df = df.withColumn("__rr_run", dense) \
-                               .withColumn("__rr_rn",
-                                           F.row_number().over(w))
-                        wmin = Window.partitionBy(
-                            *self._scope.key_cols(), F.col("__rr_run"))
-                        df = (df.withColumn(
-                                  name,
-                                  F.min("__rr_rn").over(wmin)
-                                   .cast("long"))
-                                .drop("__rr_run", "__rr_rn"))
+                args = _call_args(body, "row_window_session")
+                if args is not None:
+                    # the one serialized op that is a kernel, not a
+                    # window: each argument compiles on its own
+                    df = self._row_window_session(df, name, [
+                        _compile_expr_tokens(a, df, self._scope)
+                        for a in args])
                     continue
-                mws = re.match(r"row_window_session\s*\((.*)\)\s*$",
-                               sql.strip(), re.DOTALL)
-                if mws:
-                    df = self._row_window_session(df, name,
-                                                  mws.group(1))
-                    continue
-                mrn = re.fullmatch(r"row_number\(\s*(\d+)?\s*"
-                                   r"(?:,(?P<restart>.+))?\)",
-                                   sql.strip(), re.DOTALL)
-                if mrn or mcs:
-                    w = self._serial_guard(
-                        "row_cumsum()" if mcs else "row_number()",
-                        df).window()
-                    if mcs:
-                        # running sum over the serialized order; the
-                        # two-arg form row_cumsum(x, restart) resets
-                        # the accumulation AT each row where restart
-                        # is true (run id = running count of restarts,
-                        # then the sum re-partitions by run)
-                        inner = mcs.group(1)
-                        parts, depth, cur = [], 0, []
-                        for ch in inner:
-                            if ch in "([":
-                                depth += 1
-                            elif ch in ")]":
-                                depth -= 1
-                            if ch == "," and depth == 0:
-                                parts.append("".join(cur))
-                                cur = []
-                            else:
-                                cur.append(ch)
-                        parts.append("".join(cur))
-                        if len(parts) > 2:
-                            raise ValueError(
-                                "KQL: row_cumsum(x [, restart])")
-                        wrun = w.rowsBetween(
-                            Window.unboundedPreceding,
-                            Window.currentRow)
-                        if len(parts) == 2:
-                            # (keys, run) window repartitions — scoped
-                            # layout no longer holds past this stage
-                            self._scope = replace(self._scope,
-                                                  laid_out=False)
-                            df = df.withColumn(
-                                "__rc_run",
-                                F.sum(F.expr(
-                                    f"IF({parts[1]}, 1, 0)"))
-                                 .over(wrun))
-                            w2 = Window.partitionBy(
-                                *self._scope.key_cols(),
-                                F.col("__rc_run")) \
-                                .orderBy(*self._scope.order_cols()) \
-                                .rowsBetween(
-                                    Window.unboundedPreceding,
-                                    Window.currentRow)
-                            df = (df.withColumn(
-                                      name,
-                                      F.sum(F.expr(parts[0]))
-                                       .over(w2))
-                                    .drop("__rc_run"))
-                        else:
-                            df = df.withColumn(
-                                name,
-                                F.sum(F.expr(parts[0])).over(wrun))
-                    else:
-                        # row_number(StartingIndex [, Restart]): Kusto
-                        # offsets the first row to the given index;
-                        # the 2-arg form RESTARTS numbering at every
-                        # row where the boolean is true (r13 probe
-                        # sweep — run id = running count of restarts,
-                        # the row_cumsum restart shape)
-                        base = (int(mrn.group(1)) - 1
-                                if mrn.group(1) else 0)
-                        if mrn.group("restart"):
-                            # (keys, run) window repartitions — scoped
-                            # layout no longer holds past this stage
-                            self._scope = replace(self._scope,
-                                                  laid_out=False)
-                            wrun = w.rowsBetween(
-                                Window.unboundedPreceding,
-                                Window.currentRow)
-                            df = df.withColumn(
-                                "__rn_run",
-                                F.sum(F.expr(
-                                    f"IF({mrn.group('restart')}, "
-                                    f"1, 0)")).over(wrun))
-                            w2 = Window.partitionBy(
-                                *self._scope.key_cols(),
-                                F.col("__rn_run")) \
-                                .orderBy(*self._scope.order_cols())
-                            df = (df.withColumn(
-                                      name,
-                                      (F.row_number().over(w2)
-                                       + F.lit(base)).cast("long"))
-                                    .drop("__rn_run"))
-                        else:
-                            df = df.withColumn(
-                                name, (F.row_number().over(w)
-                                       + F.lit(base)).cast("long"))
-                    continue
+                sql = self._serial_expr(body, df)[0]
                 df = df.withColumn(name, F.expr(sql))
             return df
         if op == "summarize":
@@ -9948,7 +9865,7 @@ class KqlCompiler:
         data (pinned in tests). All accumulators are exact integers
         (weights at 1e4), so the result is engine-portable and
         hash-checkable."""
-        parts = [p.strip() for p in _split_top_commas_text(argtext)]
+        parts = _split_top(argtext, ",")
         if len(parts) < 4:
             raise ValueError(
                 "KQL: percentilew_approx(value, weight, P, scale"
@@ -10003,7 +9920,7 @@ class KqlCompiler:
         raw-double accumulation is summation-order-dependent and
         could not be oracled). Same null/non-positive-weight drops as
         the fold. Output column p<P> next to the by-keys."""
-        parts = [p.strip() for p in _split_top_commas_text(argtext)]
+        parts = _split_top(argtext, ",")
         if len(parts) < 3:
             raise ValueError(
                 "KQL: percentilew_exact(value, weight, P [, by...])")
@@ -10048,7 +9965,7 @@ class KqlCompiler:
         axis), p<pct>. Bins with no contributing rows are absent
         (Kusto emits the observed axis range; the spine-join to fill
         gaps composes with make-series downstream)."""
-        parts = [p.strip() for p in _split_top_commas_text(argtext)]
+        parts = _split_top(argtext, ",")
         if len(parts) < 5:
             raise ValueError(
                 "KQL: rolling_percentile(value, pct, binAxis, "
@@ -10130,7 +10047,7 @@ class KqlCompiler:
         sort_array(collect_list) per group whose size is the grid
         cardinality, never the row count. Output column ``tdigest`` =
         struct<scale:double, bs:array<struct<b,w>>>."""
-        parts = [p.strip() for p in _split_top_commas_text(argtext)]
+        parts = _split_top(argtext, ",")
         if len(parts) < 2:
             raise ValueError(
                 "KQL: tdigest(value, scale [, by...])")
@@ -10159,7 +10076,7 @@ class KqlCompiler:
         centroid t-digests only approximate). All input sketches must
         share one scale (built by the same tdigest call — mixing
         scales is a caller error; the first scale wins, documented)."""
-        parts = [p.strip() for p in _split_top_commas_text(argtext)]
+        parts = _split_top(argtext, ",")
         if len(parts) < 1:
             raise ValueError("KQL: tdigest_merge(td [, by...])")
         td = parts[0]
@@ -11173,7 +11090,7 @@ class KqlCompiler:
             out = base.withColumn(name, F.explode(_explodable(df, sql)))
         if cast_t:
             out = out.withColumn(name, F.col(name).cast(cast_t))
-        for stage in _split_pipes(m.group("sub")):
+        for stage in _split_top(m.group("sub"), "|"):
             sm = re.match(r"([A-Za-z_-]+)\s*(.*)", stage, re.DOTALL)
             sop, srest = sm.group(1).lower(), sm.group(2).strip()
             if sop in ("where", "extend"):
@@ -11666,7 +11583,7 @@ class KqlCompiler:
             saved = self._scope
             try:
                 child = df
-                for stage in _split_pipes(sub.strip().lstrip("|")):
+                for stage in _split_top(sub.strip().lstrip("|"), "|"):
                     if stage.strip():
                         child = self._apply(child, stage.strip())
             finally:
@@ -11867,7 +11784,7 @@ class KqlCompiler:
                                    um2 is not None))
                 cur_var = nxt
 
-        for chain in _split_top_commas_text(pat_text):
+        for chain in _split_top(pat_text, ","):
             parse_chain(chain.strip())
         if not edges_spec:
             raise ValueError("KQL: graph-match needs at least one "
@@ -13037,6 +12954,20 @@ class KqlCompiler:
             out = out.drop(alias)
         return out
 
+    def _serial_expr(self, toks: list[Tok],
+                     df: DataFrame) -> tuple[str, bool]:
+        """Compile one extend/project/where expression in the
+        pipeline's serialized scope: (sql, whether it rendered a
+        serialized call). A window that partitions on a restart run id
+        repartitions on (keys, run), so the scoped layout no longer
+        holds past it."""
+        out = _render_tokens(toks, df, self._scope)
+        kinds = {t.kind for t in out}
+        if "window_run" in kinds:
+            self._scope = replace(self._scope, laid_out=False)
+        return (_parse_expr_with_atoms(out, df),
+                not kinds.isdisjoint(("window", "window_run")))
+
     def _serial_guard(self, what: str, df: DataFrame) -> _SerialScope:
         """The scope for serialized op ``what``: it needs a serialized
         order, and unscoped it runs ONE global window behind the
@@ -13127,7 +13058,7 @@ class KqlCompiler:
                               "serialize", "scan"}
         try:
             out = df
-            for stage in _split_pipes(sub):
+            for stage in _split_top(sub, "|"):
                 sm = re.match(r"([A-Za-z_-]+)\s*(.*)", stage.strip(),
                               re.DOTALL)
                 sop, srest = sm.group(1).lower(), sm.group(2).strip()
@@ -13273,7 +13204,7 @@ class KqlCompiler:
         decl_names: list[str] = []
         decl_types: dict[str, str] = {}
         decl_inits: dict[str, object] = {}
-        for part in _split_top_commas_text(m.group("decl") or ""):
+        for part in _split_top(m.group("decl") or "", ","):
             dm = re.match(r"([A-Za-z_]\w*)\s*:\s*(\w+)\s*(?:=\s*(.*))?$",
                           part.strip(), re.DOTALL)
             if not dm:
@@ -13320,7 +13251,7 @@ class KqlCompiler:
         steps = []          # (name, catalyst_sql | None)
         py_preds = {}       # step index -> (closure, used cols)
         assigns = {}        # step index -> [(var, closure, used cols)]
-        for part in _split_top_semis(m.group("body")):
+        for part in _split_top(m.group("body"), ";"):
             part = part.strip()
             if not part:
                 continue
@@ -13462,7 +13393,7 @@ class KqlCompiler:
         return part.mapInPandas(kernel, out_schema)
 
     def _row_window_session(self, df: DataFrame, name: str,
-                            args_sql: str) -> DataFrame:
+                            args: list[str]) -> DataFrame:
         """``extend s = row_window_session(Expr, MaxDistanceFromFirst,
         MaxDistanceBetweenValues [, Restart])`` — Kusto's serialized
         sessionizer: every row gets the Expr value of the FIRST row of
@@ -13481,16 +13412,16 @@ class KqlCompiler:
         with cross-batch state walks each key's rows in serialized
         order. Inside ``partition by key (...)`` each key sessionizes
         independently (the scale shape); unscoped input hits the same
-        warn-then-error serialize guard as every serialized op."""
+        warn-then-error serialize guard as every serialized op.
+        ``args`` holds the compiled SQL of each call argument."""
         import pandas as pd
 
-        parts = _split_top_commas_text(args_sql)
-        if len(parts) not in (3, 4):
+        if len(args) not in (3, 4):
             raise ValueError(
                 "KQL: row_window_session(expr, max_from_first, "
                 "max_between [, restart])")
-        expr_sql, mf_sql, mb_sql = parts[0], parts[1], parts[2]
-        restart_sql = parts[3] if len(parts) == 4 else None
+        expr_sql, mf_sql, mb_sql = args[:3]
+        restart_sql = args[3] if len(args) == 4 else None
 
         def us_of(sql2, what):
             try:
@@ -13686,7 +13617,7 @@ def kql_stream(df: DataFrame, query: str,
     # real constructor (not a hand-rolled field list, which drifted once
     # when new compiler state was added): the stream has no table dir
     comp = KqlCompiler(df.sparkSession, sf_dir=None)
-    for stage in _split_pipes(query.lstrip().lstrip("|")):
+    for stage in _split_top(query.lstrip().lstrip("|"), "|"):
         m = re.match(r"([A-Za-z_-]+)\s*(.*)", stage, re.DOTALL)
         op, rest = m.group(1).lower(), m.group(2).strip()
         if op == "summarize" and df.isStreaming:

@@ -67,19 +67,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: str | list[str],
     return filled.where(F.col("__side") == 1).drop("__side")
 
 
-def range_join(left: DataFrame, right: DataFrame, on: str | list[str],
-               condition: Column) -> DataFrame:
-    """Equi-key join refined by an arbitrary range predicate. The equi keys
-    keep this a hash/sort-merge join (never a nested loop); pass e.g.
-    ``(r.ts >= l.ts - expr) & (r.ts <= l.ts)``."""
-    on = [on] if isinstance(on, str) else list(on)
-    cond = None
-    for k in on:
-        c = left[k] == right[k]
-        cond = c if cond is None else cond & c
-    return left.join(right, cond & condition, "inner")
-
-
 def range_join_bucketed(left: DataFrame, right: DataFrame, key: str,
                         left_ts: str, right_ts: str,
                         lower_ms: int, upper_ms: int,

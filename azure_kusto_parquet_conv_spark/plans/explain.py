@@ -128,8 +128,3 @@ def fact_scale_hint_violations(df: DataFrame) -> list[str]:
 def shuffle_count(df: DataFrame) -> int:
     """Number of exchanges in the plan (AQE may collapse some at runtime)."""
     return executed_plan(df).count("Exchange")
-
-
-def codegen_spans(df: DataFrame) -> int:
-    """How many whole-stage-codegen regions the plan compiled to."""
-    return len(re.findall(r"WholeStageCodegen", executed_plan(df)))

@@ -135,3 +135,94 @@ def test_scoped_kernel_keeps_order_when_extend_redefines_key(
     assert got == _twin("ts ASC NULLS FIRST, id ASC", True, kernel)
     assert got != _twin("ts - x * INTERVAL 1 MINUTE ASC NULLS FIRST, "
                         "id ASC", True, kernel)
+
+
+# Serialized functions are expressions: each idiom's serialized call
+# sits inside a larger expression, a `project` or a `where` — none of
+# them is the whole right-hand side of an extend. (KQL tail, DuckDB
+# twin); the twin's {w} is the serialized window, {g} the partition.
+ORDER = "ORDER BY ts ASC NULLS LAST, id ASC"
+RESTART_RUN = """
+  WITH f AS (SELECT *, CASE WHEN {flag} THEN 1 ELSE 0 END AS brk FROM t),
+  r AS (SELECT *, SUM(brk) OVER ({w} ROWS UNBOUNDED PRECEDING) AS run
+        FROM f)"""
+IDIOMS = {
+    "row_number_minus_1": (
+        "extend v = row_number() - 1",
+        "SELECT id, ROW_NUMBER() OVER ({w}) - 1 FROM t"),
+    "iff_row_number": (
+        "extend v = iff(row_number() == 1, x, 0)",
+        "SELECT id, CASE WHEN ROW_NUMBER() OVER ({w}) = 1 THEN x ELSE 0 "
+        "END FROM t"),
+    "project_row_number": (
+        "project id, v = row_number()",
+        "SELECT id, ROW_NUMBER() OVER ({w}) FROM t"),
+    "where_row_number": (
+        "where row_number() <= 2 | extend v = x",
+        "SELECT id, x FROM t QUALIFY ROW_NUMBER() OVER ({w}) <= 2"),
+    "row_cumsum_times_2": (
+        "extend v = row_cumsum(x) * 2",
+        "SELECT id, SUM(x) OVER ({w} ROWS UNBOUNDED PRECEDING) * 2 FROM t"),
+    "row_rank_dense_plus_0": (
+        "extend v = row_rank_dense(x % 3) + 0",
+        """WITH c AS (
+             SELECT *, CASE WHEN ROW_NUMBER() OVER ({w}) > 1
+                             AND LAG(x % 3) OVER ({w})
+                                 IS NOT DISTINCT FROM x % 3
+                            THEN 0 ELSE 1 END AS chg FROM t)
+           SELECT id, SUM(chg) OVER ({w} ROWS UNBOUNDED PRECEDING)
+           FROM c"""),
+    "project_prev": (
+        "project id, v = prev(x)",
+        "SELECT id, LAG(x) OVER ({w}) FROM t"),
+    "where_minus_prev": (
+        "where x - prev(x) > 0 | extend v = x",
+        "SELECT id, x FROM t QUALIFY x - LAG(x) OVER ({w}) > 0"),
+    "row_number_restart_minus_1": (
+        "extend v = row_number(1, x % 3 != prev(x % 3)) - 1",
+        RESTART_RUN.replace("{flag}", "x % 3 != LAG(x % 3) OVER ({w})")
+        + " SELECT id, ROW_NUMBER() OVER (PARTITION BY {g}, run {o}) - 1"
+          " FROM r"),
+    "row_cumsum_restart_times_2": (
+        "extend v = row_cumsum(x, x % 3 == 0) * 2",
+        RESTART_RUN.replace("{flag}", "x % 3 = 0")
+        + " SELECT id, SUM(x) OVER (PARTITION BY {g}, run {o}"
+          " ROWS UNBOUNDED PRECEDING) * 2 FROM r"),
+}
+
+
+@pytest.mark.parametrize("scoped", [False, True],
+                         ids=["unscoped", "partition_by"])
+@pytest.mark.parametrize("idiom", list(IDIOMS))
+def test_serialized_call_in_expression(spark, sf_dir, idiom, scoped):
+    """Each idiom matches its DuckDB window twin; unscoped, every one
+    still warns about the single-partition global sort."""
+    import warnings
+    tail, twin = IDIOMS[idiom]
+    g = "user_id" if scoped else "1"
+    want = _duckdb(twin.format(w=f"PARTITION BY {g} {ORDER}", g=g,
+                               o=ORDER))
+    body = f"sort by ts asc nulls last, id asc | {tail}"
+    pipe = f"partition by user_id ({body})" if scoped else body
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        rows = kql(spark, sf_dir,
+                   f"{_datatable()} | {pipe} | project id, v").collect()
+    assert {r["id"]: r["v"] for r in rows} == want
+    assert any("single-partition" in str(w.message)
+               for w in rec) == (not scoped)
+
+
+def test_where_serialized_call_leaves_schema(spark, sf_dir):
+    """A where that renders a window filters through a helper column;
+    the helper does not reach the output."""
+    df = kql(spark, sf_dir, f"{_datatable()} | sort by id asc "
+                            "| where x > prev(x)")
+    assert df.columns == ["user_id", "id", "x", "ts", "t2"]
+
+
+def test_row_window_session_outside_extend_is_a_clean_error(spark,
+                                                            sf_dir):
+    with pytest.raises(ValueError, match="row_window_session"):
+        kql(spark, sf_dir, f"{_datatable()} | sort by id asc "
+                           "| where row_window_session(t2, 1d, 5m) > t2")
