@@ -222,7 +222,7 @@ series_abs/exp/log/sign/sqrt/floor/ceiling/pow (elementwise),
 series_sin/cos/tan/asin/acos/atan (r11) + series_equals/not_equals/
 greater/greater_equals/less/less_equals (pairwise bool series),
 make_string (codepoints alias), replace_strings (sequential fold),
-pack_all([ignore_null_empty]) (schema-aware, token-level),
+pack_all([ignore_null_empty]) (schema-aware),
 pack_dictionary (pack alias), parse_command_line (windows
 CommandLineToArgvW rules + posix shlex, codec-UDF kernel),
 ipv4_compare/ipv4_is_match (min-prefix masking),
@@ -648,15 +648,27 @@ def _variant_sql_text(s: str, df: DataFrame | None = None) -> bool:
 
 
 class _ExprParser:
-    """Pratt parser over the token list; emits a Spark SQL string."""
+    """Pratt parser over the token list; emits a Spark SQL string.
 
-    def __init__(self, toks: list[Tok],
-                 df: DataFrame | None = None):
+    Built only by _compile, which stores the result in ``sql``.
+    ``df`` is the schema context (None in pure-text contexts:
+    datatable/print cells); ``scope`` is the pipeline's serialized
+    order (None where serialized calls are not allowed). A parse
+    records what its serialized calls did: ``windowed`` (one
+    rendered), ``run`` (one partitions on a restart run id) and
+    ``unscoped`` (the calls rendering a GLOBAL window, which the
+    caller passes through the global-serialize guard)."""
+
+    def __init__(self, toks: list[Tok], df: DataFrame | None = None,
+                 scope: _SerialScope | None = None):
         self.toks = toks
         self.i = 0
-        # schema context for type-resolved variant coercion; None in
-        # pure-text contexts (datatable/print cells)
         self.df = df
+        self.scope = scope
+        self.sql = ""
+        self.windowed = False
+        self.run = False
+        self.unscoped: list[str] = []
 
     def peek(self) -> Tok | None:
         return self.toks[self.i] if self.i < len(self.toks) else None
@@ -762,11 +774,31 @@ class _ExprParser:
                 # $left.x / $right.x join-key references keep the prefix;
                 # the join compiler strips it.
                 return text
-            return f"`{text}`" if "." not in text else text
+            return f"`{text}`" if "." not in text else self._member(text)
         raise ValueError(f"KQL: unexpected token {text!r}")
+
+    def _member(self, text: str) -> str:
+        """Dotted name ``d.k.j``: member access on a dynamic (VARIANT)
+        column compiles to a variant_get path (binary path walk, no
+        JSON re-parse); struct columns keep native dot access."""
+        base, path = text.split(".", 1)
+        if self.df is not None and any(
+                f.name == base and f.dataType.typeName() == "variant"
+                for f in self.df.schema.fields):
+            return f"variant_get(`{base}`, '$.{path}')"
+        return text
 
     def _call(self, fname: str) -> str:
         self.expect("(")
+        if fname in ("bin", "bin_at", "bin_auto", "floor"):
+            return self._bin(fname)
+        if fname == "pack_all":
+            return self._pack_all()
+        if fname == "row_window_session":
+            raise ValueError(
+                "KQL: row_window_session() is an extend kernel: use "
+                "it as the whole right-hand side, `extend s = "
+                "row_window_session(...)`")
         # tostring(<timespan literal>) folds to the Kusto timespan
         # text at compile time — the literal's token kind is the only
         # place its timespan-ness is still visible (compiled it is a
@@ -799,7 +831,168 @@ class _ExprParser:
                     continue
                 break
         self.expect(")")
+        if fname in _SERIAL_FNS:
+            return self._serial(fname, args)
         return self._render_call(fname, args)
+
+    def _bin(self, fname: str) -> str:
+        """bin(x, size) and its Kusto alias floor(x, size), bin_at(x,
+        size, anchor) and bin_auto(x). The size is ONE literal token
+        whose kind, checked before the other arguments parse, picks
+        the bucketing: a timespan buckets a datetime on its µs, a
+        number buckets numerically. bin_at aligns with pmod, so
+        buckets BELOW the anchor land correctly (integer div truncates
+        toward 0). One-argument floor(x) is the plain function."""
+        groups = _split_top_commas(
+            self.toks[self.i:_close_paren(self.toks, self.i - 1)])
+        if fname == "floor" and len(groups) < 2:
+            x = self.parse(0)
+            self.expect(")")
+            return self._render_call(fname, [x])
+        anchor = None
+        if fname == "bin_auto":
+            # bin_auto(x) == bin_at(x, query_bin_auto_size,
+            # query_bin_auto_minimum) with the size/anchor taken from
+            # the request properties (real Kusto semantics); the stored
+            # literal text re-tokenizes here so timespan sizes keep the
+            # datetime bucketing
+            if len(groups) != 1:
+                raise ValueError("KQL: bin_auto(expr)")
+            ctx = _COMPILE_CTX.get()
+            if ctx.bin_auto_size is None:
+                raise ValueError(
+                    "KQL: bin_auto() needs `set query_bin_auto_size = ...;`")
+            size_toks = _tokenize(ctx.bin_auto_size)
+            if len(size_toks) != 1:
+                raise ValueError(
+                    "KQL: query_bin_auto_size must be a single "
+                    f"literal, got {ctx.bin_auto_size!r}")
+            size = size_toks[0]
+            if ctx.bin_auto_min is None:
+                if size.kind == "timespan":
+                    raise ValueError(
+                        "KQL: a timespan query_bin_auto_size needs "
+                        "`set query_bin_auto_minimum = datetime(...);`")
+                anchor = "0"
+            else:
+                anchor = _parse_expr(_tokenize(ctx.bin_auto_min), self.df)
+        elif fname == "bin_at":
+            if len(groups) != 3 or len(groups[1]) != 1:
+                raise ValueError(
+                    "KQL: bin_at(expr, literal_size, fixedPoint)")
+            size = groups[1][0]
+        elif len(groups) != 2 or len(groups[1]) != 1:
+            raise ValueError(f"KQL: {fname}(expr, literal_size)")
+        else:
+            size = groups[1][0]
+        x = self.parse(0)
+        if fname != "bin_auto":
+            self.expect(",")
+            self.next()  # the size token
+        if fname == "bin_at":
+            self.expect(",")
+            anchor = self.parse(0)
+        self.expect(")")
+        if size.kind == "timespan":
+            us = _timespan_to_us(size.text)
+            if anchor is None:
+                return (f"timestamp_micros((unix_micros({x}) div {us}) "
+                        f"* {us})")
+            return (f"timestamp_micros(unix_micros({x}) - "
+                    f"pmod(unix_micros({x}) - unix_micros({anchor}), "
+                    f"{us}))")
+        n = size.text
+        if anchor is not None:
+            return f"(({x}) - pmod(({x}) - ({anchor}), {n}))"
+        if "." in n or "e" in n.lower():
+            # a fractional size literal lexes as DECIMAL in Spark SQL text
+            # (the r10 gotcha) — bin(real, 0.5) must stay DOUBLE like Kusto
+            n = f"CAST({n} AS DOUBLE)"
+        return f"(floor(({x}) / {n}) * {n})"
+
+    def _pack_all(self) -> str:
+        """pack_all([ignore_null_empty]): a dynamic bag of every current
+        column, so it needs the row schema. With ignore_null_empty=true,
+        null / '' / [] / {} values are dropped (Kusto semantics);
+        otherwise nulls are kept (to_json's ignoreNullFields is
+        explicitly disabled). The flag is read from the raw tokens."""
+        j = _close_paren(self.toks, self.i - 1)
+        arg = "".join(t.text for t in self.toks[self.i:j]).strip().lower()
+        if arg not in ("", "true", "false"):
+            raise ValueError(
+                "KQL: pack_all([ignore_null_empty]) takes at most "
+                "one boolean literal")
+        if self.df is None:
+            raise ValueError(
+                "KQL: pack_all needs a table context "
+                "(extend/project over a table, not print)")
+        self.i = j
+        self.expect(")")
+        pairs = ", ".join(f"'{c}', `{c}`" for c in self.df.columns)
+        base = (f"to_json(named_struct({pairs}), "
+                f"map('ignoreNullFields', 'false'))")
+        if arg != "true":
+            return f"parse_json({base})"
+        m = f"from_json({base}, 'map<string,variant>')"
+        kept = (f"map_filter({m}, (__pa_k, __pa_v) -> "
+                f"__pa_v IS NOT NULL AND to_json(__pa_v) "
+                f"NOT IN ('\"\"', '[]', '{{}}', 'null'))")
+        return f"parse_json(to_json({kept}))"
+
+    def _serial(self, fn: str, args: list[str]) -> str:
+        """One serialized call as ONE window expression over the scope's
+        serialized order: prev/next -> lag/lead; row_number ->
+        row_number() shifted to StartingIndex; row_cumsum -> a running
+        sum; row_rank_dense -> a running count of Term changes
+        (null-safe ``<=>``; the first row is always a change);
+        row_rank_min -> the least row number of the row's dense run. A
+        Restart argument adds the running restart count as an extra
+        partition expression, and row_rank_min partitions by the dense
+        run: those windows repartition on (keys, run), which sets
+        ``run``. The arguments were compiled by this parser, so a
+        serialized call nested in them (``row_number(1, k !=
+        prev(k))``, ``bin(prev(x), 10)``) renders in the same scope:
+        Spark nests windows in window arguments and PARTITION BY."""
+        usage, lo, hi = _SERIAL_FNS[fn]
+        if not lo <= len(args) <= hi:
+            raise ValueError(f"KQL: {fn}({usage})")
+        scope = self.scope
+        if scope is None:
+            raise ValueError(f"KQL: {fn}() works in extend, project and "
+                             "where after a 'sort by' (serialized order)")
+        if not scope.order:
+            raise ValueError(f"KQL: {fn}() needs a preceding 'sort by' "
+                             "(serialized order)")
+        over = scope.over_sql()
+        if fn in ("prev", "next"):
+            rest = args[1:] or ["1"]
+            text = (f"{'lag' if fn == 'prev' else 'lead'}({args[0]}, "
+                    f"{', '.join(rest)}) OVER ({over})")
+        elif fn in ("row_rank_dense", "row_rank_min"):
+            t = args[0]
+            text = (f"sum(CASE WHEN lag(1, 1) OVER ({over}) IS NULL THEN 1 "
+                    f"WHEN lag({t}, 1) OVER ({over}) <=> ({t}) THEN 0 "
+                    f"ELSE 1 END) OVER ({over}{_ROWS_TO_HERE})")
+            if fn == "row_rank_min":
+                self.run = True
+                text = (f"min(row_number() OVER ({over})) "
+                        f"OVER ({scope.over_sql(text)})")
+            text = f"CAST({text} AS BIGINT)"
+        else:
+            if len(args) == 2:
+                # Restart: the run id is the running count of restarts
+                self.run = True
+                over = scope.over_sql(f"sum(IF({args[1]}, 1, 0)) "
+                                      f"OVER ({over}{_ROWS_TO_HERE})")
+            if fn == "row_cumsum":
+                text = f"sum({args[0]}) OVER ({over}{_ROWS_TO_HERE})"
+            else:
+                start = f" + ({args[0]}) - 1" if args else ""
+                text = f"CAST(row_number() OVER ({over}){start} AS BIGINT)"
+        self.windowed = True
+        if not scope.keys:
+            self.unscoped.append(f"{fn}()")
+        return text
 
     @staticmethod
     def _timespan_sql(s: str) -> bool:
@@ -1149,10 +1342,6 @@ class _ExprParser:
                     return "CAST('NaN' AS DOUBLE)"
                 return (f"CAST('{'-' if m.group(1) else ''}Infinity' "
                         f"AS DOUBLE)")
-        if fname == "bin":
-            # bin() is intercepted token-level (schema-aware timespan
-            # handling) before parsing ever reaches here.
-            raise ValueError("KQL: bin(expr, literal_size) expected")
         if fname in ("iff", "iif"):
             if len(args) != 3:
                 raise ValueError("KQL: iff(cond, a, b) takes 3 args")
@@ -1250,9 +1439,9 @@ class _ExprParser:
             # bag_pack_columns(c1, c2, ...) -> bag keyed by the COLUMN
             # NAMES. Arguments must be bare column references (that is
             # the Kusto contract too); a compiled column is exactly a
-            # backticked identifier, so the key is recoverable here
-            # without a token-level intercept. Nulls are kept, like
-            # pack_all's default.
+            # backticked identifier, so the key is recoverable from
+            # the compiled argument. Nulls are kept, like pack_all's
+            # default.
             if not args:
                 raise ValueError("KQL: bag_pack_columns(col1, ...)")
             keys = []
@@ -1718,10 +1907,6 @@ class _ExprParser:
                     "KQL: count_distinctif(col, predicate)")
             return (f"count(DISTINCT CASE WHEN {args[1]} "
                     f"THEN {args[0]} END)")
-        if fname in ("prev", "next"):
-            raise ValueError(
-                "KQL: prev()/next() need a preceding 'sort by' "
-                "(serialized order)")
         if fname in ("percentile", "percentiles"):
             # KQL percentile(col, P) uses a 0-100 scale; Spark/ANSI use
             # a 0-1 fraction. Exact interpolated percentile by default
@@ -5624,29 +5809,26 @@ class _ExprParser:
                 f"CAST({rhs} AS BIGINT))")
 
 
-def _parse_expr(toks: list[Tok]) -> str:
-    p = _ExprParser(toks)
-    out = p.parse(0)
+def _compile(toks: list[Tok], df: DataFrame | None = None,
+             scope: _SerialScope | None = None) -> _ExprParser:
+    """Compile one expression: the only place an _ExprParser is built.
+    Returns the finished parser — ``sql`` is the compiled text, and
+    ``windowed``/``run``/``unscoped`` tell what its serialized calls
+    did (the where/extend/project stages read them)."""
+    p = _ExprParser(toks, df, scope)
+    p.sql = p.parse(0)
     if p.peek() is not None:
         raise ValueError(f"KQL: trailing tokens from {p.peek().text!r}")
-    return out
+    return p
 
 
-# bin() needs to know whether its argument is a timestamp; that is a
-# DataFrame-schema question, so it is resolved by the pipeline compiler,
-# not the pure-text expression parser. We intercept bin() calls at the
-# token level inside `summarize by` / `extend` instead.
-def _render_bin(df: DataFrame, arg_sql: str, size_tok: Tok) -> str:
-    if size_tok.kind == "timespan":
-        us = _timespan_to_us(size_tok.text)
-        return (f"timestamp_micros((unix_micros({arg_sql}) div {us}) "
-                f"* {us})")
-    size = size_tok.text
-    if "." in size or "e" in size.lower():
-        # a fractional size literal lexes as DECIMAL in Spark SQL text
-        # (the r10 gotcha) — bin(real, 0.5) must stay DOUBLE like Kusto
-        size = f"CAST({size} AS DOUBLE)"
-    return f"(floor(({arg_sql}) / {size}) * {size})"
+def _parse_expr(toks: list[Tok], df: DataFrame | None = None,
+                scope: _SerialScope | None = None) -> str:
+    """The SQL of one expression; its unscoped serialized calls pass
+    the global-serialize guard (on ``df``) together."""
+    p = _compile(toks, df, scope)
+    _guard_global_serial(p.unscoped, df)
+    return p.sql
 
 
 # ----------------------------------------------------------------------
@@ -6037,7 +6219,7 @@ def _named_expr(toks: list[Tok], df: DataFrame,
                 auto: str) -> tuple[str, str]:
     """Parse `name = expr` or bare `expr`; returns (alias, sql)."""
     name, body = _split_named(toks, auto)
-    return name, _compile_expr_tokens(body, df)
+    return name, _parse_expr(body, df)
 
 
 def _expand_col_patterns(groups: list[list[Tok]],
@@ -6117,8 +6299,17 @@ def _warn_global_serialize(what: str, df: DataFrame | None = None) -> None:
         f"'spark.kql.globalSerialize.allow', 'true').")
 
 
+def _guard_global_serial(calls: list[str], df: DataFrame | None) -> None:
+    """ONE global-serialize guard for the unscoped serialized calls of
+    an expression or of a where/extend/project stage: they all read
+    the same input rows, so one warning and one row-count probe cover
+    them."""
+    if calls:
+        _warn_global_serialize(", ".join(dict.fromkeys(calls)), df)
+
+
 #: Kusto's serialized functions -> (usage, min args, max args). Each
-#: call compiles to ONE SQL window expression (_render_serial).
+#: call compiles to ONE SQL window expression (_ExprParser._serial).
 _SERIAL_FNS = {
     "prev": ("x [, offset [, default]]", 1, 3),
     "next": ("x [, offset [, default]]", 1, 3),
@@ -6128,10 +6319,6 @@ _SERIAL_FNS = {
     "row_rank_min": ("Term", 1, 1),
 }
 _ROWS_TO_HERE = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-#: token kinds that _parse_expr_with_atoms passes through as atoms; the
-#: "window" kinds mark a rendered serialized call ("window_run": its
-#: window partitions on a restart run id besides the scope keys)
-_ATOM_KINDS = ("rendered", "window", "window_run")
 
 
 def _close_paren(toks: list[Tok], i: int) -> int:
@@ -6156,245 +6343,6 @@ def _call_args(toks: list[Tok], name: str) -> list[list[Tok]] | None:
             and _close_paren(toks, 1) == len(toks) - 1):
         return _split_top_commas(toks[2:-1])
     return None
-
-
-def _render_serial(fn: str, args: list[list[Tok]], df: DataFrame | None,
-                   scope: _SerialScope | None) -> Tok:
-    """One serialized call as ONE window expression over the scope's
-    serialized order: prev/next -> lag/lead; row_number -> row_number()
-    shifted to StartingIndex; row_cumsum -> a running sum;
-    row_rank_dense -> a running count of Term changes (null-safe
-    ``<=>``; the first row is always a change); row_rank_min -> the
-    least row number of the row's dense run. A Restart argument adds
-    the running restart count as an extra partition expression, and
-    row_rank_min partitions by the dense run: those windows repartition
-    on (keys, run), so they render as kind "window_run". An argument
-    may itself hold a serialized call (``row_number(1, k !=
-    prev(k))``): Spark nests windows in window arguments and PARTITION
-    BY. Unscoped calls go through the global-serialize guard."""
-    usage, lo, hi = _SERIAL_FNS[fn]
-    if not lo <= len(args) <= hi:
-        raise ValueError(f"KQL: {fn}({usage})")
-    if scope is None:
-        raise ValueError(f"KQL: {fn}() works in extend, project and "
-                         "where after a 'sort by' (serialized order)")
-    if not scope.order:
-        raise ValueError(f"KQL: {fn}() needs a preceding 'sort by' "
-                         "(serialized order)")
-    run = False
-
-    def sql(g: list[Tok]) -> str:
-        nonlocal run
-        toks = _render_tokens(g, df, scope)
-        run = run or any(t.kind == "window_run" for t in toks)
-        return _parse_expr_with_atoms(toks, df)
-
-    over = scope.over_sql()
-    if fn in ("prev", "next"):
-        x = sql(args[0])
-        rest = [sql(g) for g in args[1:]] or ["1"]
-        text = (f"{'lag' if fn == 'prev' else 'lead'}({x}, "
-                f"{', '.join(rest)}) OVER ({over})")
-    elif fn in ("row_rank_dense", "row_rank_min"):
-        t = sql(args[0])
-        text = (f"sum(CASE WHEN lag(1, 1) OVER ({over}) IS NULL THEN 1 "
-                f"WHEN lag({t}, 1) OVER ({over}) <=> ({t}) THEN 0 "
-                f"ELSE 1 END) OVER ({over}{_ROWS_TO_HERE})")
-        if fn == "row_rank_min":
-            run = True
-            text = (f"min(row_number() OVER ({over})) "
-                    f"OVER ({scope.over_sql(text)})")
-        text = f"CAST({text} AS BIGINT)"
-    else:
-        if len(args) == 2:
-            # Restart: the run id is the running count of restarts
-            run = True
-            over = scope.over_sql(f"sum(IF({sql(args[1])}, 1, 0)) "
-                                  f"OVER ({over}{_ROWS_TO_HERE})")
-        if fn == "row_cumsum":
-            text = f"sum({sql(args[0])}) OVER ({over}{_ROWS_TO_HERE})"
-        else:
-            start = f" + ({sql(args[0])}) - 1" if args else ""
-            text = f"CAST(row_number() OVER ({over}){start} AS BIGINT)"
-    if not scope.keys:
-        _warn_global_serialize(f"{fn}()", df)
-    return Tok("window_run" if run else "window", text)
-
-
-def _compile_expr_tokens(toks: list[Tok], df: DataFrame | None,
-                         scope: _SerialScope | None = None) -> str:
-    """Expression compile with the token-level interceptions (see
-    _render_tokens), then the Pratt parse with rendered atoms."""
-    return _parse_expr_with_atoms(_render_tokens(toks, df, scope), df)
-
-
-def _render_tokens(toks: list[Tok], df: DataFrame | None,
-                   scope: _SerialScope | None = None) -> list[Tok]:
-    """Render the calls that need more than the token text into atom
-    tokens: schema-aware bin()/bin_at()/bin_auto(), pack_all(), dynamic
-    member access, and the serialized functions
-    prev/next/row_number/row_cumsum/row_rank_dense/row_rank_min — each
-    ONE window expression over ``scope`` (_render_serial), so they
-    compose inside any extend/project/where expression. Inside
-    ``partition by key ( ... )`` scope the window partitions on the key;
-    otherwise it is a GLOBAL (single-partition) window — correct KQL
-    serialized semantics, but a scale hazard, so a loud warning fires
-    unless the input was bounded first (Kusto's own answer is
-    `partition by` scoping)."""
-    out: list[Tok] = []
-    i = 0
-    while i < len(toks):
-        t = toks[i]
-        if (t.kind == "ident" and i + 1 < len(toks)
-                and toks[i + 1].text == "("
-                and t.text.lower() in (*_SERIAL_FNS,
-                                       "row_window_session")):
-            fn = t.text.lower()
-            if fn == "row_window_session":
-                raise ValueError(
-                    "KQL: row_window_session() is an extend kernel: use "
-                    "it as the whole right-hand side, `extend s = "
-                    "row_window_session(...)`")
-            j = _close_paren(toks, i + 1)
-            out.append(_render_serial(
-                fn, _split_top_commas(toks[i + 2:j]), df, scope))
-            i = j + 1
-            continue
-        if (t.kind == "ident" and t.text.lower() == "pack_all"
-                and i + 1 < len(toks) and toks[i + 1].text == "("):
-            # pack_all([ignore_null_empty]) needs the ROW SCHEMA, so it
-            # is intercepted here (like bin) where df is in scope: a
-            # dynamic bag of every current column. With
-            # ignore_null_empty=true, null / '' / [] / {} values are
-            # dropped (Kusto semantics); otherwise nulls are kept
-            # (to_json's ignoreNullFields is explicitly disabled).
-            j = _close_paren(toks, i + 1)
-            inner = [x for x in toks[i + 2:j]]
-            arg = "".join(x.text for x in inner).strip().lower()
-            if arg not in ("", "true", "false"):
-                raise ValueError(
-                    "KQL: pack_all([ignore_null_empty]) takes at most "
-                    "one boolean literal")
-            if df is None:
-                raise ValueError(
-                    "KQL: pack_all needs a table context "
-                    "(extend/project over a table, not print)")
-            pairs = ", ".join(f"'{c}', `{c}`" for c in df.columns)
-            base = (f"to_json(named_struct({pairs}), "
-                    f"map('ignoreNullFields', 'false'))")
-            if arg == "true":
-                m = f"from_json({base}, 'map<string,variant>')"
-                kept = (f"map_filter({m}, (__pa_k, __pa_v) -> "
-                        f"__pa_v IS NOT NULL AND to_json(__pa_v) "
-                        f"NOT IN ('\"\"', '[]', '{{}}', 'null'))")
-                rendered = f"parse_json(to_json({kept}))"
-            else:
-                rendered = f"parse_json({base})"
-            out.append(Tok("rendered", rendered))
-            i = j + 1
-            continue
-        if (t.kind == "ident"
-                and t.text.lower() in ("bin", "bin_at", "bin_auto")
-                and i + 1 < len(toks) and toks[i + 1].text == "("):
-            fn = t.text.lower()
-            j = _close_paren(toks, i + 1)
-            inner = toks[i + 2:j]
-            groups = _split_top_commas(inner)
-            if fn == "bin_auto":
-                # bin_auto(x) == bin_at(x, query_bin_auto_size,
-                # query_bin_auto_minimum) with the size/anchor taken
-                # from the request properties (real Kusto semantics);
-                # the stored literal text re-tokenizes here so timespan
-                # sizes keep the schema-aware datetime handling
-                if len(groups) != 1:
-                    raise ValueError("KQL: bin_auto(expr)")
-                ctx = _COMPILE_CTX.get()
-                if ctx.bin_auto_size is None:
-                    raise ValueError(
-                        "KQL: bin_auto() needs "
-                        "`set query_bin_auto_size = ...;`")
-                size_toks = _tokenize(ctx.bin_auto_size)
-                if len(size_toks) != 1:
-                    raise ValueError(
-                        "KQL: query_bin_auto_size must be a single "
-                        f"literal, got {ctx.bin_auto_size!r}")
-                if ctx.bin_auto_min is None:
-                    if size_toks[0].kind == "timespan":
-                        raise ValueError(
-                            "KQL: a timespan query_bin_auto_size needs "
-                            "`set query_bin_auto_minimum = "
-                            "datetime(...);`")
-                    min_toks = _tokenize("0")
-                else:
-                    min_toks = _tokenize(ctx.bin_auto_min)
-                fn = "bin_at"
-                groups = [groups[0], [size_toks[0]], min_toks]
-            if fn == "bin":
-                if len(groups) != 2 or len(groups[1]) != 1:
-                    raise ValueError("KQL: bin(expr, literal_size)")
-                arg_sql = _compile_expr_tokens(groups[0], df)
-                rendered = _render_bin(df, arg_sql, groups[1][0])
-            else:
-                if len(groups) != 3 or len(groups[1]) != 1:
-                    raise ValueError(
-                        "KQL: bin_at(expr, literal_size, fixedPoint)")
-                arg_sql = _compile_expr_tokens(groups[0], df)
-                fp_sql = _compile_expr_tokens(groups[2], df)
-                size_tok = groups[1][0]
-                # floored alignment via pmod, so buckets BELOW the fixed
-                # point land correctly (integer div truncates toward 0)
-                if size_tok.kind == "timespan":
-                    us = _timespan_to_us(size_tok.text)
-                    rendered = (
-                        f"timestamp_micros(unix_micros({arg_sql}) - "
-                        f"pmod(unix_micros({arg_sql}) - "
-                        f"unix_micros({fp_sql}), {us}))")
-                else:
-                    size = size_tok.text
-                    rendered = (f"(({arg_sql}) - pmod(({arg_sql}) - "
-                                f"({fp_sql}), {size}))")
-            out.append(Tok("rendered", rendered))
-            i = j + 1
-            continue
-        if (t.kind == "ident" and "." in t.text
-                and not t.text.startswith("$")):
-            # dynamic member access: d.k.j on a VARIANT column compiles
-            # to a variant_get path (binary path walk, no JSON re-parse);
-            # struct columns keep native dot access
-            base = t.text.split(".", 1)[0]
-            try:
-                is_variant = any(
-                    f.name == base
-                    and f.dataType.typeName() == "variant"
-                    for f in df.schema.fields)
-            except Exception:
-                is_variant = False
-            if is_variant:
-                path = t.text.split(".", 1)[1]
-                out.append(Tok(
-                    "rendered", f"variant_get(`{base}`, '$.{path}')"))
-                i += 1
-                continue
-        out.append(t)
-        i += 1
-    return out
-
-
-def _parse_expr_with_atoms(toks: list[Tok],
-                           df: DataFrame | None = None) -> str:
-    """Like _parse_expr but 'rendered' tokens pass through as atoms."""
-    class P(_ExprParser):
-        def _prefix(self):
-            t = self.peek()
-            if t is not None and t.kind in _ATOM_KINDS:
-                self.next()
-                return t.text
-            return super()._prefix()
-    p = P(toks, df)
-    res = p.parse(0)
-    if p.peek() is not None:
-        raise ValueError(f"KQL: trailing tokens from {p.peek().text!r}")
-    return res
 
 
 _JOIN_KINDS = {
@@ -8327,7 +8275,7 @@ class KqlCompiler:
             if not cols:
                 raise ValueError("KQL: find * found no string columns")
             ph = "__kql_find_star_col"
-            tmpl = _compile_expr_tokens(_tokenize(
+            tmpl = _parse_expr(_tokenize(
                 f"{ph} {pm.group('op')} {pm.group('lit')}"), out)
             # the compiler may render the placeholder backticked or
             # bare depending on the operator path — normalize to bare
@@ -8338,7 +8286,7 @@ class KqlCompiler:
                     ph, f"`{c.replace('`', '``')}`") + ")"
                 for c in cols)
             return out.where(F.expr(sql))
-        sql = _compile_expr_tokens(_tokenize(pred), out)
+        sql = _parse_expr(_tokenize(pred), out)
         return out.where(F.expr(sql))
 
     def _externaldata(self, text: str) -> DataFrame:
@@ -8463,12 +8411,8 @@ class KqlCompiler:
                 name, body = g[0].text, g[2:]
             else:
                 name, body = f"print_{i}" if i else "print_0", g
-            # r14: print bodies route through the token-level
-            # interceptions too, so bin()/bin_at()/bin_auto() work in
-            # pure-text contexts (documented non-fix since r10);
-            # df=None — schema-dependent forms raise cleanly.
-            cols.append(
-                f"{_compile_expr_tokens(body, None)} AS `{name}`")
+            # df=None: schema-dependent forms (pack_all) raise cleanly
+            cols.append(f"{_parse_expr(body)} AS `{name}`")
         if not cols:
             raise ValueError("KQL: print needs at least one expression")
         return self.spark.sql("SELECT " + ", ".join(cols))
@@ -8480,24 +8424,27 @@ class KqlCompiler:
             raise ValueError(f"KQL: bad stage {stage!r}")
         op, rest = m.group(1).lower(), m.group(2).strip()
         if op == "where":
-            sql, windowed = self._serial_expr(_tokenize(rest), df)
-            if not windowed:
-                return df.where(F.expr(sql))
+            p = self._serial_expr(_tokenize(rest), df)
+            _guard_global_serial(p.unscoped, df)
+            if not p.windowed:
+                return df.where(F.expr(p.sql))
             # Spark rejects window functions in WHERE: filter on a
             # helper column instead
-            return (df.withColumn("__kql_where", F.expr(sql))
+            return (df.withColumn("__kql_where", F.expr(p.sql))
                       .where(F.col("__kql_where")).drop("__kql_where"))
         if op == "project":
-            cols = []
+            cols, calls = [], []
             for i, g in enumerate(_split_top_commas(_tokenize(rest))):
                 name, body = _split_named(g, f"col{i}")
-                sql = self._serial_expr(body, df)[0]
-                cols.append(F.expr(sql).alias(name))
+                p = self._serial_expr(body, df)
+                calls += p.unscoped
+                cols.append(F.expr(p.sql).alias(name))
             if not cols:
                 # a bare `project` would silently yield a ZERO-column
                 # frame (fuzz find); Kusto requires at least one
                 raise ValueError("KQL: project needs at least one "
                                  "column or expression")
+            _guard_global_serial(calls, df)
             return df.select(*cols)
         if op == "project-away":
             names = _expand_col_patterns(
@@ -8562,7 +8509,7 @@ class KqlCompiler:
             m = re.match(r"by\s+(.*)$", rest, re.DOTALL)
             if not m:
                 raise ValueError("KQL: reduce by expr")
-            sql = _compile_expr_tokens(_tokenize(m.group(1)), df)
+            sql = _parse_expr(_tokenize(m.group(1)), df)
             guid = (r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
                     r"-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")
             pat = F.expr(sql).cast("string")
@@ -8605,6 +8552,7 @@ class KqlCompiler:
                 rows, "ColumnName string, ColumnOrdinal long, "
                       "DataType string, ColumnType string")
         if op == "extend":
+            calls, src = [], df
             for i, g in enumerate(_split_top_commas(_tokenize(rest))):
                 if g and g[0].text == "(":
                     df = self._extend_multi_assign(df, g)
@@ -8618,12 +8566,16 @@ class KqlCompiler:
                 if args is not None:
                     # the one serialized op that is a kernel, not a
                     # window: each argument compiles on its own
-                    df = self._row_window_session(df, name, [
-                        _compile_expr_tokens(a, df, self._scope)
-                        for a in args])
+                    ps = [self._serial_expr(a, df) for a in args]
+                    calls += [c for p in ps for c in p.unscoped]
+                    df = self._row_window_session(
+                        df, name, [p.sql for p in ps])
                     continue
-                sql = self._serial_expr(body, df)[0]
-                df = df.withColumn(name, F.expr(sql))
+                p = self._serial_expr(body, df)
+                calls += p.unscoped
+                df = df.withColumn(name, F.expr(p.sql))
+            # withColumn keeps the row count: one guard on the input
+            _guard_global_serial(calls, src)
             return df
         if op == "summarize":
             return self._summarize(df, rest)
@@ -8839,7 +8791,7 @@ class KqlCompiler:
                 raise ValueError("KQL: top-hitters N of col [by expr]")
             n, col, by = int(m2.group(1)), m2.group(2), m2.group(3)
             if by:
-                sql = _compile_expr_tokens(_tokenize(by), df)
+                sql = _parse_expr(_tokenize(by), df)
                 out_name = f"approximate_sum_{col}"
                 agg = F.expr(f"sum({sql})").alias(out_name)
             else:
@@ -9196,10 +9148,10 @@ class KqlCompiler:
             raise ValueError(
                 "KQL: sequence_detect(timeline, maxGap, maxWindow, "
                 "s1 = p1, s2 = p2, ..., dim, ...)")
-        tl_sql = _compile_expr_tokens(groups[0], df)
+        tl_sql = _parse_expr(groups[0], df)
 
         def us_of(toks, what):
-            sql = _compile_expr_tokens(toks, df)
+            sql = _parse_expr(toks, df)
             try:
                 return int(sql.strip("() "))
             except ValueError:
@@ -9212,7 +9164,7 @@ class KqlCompiler:
         for g in groups[3:]:
             if len(g) >= 2 and g[0].kind == "ident" and g[1].text == "=":
                 steps.append((g[0].text,
-                              _compile_expr_tokens(g[2:], df)))
+                              _parse_expr(g[2:], df)))
             elif len(g) == 1 and g[0].kind == "ident":
                 dims.append(g[0].text)
             else:
@@ -9379,7 +9331,7 @@ class KqlCompiler:
                 f"KQL: {fname} yields {len(keys)} values, "
                 f"{len(names)} names given")
         call = [Tok("ident", dyn_name)] + call[1:]
-        sql = _compile_expr_tokens(call, df, self._scope)
+        sql = _parse_expr(call, df, self._scope)
         tmp = "__ma_bag"
         df = df.withColumn(tmp, F.expr(sql))
         for name, (key, is_array) in zip(names, keys):
@@ -9496,14 +9448,14 @@ class KqlCompiler:
         (session_count) filters with the very same values — a volatile
         expression (now()-relative) can otherwise diverge between the
         compile-time spine and the per-row execution-time filter."""
-        id_sql = _compile_expr_tokens(groups[0], df)
-        tl_sql = _compile_expr_tokens(groups[1], df)
+        id_sql = _parse_expr(groups[0], df)
+        tl_sql = _parse_expr(groups[1], df)
         if lo_hi is not None:
             lo_col = F.lit(lo_hi[0]).cast("long")
             hi_col = F.lit(lo_hi[1]).cast("long")
         else:
-            start_sql = _compile_expr_tokens(groups[2], df)
-            end_sql = _compile_expr_tokens(groups[3], df)
+            start_sql = _parse_expr(groups[2], df)
+            end_sql = _parse_expr(groups[3], df)
             lo_col = F.expr(
                 f"unix_micros(CAST({start_sql} AS TIMESTAMP))")
             hi_col = F.expr(
@@ -9519,7 +9471,7 @@ class KqlCompiler:
                 & (F.col("__w_t") <= F.col("__w_hi")))
 
         def us_lit(toks, name):
-            sql2 = _compile_expr_tokens(toks, df)
+            sql2 = _parse_expr(toks, df)
             try:
                 v = int(sql2.strip("() "))
             except ValueError:
@@ -9639,10 +9591,10 @@ class KqlCompiler:
             raise ValueError(
                 "KQL: rows_near(condition, rows_before[, rows_after])")
         w = self._serial_guard("rows_near()", df).window()
-        cond_sql = _compile_expr_tokens(groups[0], df, self._scope)
+        cond_sql = _parse_expr(groups[0], df, self._scope)
 
         def n_of(toks, what):
-            sql2 = _compile_expr_tokens(toks, df)
+            sql2 = _parse_expr(toks, df)
             try:
                 v = int(sql2.strip("() "))
             except ValueError:
@@ -10125,7 +10077,7 @@ class KqlCompiler:
                 "KQL: ipv4_lookup lookup table must be a table / "
                 "let-bound name")
         lk = self._operand(groups[0][0].text)
-        ip_col = _compile_expr_tokens(groups[1], df)
+        ip_col = _parse_expr(groups[1], df)
         if len(groups[2]) != 1 or groups[2][0].kind != "ident" \
                 or groups[2][0].text not in lk.columns:
             raise ValueError(
@@ -10297,8 +10249,8 @@ class KqlCompiler:
         # the bins spine and the row filter, so a volatile expression
         # cannot diverge between them (r8 advice); an inverted or
         # null range is an error, never a silent empty spine
-        start_sql = _compile_expr_tokens(groups[2], df)
-        end_sql = _compile_expr_tokens(groups[3], df)
+        start_sql = _parse_expr(groups[2], df)
+        end_sql = _parse_expr(groups[3], df)
         row0 = self.spark.sql(
             f"SELECT unix_micros(CAST({start_sql} AS TIMESTAMP)) "
             f"AS lo, unix_micros(CAST({end_sql} AS TIMESTAMP)) "
@@ -10369,7 +10321,7 @@ class KqlCompiler:
             df, groups, "active_users_count")
         look = us_lit(groups[4], "lookback")
         per = us_lit(groups[5], "period")
-        n_req_sql = _compile_expr_tokens(groups[6], df)
+        n_req_sql = _parse_expr(groups[6], df)
         try:
             n_req = int(n_req_sql.strip("() "))
         except ValueError:
@@ -10509,13 +10461,13 @@ class KqlCompiler:
             raise ValueError(
                 "KQL: funnel_sequence(id, timeline, start, end, "
                 "max_step_window, step, state, dynamic([states]))")
-        id_sql = _compile_expr_tokens(groups[0], df)
-        tl_sql = _compile_expr_tokens(groups[1], df)
-        start_sql = _compile_expr_tokens(groups[2], df)
-        end_sql = _compile_expr_tokens(groups[3], df)
+        id_sql = _parse_expr(groups[0], df)
+        tl_sql = _parse_expr(groups[1], df)
+        start_sql = _parse_expr(groups[2], df)
+        end_sql = _parse_expr(groups[3], df)
 
         def us_lit(toks, what):
-            sql2 = _compile_expr_tokens(toks, df)
+            sql2 = _parse_expr(toks, df)
             try:
                 return int(sql2.strip("() "))
             except ValueError:
@@ -10524,7 +10476,7 @@ class KqlCompiler:
                     f"literal, got {sql2!r}")
         max_us = us_lit(groups[4], "max step window")
         us_lit(groups[5], "step")  # periods not rendered; validated
-        state_sql = _compile_expr_tokens(groups[6], df)
+        state_sql = _parse_expr(groups[6], df)
         text = "".join(t.text for t in groups[7])
         am = re.fullmatch(r"dynamic\s*\(\s*\[(.*)\]\s*\)", text,
                           re.DOTALL)
@@ -10599,13 +10551,13 @@ class KqlCompiler:
                 "KQL: funnel_sequence_completion(id, timeline, start, "
                 "end, step, state, dynamic([states]), "
                 "dynamic([windows]))")
-        id_sql = _compile_expr_tokens(groups[0], df)
-        tl_sql = _compile_expr_tokens(groups[1], df)
-        start_sql = _compile_expr_tokens(groups[2], df)
-        end_sql = _compile_expr_tokens(groups[3], df)
+        id_sql = _parse_expr(groups[0], df)
+        tl_sql = _parse_expr(groups[1], df)
+        start_sql = _parse_expr(groups[2], df)
+        end_sql = _parse_expr(groups[3], df)
 
         def us_lit(toks, what):
-            sql2 = _compile_expr_tokens(toks, df)
+            sql2 = _parse_expr(toks, df)
             try:
                 return int(sql2.strip("() "))
             except ValueError:
@@ -10613,7 +10565,7 @@ class KqlCompiler:
                     f"KQL: funnel_sequence_completion {what} must be "
                     f"a timespan literal, got {sql2!r}")
         step_us = us_lit(groups[4], "bin step")
-        state_sql = _compile_expr_tokens(groups[5], df)
+        state_sql = _parse_expr(groups[5], df)
 
         def arr_lit(toks, what):
             text = "".join(t.text for t in toks)
@@ -10746,8 +10698,8 @@ class KqlCompiler:
             raise ValueError(
                 "KQL: diffpatterns(split_col, 'A', 'B' [, min_diff])")
         split = groups[0][0].text
-        va = _compile_expr_tokens(groups[1], df)
-        vb = _compile_expr_tokens(groups[2], df)
+        va = _parse_expr(groups[1], df)
+        vb = _parse_expr(groups[2], df)
         min_diff = (float("".join(t.text for t in groups[3]))
                     if len(groups) == 4 else 1.0)
         cols = [f.name for f in df.schema.fields
@@ -10809,7 +10761,7 @@ class KqlCompiler:
         if not groups or len(groups) > 3:
             raise ValueError(
                 "KQL: ai_embeddings(textCol [, 'provider' [, dim]])")
-        col = _compile_expr_tokens(groups[0], df)
+        col = _parse_expr(groups[0], df)
         provider = "hash"
         if len(groups) >= 2:
             t = groups[1][0]
@@ -10926,8 +10878,8 @@ class KqlCompiler:
                 "'B' [, min_diff])")
         text = groups[0][0].text
         split = groups[1][0].text
-        va = _compile_expr_tokens(groups[2], df)
-        vb = _compile_expr_tokens(groups[3], df)
+        va = _parse_expr(groups[2], df)
+        vb = _parse_expr(groups[3], df)
         min_diff = (float("".join(t.text for t in groups[4]))
                     if len(groups) == 5 else 1.0)
         in_a = F.expr(f"`{split}` = {va}")
@@ -11399,7 +11351,7 @@ class KqlCompiler:
             raise ValueError(
                 "KQL: parse-kv Expr as (key[:type], ...) "
                 "with (pair_delimiter='..', kv_delimiter='..')")
-        src_sql = _compile_expr_tokens(_tokenize(m.group(1)), df)
+        src_sql = _parse_expr(_tokenize(m.group(1)), df)
         keys = []
         for g in _split_top_commas(_tokenize(m.group("keys"))):
             txt = "".join(t.text for t in g)
@@ -12024,7 +11976,7 @@ class KqlCompiler:
         if where_text:
             toks = rewrite(_tokenize(where_text), bound, evars,
                            node_prefs)
-            cur = cur.where(F.expr(_compile_expr_tokens(toks, cur)))
+            cur = cur.where(F.expr(_parse_expr(toks, cur)))
         cols = []
         for i2, grp in enumerate(
                 _split_top_commas(_tokenize(proj_text))):
@@ -12043,7 +11995,7 @@ class KqlCompiler:
                 else:
                     name = f"col{i2}"
             body = rewrite(body, bound, evars, node_prefs)
-            sql = _compile_expr_tokens(body, cur)
+            sql = _parse_expr(body, cur)
             cols.append(f"({sql}) AS {_bq(name)}")
         if not cnt_cols:
             return cur.selectExpr(*cols)
@@ -12300,7 +12252,7 @@ class KqlCompiler:
             return out
 
         if where_text:
-            un = un.where(F.expr(_compile_expr_tokens(
+            un = un.where(F.expr(_parse_expr(
                 rewrite(_tokenize(where_text)), un)))
         cols = []
         for i2, grp in enumerate(
@@ -12315,7 +12267,7 @@ class KqlCompiler:
                     name = body[0].text.replace(".", "_")
                 else:
                     name = f"col{i2}"
-            cols.append(F.expr(_compile_expr_tokens(
+            cols.append(F.expr(_parse_expr(
                 rewrite(body), un)).alias(name))
         return un.select(*cols)
 
@@ -12492,9 +12444,9 @@ class KqlCompiler:
             aggs[-1] = (*aggs[-1][:2], m.group("dflt"))
         step_us = _timespan_to_us(m.group("step"))
         ts_name = m.group("ts")
-        start = (_compile_expr_tokens(_tokenize(m.group("from")), df)
+        start = (_parse_expr(_tokenize(m.group("from")), df)
                  if m.group("from") else None)
-        end = (_compile_expr_tokens(_tokenize(m.group("to")), df)
+        end = (_parse_expr(_tokenize(m.group("to")), df)
                if m.group("to") else None)
         if start is not None:
             # explicit start: bins anchor at `from` (bin_at semantics)
@@ -12620,7 +12572,7 @@ class KqlCompiler:
                     "asc", "desc"):
                 desc = g[-1].text.lower() == "desc"
                 g = g[:-1]
-            keys.append(_OrderKey(_compile_expr_tokens(g, df), desc, nulls))
+            keys.append(_OrderKey(_parse_expr(g, df), desc, nulls))
         return tuple(keys)
 
     def _summarize_percentilew_fast(self, df: DataFrame,
@@ -12669,8 +12621,8 @@ class KqlCompiler:
                 ps = [float(r) for r in raws]
             except ValueError:
                 return None
-            v_sql = _compile_expr_tokens(arggroups[0], df)
-            w_sql = _compile_expr_tokens(arggroups[1], df)
+            v_sql = _parse_expr(arggroups[0], df)
+            w_sql = _parse_expr(arggroups[1], df)
             return v_sql, w_sql, ps, raws
 
         for i, g in enumerate(agg_groups):
@@ -12856,7 +12808,7 @@ class KqlCompiler:
                         "percentiles(col, p1, ...) and "
                         "percentilesw(col, w, p1, ...)")
                 call = [Tok("ident", array_form)] + call[1:]
-                sql = _compile_expr_tokens(call, df)
+                sql = _parse_expr(call, df)
                 alias = f"__tup{i}"
                 aggs.append(F.expr(sql).alias(alias))
                 post.append((names, alias))
@@ -12873,7 +12825,7 @@ class KqlCompiler:
                 # not duplicated from the struct).
                 fn = ("max_by" if g[0].text.lower() == "arg_max"
                       else "min_by")
-                rank_sql = _compile_expr_tokens(g[2:-3], df)
+                rank_sql = _parse_expr(g[2:-3], df)
                 cols = ", ".join(f"`{c}`" for c in df.columns)
                 alias = f"__argstar{i}"
                 aggs.append(F.expr(
@@ -12912,7 +12864,7 @@ class KqlCompiler:
                         nm = (ag[0].text
                               if len(ag) == 1 and ag[0].kind == "ident"
                               else f"{g[0].text.lower()}_arg{j}")
-                        items.append((nm, _compile_expr_tokens(ag, df)))
+                        items.append((nm, _parse_expr(ag, df)))
                     rank_sql = items[0][1]
                     struct_sql = ", ".join(
                         f"({s}) AS `{n}`" for n, s in items)
@@ -12954,19 +12906,16 @@ class KqlCompiler:
             out = out.drop(alias)
         return out
 
-    def _serial_expr(self, toks: list[Tok],
-                     df: DataFrame) -> tuple[str, bool]:
+    def _serial_expr(self, toks: list[Tok], df: DataFrame) -> _ExprParser:
         """Compile one extend/project/where expression in the
-        pipeline's serialized scope: (sql, whether it rendered a
-        serialized call). A window that partitions on a restart run id
-        repartitions on (keys, run), so the scoped layout no longer
-        holds past it."""
-        out = _render_tokens(toks, df, self._scope)
-        kinds = {t.kind for t in out}
-        if "window_run" in kinds:
+        pipeline's serialized scope. A window that partitions on a
+        restart run id repartitions on (keys, run), so the scoped
+        layout no longer holds past it. The stage guards the unscoped
+        calls of all its expressions once (_guard_global_serial)."""
+        p = _compile(toks, df, self._scope)
+        if p.run:
             self._scope = replace(self._scope, laid_out=False)
-        return (_parse_expr_with_atoms(out, df),
-                not kinds.isdisjoint(("window", "window_run")))
+        return p
 
     def _serial_guard(self, what: str, df: DataFrame) -> _SerialScope:
         """The scope for serialized op ``what``: it needs a serialized
@@ -13271,7 +13220,7 @@ class KqlCompiler:
                 steps.append((sm.group(1), None))
             else:
                 steps.append((sm.group(1),
-                              _compile_expr_tokens(ptoks, df,
+                              _parse_expr(ptoks, df,
                                                    self._scope)))
             if assign_text is not None:
                 if not var_set:

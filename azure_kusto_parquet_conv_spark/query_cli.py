@@ -10,10 +10,13 @@ tables::
     python -m azure_kusto_parquet_conv_spark.query_cli \
         'events | summarize n=count() by event_type' \
         --sf-dir /root/testdata/sf0.01 --format jsonl -o out.jsonl
+    python -m azure_kusto_parquet_conv_spark.query_cli --list-queries
 
 Output formats: ``table`` (aligned text, default), ``jsonl`` (one JSON
 object per row — the engine's convert JSONL conventions), ``csv``
 (header row + comma-separated, embedded JSON for nested values).
+``--list-queries`` prints the query catalog's inventory (name, oracled,
+summary) as JSON-Lines instead of running a query.
 Errors print to stderr and exit 255, matching the converter CLI's
 reference-derived convention.
 
@@ -39,7 +42,11 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="kql-spark",
         description="Run a KQL query over parquet tables via Spark")
-    p.add_argument("query", help="KQL text, e.g. 'nation | count'")
+    p.add_argument("query", nargs="?",
+                   help="KQL text, e.g. 'nation | count'")
+    p.add_argument("--list-queries", action="store_true",
+                   help="print the query-catalog inventory (name, "
+                        "oracled, summary) as JSON-Lines and exit")
     p.add_argument("--sf-dir", default=_DEFAULT_SF,
                    help=f"table directory (default {_DEFAULT_SF}; "
                         f"env SPARK_GRAFT_SF_DIR)")
@@ -74,6 +81,10 @@ def _emit(lines, out_file: str | None) -> None:
 
 
 def run(args: argparse.Namespace) -> int:
+    if args.list_queries:
+        from azure_kusto_parquet_conv_spark.queries import catalog
+        _emit([json.dumps(row) for row in catalog()], args.out_file)
+        return 0
     from azure_kusto_parquet_conv_spark.kql import kql
     from azure_kusto_parquet_conv_spark.session import get_spark
 
@@ -120,7 +131,10 @@ def run(args: argparse.Namespace) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if args.query is None and not args.list_queries:
+        parser.error("provide a KQL query or --list-queries")
     try:
         return run(args)
     except Exception as e:  # reference convention: message + 255

@@ -79,10 +79,10 @@ def test_cli_timestamp_modes(sf_dir, capsysbinary):
 
 
 def test_kql_cli_jsonl(spark, sf_dir, capsys):
-    from azure_kusto_parquet_conv_spark.kql_cli import main as kql_main
+    from azure_kusto_parquet_conv_spark.query_cli import main as kql_main
     rc = kql_main(["nation | where n_regionkey == 0 "
                    "| project n_name | sort by n_name asc",
-                   "--sf-dir", sf_dir])
+                   "--sf-dir", sf_dir, "--format", "jsonl"])
     assert rc == 0
     import json as _json
     lines_out = [l for l in capsys.readouterr().out.splitlines() if l]
@@ -91,10 +91,10 @@ def test_kql_cli_jsonl(spark, sf_dir, capsys):
 
 
 def test_kql_cli_error_exit(spark, sf_dir, capsys):
-    from azure_kusto_parquet_conv_spark.kql_cli import main as kql_main
+    from azure_kusto_parquet_conv_spark.query_cli import main as kql_main
     rc = kql_main(["nation | facet by x", "--sf-dir", sf_dir])
     assert rc == 255
-    assert "ERROR" in capsys.readouterr().err
+    assert "kql-spark error:" in capsys.readouterr().err
 
 
 def test_cli_gzip_output(spark, sf_dir, tmp_path, capsys):
@@ -114,7 +114,7 @@ def test_cli_gzip_output(spark, sf_dir, tmp_path, capsys):
 def test_kql_cli_list_queries(capsys):
     import json as _json
 
-    from azure_kusto_parquet_conv_spark.kql_cli import main as kql_main
+    from azure_kusto_parquet_conv_spark.query_cli import main as kql_main
     rc = kql_main(["--list-queries"])
     assert rc == 0
     rows = [_json.loads(l) for l in capsys.readouterr().out.splitlines()]
@@ -126,10 +126,10 @@ def test_kql_cli_list_queries(capsys):
 
 
 def test_kql_cli_csv_and_limit(spark, sf_dir, capsys):
-    from azure_kusto_parquet_conv_spark.kql_cli import main as kql_main
+    from azure_kusto_parquet_conv_spark.query_cli import main as kql_main
     rc = kql_main(["nation | sort by n_nationkey asc "
                    "| project n_nationkey, n_name",
-                   "--sf-dir", sf_dir, "--csv", "--limit", "2"])
+                   "--sf-dir", sf_dir, "--format", "csv", "--limit", "2"])
     assert rc == 0
     out = capsys.readouterr().out.splitlines()
     assert out[0] == "n_nationkey,n_name"
@@ -139,7 +139,7 @@ def test_kql_cli_csv_and_limit(spark, sf_dir, capsys):
 def test_kql_cli_explain(spark, sf_dir, capsys):
     """--explain prints the formatted physical plan (the pre-run scale
     review: pushdown visible) and executes nothing."""
-    from azure_kusto_parquet_conv_spark.kql_cli import build_parser, run
+    from azure_kusto_parquet_conv_spark.query_cli import build_parser, run
     rc = run(build_parser().parse_args(
         ["--explain", "--sf-dir", sf_dir,
          "region | where r_regionkey > 1 | count"]))

@@ -171,6 +171,33 @@ def test_numeric_bin(spark, sf_dir):
         [(r["b"], r["n"]) for r in want]
 
 
+def test_floor_with_round_to_is_bin(spark, sf_dir):
+    """Kusto's two-argument floor(x, roundTo) is an alias of bin():
+    it rounds down to a multiple of roundTo for integer, real and
+    timespan sizes, and as a summarize key. (Spark's own floor(x,
+    scale) rounds to decimal places: floor(17, 10) gave 17.) The
+    one-argument floor(x) is the plain function."""
+    import datetime as _dt
+    r = kql(spark, sf_dir, """
+      print a = floor(17, 10), b = bin(17, 10),
+            c = floor(-7.5, 2.0), d = bin(-7.5, 2.0),
+            e = floor(datetime(2024-03-05 10:47:12), 1d),
+            f = bin(datetime(2024-03-05 10:47:12), 1d),
+            g = floor(7.7)
+    """).collect()[0]
+    assert (r["a"], r["c"], r["e"]) == (r["b"], r["d"], r["f"]) == \
+        (10, -8.0, _dt.datetime(2024, 3, 5))
+    assert r["g"] == 7
+    rows = {}
+    for fn in ("floor", "bin"):
+        got = kql(spark, sf_dir, f"""
+          datatable (x:long) [17, 23, 25, -3]
+          | summarize n = count() by b = {fn}(x, 10) | sort by b asc
+        """).collect()
+        rows[fn] = [(r["b"], r["n"]) for r in got]
+    assert rows["floor"] == rows["bin"] == [(-10, 1), (10, 1), (20, 2)]
+
+
 def test_tokenizer_never_hangs_on_junk():
     """Fuzz: arbitrary strings either tokenize+parse or raise ValueError —
     no hangs, no other exception types escape the parser."""
@@ -3636,6 +3663,40 @@ def test_global_serialize_guard_errors_above_row_limit(spark, sf_dir):
     finally:
         spark.conf.unset(limit_key)
         spark.conf.unset(allow_key)
+
+
+def test_global_serialize_guard_probes_once_per_stage(spark, sf_dir):
+    """The unscoped serialized calls of one stage read the same input
+    rows, so compiling the stage runs ONE row-count probe however many
+    calls it renders, nested ones included."""
+    import itertools
+    import warnings
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def compile_jobs(tail: str) -> int:
+        group = f"test-serial-probe-{next(seq)}"
+        sc.setJobGroup(group, "compile-time jobs of one KQL stage")
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore")
+                kql(spark, sf_dir,
+                    f"lineitem | sort by l_orderkey asc | {tail}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a session's first compile over lineitem runs one more job than
+    # later ones: warm up so `one` counts the probe alone
+    compile_jobs("extend a = prev(l_quantity)")
+    one = compile_jobs("extend a = prev(l_quantity)")
+    assert one >= 1  # the probe itself
+    assert compile_jobs("extend a = prev(l_quantity), "
+                        "b = next(l_quantity), c = row_number()") <= one
+    assert compile_jobs("extend a = prev(l_quantity) + next(l_quantity) "
+                        "+ row_number()") <= one
+    assert compile_jobs("extend r = row_number(1, "
+                        "l_orderkey != prev(l_orderkey))") <= one
 
 
 def test_expand_col_patterns_only_star_is_wild(spark, sf_dir):

@@ -188,6 +188,22 @@ IDIOMS = {
         RESTART_RUN.replace("{flag}", "x % 3 = 0")
         + " SELECT id, SUM(x) OVER (PARTITION BY {g}, run {o}"
           " ROWS UNBOUNDED PRECEDING) * 2 FROM r"),
+    # serialized calls inside the bin family
+    "bin_prev": (
+        "extend v = bin(prev(x), 10)",
+        "SELECT id, FLOOR(LAG(x) OVER ({w}) / 10) * 10 FROM t"),
+    "bin_prev_timespan": (
+        "extend v = bin(prev(ts), 1h)",
+        "SELECT id, time_bucket(INTERVAL 1 HOUR, LAG(ts) OVER ({w}))"
+        " FROM t"),
+    "bin_at_prev": (
+        "extend v = bin_at(prev(x), 10, 3)",
+        "SELECT id, LAG(x) OVER ({w})"
+        " - ((LAG(x) OVER ({w}) - 3) % 10 + 10) % 10 FROM t"),
+    "where_bin_minus_prev": (
+        "where bin(x - prev(x), 100) == 100 | extend v = x",
+        "SELECT id, x FROM t"
+        " QUALIFY FLOOR((x - LAG(x) OVER ({w})) / 100) * 100 = 100"),
 }
 
 
