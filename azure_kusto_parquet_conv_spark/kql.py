@@ -11,7 +11,12 @@ Python in the row path).
 
 Design: the expression grammar is parsed with a Pratt parser into an AST
 rendered as a Spark SQL expression string (`F.expr`), i.e. KQL
-expressions become Catalyst expressions 1:1; tabular operators map to
+expressions become Catalyst expressions 1:1. Each compiled expression
+carries its Kusto type (`Expr.ktype`): literals are typed at lex time
+(a real is a DOUBLE), columns by the frame's schema, operators and
+calls by Kusto's rules. A timespan rides a BIGINT of microseconds, and
+a timespan column says so in its field metadata, which Spark carries
+through references, filters, joins and unions. Tabular operators map to
 DataFrame verbs (`where`→filter, `summarize`→groupBy.agg, `join`→join
 with an optional broadcast hint, `top/sort/take`→orderBy/limit, which
 Spark collapses to TakeOrderedAndProject).
@@ -285,6 +290,7 @@ import re
 from dataclasses import dataclass, field, replace
 from typing import NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -400,6 +406,15 @@ def _tokenize(s: str) -> list[Tok]:
     return out
 
 
+def _num_literal(text: str) -> Expr:
+    """A KQL number literal: a real (with a '.' or an exponent) is a
+    DOUBLE — Spark SQL text lexes a bare ``7.5`` as DECIMAL, ``7.5D``
+    as DOUBLE — and an integer a long."""
+    if any(c in text for c in ".eE"):
+        return Expr(text + "D", "real")
+    return Expr(text, "long")
+
+
 # timespan literal → microseconds (for bin() over timestamps)
 _TIMESPAN_US = {"ms": 1_000, "s": 1_000_000, "m": 60_000_000,
                 "h": 3_600_000_000, "d": 86_400_000_000}
@@ -410,24 +425,6 @@ def _timespan_to_us(text: str) -> int:
     if not m:
         raise ValueError(f"KQL: bad timespan {text!r}")
     return int(float(m.group(1)) * _TIMESPAN_US[m.group(2)])
-
-
-def _timespan_us_to_text(us: int) -> str:
-    """Kusto timespan text ``[-][d.]hh:mm:ss[.fffffff]`` for a µs
-    value (the Python twin of _ExprParser._timespan_text_sql, used
-    for compile-time literal folding). The 7th fractional digit is
-    always '0' — the carrier is microseconds, not 100 ns ticks
-    (documented deviation)."""
-    sign = "-" if us < 0 else ""
-    a = abs(us)
-    d, rem = divmod(a, 86_400_000_000)
-    h, rem = divmod(rem, 3_600_000_000)
-    mi, rem = divmod(rem, 60_000_000)
-    s, frac = divmod(rem, 1_000_000)
-    out = f"{sign}{str(d) + '.' if d else ''}{h:02d}:{mi:02d}:{s:02d}"
-    if frac:
-        out += f".{frac:06d}0"
-    return out
 
 
 # ----------------------------------------------------------------------
@@ -510,7 +507,78 @@ _AGG_FNS = {"count", "countif", "sum", "avg", "min", "max", "dcount",
 _CMP = {"==": "=", "!=": "<>", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
 
 
-_NUM_LIT_RE = re.compile(r"-?\s*\d+(?:\.\d+)?(?:[eE][+-]?\d+)?$")
+class Expr(str):
+    """One compiled KQL expression: its Spark SQL text, which an Expr
+    IS (every renderer splices it as text), and its Kusto type
+    ``ktype``: bool, int, long, real, decimal, string, datetime,
+    timespan, or a dynamic on its carrier — "dynamic" for VARIANT,
+    "array"/"map"/"struct" for a native Spark container. None marks a
+    pass-through Spark builtin, typed by _ExprParser._ktype only when a
+    consumer branches on it. Text derived from an Expr is a plain str,
+    so a rewrite never inherits a type it may not have."""
+
+    ktype: str | None
+
+    def __new__(cls, sql: str, ktype: str | None = None) -> Expr:
+        e = super().__new__(cls, sql)
+        e.ktype = ktype
+        return e
+
+
+def _kt(e: str) -> str | None:
+    """The Kusto type an expression carries (None for plain text)."""
+    return getattr(e, "ktype", None)
+
+
+#: Spark type name -> Kusto type; getschema's ColumnType collapses the
+#: native dynamic carriers to "dynamic". A timespan rides BIGINT µs,
+#: invisible to Spark: its columns carry _TIMESPAN_META instead.
+_SPARK_KTYPE = {"long": "long", "integer": "int", "short": "int",
+                "byte": "int", "double": "real", "float": "real",
+                "decimal": "decimal", "string": "string",
+                "binary": "string", "boolean": "bool",
+                "timestamp": "datetime", "timestamp_ntz": "datetime",
+                "date": "datetime", "variant": "dynamic",
+                "array": "array", "map": "map", "struct": "struct"}
+_NATIVE_DYN = ("array", "map", "struct")
+#: Kusto type name -> Spark SQL type: typed nulls, declared schemas
+#: (datatable, externaldata, evaluate output), typeof() casts
+_KTYPE_SQL = {"long": "BIGINT", "int": "INT", "real": "DOUBLE",
+              "double": "DOUBLE", "bool": "BOOLEAN", "boolean": "BOOLEAN",
+              "string": "STRING", "guid": "STRING",
+              "datetime": "TIMESTAMP", "timespan": "BIGINT",
+              "decimal": "DECIMAL(38,18)", "dynamic": "VARIANT"}
+_NUMERIC = ("int", "long", "decimal", "real")   # in promotion order
+_TEMPORAL = ("datetime", "timespan")
+_TIMESPAN_META = {"kusto_type": "timespan"}
+
+
+def _field_ktype(f: T.StructField) -> str | None:
+    """Kusto type of a schema field: a timespan by its metadata, the
+    rest by Spark type."""
+    if f.metadata.get("kusto_type") == "timespan":
+        return "timespan"
+    return _SPARK_KTYPE.get(f.dataType.typeName())
+
+
+def _named(e: str, name: str) -> Column:
+    """Column ``name`` computing expression ``e``. Spark keeps field
+    metadata through references, aliases, filters, joins and unions but
+    drops it on computed expressions, so a timespan's Kusto type is
+    re-attached here, where every computed column is named. Other
+    columns alias in the SQL text: Column.alias costs ~10 py4j calls."""
+    if _kt(e) == "timespan":
+        return F.expr(e).alias(name, metadata=_TIMESPAN_META)
+    return F.expr(f"{e} AS `{name}`")
+
+
+def _with_ktypes(df: DataFrame, ktypes: dict[str, str]) -> DataFrame:
+    """Mark the timespan columns of a frame built from SQL text (print,
+    datatable) with _TIMESPAN_META."""
+    for name, kt in ktypes.items():
+        if kt == "timespan":
+            df = df.withMetadata(name, _TIMESPAN_META)
+    return df
 
 
 def _unwrap_parse_json(sql: str) -> str | None:
@@ -557,103 +625,82 @@ def _balanced_sql(s: str) -> bool:
     return depth == 0
 
 
-_STRINGY_FN_RE = re.compile(
-    r"\b(strcat|substring|substr|tostring|toupper|tolower|trim|trim_start"
-    r"|trim_end|replace_string|extract|concat)\s*\(", re.IGNORECASE)
-
-
 def _str_if_variant(e: str) -> str:
-    """Cast a variant path to STRING for string-operator contexts
+    """Cast a VARIANT operand to STRING for string-operator contexts
     (lower/contains/term-split fail analysis on raw VARIANT)."""
-    return (f"CAST({e} AS STRING)"
-            if e.lstrip("(").startswith("variant_get(") else e)
+    return f"CAST({e} AS STRING)" if _kt(e) == "dynamic" else e
 
 
-def _coerce_variant_cmp(lhs: str, rhs: str,
-                        df: DataFrame | None = None) -> tuple[str, str]:
-    """Kusto compares dynamics loosely; Spark VARIANT needs an explicit
-    cast. When one comparison side is a variant path, cast it to the
-    other side's type: the literal's type when the other side is a bare
-    literal (double for numbers — Kusto dynamic numerics compare as
-    real; string for string literals). For compound expressions the
-    type is RESOLVED against the DataFrame schema (one selectExpr
-    analysis probe, no execution) — surface-text sniffing miscasts a
-    numeric expression that merely mentions a string function
-    (``strlen(s) + 1``). The regex guess survives only as the last
-    resort when no df is in scope (datatable/print literal rows) or
-    the probe fails to analyze."""
-    def fix(var_side: str, other: str) -> str:
-        o = other.strip("() ")
-        if _NUM_LIT_RE.fullmatch(o):
-            return f"CAST({var_side} AS DOUBLE)"
-        if o.startswith("'") and o.endswith("'"):
-            return f"CAST({var_side} AS STRING)"
-        if df is not None:
-            try:
-                t = df.selectExpr(f"({other}) AS __t") \
-                      .schema[0].dataType.typeName()
-            except Exception:
-                t = None
-            if t == "string":
-                return f"CAST({var_side} AS STRING)"
-            if t == "boolean":
-                return f"CAST({var_side} AS BOOLEAN)"
-            if t in ("timestamp", "timestamp_ntz"):
-                return f"CAST({var_side} AS TIMESTAMP)"
-            if t == "date":
-                return f"CAST({var_side} AS DATE)"
-            if t in ("double", "float", "decimal", "long", "integer",
-                     "int", "short", "byte"):
-                return f"CAST({var_side} AS DOUBLE)"
-        if "'" in o or _STRINGY_FN_RE.search(o):
-            return f"CAST({var_side} AS STRING)"
-        return f"CAST({var_side} AS DOUBLE)"
-
-    is_l = _variant_sql_text(lhs, df)
-    is_r = _variant_sql_text(rhs, df)
-    if is_l and is_r:
-        # BOTH sides dynamic (r14 probe find — used to be an
-        # AnalysisException): deep equality via canonical JSON text.
-        # Documented deviations: bag key ORDER is significant, and
-        # numerically-equal different spellings (2 vs 2.0) differ —
-        # Kusto's loose numeric equality is not reproduced here.
-        return f"to_json({lhs})", f"to_json({rhs})"
-    if is_l and not is_r:
-        lhs = fix(lhs, rhs)
-    elif is_r and not is_l:
-        rhs = fix(rhs, lhs)
-    return lhs, rhs
-
-
-def _variant_sql_text(s: str, df: DataFrame | None = None) -> bool:
-    """Is compiled SQL ``s`` variant-typed? Textual prefixes catch the
-    compiler's own dynamic renders (variant_get paths, parse_json
-    literals); a bare column name resolves python-side against the
-    frame's cached schema (no JVM round-trip)."""
-    t = s.lstrip("( ")
-    if t.startswith(("variant_get(", "parse_json(",
-                     "try_parse_json(")):
-        return True
-    m = re.fullmatch(r"\s*\(*\s*(?:`([^`]+)`|([A-Za-z_]\w*))"
-                     r"\s*\)*\s*", s)
-    if m and df is not None:
-        nm = m.group(1) or m.group(2)
-        try:
-            for f_ in df.schema.fields:
-                if f_.name == nm:
-                    return f_.dataType.typeName() == "variant"
-        except Exception:
-            pass
-    return False
+#: Kusto result type of a call by function name: a type, or a slice of
+#: the arguments whose first typed member gives it (the polymorphic
+#: rows). A name not here passes through to a Spark builtin, whose type
+#: _ExprParser._ktype resolves from Spark when a consumer needs it.
+_CALL_KTYPE: dict[str, str | slice] = {name: kt for kt, names in (
+    ("timespan", "totimespan make_timespan dayofweek timespan"),
+    ("datetime", """todatetime now ago make_datetime datetime_add
+        startofday startofweek startofmonth startofyear startofquarter
+        endofday endofweek endofmonth endofyear endofquarter
+        datetime_utc_to_local datetime_local_to_utc
+        unixtime_seconds_todatetime unixtime_milliseconds_todatetime
+        unixtime_microseconds_todatetime unixtime_nanoseconds_todatetime"""),
+    ("string", """tostring string strcat strcat_delim substring tolower
+        toupper trim trim_start trim_end replace_string replace_regex
+        strrep format_datetime format_timespan format_bytes
+        url_encode url_encode_component url_decode base64_encode_tostring
+        base64_decode_tostring hash_sha256 hash_sha1 hash_md5 gettype
+        new_guid toguid guid regex_quote strcat_array tohex
+        dynamic_to_json parse_ipv6 parse_ipv6_mask format_ipv4
+        format_ipv4_mask"""),
+    ("bool", """tobool bool isempty isnotempty isnull isnotnull isnan isinf
+        isfinite isascii isutf8 bag_has_key set_has_element
+        ipv4_is_private ipv4_is_in_range ipv4_is_in_any_range
+        ipv4_is_match ipv6_is_match ipv6_is_in_range ipv6_is_in_any_range
+        has_ipv4 has_any_ipv4 has_ipv4_prefix has_ipv6 has_any_ipv6
+        geo_point_in_polygon geo_point_in_circle"""),
+    ("int", "toint int"),
+    ("long", """tolong long strlen count countif dcount dcountif
+        count_distinct count_distinctif indexof countof array_length
+        datetime_diff getyear getmonth dayofmonth hourofday hash
+        hash_xxhash64 unix_micros array_index_of has_any_index
+        indexof_regex datetime_part strcmp parse_ipv4 parse_ipv4_mask
+        ipv4_compare row_number row_rank_dense row_rank_min"""),
+    ("real", """todouble toreal real double log log2 log10 exp exp2 exp10
+        sqrt pow sign sin cos tan asin acos atan atan2 cot degrees radians
+        pi stdev stdevp variance variancep array_sum array_avg
+        series_stdev series_pearson_correlation geo_distance_2points
+        geo_line_length geo_polygon_area geo_polygon_perimeter geo_azimuth
+        geo_distance_point_to_line geo_distance_point_to_polygon"""),
+    ("decimal", "todecimal decimal parse_version"),
+    ("dynamic", """parse_json todynamic pack bag_pack pack_dictionary
+        bag_pack_columns bag_merge bag_remove_keys bag_set_key parse_url
+        parse_urlquery parse_path parse_user_agent parse_xml
+        unicode_codepoints_from_string base64_decode_toarray zip"""),
+    ("array", """make_list make_set series_fir series_iir series_add
+        series_subtract series_multiply series_divide series_pow
+        series_fill_const series_fill_forward series_fill_backward
+        series_fill_linear series_outliers series_seasonal series_abs
+        series_exp series_log series_sign series_sqrt series_floor
+        series_ceiling series_sin series_cos series_tan series_asin
+        series_acos series_atan series_equals series_not_equals
+        series_greater series_greater_equals series_less
+        series_less_equals"""),
+    (slice(1, None), "iff iif"),
+    (slice(1, None, 2), "case"),
+    (slice(0, None), "coalesce min_of max_of"),
+    (slice(0, 1), """round abs floor ceiling min max sum avg take_any minif
+        maxif sumif avgif prev next row_cumsum reverse"""),
+    (slice(1, 2), "arg_max arg_min"),
+) for name in names.split()}
 
 
 class _ExprParser:
-    """Pratt parser over the token list; emits a Spark SQL string.
+    """Pratt parser over the token list; emits one typed Expr.
 
     Built only by _compile, which stores the result in ``sql``.
-    ``df`` is the schema context (None in pure-text contexts:
-    datatable/print cells); ``scope`` is the pipeline's serialized
-    order (None where serialized calls are not allowed). A parse
+    ``df`` is the schema context, read once for its column types (None
+    in pure-text contexts: datatable/print cells); ``scope`` is the
+    pipeline's serialized order (None where serialized calls are not
+    allowed). A parse
     records what its serialized calls did: ``windowed`` (one
     rendered), ``run`` (one partitions on a restart run id) and
     ``unscoped`` (the calls rendering a GLOBAL window, which the
@@ -665,10 +712,12 @@ class _ExprParser:
         self.i = 0
         self.df = df
         self.scope = scope
-        self.sql = ""
+        self.sql = Expr("")
         self.windowed = False
         self.run = False
         self.unscoped: list[str] = []
+        self._fields: dict[str, T.StructField] | None = None
+        self._resolved: dict[str, str | None] = {}
 
     def peek(self) -> Tok | None:
         return self.toks[self.i] if self.i < len(self.toks) else None
@@ -686,7 +735,7 @@ class _ExprParser:
             raise ValueError(f"KQL: expected {text!r}, got {t.text!r}")
 
     # precedence climbing ------------------------------------------------
-    def parse(self, min_bp: int = 0) -> str:
+    def parse(self, min_bp: int = 0) -> Expr:
         lhs = self._prefix()
         while True:
             t = self.peek()
@@ -731,23 +780,24 @@ class _ExprParser:
                 else None
         return None
 
-    def _prefix(self) -> str:
+    def _prefix(self) -> Expr:
         t = self.next()
         text = t.text
         low = text.lower()
         if low == "not":
-            return f"(NOT {self.parse(3)})"
+            return Expr(f"(NOT {self.parse(3)})", "bool")
         if text == "-":
-            return f"(- {self.parse(6)})"
+            x = self.parse(6)
+            return Expr(f"(- {x})", x.ktype)
         if text == "+":
             # unary plus (Kusto accepts it, e.g. real(+inf))
             return self.parse(6)
         if text == "(":
             inner = self.parse(0)
             self.expect(")")
-            return f"({inner})"
+            return Expr(f"({inner})", inner.ktype)
         if t.kind == "num":
-            return text
+            return _num_literal(text)
         if t.kind == "dt":
             # datetime(...) literal -> TIMESTAMP literal (one token, so
             # interior spaces/colons survive tokenization)
@@ -755,62 +805,84 @@ class _ExprParser:
                              re.DOTALL).group(1).strip().strip("'\"")
             if inner.lower() == "null":
                 # Kusto typed null: datetime(null)
-                return "CAST(NULL AS TIMESTAMP)"
-            return f"TIMESTAMP '{inner}'"
+                return Expr("CAST(NULL AS TIMESTAMP)", "datetime")
+            return Expr(f"TIMESTAMP '{inner}'", "datetime")
         if t.kind == "timespan":
-            return str(_timespan_to_us(text))
+            return Expr(str(_timespan_to_us(text)), "timespan")
         if t.kind == "str":
             body = text[1:-1]
-            return "'" + body.replace("\\'", "'").replace("'", "''") + "'"
+            return Expr("'" + body.replace("\\'", "'").replace("'", "''")
+                        + "'", "string")
         if t.kind == "ident":
             nxt = self.peek()
             if low == "dynamic" and nxt is not None and nxt.text == "(":
                 return self._dynamic_literal()
             if nxt is not None and nxt.text == "(":
                 return self._call(low)
-            if low in ("true", "false", "null"):
-                return low.upper()
+            if low in ("true", "false"):
+                return Expr(low.upper(), "bool")
+            if low == "null":
+                return Expr("NULL")
             if text.startswith("$"):
                 # $left.x / $right.x join-key references keep the prefix;
                 # the join compiler strips it.
-                return text
-            return f"`{text}`" if "." not in text else self._member(text)
+                return Expr(text)
+            if "." in text:
+                return self._member(text)
+            f = self._field(text)
+            return Expr(f"`{text}`", f and _field_ktype(f))
         raise ValueError(f"KQL: unexpected token {text!r}")
 
-    def _member(self, text: str) -> str:
+    def _field(self, name: str) -> T.StructField | None:
+        """The frame's field ``name``; the schema is read once per
+        parser (and pyspark caches it per frame)."""
+        if self._fields is None:
+            self._fields = {} if self.df is None else {
+                f.name: f for f in self.df.schema.fields}
+        return self._fields.get(name)
+
+    def _member(self, text: str) -> Expr:
         """Dotted name ``d.k.j``: member access on a dynamic (VARIANT)
         column compiles to a variant_get path (binary path walk, no
         JSON re-parse); struct columns keep native dot access."""
         base, path = text.split(".", 1)
-        if self.df is not None and any(
-                f.name == base and f.dataType.typeName() == "variant"
-                for f in self.df.schema.fields):
-            return f"variant_get(`{base}`, '$.{path}')"
-        return text
+        f = self._field(base)
+        if f is not None and _field_ktype(f) == "dynamic":
+            return Expr(f"variant_get(`{base}`, '$.{path}')", "dynamic")
+        return Expr(text)
 
-    def _call(self, fname: str) -> str:
+    def _ktype(self, e: str) -> str | None:
+        """Kusto type of compiled expression ``e``: the type it carries,
+        else (a pass-through Spark builtin, or text a renderer built)
+        resolved from Spark ONCE per parser by an analysis of ``e`` over
+        the frame (a one-row relation in df-less contexts). None when it
+        does not analyze (lambda variables, later-stage columns)."""
+        kt = _kt(e)
+        if kt is None and e not in self._resolved:
+            probe = self.df
+            if probe is None:
+                s = SparkSession.getActiveSession()
+                probe = s.range(1) if s is not None else None
+            self._resolved[e] = None
+            if probe is not None:
+                try:
+                    self._resolved[e] = _SPARK_KTYPE.get(probe.selectExpr(
+                        e).schema[0].dataType.typeName())
+                except AnalysisException:
+                    pass
+        return kt if kt is not None else self._resolved[e]
+
+    def _call(self, fname: str) -> Expr:
         self.expect("(")
         if fname in ("bin", "bin_at", "bin_auto", "floor"):
             return self._bin(fname)
         if fname == "pack_all":
-            return self._pack_all()
+            return Expr(self._pack_all(), "dynamic")
         if fname == "row_window_session":
             raise ValueError(
                 "KQL: row_window_session() is an extend kernel: use "
                 "it as the whole right-hand side, `extend s = "
                 "row_window_session(...)`")
-        # tostring(<timespan literal>) folds to the Kusto timespan
-        # text at compile time — the literal's token kind is the only
-        # place its timespan-ness is still visible (compiled it is a
-        # bare µs integer, indistinguishable from a number)
-        if (fname == "tostring" and self.peek() is not None
-                and self.peek().kind == "timespan"
-                and self.i + 1 < len(self.toks)
-                and self.toks[self.i + 1].text == ")"):
-            us = _timespan_to_us(self.next().text)
-            self.expect(")")
-            txt = _timespan_us_to_text(us)
-            return "'" + txt + "'"
         args: list[str] = []
         if self.peek() is not None and self.peek().text != ")":
             # special-case: count(*) and count()
@@ -831,24 +903,36 @@ class _ExprParser:
                     continue
                 break
         self.expect(")")
+        rule = _CALL_KTYPE.get(fname)
+        kt = (next((k for k in map(_kt, args[rule]) if k), None)
+              if isinstance(rule, slice) else rule)
         if fname in _SERIAL_FNS:
-            return self._serial(fname, args)
-        return self._render_call(fname, args)
+            return Expr(self._serial(fname, args), kt)
+        sql = self._render_call(fname, args)
+        if fname in ("avg", "avgif"):
+            if kt != "timespan":
+                kt = "real"
+            else:
+                # Kusto averages timespans to a timespan: back onto
+                # the µs carrier
+                sql = f"CAST({sql} AS BIGINT)"
+        return Expr(sql, kt)
 
-    def _bin(self, fname: str) -> str:
+    def _bin(self, fname: str) -> Expr:
         """bin(x, size) and its Kusto alias floor(x, size), bin_at(x,
         size, anchor) and bin_auto(x). The size is ONE literal token
         whose kind, checked before the other arguments parse, picks
-        the bucketing: a timespan buckets a datetime on its µs, a
-        number buckets numerically. bin_at aligns with pmod, so
-        buckets BELOW the anchor land correctly (integer div truncates
-        toward 0). One-argument floor(x) is the plain function."""
+        the bucketing: a timespan buckets a datetime on its µs (a
+        timespan numerically), a number buckets numerically. bin_at
+        aligns with pmod, so buckets BELOW the anchor land correctly
+        (integer div truncates toward 0). One-argument floor(x) is the
+        plain function."""
         groups = _split_top_commas(
             self.toks[self.i:_close_paren(self.toks, self.i - 1)])
         if fname == "floor" and len(groups) < 2:
             x = self.parse(0)
             self.expect(")")
-            return self._render_call(fname, [x])
+            return Expr(self._render_call(fname, [x]), x.ktype)
         anchor = None
         if fname == "bin_auto":
             # bin_auto(x) == bin_at(x, query_bin_auto_size,
@@ -893,22 +977,21 @@ class _ExprParser:
             self.expect(",")
             anchor = self.parse(0)
         self.expect(")")
-        if size.kind == "timespan":
+        if size.kind == "timespan" and x.ktype != "timespan":
             us = _timespan_to_us(size.text)
             if anchor is None:
-                return (f"timestamp_micros((unix_micros({x}) div {us}) "
-                        f"* {us})")
-            return (f"timestamp_micros(unix_micros({x}) - "
-                    f"pmod(unix_micros({x}) - unix_micros({anchor}), "
-                    f"{us}))")
-        n = size.text
+                return Expr(f"timestamp_micros((unix_micros({x}) div "
+                            f"{us}) * {us})", "datetime")
+            return Expr(f"timestamp_micros(unix_micros({x}) - "
+                        f"pmod(unix_micros({x}) - unix_micros({anchor}), "
+                        f"{us}))", "datetime")
+        n = (Expr(str(_timespan_to_us(size.text)), "timespan")
+             if size.kind == "timespan" else _num_literal(size.text))
         if anchor is not None:
-            return f"(({x}) - pmod(({x}) - ({anchor}), {n}))"
-        if "." in n or "e" in n.lower():
-            # a fractional size literal lexes as DECIMAL in Spark SQL text
-            # (the r10 gotcha) — bin(real, 0.5) must stay DOUBLE like Kusto
-            n = f"CAST({n} AS DOUBLE)"
-        return f"(floor(({x}) / {n}) * {n})"
+            return Expr(f"(({x}) - pmod(({x}) - ({anchor}), {n}))",
+                        x.ktype)
+        return Expr(f"(floor(({x}) / {n}) * {n})",
+                    "real" if n.ktype == "real" else x.ktype)
 
     def _pack_all(self) -> str:
         """pack_all([ignore_null_empty]): a dynamic bag of every current
@@ -995,38 +1078,13 @@ class _ExprParser:
         return text
 
     @staticmethod
-    def _timespan_sql(s: str) -> bool:
-        """Heuristic: does compiled SQL text ``s`` denote this
-        engine's µs-BIGINT timespan carrier? Timespans ride plain
-        BIGINT, so the type system cannot answer; instead this
-        recognizes the compiler's own timespan-producing renders,
-        ANCHORED so arithmetic-wrapped forms (``dayofweek(x) / 1d``
-        is a number) stay numeric: the ts-ts difference, totimespan,
-        make_timespan, and bare dayofweek. A timespan that crossed a
-        column boundary (extend alias, summarize output) is not
-        recognizable — documented carrier limitation; tostring then
-        renders the µs integer."""
-        t = s.strip()
-        return bool(
-            re.fullmatch(r"\(unix_micros\(.*\) - unix_micros\(.*\)\)",
-                         t, re.DOTALL)
-            or (t.startswith("(CASE WHEN ltrim('-',")
-                and "* 86400000000 +" in t)            # totimespan
-            or (t.startswith("(((CAST(")
-                and "* 60000000 + CAST(CAST(" in t
-                and t.endswith("* 1000000 AS BIGINT))"))  # make_timespan
-            or bool(re.fullmatch(
-                r"\(CAST\(dayofweek\(.*\) - 1 AS BIGINT\) "
-                r"\* 86400000000\)", t, re.DOTALL)))
-
-    @staticmethod
     def _timespan_text_sql(t: str) -> str:
         """Kusto timespan text ``[-][d.]hh:mm:ss[.fffffff]`` from the
-        µs BIGINT carrier (r13 verdict #3: tostring(timespan) used to
-        leak the raw µs integer). The days part appears only when
-        |t| >= 1d; the fractional part only when nonzero, always 7
-        digits — the 7th (100 ns) digit is always '0' because the
-        carrier is microseconds (documented deviation, probe-pinned).
+        µs BIGINT carrier: tostring over any timespan-typed expression
+        (literal, arithmetic, column, aggregate). The days part appears
+        only when |t| >= 1d; the fractional part only when nonzero,
+        always 7 digits — the 7th (100 ns) digit is always '0' because
+        the carrier is microseconds (documented deviation, probe-pinned).
         The operand is bound ONCE via the transform hop (the r13
         OOM lesson for spliced sub-expressions); BIGINT min (which
         ANSI abs() rejects) renders null via nullif."""
@@ -1127,11 +1185,6 @@ class _ExprParser:
                 f"(__spd_a, __spd_v) -> __spd_a + __spd_v) / {den} "
                 f"ELSE NULL END")
 
-    _TYPED_NULL = {"long": "BIGINT", "int": "INT", "real": "DOUBLE",
-                   "double": "DOUBLE", "bool": "BOOLEAN",
-                   "string": "STRING", "decimal": "DECIMAL(38,18)",
-                   "timespan": "BIGINT", "guid": "STRING"}
-
     def _tabular_in(self, lhs: str, low: str) -> str | None:
         """Kusto's tabular membership: ``col in (T)`` / ``col in ((T |
         where ...))`` — the right side is a TABLE EXPRESSION whose
@@ -1205,52 +1258,23 @@ class _ExprParser:
                     f"(SELECT lower(__v) FROM {view}))")
         return f"({lhs} {neg}IN (SELECT __v FROM {view}))"
 
-    def _probe_dtype(self, sql: str):
-        """Compile-time operand type, or None when unresolvable.
-        Bare column references resolve PYTHON-SIDE from the frame's
-        cached schema (zero JVM round-trips — the common case for
-        series ops over named columns); only composite expressions pay
-        a selectExpr analysis. In df-less contexts (print bodies) a
-        dummy one-row relation resolves literals."""
-        probe = self.df
-        if probe is None:
-            s = SparkSession.getActiveSession()
-            probe = s.range(1) if s is not None else None
-        if probe is None:
-            return None
-        m = re.fullmatch(r"\s*(?:`([^`]+)`|([A-Za-z_]\w*))\s*", sql)
-        if m:
-            nm = m.group(1) or m.group(2)
-            try:
-                for f_ in probe.schema.fields:
-                    if f_.name == nm:
-                        return f_.dataType
-            except Exception:
-                pass
-            return None
-        try:
-            return probe.selectExpr(sql).schema[0].dataType
-        except Exception:
-            return None
-
     def _lift_arr(self, sql: str, elem: str) -> str:
         """Array-operand coercion for the series/array families (r12,
         generalizing the r10 JSON-lift pattern): a NATIVE array operand
         passes through untouched (no per-row JSON round-trip on the
-        make-series hot path — the compile-time schema probe below is
-        what keeps this free), while a dynamic (VARIANT) operand — the
-        type every parse_json/todynamic/dynamic() column carries —
-        lifts through from_json(to_json(x)) in PERMISSIVE mode instead
-        of failing analysis with DATATYPE_MISMATCH. ``elem`` picks the
-        element carrier: 'double' for numeric series math (Kusto
-        series semantics), 'variant' for order-free structural ops
-        where element types must survive. Sorting/set ops stay on the
-        documented typed-cast-first contract (VARIANT defines neither
-        ordering nor equality)."""
-        if isinstance(self._probe_dtype(sql), T.ArrayType):
+        make-series hot path — the operand's Kusto type is what keeps
+        this free), while a dynamic (VARIANT) operand — the type every
+        parse_json/todynamic/dynamic() column carries — lifts through
+        from_json(to_json(x)) in PERMISSIVE mode instead of failing
+        analysis with DATATYPE_MISMATCH, as does an operand whose type
+        does not resolve (lambda variables, later-stage columns).
+        ``elem`` picks the element carrier: 'double' for numeric
+        series math (Kusto series semantics), 'variant' for order-free
+        structural ops where element types must survive. Sorting/set
+        ops stay on the documented typed-cast-first contract (VARIANT
+        defines neither ordering nor equality)."""
+        if self._ktype(sql) == "array":
             return sql
-        # unresolvable (lambda vars, later-stage columns) or non-array:
-        # the unconditional lift is analysis-valid for every operand
         return (f"from_json(to_json({sql}), 'array<{elem}>', "
                 f"map('mode', 'PERMISSIVE'))")
 
@@ -1320,16 +1344,16 @@ class _ExprParser:
         if kind == "linefit":
             fit = self._render_call("series_fit_line_dynamic", [arr])
             return self._series_arg(
-                f"variant_get({fit}, '$.line_fit')")
+                Expr(f"variant_get({fit}, '$.line_fit')", "dynamic"))
         fir = self._render_call("series_fir", [arr, f"({per})"])
         return f"(CASE WHEN ({per}) <= 0 THEN {avg_arr} ELSE {fir} END)"
 
     def _render_call(self, fname: str, args: list[str]) -> str:
-        if fname in self._TYPED_NULL and len(args) == 1 \
+        if fname in _KTYPE_SQL and len(args) == 1 \
                 and args[0].strip().upper() == "NULL":
             # Kusto typed null literals: long(null), real(null), ...
             # (datetime(null) lexes as one datetime token upstream)
-            return f"CAST(NULL AS {self._TYPED_NULL[fname]})"
+            return f"CAST(NULL AS {_KTYPE_SQL[fname]})"
         if fname == "real" and len(args) == 1:
             # Kusto non-finite real literals: real(+inf) / real(-inf) /
             # real(nan) (r13 probe sweep). The operand reaches here as
@@ -1357,21 +1381,13 @@ class _ExprParser:
             # Kusto to*() conversions return NULL on unconvertible
             # input; plain CAST under Spark ANSI mode would error.
             # STRING operands also accept hex text ('0xff' -> 255,
-            # Kusto contract — r12 probe find); the extended form is
-            # type-probed in so numeric hot paths (every portable-
+            # Kusto contract — r12 probe find); only they take the
+            # extended form, so numeric hot paths (every portable-
             # rounded aggregate rides tolong) keep the bare try_cast.
             sqlt = "INT" if fname == "toint" else "BIGINT"
             x = args[0]
             plain = f"try_cast({x} AS {sqlt})"
-            xs = x.strip()
-            if xs.startswith("'"):
-                is_str = True  # string literal, no probe needed
-            elif re.fullmatch(r"[+-]?[0-9][0-9.eE+-]*", xs):
-                is_str = False  # numeric literal (a column named 'e'
-                # must NOT match — r12 review)
-            else:
-                is_str = isinstance(self._probe_dtype(x), T.StringType)
-            if not is_str:
+            if self._ktype(x) != "string":
                 return plain
             # conv to base -10 = SIGNED two's-complement, matching the
             # hex-literal lexer's wrap (r12 review: the unsigned form
@@ -1384,19 +1400,15 @@ class _ExprParser:
             return f"try_cast({args[0]} AS DOUBLE)"
         if fname == "tostring":
             # Kusto tostring over a TIMESPAN renders the
-            # [-][d.]hh:mm:ss[.fffffff] text (r13 verdict #3) — the
-            # carrier is BIGINT so the check is the compiler's own
-            # timespan-render recognizer, not a type probe.
-            if self._timespan_sql(args[0]):
+            # [-][d.]hh:mm:ss[.fffffff] text. Over a dynamic it renders
+            # JSON: VARIANT's string cast already does; a NATIVE
+            # array/map/struct operand (parse_csv, split, pack_array
+            # pipelines) must route through to_json or Spark's display
+            # rendering leaks ('[a, b,c, d]' — r12 probe find).
+            kt = self._ktype(args[0])
+            if kt == "timespan":
                 return self._timespan_text_sql(args[0])
-            # Kusto tostring over a dynamic renders JSON. VARIANT's
-            # string cast already does; a NATIVE array/map/struct
-            # operand (parse_csv, split, pack_array pipelines) must
-            # route through to_json or Spark's display rendering leaks
-            # ('[a, b,c, d]' — r12 probe find). Compile-time type
-            # probe; unresolvable operands keep the plain cast.
-            if isinstance(self._probe_dtype(args[0]),
-                          (T.ArrayType, T.MapType, T.StructType)):
+            if kt in _NATIVE_DYN:
                 return f"to_json({args[0]})"
             return f"CAST({args[0]} AS STRING)"
         if fname == "count":
@@ -1940,14 +1952,8 @@ class _ExprParser:
                         f"THEN {base} ELSE NULL END)")
             mt = re.fullmatch(r"typeof\(\s*`?(\w+)`?\s*\)",
                               args[3].strip())
-            sqlt = mt and {"long": "BIGINT", "int": "INT",
-                           "real": "DOUBLE", "double": "DOUBLE",
-                           "bool": "BOOLEAN", "datetime": "TIMESTAMP",
-                           "string": "STRING", "guid": "STRING",
-                           "decimal": "DECIMAL(38,18)",
-                           "timespan": "BIGINT"}.get(
-                               mt.group(1).lower())
-            if not sqlt:
+            sqlt = mt and _KTYPE_SQL.get(mt.group(1).lower())
+            if sqlt in (None, "VARIANT"):
                 raise ValueError(
                     f"KQL: extract 4th arg must be typeof(<type>), "
                     f"got {args[3]!r}")
@@ -2753,11 +2759,7 @@ class _ExprParser:
                     "KQL: series_fir(series, filter[, normalize"
                     "[, center]])")
             arr = self._series_arg(args[0])
-            dt = self._probe_dtype(args[1])
-            is_arr = (dt is not None
-                      and dt.typeName() in ("array", "variant")) \
-                or re.match(r"\s*(?:array\s*\(|parse_json\s*\()",
-                            args[1])
+            is_arr = self._ktype(args[1]) in ("array", "dynamic")
             if len(args) == 2 and not is_arr:
                 k = args[1]
                 return (f"transform({arr}, (__fir_v, __fir_i) -> "
@@ -3196,10 +3198,7 @@ class _ExprParser:
                 raise ValueError(f"KQL: {fname}(series1, series2)")
 
             def is_scalar(raw: str) -> bool:
-                dt = self._probe_dtype(raw)
-                return dt is not None and dt.typeName() in (
-                    "long", "integer", "short", "byte", "double",
-                    "float", "decimal")
+                return self._ktype(raw) in _NUMERIC + ("timespan",)
             ops = {"series_add": "({x} + {y})",
                    "series_subtract": "({x} - {y})",
                    "series_multiply": "({x} * {y})",
@@ -4342,6 +4341,10 @@ class _ExprParser:
         if fname == "variancep":
             return f"var_pop({args[0]})"
         mapped = _FN_RENAME.get(fname, fname)
+        if fname in ("floor", "ceiling") and len(args) == 1 \
+                and _kt(args[0]) == "real":
+            # Spark floors a DOUBLE to BIGINT; Kusto's result is real
+            return f"CAST({mapped}({args[0]}) AS DOUBLE)"
         return f"{mapped}({', '.join(args)})"
 
     @staticmethod
@@ -5532,7 +5535,7 @@ class _ExprParser:
         return (f"((unix_micros({d1}) div {us}) "
                 f"- (unix_micros({d2}) div {us}))")
 
-    def _dynamic_literal(self) -> str:
+    def _dynamic_literal(self) -> Expr:
         """``dynamic(<json>)`` literal: consume the balanced-paren body
         and interpret it. Flat homogeneous numeric/string arrays become
         NATIVE Spark arrays (so series_* / array_* functions consume
@@ -5566,7 +5569,7 @@ class _ExprParser:
         if isinstance(val, list) and val and \
                 all(isinstance(v, bool) for v in val):
             items = ", ".join("TRUE" if v else "FALSE" for v in val)
-            return f"array({items})"
+            return Expr(f"array({items})", "array")
         if isinstance(val, list) and val and \
                 all(v is None or (isinstance(v, (int, float))
                                   and not isinstance(v, bool))
@@ -5580,21 +5583,28 @@ class _ExprParser:
                     else f"CAST({v!r} AS DOUBLE)" for v in val)
             else:
                 items = ", ".join(f"CAST({v} AS BIGINT)" for v in val)
-            return f"array({items})"
+            return Expr(f"array({items})", "array")
         if isinstance(val, list) and val and \
                 all(isinstance(v, str) for v in val):
             items = ", ".join("'" + v.replace("'", "''") + "'"
                               for v in val)
-            return f"array({items})"
+            return Expr(f"array({items})", "array")
         if val is None:
             # Kusto: dynamic(null) IS null — isnull() must see a SQL
             # NULL, not a variant holding JSON null (r13 probe sweep)
-            return "CAST(NULL AS VARIANT)"
+            return Expr("CAST(NULL AS VARIANT)", "dynamic")
         esc = body.replace("\\", "\\\\").replace("'", "''")
-        return f"parse_json('{esc}')"
+        return Expr(f"parse_json('{esc}')", "dynamic")
 
-    def _infix(self, lhs: str, t: Tok, bp: int) -> str:
+    def _infix(self, lhs: Expr, t: Tok, bp: int) -> Expr:
         low = t.text.lower()
+        if t.text in ("+", "-", "*", "/", "%"):
+            return self._arith(lhs, t.text, self.parse(bp + 1))
+        if t.text in (".", "["):
+            return Expr(self._postfix(lhs, t), "dynamic")
+        return Expr(self._predicate(lhs, low, t, bp), "bool")
+
+    def _postfix(self, lhs: Expr, t: Tok) -> str:
         if t.text == ".":
             # postfix member access AFTER a rendered expression —
             # d.a.b[0].c / todynamic(s).key (r14 probe find; a plain
@@ -5609,32 +5619,35 @@ class _ExprParser:
             path = nxt.text
             return (f"variant_get(parse_json(to_json(named_struct("
                     f"'x', {lhs}))), '$.x.{path}')")
-        if t.text == "[":
-            # postfix indexer: arr[i] (0-based; negatives count from
-            # the end, Spark element_at semantics) or bag['key']. The
-            # base lifts to VARIANT through the named_struct round
-            # trip (valid for typed arrays, dynamics and paths alike);
-            # both container branches evaluate and coalesce — the
-            # wrong-shape branch is null (try_cast guards the int
-            # index under ANSI).
-            idx = self.parse(0)
-            self.expect("]")
-            lifted = (f"variant_get(parse_json(to_json(named_struct("
-                      f"'x', {lhs}))), '$.x')")
-            i = f"try_cast({idx} AS INT)"
-            pos = f"IF({i} >= 0, {i} + 1, {i})"
-            arrb = (f"try_element_at(from_json(to_json({lifted}), "
-                    f"'array<variant>'), {pos})")
-            mapb = (f"try_element_at(from_json(to_json({lifted}), "
-                    f"'map<string,variant>'), CAST({idx} AS STRING))")
-            return f"coalesce({arrb}, {mapb})"
+        # postfix indexer: arr[i] (0-based; negatives count from
+        # the end, Spark element_at semantics) or bag['key']. The
+        # base lifts to VARIANT through the named_struct round
+        # trip (valid for typed arrays, dynamics and paths alike);
+        # both container branches evaluate and coalesce — the
+        # wrong-shape branch is null (try_cast guards the int
+        # index under ANSI).
+        idx = self.parse(0)
+        self.expect("]")
+        lifted = (f"variant_get(parse_json(to_json(named_struct("
+                  f"'x', {lhs}))), '$.x')")
+        i = f"try_cast({idx} AS INT)"
+        pos = f"IF({i} >= 0, {i} + 1, {i})"
+        arrb = (f"try_element_at(from_json(to_json({lifted}), "
+                f"'array<variant>'), {pos})")
+        mapb = (f"try_element_at(from_json(to_json({lifted}), "
+                f"'map<string,variant>'), CAST({idx} AS STRING))")
+        return f"coalesce({arrb}, {mapb})"
+
+    def _predicate(self, lhs: Expr, low: str, t: Tok, bp: int) -> str:
+        """The bool-valued infix operators: logic, comparisons,
+        membership and the string operators."""
         if low == "and":
             return f"({lhs} AND {self.parse(bp + 1)})"
         if low == "or":
             return f"({lhs} OR {self.parse(bp + 1)})"
         if t.text in _CMP:
             rhs = self.parse(bp + 1)
-            lhs, rhs = _coerce_variant_cmp(lhs, rhs, self.df)
+            lhs, rhs = self._cmp_pair(lhs, rhs)
             return f"({lhs} {_CMP[t.text]} {rhs})"
         if low in ("=~", "!~"):
             lhs = _str_if_variant(lhs)
@@ -5668,7 +5681,7 @@ class _ExprParser:
             else:
                 # a variant path on the left takes the list's type
                 # (same loose-compare coercion as binary comparisons)
-                lhs, _ = _coerce_variant_cmp(lhs, items[0], self.df)
+                lhs, _ = self._cmp_pair(lhs, items[0])
             return f"({lhs} {neg}IN ({', '.join(items)}))"
         if low in ("between", "!between"):
             # KQL range: x between (lo .. hi), inclusive both ends;
@@ -5679,7 +5692,7 @@ class _ExprParser:
             self.expect(".")
             hi = self.parse(0)
             self.expect(")")
-            lhs, _ = _coerce_variant_cmp(lhs, lo, self.df)
+            lhs, _ = self._cmp_pair(lhs, lo)
             neg = "NOT " if low.startswith("!") else ""
             return f"({neg}{lhs} BETWEEN {lo} AND {hi})"
         base = low.lstrip("!")
@@ -5736,83 +5749,79 @@ class _ExprParser:
             parts = joiner.join(f"array_contains({toks}, lower({t}))"
                                 for t in terms)
             return f"({parts})"
-        if t.text in ("+", "-", "*", "/", "%"):
-            nxt = self.peek()
-            rhs_ts_lit = nxt is not None and nxt.kind == "timespan"
-            rhs = self.parse(bp + 1)
-            if t.text in ("+", "-"):
-                out = self._dt_arith(lhs, t.text, rhs, rhs_ts_lit)
-                if out is not None:
-                    return out
-            # Kusto arithmetic over dynamics (r14 probe find — used
-            # to be an AnalysisException): a variant operand coerces
-            # to DOUBLE (null on a non-numeric dynamic via try_cast).
-            # Documented deviation: the result is real even when both
-            # dynamics hold longs (Spark cannot branch the result
-            # type on the runtime variant type).
-            if _variant_sql_text(lhs, self.df):
-                lhs = f"try_cast({lhs} AS DOUBLE)"
-            if _variant_sql_text(rhs, self.df):
-                rhs = f"try_cast({rhs} AS DOUBLE)"
-            return f"({lhs} {t.text} {rhs})"
         raise ValueError(f"KQL: unexpected operator {t.text!r}")
 
-    def _dt_arith(self, lhs: str, op: str, rhs: str,
-                  rhs_ts_lit: bool) -> str | None:
-        """Kusto raw datetime arithmetic (r13 probe sweep — the gap
-        documented since r7): ``ts ± timespan -> timestamp``,
-        ``ts - ts -> timespan`` (this engine's µs BIGINT carrier, so
-        the result composes with timespan literals/comparisons), and
-        ``timespan + ts -> timestamp``. Returns None for plain numeric
-        arithmetic. Type detection is text-first (TIMESTAMP literals,
-        now()/timestamp_micros renders) with a schema probe only for
-        bare columns or when the other operand is timespan/timestamp
-        shaped — composite numeric expressions never pay an analysis
-        round-trip."""
-        def ts_text(s: str) -> bool:
-            # prefix forms: literals, now(), unixtime_*, ago(), plus
-            # the datetime-returning renders date_trunc (startof*/
-            # endof*/bin over datetimes) and make_timestamp
-            # (make_datetime) — r13 advice: `startofday(a) - b` must
-            # probe as ts-ts, not fall through to plain `-`. Suffix
-            # form: an outermost (try_)cast to TIMESTAMP
-            # (todatetime renders), modulo wrapping parens.
-            return bool(re.match(
-                r"\s*\(*\s*(TIMESTAMP '|current_timestamp\s*\("
-                r"|timestamp_micros\s*\(|timestampadd\s*\("
-                r"|date_trunc\s*\(|make_timestamp\s*\()", s)
-                or re.search(r"AS TIMESTAMP\s*\)\s*\)*\s*$", s))
+    def _cmp_pair(self, lhs: Expr, rhs: Expr) -> tuple[str, str]:
+        """Kusto compares dynamics loosely; Spark VARIANT needs an
+        explicit cast. A VARIANT side casts to the other side's type
+        (real for numbers and whatever does not resolve). Two dynamics
+        compare by deep equality via canonical JSON text — documented
+        deviations: bag key ORDER is significant, and numerically-equal
+        different spellings (2 vs 2.0) differ."""
+        l_dyn, r_dyn = lhs.ktype == "dynamic", rhs.ktype == "dynamic"
+        if l_dyn and r_dyn:
+            return f"to_json({lhs})", f"to_json({rhs})"
+        if l_dyn:
+            return self._cast_like(lhs, rhs), rhs
+        if r_dyn:
+            return lhs, self._cast_like(rhs, lhs)
+        return lhs, rhs
 
-        def bare(s: str) -> bool:
-            return bool(re.fullmatch(
-                r"\s*\(*\s*(?:`[^`]+`|[A-Za-z_]\w*)\s*\)*\s*", s))
+    def _cast_like(self, var: str, other: str) -> str:
+        sqlt = {"string": "STRING", "bool": "BOOLEAN",
+                "datetime": "TIMESTAMP"}.get(self._ktype(other), "DOUBLE")
+        return f"CAST({var} AS {sqlt})"
 
-        def is_ts(s: str, allow_probe: bool) -> bool:
-            if ts_text(s):
-                return True
-            if allow_probe or bare(s):
-                d = self._probe_dtype(s)
-                return (d is not None
-                        and d.typeName().startswith("timestamp"))
-            return False
-        l_ts = is_ts(lhs, rhs_ts_lit or ts_text(rhs))
-        if not l_ts:
-            if op == "+" and is_ts(rhs, False):
-                return (f"timestamp_micros(CAST({lhs} AS BIGINT) "
-                        f"+ unix_micros({rhs}))")
-            return None
-        if is_ts(rhs, True):
-            if op == "-":
-                return f"(unix_micros({lhs}) - unix_micros({rhs}))"
-            raise ValueError("KQL: cannot add two datetimes")
-        return (f"timestamp_micros(unix_micros({lhs}) {op} "
-                f"CAST({rhs} AS BIGINT))")
+    def _arith(self, lhs: Expr, op: str, rhs: Expr) -> Expr:
+        """Arithmetic by Kusto's rules on the operand types: datetime -
+        datetime is a timespan; datetime ± timespan (or a plain number
+        of µs) and timespan + datetime are datetimes; timespan × or ÷ a
+        number is a timespan, cast back to the BIGINT-µs carrier;
+        timespan ÷ timespan is a real. An untyped operand facing a
+        datetime or timespan resolves its type from Spark. A dynamic
+        (VARIANT) operand coerces to DOUBLE (null on a non-numeric
+        dynamic via try_cast) — documented deviation: the result is
+        real even when both dynamics hold longs (Spark cannot branch
+        the result type on the runtime variant type)."""
+        lt, rt = lhs.ktype, rhs.ktype
+        if lt is None and rt in _TEMPORAL:
+            lt = self._ktype(lhs)
+        if rt is None and lt in _TEMPORAL:
+            rt = self._ktype(rhs)
+        if lt == "datetime" and op in "+-":
+            if rt != "datetime":
+                return Expr(f"timestamp_micros(unix_micros({lhs}) {op} "
+                            f"CAST({rhs} AS BIGINT))", "datetime")
+            if op == "+":
+                raise ValueError("KQL: cannot add two datetimes")
+            return Expr(f"(unix_micros({lhs}) - unix_micros({rhs}))",
+                        "timespan")
+        if rt == "datetime" and op == "+":
+            return Expr(f"timestamp_micros(CAST({lhs} AS BIGINT) "
+                        f"+ unix_micros({rhs}))", "datetime")
+        if lt == "dynamic":
+            lhs, lt = f"try_cast({lhs} AS DOUBLE)", "real"
+        if rt == "dynamic":
+            rhs, rt = f"try_cast({rhs} AS DOUBLE)", "real"
+        sql = f"({lhs} {op} {rhs})"
+        if "timespan" not in (lt, rt):
+            if lt not in _NUMERIC or rt not in _NUMERIC:
+                return Expr(sql)
+            rank = max(_NUMERIC.index(lt), _NUMERIC.index(rt))
+            if op == "/" and rank < 2:
+                rank = 3  # Spark (like this engine's KQL) divides reals
+            return Expr(sql, _NUMERIC[rank])
+        if lt == rt:
+            return Expr(sql, "real" if op == "/" else "timespan")
+        if op == "/" or (op == "*" and {lt, rt} & {"real", "decimal"}):
+            sql = f"CAST({sql} AS BIGINT)"
+        return Expr(sql, "timespan")
 
 
 def _compile(toks: list[Tok], df: DataFrame | None = None,
              scope: _SerialScope | None = None) -> _ExprParser:
     """Compile one expression: the only place an _ExprParser is built.
-    Returns the finished parser — ``sql`` is the compiled text, and
+    Returns the finished parser — ``sql`` is the compiled Expr, and
     ``windowed``/``run``/``unscoped`` tell what its serialized calls
     did (the where/extend/project stages read them)."""
     p = _ExprParser(toks, df, scope)
@@ -5823,9 +5832,9 @@ def _compile(toks: list[Tok], df: DataFrame | None = None,
 
 
 def _parse_expr(toks: list[Tok], df: DataFrame | None = None,
-                scope: _SerialScope | None = None) -> str:
-    """The SQL of one expression; its unscoped serialized calls pass
-    the global-serialize guard (on ``df``) together."""
+                scope: _SerialScope | None = None) -> Expr:
+    """One compiled expression; its unscoped serialized calls pass the
+    global-serialize guard (on ``df``) together."""
     p = _compile(toks, df, scope)
     _guard_global_serial(p.unscoped, df)
     return p.sql
@@ -5838,18 +5847,22 @@ def _parse_expr(toks: list[Tok], df: DataFrame | None = None,
 def _explodable(df: DataFrame, sql: str, bag_kind: str = "bag"):
     """Column for explode(): a dynamic (VARIANT) array casts to
     array<variant> first — Kusto's mv-expand over dynamic — while native
-    arrays pass through untouched. Schema probe only, no job.
+    arrays pass through untouched. The expression's Kusto type picks
+    the branch; an untyped one is resolved by a schema probe (no job).
     ``bag_kind`` controls the OBJECT-dynamic shape (mv-expand
     kind=/bagexpansion=): 'bag' (default) yields one single-property
     bag per entry, 'array' yields one [key, value] two-element array
     per entry (r13 advice: kind=array silently produced the bag
     shape)."""
     c = F.expr(sql)
-    try:
-        dtype = df.select(c).schema.fields[0].dataType.typeName()
-    except Exception:
-        return c
-    if dtype == "variant":
+    kt = _kt(sql)
+    if kt is None:
+        try:
+            kt = _SPARK_KTYPE.get(
+                df.select(c).schema.fields[0].dataType.typeName())
+        except Exception:
+            return c
+    if kt == "dynamic":
         # arrays cast straight through; a property BAG expands to one
         # single-property bag per entry (Kusto's mv-expand over an
         # object — r12 probe find) or one [key, value] array under
@@ -6216,8 +6229,8 @@ def _split_named(toks: list[Tok], auto: str) -> tuple[str, list[Tok]]:
 
 
 def _named_expr(toks: list[Tok], df: DataFrame,
-                auto: str) -> tuple[str, str]:
-    """Parse `name = expr` or bare `expr`; returns (alias, sql)."""
+                auto: str) -> tuple[str, Expr]:
+    """Parse `name = expr` or bare `expr`; returns (alias, expr)."""
     name, body = _split_named(toks, auto)
     return name, _parse_expr(body, df)
 
@@ -8302,9 +8315,9 @@ class KqlCompiler:
         cols = []
         for part in m.group(1).split(","):
             bits = [b.strip() for b in part.split(":")]
-            if len(bits) != 2 or bits[1] not in self._DT_TYPES:
+            if len(bits) != 2 or bits[1] not in _KTYPE_SQL:
                 raise ValueError(f"KQL: bad externaldata column {part!r}")
-            cols.append((bits[0], self._DT_TYPES[bits[1]]))
+            cols.append((bits[0], _KTYPE_SQL[bits[1]]))
         uris = [t.text[1:-1] for t in _tokenize(m.group(2))
                 if t.kind == "str"]
         if not uris:
@@ -8412,10 +8425,12 @@ class KqlCompiler:
             else:
                 name, body = f"print_{i}" if i else "print_0", g
             # df=None: schema-dependent forms (pack_all) raise cleanly
-            cols.append(f"{_parse_expr(body)} AS `{name}`")
+            cols.append((name, _parse_expr(body)))
         if not cols:
             raise ValueError("KQL: print needs at least one expression")
-        return self.spark.sql("SELECT " + ", ".join(cols))
+        df = self.spark.sql("SELECT " + ", ".join(
+            f"{e} AS `{n}`" for n, e in cols))
+        return _with_ktypes(df, {n: e.ktype for n, e in cols})
 
     # ------------------------------------------------------------------
     def _apply(self, df: DataFrame, stage: str) -> DataFrame:
@@ -8438,7 +8453,7 @@ class KqlCompiler:
                 name, body = _split_named(g, f"col{i}")
                 p = self._serial_expr(body, df)
                 calls += p.unscoped
-                cols.append(F.expr(p.sql).alias(name))
+                cols.append(_named(p.sql, name))
             if not cols:
                 # a bare `project` would silently yield a ZERO-column
                 # frame (fuzz find); Kusto requires at least one
@@ -8530,23 +8545,13 @@ class KqlCompiler:
         if op == "getschema":
             # Kusto's four columns. Deviation (documented): DataType
             # carries the Spark type name where Kusto prints the .NET
-            # System.* name; ColumnType is the faithful CSL name via
-            # the same map the cslschema introspection uses
-            def csl(dt) -> str:
-                s = dt.simpleString()
-                base = s.split("(")[0]
-                m = {"bigint": "long", "int": "int", "smallint": "int",
-                     "tinyint": "int", "double": "real",
-                     "float": "real", "string": "string",
-                     "boolean": "bool", "timestamp": "datetime",
-                     "timestamp_ntz": "datetime", "date": "datetime",
-                     "decimal": "decimal", "variant": "dynamic",
-                     "binary": "string"}
-                if base in m:
-                    return m[base]
-                return "dynamic"  # array/struct/map nest as dynamic
-            rows = [(f.name, i, f.dataType.simpleString(),
-                     csl(f.dataType))
+            # System.* name; ColumnType is the CSL name from the
+            # expression parser's own type map (native containers nest
+            # as dynamic)
+            def csl(f: T.StructField) -> str:
+                kt = _field_ktype(f) or "dynamic"
+                return "dynamic" if kt in _NATIVE_DYN else kt
+            rows = [(f.name, i, f.dataType.simpleString(), csl(f))
                     for i, f in enumerate(df.schema.fields)]
             return self.spark.createDataFrame(
                 rows, "ColumnName string, ColumnOrdinal long, "
@@ -8573,7 +8578,7 @@ class KqlCompiler:
                     continue
                 p = self._serial_expr(body, df)
                 calls += p.unscoped
-                df = df.withColumn(name, F.expr(p.sql))
+                df = df.withColumn(name, _named(p.sql, name))
             # withColumn keeps the row count: one guard on the input
             _guard_global_serial(calls, src)
             return df
@@ -8628,7 +8633,7 @@ class KqlCompiler:
                             raise ValueError(
                                 "KQL: mv-expand ... to typeof(type)")
                         tname = g[j + 3].text
-                        ct = self._DT_TYPES.get(tname)
+                        ct = _KTYPE_SQL.get(tname)
                         if ct is None:
                             raise ValueError(
                                 f"KQL: mv-expand to typeof({tname}) "
@@ -8873,15 +8878,6 @@ class KqlCompiler:
             return self.table(text)
         raise ValueError(f"KQL: bad tabular operand {text!r}")
 
-    _DT_TYPES = {"long": "long", "int": "int", "real": "double",
-                 "double": "double", "string": "string",
-                 "bool": "boolean", "boolean": "boolean",
-                 "datetime": "timestamp", "dynamic": "variant",
-                 # timespan rides this compiler's BIGINT-microseconds
-                 # carrier (timespan literals already compile to it)
-                 "timespan": "long",
-                 "decimal": "decimal(38, 18)", "guid": "string"}
-
     def _datatable(self, text: str) -> DataFrame:
         """``datatable (col:type, ...) [v1, v2, ...]`` — an inline
         literal table (the standard Kusto idiom for small lookup/test
@@ -8892,16 +8888,18 @@ class KqlCompiler:
                      text, re.DOTALL)
         if not m:
             raise ValueError("KQL: datatable (name:type, ...) [values]")
-        cols = []
+        cols, ktypes = [], {}
         for part in m.group(1).split(","):
             bits = [b.strip() for b in part.split(":")]
-            if len(bits) != 2 or bits[1] not in self._DT_TYPES:
+            if len(bits) != 2 or bits[1] not in _KTYPE_SQL:
                 raise ValueError(f"KQL: bad datatable column {part!r}")
-            cols.append((bits[0], self._DT_TYPES[bits[1]]))
+            cols.append((bits[0], _KTYPE_SQL[bits[1]]))
+            ktypes[bits[0]] = bits[1]
         body = m.group(2).strip()
         schema = ", ".join(f"`{n}` {t}" for n, t in cols)
         if not body:
-            return self.spark.createDataFrame([], schema)
+            return _with_ktypes(self.spark.createDataFrame([], schema),
+                                ktypes)
         cells = [_parse_expr(g) for g in _split_top_commas(_tokenize(body))]
         if len(cells) % len(cols):
             raise ValueError(
@@ -8912,7 +8910,8 @@ class KqlCompiler:
             row_sqls.append("SELECT " + ", ".join(
                 f"CAST({cells[r + i]} AS {t}) AS `{n}`"
                 for i, (n, t) in enumerate(cols)))
-        return self.spark.sql(" UNION ALL ".join(row_sqls))
+        return _with_ktypes(self.spark.sql(" UNION ALL ".join(row_sqls)),
+                            ktypes)
 
     _VARIANT_SCALARS = {"BIGINT", "INT", "SMALLINT", "TINYINT", "STRING",
                         "DOUBLE", "FLOAT", "BOOLEAN", "DATE", "TIMESTAMP"}
@@ -8951,12 +8950,7 @@ class KqlCompiler:
             out = self._evaluate(df, rest)
             cols = []
             for nm, ty in out_schema:
-                sqlt = {"string": "STRING", "long": "BIGINT",
-                        "int": "INT", "real": "DOUBLE",
-                        "double": "DOUBLE", "bool": "BOOLEAN",
-                        "boolean": "BOOLEAN", "datetime": "TIMESTAMP",
-                        "decimal": "DECIMAL(38,18)",
-                        "guid": "STRING"}.get(ty)
+                sqlt = _KTYPE_SQL.get(ty)
                 if ty == "dynamic":
                     c = (F.col(nm) if nm in out.columns
                          else F.expr("parse_json('null')"))
@@ -10390,14 +10384,14 @@ class KqlCompiler:
                     star = True
                     continue
                 bits = [b.strip() for b in part.split(":")]
-                if (len(bits) != 2 or bits[1] not in self._DT_TYPES
+                if (len(bits) != 2 or bits[1] not in _KTYPE_SQL
                         or bits[1] == "dynamic"):
                     # dynamic out-columns excluded: Arrow can't carry
                     # VARIANT back from pandas — emit JSON text and
                     # todynamic() it after the plugin
                     raise ValueError(
                         f"KQL: python() bad typeof field {part!r}")
-                fields.append((bits[0], self._DT_TYPES[bits[1]]))
+                fields.append((bits[0], _KTYPE_SQL[bits[1]]))
         if not star and not fields:
             raise ValueError("KQL: python() typeof() needs * or "
                              "name:type fields")
@@ -10992,7 +10986,7 @@ class KqlCompiler:
         mt = re.search(r"\s+to\s+typeof\s*\(\s*(\w+)\s*\)\s*$", head)
         cast_t = None
         if mt:
-            cast_t = self._DT_TYPES.get(mt.group(1))
+            cast_t = _KTYPE_SQL.get(mt.group(1))
             if cast_t is None:
                 raise ValueError(
                     f"KQL: mv-apply to typeof({mt.group(1)}) not supported")
@@ -11085,12 +11079,12 @@ class KqlCompiler:
         aggs, agg_names = [], []
         for i, g in enumerate(_split_top_commas(agg_toks)):
             name, sql = _named_expr(g, df, f"agg{i}")
-            aggs.append(F.expr(sql).alias(name))
+            aggs.append(_named(sql, name))
             agg_names.append(name)
         keys, key_names = [F.col(rid)], []
         for i, g in enumerate(_split_top_commas(key_toks)):
             name, sql = _named_expr(g, df, f"key{i}")
-            keys.append(F.expr(sql).alias(name))
+            keys.append(_named(sql, name))
             key_names.append(name)
         carry = [F.first(c).alias(c) for c in orig_cols
                  if c not in agg_names and c not in key_names]
@@ -11130,7 +11124,7 @@ class KqlCompiler:
                 col = of_toks[0].text
             else:
                 col, csql = _named_expr(of_toks, df, f"level{i}")
-                df = df.withColumn(col, F.expr(csql))
+                df = df.withColumn(col, _named(csql, col))
             name, sql = _named_expr(_tokenize(m.group(4)), df,
                                     f"aggregated_{col}")
             oth = m.group("oth")
@@ -11145,7 +11139,7 @@ class KqlCompiler:
         carried: list[str] = []  # parent key + agg columns carried along
         for n, col, name, sql, label in levels:
             prev_keys = [c for c, is_key in carried if is_key]
-            agg = df.groupBy(*prev_keys, col).agg(F.expr(sql).alias(name))
+            agg = df.groupBy(*prev_keys, col).agg(_named(sql, name))
             if winners is not None:
                 agg = agg.join(F.broadcast(winners), prev_keys)
             w = Window.partitionBy(*prev_keys).orderBy(
@@ -11173,7 +11167,7 @@ class KqlCompiler:
             # parent aggregates like normal winner rows do
             parent_cols = [c for c, _ in carried[:-2]]
             others = (rest_rows.groupBy(*parent_cols)
-                      .agg(F.expr(sql).alias(name))
+                      .agg(_named(sql, name))
                       .withColumn(col, F.lit(label)))
             if dict(df.dtypes).get(col) != "string":
                 raise ValueError(
@@ -12489,7 +12483,7 @@ class KqlCompiler:
                     keys.append(g[0].text)
                     continue
                 kname, ksql = _named_expr(g, df, f"key{i}")
-                df = df.withColumn(kname, F.expr(ksql))
+                df = df.withColumn(kname, _named(ksql, kname))
                 keys.append(kname)
         pre = (df.withColumn("__bin", bin_col)
                  .groupBy(*keys, "__bin")
@@ -12688,7 +12682,7 @@ class KqlCompiler:
             keys.append((name, sql))
         bynames = [n for n, _ in keys]
         base = df.select(
-            *[F.expr(s).alias(n) for n, s in keys],
+            *[_named(s, n) for n, s in keys],
             F.expr(vw[0]).cast("double").alias("__pwv"),
             F.expr(vw[1]).cast("double").alias("__pww"))
         # Single-pass spine (r14 optimization): rows failing the weight
@@ -12875,7 +12869,7 @@ class KqlCompiler:
                     post.append((["**"], alias))
                     continue
             name, sql = _named_expr(g, df, f"agg{i}")
-            aggs.append(F.expr(sql).alias(name))
+            aggs.append(_named(sql, name))
         if not aggs:
             raise ValueError("KQL: summarize needs at least one aggregate")
         if not key_toks:
@@ -12884,7 +12878,7 @@ class KqlCompiler:
             keys = []
             for i, g in enumerate(_split_top_commas(key_toks)):
                 name, sql = _named_expr(g, df, f"key{i}")
-                keys.append(F.expr(sql).alias(name))
+                keys.append(_named(sql, name))
             out = df.groupBy(*keys).agg(*aggs)
         for names, alias in post:
             if names == ["*"]:
@@ -13384,7 +13378,7 @@ class KqlCompiler:
 
         # all materialized columns ride ONE selectExpr (r15: each
         # withColumn was 2-4 py4j round trips + an analysis pass);
-        # the Expr type probe analyzes a one-column projection first
+        # the type probe analyzes a one-column projection first
         vtype = df.selectExpr(
             f"({expr_sql}) AS __rws_orig").schema[0].dataType
         new_cols = [f"({expr_sql}) AS __rws_orig"]
@@ -13596,7 +13590,7 @@ def _stream_summarize(df: DataFrame, rest: str,
     aggs, agg_names = [], []
     for i, g in enumerate(_split_top_commas(toks[:by_idx])):
         name, sql = _named_expr(g, df, f"agg{i}")
-        aggs.append(F.expr(sql).alias(name))
+        aggs.append(_named(sql, name))
         agg_names.append(name)
     bin_alias, ts_col, step_us = None, None, None
     other_keys, key_order = [], []
@@ -13624,7 +13618,7 @@ def _stream_summarize(df: DataFrame, rest: str,
         raise ValueError("KQL stream: summarize keys must include "
                          "bin(<ts>, <step>) for a finalizable window")
     win = F.window(F.col(ts_col), f"{step_us} microseconds")
-    key_cols = [F.expr(sql).alias(name) for name, sql in other_keys]
+    key_cols = [_named(sql, name) for name, sql in other_keys]
     out = (df.withWatermark(ts_col, watermark)
              .groupBy(win.alias("__w"), *key_cols)
              .agg(*aggs)

@@ -163,16 +163,14 @@ def sround(col, d: int):
 
 def ksum(expr: str, d: int = 2) -> str:
     """KQL text twin of :func:`osum` for kql() catalog entries —
-    tolong() compiles to try_cast(.. AS BIGINT) (kql.py:550), so the
-    compiled Spark SQL is op-for-op the osum() pattern. Numeric
-    literals ride inside todouble(): the compiled text lands in Spark
-    SQL, where a bare `100.0` lexes as DECIMAL and would flip the
-    output column (and every division on the way) to DecimalType."""
+    tolong() compiles to try_cast(.. AS BIGINT), so the compiled Spark
+    SQL is op-for-op the osum() pattern (KQL real literals such as
+    `100.0` compile to DOUBLE)."""
     s1, sd = 10 ** (d + 2), 10 ** d
     return (f"tolong(round(sum(tolong(floor(({expr})"
-            f" * todouble({s1}.0) + todouble(0.5)))) "
-            f"/ todouble(100.0), 0))"
-            f" / todouble({sd}.0)")
+            f" * {s1}.0 + 0.5))) "
+            f"/ 100.0, 0))"
+            f" / {sd}.0")
 
 
 def kavg(expr: str, d: int = 4) -> str:
@@ -180,9 +178,9 @@ def kavg(expr: str, d: int = 4) -> str:
     ensure `expr` is non-null or mirror COUNT semantics in the oracle)."""
     s1, sd = 10 ** (d + 2), 10 ** d
     return (f"tolong(round(sum(tolong(floor(({expr})"
-            f" * todouble({s1}.0) + todouble(0.5)))) "
-            f"/ count() / todouble(100.0), 0))"
-            f" / todouble({sd}.0)")
+            f" * {s1}.0 + 0.5))) "
+            f"/ count() / 100.0, 0))"
+            f" / {sd}.0")
 
 
 #: names swept to the portable-rounding scheme in r10 — the
@@ -3786,8 +3784,8 @@ def q_kql_math_special(spark, sf_dir):
         | where p_partkey % 11 == 0
         | project p_partkey,
             lg = loggamma(todouble(p_partkey % 180 + 1)
-                          / todouble(10.0)),
-            bc = beta_cdf(todouble(p_partkey % 97) / todouble(100.0),
+                          / 10.0),
+            bc = beta_cdf(todouble(p_partkey % 97) / 100.0,
                           1.0, 3.0)
     """)
     return df.select("p_partkey", sround(F.col("lg"), 6).alias("lg"),
@@ -4029,9 +4027,9 @@ def q_kql_geo_measures(spark, sf_dir):
                      pack_array(lon1, lat1))))
         | project l_orderkey,
             len_dm = tolong(bin(geo_line_length(line) * todouble(10)
-                                + todouble(0.5), 1)),
+                                + 0.5, 1)),
             area_km = tolong(bin(geo_polygon_area(poly)
-                                 / todouble(1000) + todouble(0.5), 1))
+                                 / todouble(1000) + 0.5, 1))
     """)
 
 
@@ -5670,20 +5668,20 @@ def q_kql_cond_aggs(spark, sf_dir):
     return kql(spark, sf_dir, f"""
       lineitem
         | summarize hi_qty = tolong(round(
-                      sumif(tolong(round(l_quantity * todouble(10000.0),
+                      sumif(tolong(round(l_quantity * 10000.0,
                                          0)),
-                            l_discount > 0.05) / todouble(100.0), 0))
-                      / todouble(100.0),
+                            l_discount > 0.05) / 100.0, 0))
+                      / 100.0,
                     hi_orders = dcountif(l_orderkey, l_discount > 0.05),
                     sd = tolong(round(sqrt(max_of(
                       (sum(tolong(round(l_quantity * l_quantity, 0)))
-                         / todouble(1.0)
+                         / 1.0
                        - (sum(tolong(round(l_quantity, 0)))
-                          / todouble(1.0))
+                          / 1.0)
                        * (sum(tolong(round(l_quantity, 0)))
-                          / todouble(1.0))
+                          / 1.0)
                        / count()) / (count() - 1), 0.0))
-                      * todouble(10000.0), 0)) / todouble(10000.0)
+                      * 10000.0, 0)) / 10000.0
           by l_linestatus
     """)
 
@@ -5947,9 +5945,9 @@ def q_kql_series_fill(spark, sf_dir):
       events
         | where event_type == 'error' and value > 90
         | extend b = tolong(user_id % 5)
-        | make-series s = sum(tolong(round(value * todouble(10000.0),
+        | make-series s = sum(tolong(round(value * 10000.0,
                                            0)))
-                          / todouble(10000.0) / count()
+                          / 10000.0 / count()
             default=null on ts step 1d by b
         | extend ff = series_fill_forward(s), lin = series_fill_linear(s)
     """)
@@ -6049,9 +6047,9 @@ def q_kql_series_smooth(spark, sf_dir):
     df = kql(spark, sf_dir, """
       events
         | extend b = tolong(user_id % 5)
-        | make-series s = sum(tolong(round(value * todouble(10000.0),
+        | make-series s = sum(tolong(round(value * 10000.0,
                                            0)))
-                          / todouble(10000.0) / count()
+                          / 10000.0 / count()
             on ts step 1d by b
         | extend sm = series_fir(s, 3),
                  resid = series_subtract(s, series_fir(s, 3))
@@ -6299,11 +6297,11 @@ def q_kql_row_cumsum(spark, sf_dir):
         | partition by user_id (
             sort by ts_ns asc, event_id asc
             | extend run0 = row_cumsum(tolong(round(
-                value * todouble(10000.0), 0)))
+                value * 10000.0, 0)))
           )
         | project user_id, event_id,
-                  run = tolong(round(run0 / todouble(100.0), 0))
-                        / todouble(100.0)
+                  run = tolong(round(run0 / 100.0, 0))
+                        / 100.0
     """)
 
 
@@ -6505,8 +6503,8 @@ def q_kql_udf_threshold(spark, sf_dir):
     from azure_kusto_parquet_conv_spark.kql import kql
     return kql(spark, sf_dir, f"""
       let cutoff = toscalar(orders | summarize
-        c = sum(tolong(round(o_totalprice * todouble(100.0), 0)))
-            / count() / todouble(100.0));
+        c = sum(tolong(round(o_totalprice * 100.0, 0)))
+            / count() / 100.0);
       let tier = (p: real) {{
         case(p > 2.0 * cutoff, 'high', p > cutoff, 'mid', 'low') }};
       orders
@@ -6564,8 +6562,8 @@ def q_kql_series_corr(spark, sf_dir):
                       nv = countif(event_type == 'view')
             on ts step 1d by b
         | project b, r = tolong(round(series_pearson_correlation(nc, nv)
-                                      * todouble(10000.0), 0))
-                         / todouble(10000.0)
+                                      * 10000.0, 0))
+                         / 10000.0
     """)
 
 
@@ -7169,14 +7167,14 @@ def q_kql_fit_line(spark, sf_dir):
         | extend f = series_fit_line_dynamic(n)
         | project b,
                   slope = tolong(round(todouble(f.slope)
-                                       * todouble(10000.0), 0))
-                          / todouble(10000.0),
+                                       * 10000.0, 0))
+                          / 10000.0,
                   icept = tolong(round(todouble(f.interception)
-                                       * todouble(10000.0), 0))
-                          / todouble(10000.0),
+                                       * 10000.0, 0))
+                          / 10000.0,
                   rsq = tolong(round(todouble(f.rsquare)
-                                     * todouble(10000.0), 0))
-                        / todouble(10000.0)
+                                     * 10000.0, 0))
+                        / 10000.0
     """)
     return df
 

@@ -245,9 +245,10 @@ def main() -> None:
     # sample when exogenous CPU exceeds BENCH_EXO_LIMIT (default 20%)
     # of the machine's capacity over the sample window. The loadavg
     # check stays as a secondary gate with the limit dropped 8 -> 4.
-    # r15 measurement fix (evidence: bench_runs/BENCH_FULL_c32_
-    # 1787037621.json): the 1-min loadavg gate trips on the BENCH'S OWN
-    # load — a 32-core stage pushes loadavg well past 4 and the average
+    # r15 measurement fix (evidence: the 32-core sf0.1 run stamped
+    # 1787037621 logged 282 load retries): the 1-min loadavg gate trips
+    # on the BENCH'S OWN load — a 32-core stage pushes loadavg well
+    # past 4 and the average
     # decays over minutes, so mid-run a block of 15 consecutive queries
     # had EVERY sample discarded by loadavg alone while the direct
     # exogenous-CPU instrument read ~0.00 (other tenants idle). The

@@ -7914,6 +7914,68 @@ def test_tostring_timespan_kusto_text(spark, sf_dir):
     assert ":" not in r2["h"]
 
 
+@pytest.mark.parametrize("query,expected", [
+    # real literals are reals (DOUBLE), never Spark's DECIMAL
+    ("print v = 1.0 / 3", 1 / 3),
+    ("print v = floor(7.5)", 7.0),
+    ("print v = 2.5 * 2", 5.0),
+    ("print v = tostring(1.5 * 1h)", "01:30:00"),
+    # a timespan stays a timespan through every expression and column
+    ("print v = tostring(iff(true, 1d, 2d))", "1.00:00:00"),
+    ("print v = tostring(1d + 1h)", "1.01:00:00"),
+    ("print v = tostring(1d / 2)", "12:00:00"),
+    ("print a = 1d | extend v = tostring(a) | project v", "1.00:00:00"),
+    ("print a = datetime(2020-01-02) - datetime(2020-01-01)"
+     " | extend v = tostring(a) | project v", "1.00:00:00"),
+    ("datatable(t:timespan) [2h, 30m] | summarize s = sum(t)"
+     " | extend v = tostring(s) | project v", "02:30:00"),
+    ("datatable(ts:datetime) [datetime(2024-01-01 06:00),"
+     " datetime(2024-01-03)] | extend d = ts - datetime(2024-01-01)"
+     " | summarize m = max(d) | extend v = tostring(m) | project v",
+     "2.00:00:00"),
+    ("datatable(ts:datetime) [datetime(2024-01-01 06:00),"
+     " datetime(2024-01-01 18:00)]"
+     " | summarize a = avg(ts - datetime(2024-01-01))"
+     " | project v = tostring(a)", "12:00:00"),
+])
+def test_kusto_typed_values(spark, sf_dir, query, expected):
+    """Each expression carries its Kusto type: a real literal is a real
+    (Spark SQL text would lex `7.5` as DECIMAL), and a timespan — a µs
+    BIGINT to Spark — keeps its type through arithmetic, iff, extend
+    and summarize columns, so tostring prints Kusto's [d.]hh:mm:ss."""
+    v = kql(spark, sf_dir, query).collect()[0]["v"]
+    assert type(v) is type(expected) and v == expected
+
+
+def test_date_difference_is_timespan(spark, sf_dir):
+    """max(date) - min(date) is a timespan (not Spark's DAY TO SECOND
+    interval), so it divides, compares and prints like one."""
+    days = load_table(spark, sf_dir, "orders").agg(F.datediff(
+        F.max("o_orderdate"), F.min("o_orderdate"))).collect()[0][0]
+    r = kql(spark, sf_dir, """
+      orders | summarize d = max(o_orderdate) - min(o_orderdate)
+        | where d > 1d
+        | extend days = d / 1d, t = tostring(d)
+    """).collect()
+    assert [(x["days"], x["t"]) for x in r] == \
+        [(float(days), f"{days}.00:00:00")]
+
+
+def test_getschema_reports_timespan(spark, sf_dir):
+    """Timespan columns report ColumnType timespan — declared in a
+    datatable, printed, or computed by extend — not their long
+    carrier."""
+    r = kql(spark, sf_dir, """
+      datatable(t:timespan, n:long) [2h, 1]
+        | extend u = t * 2, w = datetime(2024-01-02) - datetime(2024-01-01)
+        | getschema
+    """).collect()
+    assert {x["ColumnName"]: x["ColumnType"] for x in r} == \
+        {"t": "timespan", "n": "long", "u": "timespan", "w": "timespan"}
+    r = kql(spark, sf_dir, "print a = 1d | getschema").collect()
+    assert r[0]["ColumnType"] == "timespan"
+
+
 def test_graph_match_undirected_edges(spark, sf_dir):
     """r13 verdict #5: undirected pattern edges ``-[e]-`` match both
     orientations of every stored edge (two-orientation union), in
