@@ -288,6 +288,7 @@ import contextvars
 import math
 import re
 from dataclasses import dataclass, field, replace
+from decimal import Decimal
 from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
@@ -305,7 +306,7 @@ from azure_kusto_parquet_conv_spark.sources.parquet import TABLES, load_table
 _TOKEN_RE = re.compile(r"""
     (?P<ws>\s+)
   | (?P<dt>\bdatetime\s*\([^)]*\))
-  | (?P<timespan>\b\d+(?:\.\d+)?(?:ms|s|m|h|d)\b)
+  | (?P<timespan>\b\d+(?:\.\d+)?(?:microseconds?|ms|s|m|h|d)\b)
   | (?P<hexnum>0[xX][0-9a-fA-F]+\b)
   | (?P<num>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
   | (?P<vstr>@'(?:[^']|'')*'|@"(?:[^"]|"")*")
@@ -416,15 +417,16 @@ def _num_literal(text: str) -> Expr:
 
 
 # timespan literal → microseconds (for bin() over timestamps)
-_TIMESPAN_US = {"ms": 1_000, "s": 1_000_000, "m": 60_000_000,
+_TIMESPAN_US = {"microsecond": 1, "microseconds": 1,
+                "ms": 1_000, "s": 1_000_000, "m": 60_000_000,
                 "h": 3_600_000_000, "d": 86_400_000_000}
 
 
 def _timespan_to_us(text: str) -> int:
-    m = re.fullmatch(r"(\d+(?:\.\d+)?)(ms|s|m|h|d)", text)
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)(microseconds?|ms|s|m|h|d)", text)
     if not m:
         raise ValueError(f"KQL: bad timespan {text!r}")
-    return int(float(m.group(1)) * _TIMESPAN_US[m.group(2)])
+    return int(Decimal(m.group(1)) * _TIMESPAN_US[m.group(2)])
 
 
 # ----------------------------------------------------------------------
@@ -573,8 +575,9 @@ def _named(e: str, name: str) -> Column:
 
 
 def _with_ktypes(df: DataFrame, ktypes: dict[str, str]) -> DataFrame:
-    """Mark the timespan columns of a frame built from SQL text (print,
-    datatable) with _TIMESPAN_META."""
+    """Mark the timespan columns of a frame whose Kusto types are
+    declared or compiled, not read from Spark (print, datatable,
+    externaldata), with _TIMESPAN_META."""
     for name, kt in ktypes.items():
         if kt == "timespan":
             df = df.withMetadata(name, _TIMESPAN_META)
@@ -688,7 +691,8 @@ _CALL_KTYPE: dict[str, str | slice] = {name: kt for kt, names in (
     (slice(1, None, 2), "case"),
     (slice(0, None), "coalesce min_of max_of"),
     (slice(0, 1), """round abs floor ceiling min max sum avg take_any minif
-        maxif sumif avgif prev next row_cumsum reverse"""),
+        maxif sumif avgif prev next row_cumsum reverse percentile
+        percentiles"""),
     (slice(1, 2), "arg_max arg_min"),
 ) for name in names.split()}
 
@@ -916,6 +920,8 @@ class _ExprParser:
                 # Kusto averages timespans to a timespan: back onto
                 # the µs carrier
                 sql = f"CAST({sql} AS BIGINT)"
+        elif fname in ("percentile", "percentiles") and kt not in _TEMPORAL:
+            kt = None  # Spark's: DOUBLE exact, the input's type approx
         return Expr(sql, kt)
 
     def _bin(self, fname: str) -> Expr:
@@ -1929,12 +1935,22 @@ class _ExprParser:
             # the group size, so a skewed key cannot buffer its rows on
             # one executor (the 100 TB path, and Kusto's own
             # semantics).
+            # A timespan or datetime keeps its type: it rides the µs
+            # carrier (Spark's exact percentile takes numbers only and
+            # returns a DOUBLE), cast back after interpolation.
             if len(args) != 2:
                 raise ValueError("KQL: percentile(col, P) takes 2 args")
+            x, kt = args[0], _kt(args[0])
+            if kt == "datetime":
+                x = f"unix_micros({x})"
             if _COMPILE_CTX.get().percentile_mode == "approx":
-                return (f"approx_percentile({args[0]}, "
-                        f"({args[1]}) / 100.0, 10000)")
-            return f"percentile({args[0]}, ({args[1]}) / 100.0)"
+                sql = f"approx_percentile({x}, ({args[1]}) / 100.0, 10000)"
+            else:
+                sql = f"percentile({x}, ({args[1]}) / 100.0)"
+            if kt not in _TEMPORAL:
+                return sql
+            sql = f"CAST({sql} AS BIGINT)"
+            return f"timestamp_micros({sql})" if kt == "datetime" else sql
         if fname == "extract":
             # extract(regex, capture_group, text [, typeof(T)]) ->
             # regexp_extract; the 4-arg form CONVERTS the capture
@@ -6169,14 +6185,18 @@ def _find_call_spans(text: str, name: str) -> list[tuple[int, int, str]]:
     return spans
 
 
-def _scalar_literal_sql(v) -> str:
+def _scalar_literal_sql(v, ktype: str | None = None) -> str:
     """Render a driver-side Python value as a KQL literal that
     round-trips through THIS module's tokenizer/parser (the toscalar()
     materialization is substituted back into KQL text, so SQL-style
-    TIMESTAMP '...' literals would fail to re-parse)."""
+    TIMESTAMP '...' literals would fail to re-parse). ``ktype`` is the
+    value's Kusto type: a timespan's µs carrier becomes a timespan
+    literal, not a plain number."""
     import datetime as _dt
     if v is None:
         return "NULL"
+    if ktype == "timespan":
+        return f"({'-' if v < 0 else ''}{abs(v)}microseconds)"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, float) and not math.isfinite(v):
@@ -8107,7 +8127,9 @@ class KqlCompiler:
             inner = self._compile_tabular(self._preprocess(sub.strip()))
             row = inner.limit(1).collect()
             val = row[0][0] if row else None
-            text = text[:start] + _scalar_literal_sql(val) + text[end:]
+            kt = _field_ktype(inner.schema.fields[0])
+            text = (text[:start] + _scalar_literal_sql(val, kt)
+                    + text[end:])
         subs = {k: v for k, v in self._scalar_lets.items()
                 if k not in keep}
         return _sub_outside_strings(text, subs)
@@ -8317,7 +8339,7 @@ class KqlCompiler:
             bits = [b.strip() for b in part.split(":")]
             if len(bits) != 2 or bits[1] not in _KTYPE_SQL:
                 raise ValueError(f"KQL: bad externaldata column {part!r}")
-            cols.append((bits[0], _KTYPE_SQL[bits[1]]))
+            cols.append((bits[0], bits[1]))
         uris = [t.text[1:-1] for t in _tokenize(m.group(2))
                 if t.kind == "str"]
         if not uris:
@@ -8325,7 +8347,7 @@ class KqlCompiler:
         opts = dict(re.findall(r"(\w+)\s*=\s*'?([^,')]+)'?",
                                m.group(3) or ""))
         fmt = opts.get("format", "csv").lower()
-        schema = ", ".join(f"`{n}` {t}" for n, t in cols)
+        schema = ", ".join(f"`{n}` {_KTYPE_SQL[t]}" for n, t in cols)
         reader = self.spark.read.schema(schema)
         header = opts.get("ignoreFirstRecord", "false").lower() == "true"
         # Kusto's delimited-text family maps to the csv reader with the
@@ -8334,16 +8356,19 @@ class KqlCompiler:
         seps = {"csv": ",", "tsv": "\t", "psv": "|", "scsv": ";",
                 "sohsv": "\x01"}
         if fmt in seps:
-            return (reader.option("header", header)
-                          .option("sep", seps[fmt]).csv(uris))
-        if fmt in ("json", "multijson"):
-            return reader.json(uris)
-        if fmt == "parquet":
-            return reader.parquet(*uris)
-        if fmt in ("txt", "raw"):
-            return self.spark.read.text(uris).withColumnRenamed(
+            df = (reader.option("header", header)
+                        .option("sep", seps[fmt]).csv(uris))
+        elif fmt in ("json", "multijson"):
+            df = reader.json(uris)
+        elif fmt == "parquet":
+            df = reader.parquet(*uris)
+        elif fmt in ("txt", "raw"):
+            df = self.spark.read.text(uris).withColumnRenamed(
                 "value", cols[0][0])
-        raise ValueError(f"KQL: externaldata format {fmt!r} not supported")
+        else:
+            raise ValueError(
+                f"KQL: externaldata format {fmt!r} not supported")
+        return _with_ktypes(df, dict(cols))
 
     def _range(self, text: str) -> DataFrame:
         """``range x from a to b step s`` — a generated numeric source

@@ -27,6 +27,18 @@ _BUILD_TIME_CONFS = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+    # Compiled whole-stage classes live in ONE JVM-wide LRU cache, sized
+    # once when Spark's CodeGenerator starts (a static conf: conf.set
+    # cannot change it later). Spark's 100 is below one pass of a
+    # long-lived session: a perfbench kql_analytics pass needs 122
+    # classes, llm_curation 106, q_kql_ipv6 alone 106, and LRU over a
+    # repeating cycle evicts each class before its reuse, so every pass
+    # recompiled nearly all of them with Janino (0.7-1.2 s a pass).
+    # Building each of the 299 catalog entries once at sf0.01 compiles
+    # 2,794 distinct classes (919 for bench.py's 85 headline entries);
+    # 4096 is the next power of two. Metaspace after that catalog pass:
+    # 215 MB at 4096, 194 MB at 100.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 # Runtime-settable confs every entry point applies (ours or the driver's).
@@ -112,7 +124,15 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     round trips per compile were a measurable slice of every KQL
     query build (r15 cProfile; guide §7.3 driver-side cost). A
     session prepared once stays prepared — these confs are only ever
-    set to these exact values by this engine."""
+    set to these exact values by this engine.
+
+    Build-time confs are not applied here. One matters for speed on a
+    foreign session: Spark's codegen cache is JVM-wide and its size is
+    static (read once, when the first session starts), so a session
+    the engine did not build keeps Spark's 100 classes — below one
+    pass of a long-lived driver's working set — unless whoever builds
+    it sets ``spark.sql.codegen.cache.maxEntries`` (see
+    _BUILD_TIME_CONFS)."""
     if getattr(spark, "_aks_prepared", False):
         return spark
     for k, v in _RUNTIME_CONFS.items():

@@ -236,6 +236,13 @@ def main() -> None:
     def run(name: str) -> None:
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        """Janino compilations so far in this JVM: one per generated
+        class that missed Spark's codegen cache."""
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     # r13 verdict #2: the 1-min loadavg gate missed co-tenant
     # contamination two rounds running (it is a trailing average; a
     # burst shorter than the window passes both sides). The primary
@@ -284,10 +291,13 @@ def main() -> None:
     exo_fracs: dict[str, float] = {}
     kept_counts: dict[str, int] = {}
     retry_counts: dict[str, int] = {}
+    compile_counts: dict[str, dict[str, int]] = {}
     contaminated: list[str] = []
     retried = 0
     for name in HEADLINE:
+        c0 = compiles()
         run(name)  # warm-up: plan + codegen + JIT, untimed
+        c1 = compiles()
         best = float("inf")
         best_cpu = best_exo = 0.0
         dirty_best = float("inf")
@@ -329,6 +339,8 @@ def main() -> None:
         exo_fracs[name] = round(best_exo, 3)
         kept_counts[name] = kept
         retry_counts[name] = attempts - kept
+        compile_counts[name] = {"warmup": c1 - c0,
+                                "timed": compiles() - c1}
 
     total = round(sum(timings.values()), 3)
     baseline33 = HEADLINE[:33]  # the r1-recorded subset (BASELINE 19.54s)
@@ -352,6 +364,13 @@ def main() -> None:
         "exo_frac": exo_fracs,
         "kept_samples": kept_counts,
         "retries": retry_counts,
+        # Janino compilations of the warm-up run and of all timed runs
+        # (retries included): the warm-up sums give the headline's
+        # class census; a nonzero timed count means a class was
+        # evicted from the codegen cache and recompiled.
+        "codegen_compiles": compile_counts,
+        "codegen_warmup_total": sum(c["warmup"]
+                                    for c in compile_counts.values()),
         "contaminated": contaminated,
         "cpus": bench_cpus,
         "machine_cpus": ncpu,

@@ -7937,6 +7937,30 @@ def test_tostring_timespan_kusto_text(spark, sf_dir):
      " datetime(2024-01-01 18:00)]"
      " | summarize a = avg(ts - datetime(2024-01-01))"
      " | project v = tostring(a)", "12:00:00"),
+    # percentile keeps its argument's type, on both percentile modes
+    ("datatable(t:timespan) [2h] | summarize p = percentile(t, 50)"
+     " | project v = tostring(p)", "02:00:00"),
+    ("datatable(t:timespan) [1h, 2h] | summarize p = percentile(t, 50)"
+     " | project v = tostring(p)", "01:30:00"),
+    ("set percentile_mode = approx; datatable(t:timespan) [2h, 3h]"
+     " | summarize p = percentile(t, 50) | project v = tostring(p)",
+     "02:00:00"),
+    ("datatable(ts:datetime) [datetime(2024-01-01), datetime(2024-01-03)]"
+     " | summarize p = percentile(ts, 50)"
+     " | project v = format_datetime(p, 'yyyy-MM-dd HH:mm')",
+     "2024-01-02 00:00"),
+    ("set percentile_mode = approx; datatable(ts:datetime)"
+     " [datetime(2024-01-01), datetime(2024-01-03)]"
+     " | summarize p = percentile(ts, 50)"
+     " | project v = format_datetime(p, 'yyyy-MM-dd')", "2024-01-01"),
+    # toscalar substitutes a timespan as a timespan, not its µs count
+    ("print a = 1h | extend b = toscalar(print x = 2h)"
+     " | project v = tostring(b)", "02:00:00"),
+    ("print b = toscalar(print x = -90m + 1ms - 3microseconds)"
+     " | project v = tostring(b)", "-01:29:59.9990030"),
+    # a fractional timespan literal converts exactly (float gave
+    # 1000999 µs for 1.001s)
+    ("print v = tostring(1.001s)", "00:00:01.0010000"),
 ])
 def test_kusto_typed_values(spark, sf_dir, query, expected):
     """Each expression carries its Kusto type: a real literal is a real
@@ -7974,6 +7998,31 @@ def test_getschema_reports_timespan(spark, sf_dir):
         {"t": "timespan", "n": "long", "u": "timespan", "w": "timespan"}
     r = kql(spark, sf_dir, "print a = 1d | getschema").collect()
     assert r[0]["ColumnType"] == "timespan"
+    r = kql(spark, sf_dir, """
+      datatable(t:timespan, d:datetime) [1h, datetime(2024-01-01)]
+        | summarize pt = percentile(t, 50), pd = percentile(d, 50)
+        | extend b = toscalar(print x = 2h)
+        | getschema
+    """).collect()
+    assert {x["ColumnName"]: x["ColumnType"] for x in r} == \
+        {"pt": "timespan", "pd": "datetime", "b": "timespan"}
+
+
+def test_externaldata_timespan_column(spark, sf_dir, tmp_path):
+    """A timespan column declared by externaldata is a timespan: a
+    parquet file stores its µs carrier as int64, and the declared type
+    rides the schema to tostring and getschema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.table({"t": [7200000000], "n": [1]}),
+                   str(tmp_path / "t.parquet"))
+    src = (f"externaldata (t:timespan, n:long) ['{tmp_path}/t.parquet'] "
+           "with (format='parquet')")
+    r = kql(spark, sf_dir, f"{src} | extend v = tostring(t)").collect()
+    assert [x["v"] for x in r] == ["02:00:00"]
+    r = kql(spark, sf_dir, f"{src} | getschema").collect()
+    assert {x["ColumnName"]: x["ColumnType"] for x in r} == \
+        {"t": "timespan", "n": "long"}
 
 
 def test_graph_match_undirected_edges(spark, sf_dir):

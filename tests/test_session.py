@@ -1,7 +1,9 @@
-"""Session preparation: the runtime confs reach sessions the engine did
-not build."""
+"""Session construction and preparation: the runtime confs reach
+sessions the engine did not build, and the engine's sessions keep a
+long-lived driver's compiled classes."""
 
 from azure_kusto_parquet_conv_spark.session import (
+    _BUILD_TIME_CONFS,
     _RUNTIME_CONFS,
     prepare_session,
 )
@@ -25,3 +27,29 @@ def test_prepare_session_applies_runtime_confs_to_a_foreign_session(spark):
     finally:
         spark._aks_prepared = False
         prepare_session(spark)
+
+
+def test_codegen_cache_holds_a_cycle_of_query_shapes(spark):
+    """A long-lived session cycles through more query shapes than
+    Spark's default codegen cache (100 classes) holds. Each plan below
+    compiles its own classes (the constants are spliced into the
+    generated code); on the second pass over the same plans every
+    class must come from the cache, with no Janino compilation."""
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == _BUILD_TIME_CONFS[key]
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def cycle() -> int:
+        before = compiles()
+        for k in range(64):
+            rows = spark.range(4).selectExpr(
+                f"id * {k + 2} + {k} AS x").collect()
+            assert [r.x for r in rows] == [i * (k + 2) + k
+                                           for i in range(4)]
+        return compiles() - before
+
+    assert cycle() > 100  # the cycle outgrows Spark's default cache
+    assert cycle() == 0
