@@ -285,6 +285,7 @@ Datasketches HLL sketches — the mergeable re-aggregation form).
 from __future__ import annotations
 
 import contextvars
+import itertools
 import math
 import re
 from dataclasses import dataclass, field, replace
@@ -296,6 +297,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from azure_kusto_parquet_conv_spark.operators import automata
 from azure_kusto_parquet_conv_spark.session import prepare_session
 from azure_kusto_parquet_conv_spark.sources.parquet import TABLES, load_table
 
@@ -1438,6 +1440,12 @@ class _ExprParser:
                     "KQL: percentiles_array(col, p1[, p2, ...])")
             ps = ", ".join(f"CAST(({p}) / 100.0 AS DOUBLE)"
                            for p in args[1:])
+            if _kt(args[0]) == "datetime":
+                # Spark's exact percentile takes numbers only: a
+                # datetime rides its µs carrier and is cast back
+                return (f"transform(percentile(unix_micros({args[0]}), "
+                        f"array({ps})), __pa_v -> "
+                        f"timestamp_micros(CAST(__pa_v AS BIGINT)))")
             return f"percentile({args[0]}, array({ps}))"
         if fname in ("pack", "bag_pack", "pack_dictionary"):
             # pack('k1', v1, 'k2', v2, ...) -> dynamic property bag on
@@ -8347,14 +8355,21 @@ class KqlCompiler:
         opts = dict(re.findall(r"(\w+)\s*=\s*'?([^,')]+)'?",
                                m.group(3) or ""))
         fmt = opts.get("format", "csv").lower()
-        schema = ", ".join(f"`{n}` {_KTYPE_SQL[t]}" for n, t in cols)
-        reader = self.spark.read.schema(schema)
-        header = opts.get("ignoreFirstRecord", "false").lower() == "true"
         # Kusto's delimited-text family maps to the csv reader with the
         # format's separator (r13 probe sweep): tsv tab, psv pipe,
         # scsv semicolon, sohsv SOH (0x01)
         seps = {"csv": ",", "tsv": "\t", "psv": "|", "scsv": ";",
                 "sohsv": "\x01"}
+        # delimited and json files hold a timespan as Kusto's
+        # [-][d.]hh:mm:ss text: read it as a string and convert it as
+        # totimespan() does; parquet stores the µs carrier itself
+        ts_text = [n for n, t in cols if t == "timespan"
+                   and (fmt in seps or fmt in ("json", "multijson"))]
+        schema = ", ".join(
+            f"`{n}` {'STRING' if n in ts_text else _KTYPE_SQL[t]}"
+            for n, t in cols)
+        reader = self.spark.read.schema(schema)
+        header = opts.get("ignoreFirstRecord", "false").lower() == "true"
         if fmt in seps:
             df = (reader.option("header", header)
                         .option("sep", seps[fmt]).csv(uris))
@@ -8368,6 +8383,11 @@ class KqlCompiler:
         else:
             raise ValueError(
                 f"KQL: externaldata format {fmt!r} not supported")
+        if ts_text:
+            df = df.select(*[
+                F.expr(_parse_expr(_tokenize(f"totimespan({n})"), df))
+                .alias(n) if n in ts_text else F.col(f"`{n}`")
+                for n, _ in cols])
         return _with_ktypes(df, dict(cols))
 
     def _range(self, text: str) -> DataFrame:
@@ -9159,7 +9179,11 @@ class KqlCompiler:
         Spark-first shape: step predicates become Catalyst boolean
         bits, the stateful pass is ONE partition-sorted Arrow-batched
         mapInPandas kernel carrying automaton state across batches
-        (same shape as `scan` — per-batch overhead, not per-key)."""
+        (same shape as `scan` — per-batch overhead, not per-key). The
+        rule is ``operators/automata.py``'s ``sequence_detect``, shared
+        with the streaming twin; rows sort by (dims, time, step
+        bitmask), the twin's buffer order, so a same-time tie resolves
+        one way on both paths."""
         import pandas as pd
 
         groups = _split_top_commas(_tokenize(argtext))
@@ -9199,74 +9223,37 @@ class KqlCompiler:
             drop_dims = True
         else:
             drop_dims = False
-        n_steps = len(steps)
-        work = df.withColumn("__sq_ts", F.expr(
-            f"unix_micros(CAST({tl_sql} AS TIMESTAMP))"))
-        mask = None
-        for i, (_, psql) in enumerate(steps):
-            bit = F.when(F.expr(psql).cast("boolean"),
-                         F.lit(1 << i)).otherwise(F.lit(0))
-            mask = bit if mask is None else mask + bit
-        work = work.withColumn("__sq_m", mask.cast("long"))
-        part = (work.select(*dims, "__sq_ts", "__sq_m")
-                    .where(F.col("__sq_ts").isNotNull())
-                    .repartition(*[F.col(d) for d in dims])
-                    .sortWithinPartitions(
-                        *[F.col(d).asc() for d in dims],
-                        F.col("__sq_ts").asc()))
-        out_cols = ([] if drop_dims else list(dims)) \
-            + [f"{n}_ts" for n, _ in steps]
+        # ties on the timeline sort by the step bitmask, as the
+        # streaming twin's buffer does, so a tie resolves one way on
+        # both paths and at any partition count
+        part = (df.select(
+                    *dims,
+                    F.expr(f"unix_micros(CAST({tl_sql} AS TIMESTAMP))")
+                    .alias("__sq_ts"),
+                    F.expr(automata.step_mask_sql([p for _, p in steps]))
+                    .alias("__sq_m"))
+                  .where(F.col("__sq_ts").isNotNull())
+                  .repartition(*[F.col(d) for d in dims])
+                  .sortWithinPartitions(*dims, "__sq_ts", "__sq_m"))
+        out_dims = [] if drop_dims else list(dims)
         out_schema = part.select(
-            *(dims if not drop_dims else []),
+            *out_dims,
             *[F.timestamp_micros(F.col("__sq_ts")).alias(f"{n}_ts")
               for n, _ in steps]).schema
+        init, step = automata.sequence_detect(len(steps), gap_us, win_us)
+
+        def rows(pdf):
+            return zip(pdf["__sq_ts"].tolist(), pdf["__sq_m"].tolist())
 
         def kernel(batches):
-            state_key = object()
-            k, first, prev, tss = 0, 0, 0, []
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = [pdf[d].to_numpy() for d in dims]
-                ts = pdf["__sq_ts"].to_numpy()
-                m = pdf["__sq_m"].to_numpy()
-                rows = []
-                for i in range(len(pdf)):
-                    kt = tuple(None if v != v else v
-                               for v in (a[i] for a in keys))
-                    if kt != state_key:
-                        state_key, k, tss = kt, 0, []
-                    t = int(ts[i])
-                    bit = int(m[i])
-                    if k > 0 and bit & (1 << k) \
-                            and t - prev <= gap_us \
-                            and t - first <= win_us:
-                        tss.append(t)
-                        prev = t
-                        k += 1
-                    elif bit & 1:
-                        # latest-start greedy: ANY step-1 match —
-                        # stray or constraint-violating — restarts
-                        # the automaton here. For monotone gap/window
-                        # constraints a later start can only loosen
-                        # them, so for 2-step funnels this finds a
-                        # superset of the keep-earliest alternative
-                        # (pinned in the Python differential below).
-                        k, first, prev, tss = 1, t, t, [t]
-                    else:
-                        continue
-                    if k == n_steps:
-                        row = {}
-                        if not drop_dims:
-                            for d, a in zip(dims, keys):
-                                row[d] = a[i]
-                        for (nme, _), tv in zip(steps, tss):
-                            row[f"{nme}_ts"] = pd.Timestamp(
-                                tv, unit="us")
-                        rows.append(row)
-                        k, tss = 0, []
-                if rows:
-                    yield pd.DataFrame(rows, columns=out_cols)
+            for pdf, idx, outs in automata.walk_partition(
+                    batches, dims, init, step, rows):
+                if idx:
+                    res = pdf.iloc[idx][out_dims].reset_index(drop=True)
+                    for j, (nme, _) in enumerate(steps):
+                        res[f"{nme}_ts"] = [pd.Timestamp(tss[j], unit="us")
+                                            for tss in outs]
+                    yield res
 
         return part.mapInPandas(kernel, out_schema)
 
@@ -12772,6 +12759,7 @@ class KqlCompiler:
             return fast
         aggs = []
         post = []  # (tuple_names, array_alias) for tuple assignments
+        tuple_kt = {}  # array_alias -> Kusto type of its elements
         for i, g in enumerate(_split_top_commas(agg_toks)):
             if (g and g[0].kind == "ident"
                     and g[0].text.lower() in ("percentiles",
@@ -12831,6 +12819,10 @@ class KqlCompiler:
                 alias = f"__tup{i}"
                 aggs.append(F.expr(sql).alias(alias))
                 post.append((names, alias))
+                if array_form == "percentiles_array":
+                    # each split column takes the value's Kusto type
+                    tuple_kt[alias] = _kt(_parse_expr(
+                        _split_top_commas(call[2:-1])[0], df))
                 continue
             star = (len(g) >= 5 and g[0].kind == "ident"
                     and g[0].text.lower() in ("arg_max", "arg_min")
@@ -12919,9 +12911,13 @@ class KqlCompiler:
                     if c not in taken:
                         out = out.withColumn(c, F.col(f"`{alias}`.`{c}`"))
             else:
+                kt = tuple_kt.get(alias)
                 for k, nm in enumerate(names):
-                    out = out.withColumn(
-                        nm, F.element_at(F.col(alias), k + 1))
+                    e = f"element_at(`{alias}`, {k + 1})"
+                    if kt == "timespan":
+                        # back onto the µs carrier, as percentile() does
+                        e = f"CAST({e} AS BIGINT)"
+                    out = out.withColumn(nm, _named(Expr(e, kt), nm))
             out = out.drop(alias)
         return out
 
@@ -13137,17 +13133,20 @@ class KqlCompiler:
         Python closures over (row, state) via ``_compile_py_expr``
         (scalar whitelist; see its docstring) and evaluate inside the
         SAME Arrow-batched kernel — only the columns they actually
-        reference are materialized per matching row, and state-free
-        predicates keep the Catalyst bitmask fast path.
+        reference are read, and state-free predicates keep the
+        Catalyst bitmask fast path.
 
-        Spark-first shape: each step predicate is pre-computed as a
-        BOOLEAN COLUMN by Catalyst (codegen, pushdown-eligible) before
-        the stateful pass, so the Python kernel only walks a bool
-        matrix and never evaluates expressions. The stateful pass is
+        Spark-first shape: the step predicates are pre-computed by
+        Catalyst (codegen, pushdown-eligible) into ONE bitmask column
+        before the stateful pass, so the Python kernel walks ints and
+        never evaluates state-free expressions. The transition rule is
+        ``operators/automata.py``'s ``scan``, shared with the streaming
+        twin (streaming/events.py ``scan_stream``). The stateful pass is
         ``repartition(keys)`` + ``sortWithinPartitions(keys, order)``
-        + ONE ``mapInPandas`` kernel that detects group boundaries
-        itself and carries automaton state ACROSS Arrow batches —
-        per-batch overhead, not per-group (groupBy().applyInPandas
+        + ONE ``mapInPandas`` kernel (``automata.walk_partition``) that
+        detects group boundaries and carries automaton state ACROSS
+        Arrow batches — per-batch overhead, not per-group
+        (groupBy().applyInPandas
         costs ~1 ms of pandas frame construction per group: at 1 500
         groups/sf0.1 that was 4.36 s; this shape runs the same input
         in 0.54 s, and at 100 TB the cost stays proportional to
@@ -13266,15 +13265,12 @@ class KqlCompiler:
         mid_name = m.group("mid") or "match_id"
         work, part, group_cols = self._serial_layout(
             df, "scan", "__scan", post=[
-                f"CAST(({psql}) AS BOOLEAN) AS __scan_p{i}"
-                if psql is not None
-                else f"CAST(NULL AS BOOLEAN) AS __scan_p{i}"
-                for i, (_, psql) in enumerate(steps)])
+                f"{automata.step_mask_sql([p for _, p in steps])} "
+                "AS __scan_m"])
         keep = [c for c in df.columns]
         step_names = [n for n, _ in steps]
-        n_steps = len(steps)
         # row columns the kernel must read for python-side predicates
-        # and assignments (only these get materialized per matching row)
+        # and assignments
         py_cols = sorted(set().union(
             *[u for _, u in py_preds.values()],
             *[u for al in assigns.values() for _, _, u in al],
@@ -13285,77 +13281,42 @@ class KqlCompiler:
         out_schema = out_schema.add("step", "string") \
                                .add(mid_name, "long")
 
-        init_st = dict(decl_inits)
+        # a row is (step bitmask, {column: value} of the py_cols)
+        def hit(j, row, st):
+            if j in py_preds:
+                return bool(py_preds[j][0](row[1], st))
+            return row[0] >> j & 1
+
+        def assign(j, row, st):
+            if j not in assigns:
+                return st
+            st = dict(st)
+            for v, fn2, _u in assigns[j]:
+                st[v] = fn2(row[1], st)
+            return st
+
+        init, step = automata.scan(len(steps), hit, dict(decl_inits),
+                                   assign if assigns else None)
+
+        def rows(pdf):
+            # a float/object NaN reads as null
+            cols = [[None if v != v else v for v in a]
+                    if a.dtype.kind in "fO" else a
+                    for a in (pdf[c].to_numpy() for c in py_cols)]
+            return zip(pdf["__scan_m"].tolist(),
+                       (dict(zip(py_cols, vals)) for vals in zip(*cols))
+                       if cols else itertools.repeat({}))
 
         def kernel(batches):
-            state_key = object()  # sentinel: != any real key tuple
-            k = 0
-            mid = 0
-            st = dict(init_st)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                key_arrays = [pdf[c].to_numpy() for c in group_cols]
-                preds = [pdf[f"__scan_p{i}"].fillna(False).astype(bool)
-                         .to_numpy() for i in range(n_steps)]
-                py_arrs = {c: pdf[c].to_numpy() for c in py_cols}
-                idx, labels, mids = [], [], []
-                var_out = {v: [] for v in decl_names}
-
-                def row_at(i):
-                    return {c: (None if a[i] != a[i] else a[i])
-                            if a.dtype.kind in "fO" else a[i]
-                            for c, a in py_arrs.items()}
-
-                def step_hit(j, i, state):
-                    if steps[j][1] is None:
-                        return bool(py_preds[j][0](row_at(i), state))
-                    return bool(preds[j][i])
-
-                def emit(j, i):
-                    if j in assigns:
-                        row = row_at(i)
-                        for v, fn2, _u in assigns[j]:
-                            st[v] = fn2(row, st)
-                    idx.append(i)
-                    labels.append(step_names[j])
-                    mids.append(mid)
-                    for v in decl_names:
-                        var_out[v].append(st[v])
-
-                for i in range(len(pdf)):
-                    # normalize NaN/NaT (x != x) so a null scan key still
-                    # forms ONE group, matching groupBy null semantics
-                    kt = tuple(None if v != v else v
-                               for v in (a[i] for a in key_arrays))
-                    if kt != state_key:
-                        state_key, k, mid = kt, 0, 0
-                        st = dict(init_st)
-                    # k = number of steps matched by the active
-                    # sequence (0 = idle; n_steps = completed, still
-                    # extendable at the last step). Priority per row:
-                    # ADVANCE to step k, else EXTEND step k-1 (Kusto's
-                    # repeated-step matching — the cumulative idiom),
-                    # else if completed START a fresh sequence at
-                    # step 0 against default state.
-                    if k < n_steps and step_hit(k, i, st):
-                        emit(k, i)
-                        k += 1
-                    elif k > 0 and step_hit(k - 1, i, st):
-                        emit(k - 1, i)
-                    elif k == n_steps:
-                        fresh = dict(init_st)
-                        if step_hit(0, i, fresh):
-                            st = fresh
-                            mid += 1
-                            emit(0, i)
-                            k = 1
+            for pdf, idx, outs in automata.walk_partition(
+                    batches, group_cols, init, step, rows):
                 res = pdf.iloc[idx][keep].copy()
                 for v in decl_names:
-                    res[v] = pd.Series(var_out[v], index=res.index,
-                                       dtype="object")
-                res["step"] = labels
-                res[mid_name] = pd.array(mids, dtype="int64")
+                    res[v] = pd.Series([st[v] for _, _, st in outs],
+                                       index=res.index, dtype="object")
+                res["step"] = [step_names[j] for j, _, _ in outs]
+                res[mid_name] = pd.array([mid for _, mid, _ in outs],
+                                         dtype="int64")
                 yield res
 
         return part.mapInPandas(kernel, out_schema)
@@ -13378,7 +13339,9 @@ class KqlCompiler:
         Expr (as epoch-µs for timestamps) and the Restart bit,
         then ONE repartition + sortWithinPartitions + mapInPandas
         with cross-batch state walks each key's rows in serialized
-        order. Inside ``partition by key (...)`` each key sessionizes
+        order (the rule is ``operators/automata.py``'s
+        ``row_window_session``, shared with the streaming twin).
+        Inside ``partition by key (...)`` each key sessionizes
         independently (the scale shape); unscoped input hits the same
         warn-then-error serialize guard as every serialized op.
         ``args`` holds the compiled SQL of each call argument."""
@@ -13422,49 +13385,22 @@ class KqlCompiler:
         keep = list(df.columns)
         out_schema = work.select(*keep).schema.add(name, vtype)
 
+        init, step = automata.row_window_session(max_first, max_between)
+
+        def rows(pdf):
+            return zip(pdf["__rws_v"].tolist(), pdf["__rws_r"].tolist(),
+                       pdf["__rws_orig"].to_numpy())
+
         def kernel(batches):
-            state_key = object()
-            prev_v = first_v = None
-            first_orig = None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                key_arrays = [pdf[c].to_numpy() for c in group_cols]
-                vs = pdf["__rws_v"].to_numpy()
-                origs = pdf["__rws_orig"]
-                rs = pdf["__rws_r"].fillna(False).astype(bool) \
-                    .to_numpy()
-                out_vals = []
-                for i in range(len(pdf)):
-                    kt = tuple(None if v != v else v
-                               for v in (a[i] for a in key_arrays))
-                    v = vs[i]
-                    if kt != state_key:
-                        state_key = kt
-                        prev_v = first_v = None
-                        first_orig = None
-                    if v != v:
-                        # null Expr value: emit null for THIS row only
-                        # and clear the session state so the next
-                        # non-null row starts a fresh session — without
-                        # the reset every NaN comparison below is False
-                        # and one null timestamp would poison the rest
-                        # of the key's output (r7 advice #2)
-                        prev_v = first_v = None
-                        first_orig = None
-                        out_vals.append(None)
-                        continue
-                    if (first_v is None or rs[i]
-                            or (prev_v is not None
-                                and v - prev_v > max_between)
-                            or v - first_v > max_first):
-                        first_v = v
-                        first_orig = origs.iloc[i]
-                    prev_v = v
-                    out_vals.append(first_orig)
+            for pdf, idx, outs in automata.walk_partition(
+                    batches, group_cols, init, step, rows):
+                # a null Expr row emitted nothing: its value stays null
+                vals = [None] * len(pdf)
+                for i, v in zip(idx, outs):
+                    vals[i] = v
                 res = pdf[keep].copy()
-                res[name] = pd.Series(out_vals, index=res.index,
-                                      dtype=origs.dtype)
+                res[name] = pd.Series(vals, index=res.index,
+                                      dtype=pdf["__rws_orig"].dtype)
                 yield res
 
         return part.mapInPandas(kernel, out_schema)

@@ -15,6 +15,13 @@ makes the same event-table operators incremental:
   to bins + chained windowed aggregations for the exact dcount).
 - ``activity_engagement_stream``: the incremental DAU/MAU engagement
   ratio — same shape with an inner-activity flag per exploded row.
+- ``scan_stream``, ``sequence_detect_stream`` and
+  ``row_window_session_stream``: the watermark-buffered twins of the
+  KQL ``scan``, ``evaluate sequence_detect`` and ``row_window_session``
+  kernels. Each transition rule and the watermark buffer live once, in
+  ``operators/automata.py``, and the batch kernels step the same
+  functions, so a stream fed a gap-free time-ordered prefix gives the
+  batch answer by construction.
 
 At scale these run on a real source (Kafka/files landing in a directory);
 tests feed a file-source directory and drain with processAllAvailable.
@@ -22,6 +29,7 @@ tests feed a file-source directory and drain with processAllAvailable.
 
 from __future__ import annotations
 
+import itertools
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -29,6 +37,7 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
 )
 
+from azure_kusto_parquet_conv_spark.operators import automata
 from azure_kusto_parquet_conv_spark.session import prepare_session
 
 # events schema as stored (ts is timestamp[us]); streams must declare the
@@ -690,13 +699,22 @@ SCAN_OUTPUT_SCHEMA = StructType([
     StructField("match_id", LongType()),
 ])
 
-SCAN_STATE_SCHEMA = StructType([
-    StructField("k", LongType()),            # next expected step index
-    StructField("mid", LongType()),          # completed-sequence count
-    StructField("pend_ts", StringType()),    # csv-packed pending buffer
-    StructField("pend_id", StringType()),
-    StructField("pend_mask", StringType()),
-])
+# the state of every watermark-buffered twin: the automaton state and
+# the pending rows, packed by operators/automata.py
+AUTOMATON_STATE_SCHEMA = StructType([StructField("state", StringType())])
+
+
+def _buffered(src: DataFrame, fn, out_schema: StructType) -> DataFrame:
+    """Run an ``automata.watermark_buffer`` function per ``user_id``."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return (src.groupBy("user_id")
+               .applyInPandasWithState(
+                   fn,
+                   outputStructType=out_schema,
+                   stateStructType=AUTOMATON_STATE_SCHEMA,
+                   outputMode="append",
+                   timeoutConf=GroupStateTimeout.EventTimeTimeout))
 
 
 def scan_stream(events: DataFrame, steps: list[tuple[str, str]],
@@ -706,37 +724,28 @@ def scan_stream(events: DataFrame, steps: list[tuple[str, str]],
     ``scan`` operator (kql.py _scan): per ``key``, rows advance a greedy
     single-sequence automaton through ``steps`` (name, SQL predicate)
     in EVENT-TIME order, emitting each matching row with its step name
-    and a per-key match_id. The automaton is the batch one row-for-row:
-    advance to the next step, else EXTEND the current step on a repeat
-    match (Kusto's repeated-step semantics, r7 verdict #4), else start
-    a fresh sequence when the completed automaton sees a step-1 match.
+    and a per-key match_id. Both paths step the same transition rule,
+    ``operators/automata.py``'s ``scan``: advance to the next step, else
+    EXTEND the current step on a repeat match (Kusto's repeated-step
+    semantics), else start a fresh sequence when the completed
+    automaton sees a step-1 match.
 
     Determinism on an out-of-order stream comes from the watermark
-    buffer: arriving rows are held in state and only fed to the
-    automaton once the watermark passes their event time, so the
-    automaton always consumes a gap-free, time-ordered prefix —
-    exactly what the batch operator sees. Late rows beyond the
-    watermark are dropped (standard watermark contract). State =
-    automaton position + the buffered window, i.e. O(arrival rate x
-    watermark) per key, bounded on an unbounded stream.
+    buffer (``automata.watermark_buffer``): arriving rows are held in
+    state and only fed to the automaton once the watermark passes their
+    event time, so the automaton always consumes a gap-free,
+    time-ordered prefix — exactly what the batch operator sees. Late
+    rows beyond the watermark are dropped (standard watermark
+    contract). State = automaton position + the buffered window, i.e.
+    O(arrival rate x watermark) per key, bounded on an unbounded
+    stream.
 
     Spark-first shape (same trick as batch): every step predicate is
     pre-computed by Catalyst into one BITMASK column before the
     stateful pass, so the Python state function never evaluates
-    expressions — it walks ints. The pending buffer is csv-packed into
-    string state columns (applyInPandasWithState state rows are flat).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    expressions — it walks ints."""
     prepare_session(events.sparkSession)
-    n_steps = len(steps)
     names = [n for n, _ in steps]
-    mask = None
-    for i, (_, psql) in enumerate(steps):
-        bit = F.when(F.expr(psql).cast("boolean"), F.lit(1 << i)) \
-               .otherwise(F.lit(0))
-        mask = bit if mask is None else mask + bit
     # `ts` stays in the projection: the event-time timeout needs the
     # watermark column to survive into the stateful operator.
     # Ordering uses full-precision ts_ns when the source carries it —
@@ -748,83 +757,23 @@ def scan_stream(events: DataFrame, steps: list[tuple[str, str]],
     src = (events
            .withWatermark("ts", watermark)
            .select(F.col(key).alias("user_id"), "event_id", "ts",
-                   F.unix_micros("ts").alias("ts_us"),
                    ord_col.alias("ord_ns"),
-                   mask.cast("long").alias("mask")))
+                   F.expr(automata.step_mask_sql([p for _, p in steps]))
+                   .alias("mask")))
+    init, step = automata.scan(len(steps), lambda j, r, st: r[3] >> j & 1)
 
-    def _unpack(s):
-        return [int(x) for x in s.split(",")] if s else []
+    def rows(pdf):
+        ords = pdf["ord_ns"].tolist()
+        return zip((o // 1000 for o in ords), ords,
+                   pdf["event_id"].tolist(), pdf["mask"].tolist())
 
-    def _pack(v):
-        return ",".join(str(x) for x in v)
+    def emit(key_tuple, r, out):
+        j, mid, _ = out
+        return {"user_id": key_tuple[0], "event_id": r[2],
+                "ts_us": r[0], "step": names[j], "match_id": mid}
 
-    def fn(key_tuple, pdfs, state: GroupState):
-        if state.exists:
-            k, mid, p_ts, p_id, p_mask = state.get
-            pend = list(zip(_unpack(p_ts), _unpack(p_id), _unpack(p_mask)))
-        else:
-            k, mid, pend = 0, 0, []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                # Drop rows already passed by the watermark AT ARRIVAL
-                # (applyInPandasWithState does NOT filter late input):
-                # feeding them now would advance the automaton AFTER
-                # later-timestamped rows were already consumed —
-                # out-of-order advancement the batch twin never does.
-                # The watermark contract is drop-beyond-delay, and
-                # stream==batch holds for every on-time row. Boundary:
-                # event time EQUAL to the watermark is ON-TIME (>=) —
-                # Spark's own stateful operators drop only strictly
-                # older rows (r6 verdict #5; pinned in
-                # test_streaming.py's equal-to-watermark case).
-                pend.extend(
-                    r for r in zip((int(v) for v in pdf["ord_ns"]),
-                                   (int(v) for v in pdf["event_id"]),
-                                   (int(v) for v in pdf["mask"]))
-                    if r[0] // 1000 >= wm_us)
-        pend.sort()
-        ready = [p for p in pend if p[0] // 1000 <= wm_us]
-        pend = [p for p in pend if p[0] // 1000 > wm_us]
-        out = []
-        uid = key_tuple[0]
-        for ord_ns, eid, m in ready:
-            # same priority as the batch kernel (kql.py _scan):
-            # ADVANCE to step k, else EXTEND step k-1 (repeated-step
-            # matching), else at the completed state START a fresh
-            # sequence on a step-1 match (k == n_steps means
-            # completed-but-extendable at the last step)
-            if k < n_steps and m & (1 << k):
-                out.append({"user_id": uid, "event_id": eid,
-                            "ts_us": ord_ns // 1000, "step": names[k],
-                            "match_id": mid})
-                k += 1
-            elif k > 0 and m & (1 << (k - 1)):
-                out.append({"user_id": uid, "event_id": eid,
-                            "ts_us": ord_ns // 1000,
-                            "step": names[k - 1], "match_id": mid})
-            elif k == n_steps and m & 1:
-                mid += 1
-                out.append({"user_id": uid, "event_id": eid,
-                            "ts_us": ord_ns // 1000, "step": names[0],
-                            "match_id": mid})
-                k = 1
-        state.update((k, mid, _pack(p[0] for p in pend),
-                      _pack(p[1] for p in pend),
-                      _pack(p[2] for p in pend)))
-        if pend:
-            # fire again once the watermark moves past buffered rows
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        if out:
-            yield pd.DataFrame(out)
-
-    return (src.groupBy("user_id")
-               .applyInPandasWithState(
-                   fn,
-                   outputStructType=SCAN_OUTPUT_SCHEMA,
-                   stateStructType=SCAN_STATE_SCHEMA,
-                   outputMode="append",
-                   timeoutConf=GroupStateTimeout.EventTimeTimeout))
+    return _buffered(src, automata.watermark_buffer(init, step, rows, emit),
+                     SCAN_OUTPUT_SCHEMA)
 
 
 def _duration_us(text: str) -> int:
@@ -849,8 +798,8 @@ def sequence_detect_stream(events: DataFrame,
                            key: str = "user_id",
                            watermark: str = "2 hours") -> DataFrame:
     """Streaming ordered-sequence detection — the unbounded twin of
-    ``evaluate sequence_detect`` (kql.py _sequence_detect, r6 verdict
-    #8): per ``key``, a greedy LATEST-START single-sequence automaton
+    ``evaluate sequence_detect`` (kql.py _sequence_detect): per
+    ``key``, a greedy LATEST-START single-sequence automaton
     advances through ``steps`` (name, SQL predicate) in EVENT-TIME
     order, constrained by ``max_gap`` between consecutive steps and
     ``max_window`` over the whole sequence; ONE output row per
@@ -858,107 +807,42 @@ def sequence_detect_stream(events: DataFrame,
     timestamp per step — the exact batch output shape.
 
     Same architecture as scan_stream (watermark buffer + Catalyst
-    bitmask): arriving rows are held in state until the watermark
-    passes their event time, so the automaton consumes a gap-free
-    time-ordered prefix identical to what the batch kernel sees;
-    rows strictly older than the watermark at arrival are dropped,
-    equal-to-watermark rows are on-time (>=). State is O(arrival
-    rate x watermark) + the fixed automaton tuple per key — bounded
-    forever on an unbounded stream. The restart contract is the
-    batch one: ANY step-1 match restarts the automaton (latest-start
-    greedy; see _sequence_detect's docstring for the monotonicity
-    argument), so stream==batch row-for-row on on-time data — pinned
-    by test_streaming.py's equivalence test.
+    bitmask), and the same transition rule as batch,
+    ``operators/automata.py``'s ``sequence_detect``: the automaton
+    consumes a gap-free prefix ordered by (time, step bitmask), the
+    order the batch kernel sorts by; rows strictly older than the
+    watermark at arrival are dropped, equal-to-watermark rows are
+    on-time. State is O(arrival rate x watermark) + the fixed
+    automaton tuple per key — bounded forever on an unbounded stream.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepare_session(events.sparkSession)
-    n_steps = len(steps)
-    if n_steps < 2:
+    if len(steps) < 2:
         raise ValueError("sequence_detect_stream needs >= 2 steps")
     names = [n for n, _ in steps]
-    gap_us = _duration_us(max_gap)
-    win_us = _duration_us(max_window)
-    mask = None
-    for i, (_, psql) in enumerate(steps):
-        bit = F.when(F.expr(psql).cast("boolean"), F.lit(1 << i)) \
-               .otherwise(F.lit(0))
-        mask = bit if mask is None else mask + bit
     src = (events
            .withWatermark("ts", watermark)
            .select(F.col(key).alias("user_id"), "ts",
                    F.unix_micros("ts").alias("ts_us"),
-                   mask.cast("long").alias("mask")))
-
+                   F.expr(automata.step_mask_sql([p for _, p in steps]))
+                   .alias("mask")))
     out_schema = StructType(
         [StructField("user_id", LongType())]
         + [StructField(f"{n}_ts", TimestampType()) for n in names])
-    state_schema = StructType([
-        StructField("k", LongType()),          # next expected step
-        StructField("first", LongType()),      # sequence start (us)
-        StructField("prev", LongType()),       # last step time (us)
-        StructField("tss", StringType()),      # csv matched-step times
-        StructField("pend_ts", StringType()),  # csv pending buffer
-        StructField("pend_mask", StringType()),
-    ])
+    init, step = automata.sequence_detect(
+        len(steps), _duration_us(max_gap), _duration_us(max_window))
 
-    def _unpack(s):
-        return [int(x) for x in s.split(",")] if s else []
+    def rows(pdf):
+        return zip(pdf["ts_us"].tolist(), pdf["mask"].tolist())
 
-    def _pack(v):
-        return ",".join(str(x) for x in v)
+    def emit(key_tuple, r, tss):
+        return {"user_id": key_tuple[0],
+                **{f"{n}_ts": pd.Timestamp(t, unit="us")
+                   for n, t in zip(names, tss)}}
 
-    def fn(key_tuple, pdfs, state: GroupState):
-        if state.exists:
-            k, first, prev, s_tss, p_ts, p_mask = state.get
-            tss = _unpack(s_tss)
-            pend = list(zip(_unpack(p_ts), _unpack(p_mask)))
-        else:
-            k, first, prev, tss, pend = 0, 0, 0, [], []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                pend.extend(
-                    r for r in zip((int(v) for v in pdf["ts_us"]),
-                                   (int(v) for v in pdf["mask"]))
-                    if r[0] >= wm_us)
-        pend.sort()
-        ready = [p for p in pend if p[0] <= wm_us]
-        pend = [p for p in pend if p[0] > wm_us]
-        out = []
-        uid = key_tuple[0]
-        for t, m in ready:
-            if k > 0 and m & (1 << k) and t - prev <= gap_us \
-                    and t - first <= win_us:
-                tss.append(t)
-                prev = t
-                k += 1
-            elif m & 1:
-                k, first, prev, tss = 1, t, t, [t]
-            else:
-                continue
-            if k == n_steps:
-                row = {"user_id": uid}
-                for nme, tv in zip(names, tss):
-                    row[f"{nme}_ts"] = pd.Timestamp(tv, unit="us")
-                out.append(row)
-                k, tss = 0, []
-        state.update((k, first, prev, _pack(tss),
-                      _pack(p[0] for p in pend),
-                      _pack(p[1] for p in pend)))
-        if pend:
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        if out:
-            yield pd.DataFrame(out)
-
-    return (src.groupBy("user_id")
-               .applyInPandasWithState(
-                   fn,
-                   outputStructType=out_schema,
-                   stateStructType=state_schema,
-                   outputMode="append",
-                   timeoutConf=GroupStateTimeout.EventTimeTimeout))
+    return _buffered(src, automata.watermark_buffer(init, step, rows, emit),
+                     out_schema)
 
 
 def row_window_session_stream(events: DataFrame,
@@ -976,17 +860,14 @@ def row_window_session_stream(events: DataFrame,
     gaps-and-islands SQL) cannot express — the start depends
     recursively on the prior start.
 
-    Same architecture as scan_stream: rows buffer in state until the
-    watermark passes their event time, so the sessionizer walks a
-    gap-free time-ordered prefix — identical to the batch kernel;
-    equal-to-watermark rows are on-time (>=), older ones drop. State
-    is O(arrival rate x watermark) + two timestamps per key."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    Same architecture as scan_stream, and the same transition rule as
+    batch, ``operators/automata.py``'s ``row_window_session``: rows
+    buffer in state until the watermark passes their event time, so
+    the sessionizer walks a gap-free time-ordered prefix — identical
+    to the batch kernel; equal-to-watermark rows are on-time, older
+    ones drop. State is O(arrival rate x watermark) + two timestamps
+    per key."""
     prepare_session(events.sparkSession)
-    mf_us = _duration_us(max_from_first)
-    mb_us = _duration_us(max_between)
     src = (events
            .withWatermark("ts", watermark)
            .select(F.col(key).alias("user_id"), "ts", "event_id",
@@ -997,60 +878,19 @@ def row_window_session_stream(events: DataFrame,
         StructField("ts_us", LongType()),
         StructField("session_start_us", LongType()),
     ])
-    state_schema = StructType([
-        StructField("first_us", LongType()),
-        StructField("prev_us", LongType()),
-        StructField("pend_ts", StringType()),
-        StructField("pend_id", StringType()),
-    ])
+    init, step = automata.row_window_session(
+        _duration_us(max_from_first), _duration_us(max_between))
 
-    def _unpack(s):
-        return [int(x) for x in s.split(",")] if s else []
+    def rows(pdf):
+        # (time, restart, reported value, event id): a session reports
+        # its first event time
+        ts = pdf["ts_us"].tolist()
+        return zip(ts, itertools.repeat(False), ts,
+                   pdf["event_id"].tolist())
 
-    def _pack(v):
-        return ",".join(str(x) for x in v)
+    def emit(key_tuple, r, first):
+        return {"user_id": key_tuple[0], "event_id": r[3], "ts_us": r[0],
+                "session_start_us": first}
 
-    def fn(key_tuple, pdfs, state: GroupState):
-        if state.exists:
-            first_us, prev_us, p_ts, p_id = state.get
-            pend = list(zip(_unpack(p_ts), _unpack(p_id)))
-        else:
-            first_us, prev_us, pend = None, None, []
-        if first_us is not None and first_us < 0:
-            first_us = prev_us = None  # unset sentinel
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                pend.extend(
-                    r for r in zip((int(v) for v in pdf["ts_us"]),
-                                   (int(v) for v in pdf["event_id"]))
-                    if r[0] >= wm_us)
-        pend.sort()
-        ready = [p for p in pend if p[0] <= wm_us]
-        pend = [p for p in pend if p[0] > wm_us]
-        out = []
-        uid = key_tuple[0]
-        for t, eid in ready:
-            if (first_us is None
-                    or (prev_us is not None and t - prev_us > mb_us)
-                    or t - first_us > mf_us):
-                first_us = t
-            prev_us = t
-            out.append({"user_id": uid, "event_id": eid, "ts_us": t,
-                        "session_start_us": first_us})
-        state.update((first_us if first_us is not None else -1,
-                      prev_us if prev_us is not None else -1,
-                      _pack(p[0] for p in pend),
-                      _pack(p[1] for p in pend)))
-        if pend:
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        if out:
-            yield pd.DataFrame(out)
-
-    return (src.groupBy("user_id")
-               .applyInPandasWithState(
-                   fn,
-                   outputStructType=out_schema,
-                   stateStructType=state_schema,
-                   outputMode="append",
-                   timeoutConf=GroupStateTimeout.EventTimeTimeout))
+    return _buffered(src, automata.watermark_buffer(init, step, rows, emit),
+                     out_schema)

@@ -2420,6 +2420,48 @@ def test_sequence_detect_latest_start_restart_semantics(spark, sf_dir):
     assert rows3 == []
 
 
+def test_sequence_detect_same_time_tie_order(spark, sf_dir):
+    """A signup and a purchase at the same microsecond for one key
+    resolve one way: rows sort by (time, step bitmask), the streaming
+    twin's buffer order, whatever order the shuffle delivers them in.
+    The datatable lists each purchase first; the answer is the same at
+    1 and 8 shuffle partitions and equals the shared automaton stepped
+    in the stream's order."""
+    from azure_kusto_parquet_conv_spark.operators import automata
+
+    cells, events = [], []
+    for u in range(8):
+        t = 1_704_067_200_000_000 + u * 60_000_000
+        for e, mask in (("purchase", 2), ("signup", 1)):
+            cells.append(f"{u}, unixtime_microseconds_todatetime({t}), "
+                         f"'{e}'")
+            events.append((u, t, mask))
+    q = f"""
+      datatable (u:long, ts:datetime, e:string) [{", ".join(cells)}]
+      | evaluate sequence_detect(ts, 1h, 1d,
+          a = e == 'signup', b = e == 'purchase', u)
+      | project u, a = unix_micros(a_ts), b = unix_micros(b_ts)
+    """
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    got = {}
+    try:
+        for n in ("1", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            got[n] = sorted(tuple(r) for r in kql(spark, sf_dir, q).collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    init, step = automata.sequence_detect(2, 3_600_000_000, 86_400_000_000)
+    want = []
+    for u in range(8):
+        state = init
+        for _, t, mask in sorted(e for e in events if e[0] == u):
+            state, out = step(state, (t, mask))
+            if out is not None:
+                want.append((u, *out))
+    assert len(want) == 8
+    assert got["1"] == got["8"] == want
+
+
 def test_sequence_detect_matches_python_reference(spark, sf_dir):
     """Differential on real events: the distributed sequence_detect
     equals a brute-force Python automaton with the same documented
@@ -7961,6 +8003,13 @@ def test_tostring_timespan_kusto_text(spark, sf_dir):
     # a fractional timespan literal converts exactly (float gave
     # 1000999 µs for 1.001s)
     ("print v = tostring(1.001s)", "00:00:01.0010000"),
+    # the tuple form of percentiles keeps the value's type per column
+    ("datatable(t:timespan) [1h, 2h] | summarize (a, b) = "
+     "percentiles(t, 10, 90) | project v = tostring(a)", "01:06:00"),
+    ("datatable(ts:datetime) [datetime(2024-01-01), datetime(2024-01-03)]"
+     " | summarize (a, b) = percentiles(ts, 50, 100)"
+     " | project v = format_datetime(a, 'yyyy-MM-dd HH:mm')",
+     "2024-01-02 00:00"),
 ])
 def test_kusto_typed_values(spark, sf_dir, query, expected):
     """Each expression carries its Kusto type: a real literal is a real
@@ -8023,6 +8072,28 @@ def test_externaldata_timespan_column(spark, sf_dir, tmp_path):
     r = kql(spark, sf_dir, f"{src} | getschema").collect()
     assert {x["ColumnName"]: x["ColumnType"] for x in r} == \
         {"t": "timespan", "n": "long"}
+
+
+def test_externaldata_timespan_text(spark, sf_dir, tmp_path):
+    """Delimited and json files hold a timespan as Kusto's
+    [-][d.]hh:mm:ss text: externaldata converts it the way totimespan()
+    does, where reading the µs carrier directly gave null."""
+    (tmp_path / "t.csv").write_text(
+        "02:00:00,1\n1.00:00:30,2\n-00:00:01.5,3\njunk,4\n")
+    (tmp_path / "t.json").write_text(
+        '{"t": "02:00:00", "n": 1}\n{"t": "1.00:00:30", "n": 2}\n')
+    for fmt, want in (("csv", ["02:00:00", "1.00:00:30",
+                               "-00:00:01.5000000", None]),
+                      ("json", ["02:00:00", "1.00:00:30"])):
+        src = (f"externaldata (t:timespan, n:long) "
+               f"['{tmp_path}/t.{fmt}'] with (format='{fmt}')")
+        r = kql(spark, sf_dir,
+                f"{src} | extend v = tostring(t) | sort by n asc").collect()
+        assert [x["v"] for x in r] == want, fmt
+        assert [x["n"] for x in r] == list(range(1, len(want) + 1))
+        r = kql(spark, sf_dir, f"{src} | getschema").collect()
+        assert {x["ColumnName"]: x["ColumnType"] for x in r} == \
+            {"t": "timespan", "n": "long"}
 
 
 def test_graph_match_undirected_edges(spark, sf_dir):
