@@ -21,6 +21,15 @@ DataFrame verbs (`where`→filter, `summarize`→groupBy.agg, `join`→join
 with an optional broadcast hint, `top/sort/take`→orderBy/limit, which
 Spark collapses to TakeOrderedAndProject).
 
+Functions: every KQL function name is one row of ``_FNS`` (``_Fn``:
+usage text, argument bounds lo..hi, Kusto result type, render). A row is
+registered with ``@_fn(names, lo, hi, ktype, usage)`` on the
+_ExprParser method that renders it, or ``_fn(...)("spark_name")`` for a
+same-arity Spark twin. ``_ExprParser._call`` makes one lookup: it checks
+the argument count (``ValueError("KQL: " + usage)``), takes the type
+from the row and renders; a name with no row passes through to the
+Spark builtin of that name.
+
 Supported surface (each line maps to one DataFrame verb):
   [let name = scalar|tabular|materialize(tabular)
              |(param: type, ...) { scalar-fn body }; ...]
@@ -290,7 +299,7 @@ import math
 import re
 from dataclasses import dataclass, field, replace
 from decimal import Decimal
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -462,52 +471,6 @@ class _CompileContext:
 _COMPILE_CTX: contextvars.ContextVar[_CompileContext] = \
     contextvars.ContextVar("kql_compile_ctx", default=_CompileContext())
 
-_FN_RENAME = {
-    "strlen": "length",
-    "tolower": "lower",
-    "toupper": "upper",
-    "strcat": "concat",
-    "tostring": "string",
-    "abs": "abs",
-    "round": "round",
-    "floor": "floor",
-    "ceiling": "ceil",
-    "coalesce": "coalesce",
-    "isnull": "isnull",
-    "isnotnull": "isnotnull",
-    "min_of": "least",
-    "max_of": "greatest",
-    # Kusto math scalars with exact same-arity Spark twins
-    "log": "ln",
-    "log2": "log2",
-    "log10": "log10",
-    "exp": "exp",
-    "sqrt": "sqrt",
-    "pow": "power",
-    "sign": "sign",
-    "sin": "sin",
-    "cos": "cos",
-    "tan": "tan",
-    "asin": "asin",
-    "acos": "acos",
-    "atan": "atan",
-    "atan2": "atan2",
-    "cot": "cot",
-    "degrees": "degrees",
-    "radians": "radians",
-    "pi": "pi",
-    "isnan": "isnan",
-}
-
-_AGG_FNS = {"count", "countif", "sum", "avg", "min", "max", "dcount",
-            "make_list", "make_set", "sumif", "avgif", "minif", "maxif",
-            "dcountif", "take_any", "stdev", "variance", "hll",
-            "hll_merge", "percentiles_array", "binary_all_and", "binary_all_or",
-            "binary_all_xor", "make_list_if", "make_set_if",
-            "make_bag", "make_bag_if", "percentilew",
-            "make_list_with_nulls", "count_distinctif",
-            "count_distinct"}
-
 _CMP = {"==": "=", "!=": "<>", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
 
 
@@ -636,67 +599,136 @@ def _str_if_variant(e: str) -> str:
     return f"CAST({e} AS STRING)" if _kt(e) == "dynamic" else e
 
 
-#: Kusto result type of a call by function name: a type, or a slice of
-#: the arguments whose first typed member gives it (the polymorphic
-#: rows). A name not here passes through to a Spark builtin, whose type
-#: _ExprParser._ktype resolves from Spark when a consumer needs it.
-_CALL_KTYPE: dict[str, str | slice] = {name: kt for kt, names in (
-    ("timespan", "totimespan make_timespan dayofweek timespan"),
-    ("datetime", """todatetime now ago make_datetime datetime_add
-        startofday startofweek startofmonth startofyear startofquarter
-        endofday endofweek endofmonth endofyear endofquarter
-        datetime_utc_to_local datetime_local_to_utc
-        unixtime_seconds_todatetime unixtime_milliseconds_todatetime
-        unixtime_microseconds_todatetime unixtime_nanoseconds_todatetime"""),
-    ("string", """tostring string strcat strcat_delim substring tolower
-        toupper trim trim_start trim_end replace_string replace_regex
-        strrep format_datetime format_timespan format_bytes
-        url_encode url_encode_component url_decode base64_encode_tostring
-        base64_decode_tostring hash_sha256 hash_sha1 hash_md5 gettype
-        new_guid toguid guid regex_quote strcat_array tohex
-        dynamic_to_json parse_ipv6 parse_ipv6_mask format_ipv4
-        format_ipv4_mask"""),
-    ("bool", """tobool bool isempty isnotempty isnull isnotnull isnan isinf
-        isfinite isascii isutf8 bag_has_key set_has_element
-        ipv4_is_private ipv4_is_in_range ipv4_is_in_any_range
-        ipv4_is_match ipv6_is_match ipv6_is_in_range ipv6_is_in_any_range
-        has_ipv4 has_any_ipv4 has_ipv4_prefix has_ipv6 has_any_ipv6
-        geo_point_in_polygon geo_point_in_circle"""),
-    ("int", "toint int"),
-    ("long", """tolong long strlen count countif dcount dcountif
-        count_distinct count_distinctif indexof countof array_length
-        datetime_diff getyear getmonth dayofmonth hourofday hash
-        hash_xxhash64 unix_micros array_index_of has_any_index
-        indexof_regex datetime_part strcmp parse_ipv4 parse_ipv4_mask
-        ipv4_compare row_number row_rank_dense row_rank_min"""),
-    ("real", """todouble toreal real double log log2 log10 exp exp2 exp10
-        sqrt pow sign sin cos tan asin acos atan atan2 cot degrees radians
-        pi stdev stdevp variance variancep array_sum array_avg
-        series_stdev series_pearson_correlation geo_distance_2points
-        geo_line_length geo_polygon_area geo_polygon_perimeter geo_azimuth
-        geo_distance_point_to_line geo_distance_point_to_polygon"""),
-    ("decimal", "todecimal decimal parse_version"),
-    ("dynamic", """parse_json todynamic pack bag_pack pack_dictionary
-        bag_pack_columns bag_merge bag_remove_keys bag_set_key parse_url
-        parse_urlquery parse_path parse_user_agent parse_xml
-        unicode_codepoints_from_string base64_decode_toarray zip"""),
-    ("array", """make_list make_set series_fir series_iir series_add
-        series_subtract series_multiply series_divide series_pow
-        series_fill_const series_fill_forward series_fill_backward
-        series_fill_linear series_outliers series_seasonal series_abs
-        series_exp series_log series_sign series_sqrt series_floor
-        series_ceiling series_sin series_cos series_tan series_asin
-        series_acos series_atan series_equals series_not_equals
-        series_greater series_greater_equals series_less
-        series_less_equals"""),
-    (slice(1, None), "iff iif"),
-    (slice(1, None, 2), "case"),
-    (slice(0, None), "coalesce min_of max_of"),
-    (slice(0, 1), """round abs floor ceiling min max sum avg take_any minif
-        maxif sumif avgif prev next row_cumsum reverse percentile
-        percentiles"""),
-    (slice(1, 2), "arg_max arg_min"),
-) for name in names.split()}
+@dataclass(frozen=True)
+class _Fn:
+    """One KQL function, the row of ``_FNS`` its name resolves to.
+
+    ``usage`` is the error text (``KQL: <usage>``) of a call whose
+    argument count is outside ``lo``..``hi`` (hi None: unbounded).
+    ``ktype`` is the Kusto result type: a type name, a slice of the
+    arguments whose first typed member gives it (the polymorphic rows),
+    a function of the arguments, or None (Spark's, which
+    _ExprParser._ktype resolves when a consumer needs it). ``render``
+    is a Spark function name, called with the arguments as they are,
+    or an _ExprParser method ``(self, fname, args) -> SQL``. A
+    ``tokens`` row is rendered from the raw argument tokens instead
+    (``render(self, fname, groups)`` -> Expr, cursor past the '('):
+    its arguments are not expressions (bin's size literal, pack_all's
+    flag) or have no single-expression meaning (row_window_session)."""
+    usage: str
+    lo: int
+    hi: int | None
+    ktype: str | slice | Callable[[list[str]], str | None] | None
+    render: str | Callable
+    tokens: bool = False
+
+
+#: KQL function name -> its row. A name not here passes through to the
+#: Spark builtin of the same name, untyped.
+_FNS: dict[str, _Fn] = {}
+
+
+def _fn(names: str, lo: int, hi: int | None, ktype=None, usage: str = "",
+        tokens: bool = False):
+    """Register a row for each of the space-separated ``names``
+    (``{name}`` in ``usage`` stands for the row's own name). Used as a
+    decorator on the rendering method, or called with a Spark function
+    name for a same-arity rename."""
+    def register(render):
+        for name in names.split():
+            assert name not in _FNS, name
+            _FNS[name] = _Fn(usage.replace("{name}", name), lo, hi,
+                             ktype, render, tokens)
+        return render
+    return register
+
+
+def _avg_ktype(args: list[str]) -> str:
+    """Kusto averages a timespan to a timespan, anything else to a
+    real."""
+    return "timespan" if _kt(args[0]) == "timespan" else "real"
+
+
+def _temporal_ktype(args: list[str]) -> str | None:
+    """A datetime or timespan value keeps its type (it rides the µs
+    carrier and is cast back); other values take Spark's type."""
+    kt = _kt(args[0])
+    return kt if kt in _TEMPORAL else None
+
+
+# Kusto functions with a same-arity Spark twin.
+_fn("strlen", 1, 1, "long", "strlen(source)")("length")
+_fn("tolower", 1, 1, "string", "tolower(source)")("lower")
+_fn("toupper", 1, 1, "string", "toupper(source)")("upper")
+_fn("strcat", 1, None, "string", "strcat(arg1[, arg2, ...])")("concat")
+_fn("coalesce", 2, None, slice(0, None),
+    "coalesce(arg1, arg2[, arg3, ...])")("coalesce")
+_fn("min_of", 2, None, slice(0, None),
+    "min_of(arg1, arg2[, arg3, ...])")("least")
+_fn("max_of", 2, None, slice(0, None),
+    "max_of(arg1, arg2[, arg3, ...])")("greatest")
+_fn("isnull", 1, 1, "bool", "isnull(value)")("isnull")
+_fn("isnotnull", 1, 1, "bool", "isnotnull(value)")("isnotnull")
+_fn("abs", 1, 1, slice(0, 1), "abs(x)")("abs")
+_fn("round", 1, 2, slice(0, 1), "round(number[, precision])")("round")
+_fn("log", 1, 1, "real", "log(number)")("ln")
+_fn("pow", 2, 2, "real", "pow(base, exponent)")("power")
+_fn("atan2", 2, 2, "real", "atan2(y, x)")("atan2")
+_fn("pi", 0, 0, "real", "pi()")("pi")
+for _name in ("log2 log10 exp sqrt sign sin cos tan asin acos atan cot "
+              "degrees radians").split():
+    _fn(_name, 1, 1, "real", "{name}(number)")(_name)
+for _name in "sum min max".split():
+    _fn(_name, 1, 1, slice(0, 1), "{name}(expr)")(_name)
+_fn("unix_micros", 1, 1, "long", "unix_micros(datetime)")("unix_micros")
+_fn("string_size", 1, 1, None, "string_size(s)")("octet_length")  # bytes
+_fn("set_has_element", 2, 2, "bool",
+    "set_has_element(arr, value)")("array_contains")
+# form-style encoding ('+' for space); hex digits are uppercase
+# (documented deviation: Kusto emits lowercase)
+_fn("url_encode", 1, 1, "string", "url_encode(url)")("url_encode")
+_fn("url_decode", 1, 1, "string", "url_decode(url)")("url_decode")
+_fn("replace_string", 3, 3, "string",
+    "replace_string(text, lookup, rewrite)")("replace")
+_fn("replace_regex", 3, 3, "string",
+    "replace_regex(text, regex, rewrite)")("regexp_replace")
+_fn("strcat_delim", 2, None, "string",
+    "strcat_delim(delim, arg1, ...)")("concat_ws")
+# Kusto format specifiers (yyyy MM dd HH mm ss) are the Java subset
+# date_format understands
+_fn("format_datetime", 2, 2, "string",
+    "format_datetime(dt, format)")("date_format")
+# combined 64-bit hash of all arguments (xxhash64 over the tuple —
+# Kusto does not publish its mixer; documented deviation, stable within
+# this engine)
+_fn("hash_combine hash_many", 2, None, None,
+    "{name}(v1, v2, ...)")("xxhash64")
+# native typed array — the fast path every set-op/series consumer relies
+# on. DOCUMENTED DEVIATION: Kusto's pack_array accepts MIXED element
+# types (dynamic out); here mixed inputs fail analysis — write the
+# dynamic literal (dynamic([1, "a", true])) for that case, which
+# compiles to VARIANT directly.
+_fn("pack_array", 1, None, None,
+    "pack_array(value1[, value2, ...])")("array")
+# Aggregates. Kusto hll(x): a mergeable HyperLogLog sketch intermediate
+# -> Spark's Datasketches HLL aggregate. THE re-aggregation primitive at
+# 100 TB: per-group sketches merge (hll_merge) without re-scanning the
+# fact table.
+_fn("hll", 1, 1, None, "hll(expr)")("hll_sketch_agg")
+_fn("hll_merge", 1, 1, None, "hll_merge(hll)")("hll_union_agg")
+_fn("dcount_hll", 1, 1, None, "dcount_hll(hll)")("hll_sketch_estimate")
+_fn("take_any", 1, 1, slice(0, 1), "take_any(expr)")("any_value")
+_fn("stdev", 1, 1, "real", "stdev(expr)")("stddev_samp")
+_fn("stdevp", 1, 1, "real", "stdevp(expr)")("stddev_pop")
+_fn("variance", 1, 1, "real", "variance(expr)")("var_samp")
+_fn("variancep", 1, 1, "real", "variancep(expr)")("var_pop")
+# merged schema of a dynamic column across the group. DOCUMENTED
+# DEVIATION: Kusto renders a nested bag like {"x":"long"}; this engine
+# returns the merged VARIANT schema in Spark DDL text — the same
+# information, deterministic, already the form evaluate bag_unpack
+# consumes internally
+_fn("buildschema", 1, 1, None,
+    "buildschema(dynamicColumn)")("schema_of_variant_agg")
 
 
 class _ExprParser:
@@ -878,20 +910,44 @@ class _ExprParser:
                     pass
         return kt if kt is not None else self._resolved[e]
 
-    def _call(self, fname: str) -> Expr:
-        self.expect("(")
-        if fname in ("bin", "bin_at", "bin_auto", "floor"):
-            return self._bin(fname)
-        if fname == "pack_all":
-            return Expr(self._pack_all(), "dynamic")
-        if fname == "row_window_session":
-            raise ValueError(
-                "KQL: row_window_session() is an extend kernel: use "
-                "it as the whole right-hand side, `extend s = "
-                "row_window_session(...)`")
+    def _call(self, fname: str, args: list[str] | None = None) -> Expr:
+        """The call ``fname(...)`` whose '(' is the next token, or,
+        given ``args``, ``fname`` over compiled arguments: one row
+        rendering through another, whose SQL comes back untyped (the
+        calling row types its own result). ONE lookup in _FNS gives
+        the row: the argument count is checked against it, the type is
+        taken from it and its render builds the SQL. A name with no
+        row is the Spark builtin of that name."""
+        fn = _FNS.get(fname)
+        groups, inner = None, args is not None
+        if not inner:
+            self.expect("(")
+            if fn is not None and fn.tokens:
+                groups = _split_top_commas(
+                    self.toks[self.i:_close_paren(self.toks, self.i - 1)])
+            else:
+                args = self._arglist(fname)
+        if fn is None:
+            return Expr(f"{fname}({', '.join(args)})")
+        n = len(args if groups is None else groups)
+        if n < fn.lo or fn.hi is not None and n > fn.hi:
+            raise ValueError(f"KQL: {fn.usage}")
+        if groups is not None:
+            return fn.render(self, fname, groups)
+        kt = None if inner else fn.ktype
+        if isinstance(kt, slice):
+            kt = next((k for k in map(_kt, args[kt]) if k), None)
+        elif callable(kt):
+            kt = kt(args)
+        if isinstance(fn.render, str):
+            return Expr(f"{fn.render}({', '.join(args)})", kt)
+        return Expr(fn.render(self, fname, args), kt)
+
+    def _arglist(self, fname: str) -> list[str]:
+        """The compiled arguments of a call, through its ')'; ``*``
+        (count(*), take_any(*)) stays as it is."""
         args: list[str] = []
         if self.peek() is not None and self.peek().text != ")":
-            # special-case: count(*) and count()
             while True:
                 if self.peek() is None:
                     # truncated input like `f(0,` — a comma promised
@@ -909,24 +965,14 @@ class _ExprParser:
                     continue
                 break
         self.expect(")")
-        rule = _CALL_KTYPE.get(fname)
-        kt = (next((k for k in map(_kt, args[rule]) if k), None)
-              if isinstance(rule, slice) else rule)
-        if fname in _SERIAL_FNS:
-            return Expr(self._serial(fname, args), kt)
-        sql = self._render_call(fname, args)
-        if fname in ("avg", "avgif"):
-            if kt != "timespan":
-                kt = "real"
-            else:
-                # Kusto averages timespans to a timespan: back onto
-                # the µs carrier
-                sql = f"CAST({sql} AS BIGINT)"
-        elif fname in ("percentile", "percentiles") and kt not in _TEMPORAL:
-            kt = None  # Spark's: DOUBLE exact, the input's type approx
-        return Expr(sql, kt)
+        return args
 
-    def _bin(self, fname: str) -> Expr:
+    @_fn("bin", 2, 2, None, "bin(expr, literal_size)", tokens=True)
+    @_fn("bin_at", 3, 3, None, "bin_at(expr, literal_size, fixedPoint)",
+         tokens=True)
+    @_fn("bin_auto", 1, 1, None, "bin_auto(expr)", tokens=True)
+    @_fn("floor", 1, 2, None, "floor(expr, literal_size)", tokens=True)
+    def _bin(self, fname: str, groups: list[list[Tok]]) -> Expr:
         """bin(x, size) and its Kusto alias floor(x, size), bin_at(x,
         size, anchor) and bin_auto(x). The size is ONE literal token
         whose kind, checked before the other arguments parse, picks
@@ -935,12 +981,10 @@ class _ExprParser:
         aligns with pmod, so buckets BELOW the anchor land correctly
         (integer div truncates toward 0). One-argument floor(x) is the
         plain function."""
-        groups = _split_top_commas(
-            self.toks[self.i:_close_paren(self.toks, self.i - 1)])
-        if fname == "floor" and len(groups) < 2:
+        if fname == "floor" and len(groups) == 1:
             x = self.parse(0)
             self.expect(")")
-            return Expr(self._render_call(fname, [x]), x.ktype)
+            return Expr(self._fn_floor(fname, [x]), x.ktype)
         anchor = None
         if fname == "bin_auto":
             # bin_auto(x) == bin_at(x, query_bin_auto_size,
@@ -948,8 +992,6 @@ class _ExprParser:
             # the request properties (real Kusto semantics); the stored
             # literal text re-tokenizes here so timespan sizes keep the
             # datetime bucketing
-            if len(groups) != 1:
-                raise ValueError("KQL: bin_auto(expr)")
             ctx = _COMPILE_CTX.get()
             if ctx.bin_auto_size is None:
                 raise ValueError(
@@ -968,13 +1010,8 @@ class _ExprParser:
                 anchor = "0"
             else:
                 anchor = _parse_expr(_tokenize(ctx.bin_auto_min), self.df)
-        elif fname == "bin_at":
-            if len(groups) != 3 or len(groups[1]) != 1:
-                raise ValueError(
-                    "KQL: bin_at(expr, literal_size, fixedPoint)")
-            size = groups[1][0]
-        elif len(groups) != 2 or len(groups[1]) != 1:
-            raise ValueError(f"KQL: {fname}(expr, literal_size)")
+        elif len(groups[1]) != 1:
+            raise ValueError(f"KQL: {_FNS[fname].usage}")
         else:
             size = groups[1][0]
         x = self.parse(0)
@@ -1001,7 +1038,18 @@ class _ExprParser:
         return Expr(f"(floor(({x}) / {n}) * {n})",
                     "real" if n.ktype == "real" else x.ktype)
 
-    def _pack_all(self) -> str:
+    @_fn("ceiling", 1, 1, slice(0, 1), "ceiling(number)")
+    def _fn_floor(self, fname: str, args: list[str]) -> str:
+        # one-argument floor (see _bin) and ceiling: Spark rounds a
+        # DOUBLE to a BIGINT; Kusto's result is real
+        fn = "floor" if fname == "floor" else "ceil"
+        if _kt(args[0]) == "real":
+            return f"CAST({fn}({args[0]}) AS DOUBLE)"
+        return f"{fn}({args[0]})"
+
+    @_fn("pack_all", 0, 1, None, "pack_all([ignore_null_empty]) takes at "
+         "most one boolean literal", tokens=True)
+    def _pack_all(self, fname: str, groups: list[list[Tok]]) -> Expr:
         """pack_all([ignore_null_empty]): a dynamic bag of every current
         column, so it needs the row schema. With ignore_null_empty=true,
         null / '' / [] / {} values are dropped (Kusto semantics);
@@ -1010,9 +1058,7 @@ class _ExprParser:
         j = _close_paren(self.toks, self.i - 1)
         arg = "".join(t.text for t in self.toks[self.i:j]).strip().lower()
         if arg not in ("", "true", "false"):
-            raise ValueError(
-                "KQL: pack_all([ignore_null_empty]) takes at most "
-                "one boolean literal")
+            raise ValueError(f"KQL: {_FNS[fname].usage}")
         if self.df is None:
             raise ValueError(
                 "KQL: pack_all needs a table context "
@@ -1023,13 +1069,26 @@ class _ExprParser:
         base = (f"to_json(named_struct({pairs}), "
                 f"map('ignoreNullFields', 'false'))")
         if arg != "true":
-            return f"parse_json({base})"
+            return Expr(f"parse_json({base})", "dynamic")
         m = f"from_json({base}, 'map<string,variant>')"
         kept = (f"map_filter({m}, (__pa_k, __pa_v) -> "
                 f"__pa_v IS NOT NULL AND to_json(__pa_v) "
                 f"NOT IN ('\"\"', '[]', '{{}}', 'null'))")
-        return f"parse_json(to_json({kept}))"
+        return Expr(f"parse_json(to_json({kept}))", "dynamic")
 
+    @_fn("row_window_session", 3, 4, None,
+         "row_window_session(ts, maxDur, maxGap[, restart])", tokens=True)
+    def _row_window_session(self, fname: str, groups: list) -> Expr:
+        raise ValueError(
+            "KQL: row_window_session() is an extend kernel: use "
+            "it as the whole right-hand side, `extend s = "
+            "row_window_session(...)`")
+
+    @_fn("prev next", 1, 3, slice(0, 1), "{name}(x [, offset [, default]])")
+    @_fn("row_number", 0, 2, "long",
+         "row_number([StartingIndex [, Restart]])")
+    @_fn("row_cumsum", 1, 2, slice(0, 1), "row_cumsum(x [, Restart])")
+    @_fn("row_rank_dense row_rank_min", 1, 1, "long", "{name}(Term)")
     def _serial(self, fn: str, args: list[str]) -> str:
         """One serialized call as ONE window expression over the scope's
         serialized order: prev/next -> lag/lead; row_number ->
@@ -1044,9 +1103,6 @@ class _ExprParser:
         serialized call nested in them (``row_number(1, k !=
         prev(k))``, ``bin(prev(x), 10)``) renders in the same scope:
         Spark nests windows in window arguments and PARTITION BY."""
-        usage, lo, hi = _SERIAL_FNS[fn]
-        if not lo <= len(args) <= hi:
-            raise ValueError(f"KQL: {fn}({usage})")
         scope = self.scope
         if scope is None:
             raise ValueError(f"KQL: {fn}() works in extend, project and "
@@ -1303,7 +1359,7 @@ class _ExprParser:
         if not re.fullmatch(r"[\s()]*-\s*1(?:\.0)?[\s()]*", per):
             return per
         a = self._series_arg(arr)
-        bag = self._render_call(
+        bag = self._call(
             "series_periods_detect_dynamic",
             [arr, "2", f"CAST(size({a}) / 2 AS INT)", "1"])
         p0 = f"try_cast(variant_get({bag}, '$.periods[0]') AS DOUBLE)"
@@ -1316,7 +1372,7 @@ class _ExprParser:
         <= 0 (explicit 0 or a rejected auto-detect) yields an all-zero
         seasonal array instead of series_seasonal's pmod-by-zero."""
         a = self._series_arg(arr)
-        seas = self._render_call("series_seasonal", [arr, per])
+        seas = self._call("series_seasonal", [arr, per])
         return (f"(CASE WHEN ({per}) <= 0 THEN transform({a}, "
                 f"__dz_v -> CAST(0 AS DOUBLE)) ELSE {seas} END)")
 
@@ -1350,19 +1406,25 @@ class _ExprParser:
         if kind == "none":
             return f"transform({a}, __dt_v -> CAST(0 AS DOUBLE))"
         if kind == "linefit":
-            fit = self._render_call("series_fit_line_dynamic", [arr])
+            fit = self._call("series_fit_line_dynamic", [arr])
             return self._series_arg(
                 Expr(f"variant_get({fit}, '$.line_fit')", "dynamic"))
-        fir = self._render_call("series_fir", [arr, f"({per})"])
+        fir = self._call("series_fir", [arr, f"({per})"])
         return f"(CASE WHEN ({per}) <= 0 THEN {avg_arr} ELSE {fir} END)"
 
-    def _render_call(self, fname: str, args: list[str]) -> str:
-        if fname in _KTYPE_SQL and len(args) == 1 \
-                and args[0].strip().upper() == "NULL":
-            # Kusto typed null literals: long(null), real(null), ...
-            # (datetime(null) lexes as one datetime token upstream)
+    @_fn("long", 1, 1, "long", "long(value)")
+    @_fn("int", 1, 1, "int", "int(value)")
+    @_fn("real double", 1, 1, "real", "{name}(value)")
+    @_fn("bool boolean", 1, 1, "bool", "{name}(value)")
+    @_fn("string guid", 1, 1, "string", "{name}(value)")
+    @_fn("timespan", 1, 1, "timespan", "timespan(value)")
+    @_fn("decimal", 1, 1, "decimal", "decimal(value)")
+    def _fn_typed_literal(self, fname: str, args: list[str]) -> str:
+        # Kusto typed null literals: long(null), real(null), ...
+        # (datetime(null) lexes as one datetime token upstream)
+        if args[0].strip().upper() == "NULL":
             return f"CAST(NULL AS {_KTYPE_SQL[fname]})"
-        if fname == "real" and len(args) == 1:
+        if fname == "real":
             # Kusto non-finite real literals: real(+inf) / real(-inf) /
             # real(nan) (r13 probe sweep). The operand reaches here as
             # compiled SQL — a bare `inf`/`nan` identifier or a unary
@@ -1374,3002 +1436,2891 @@ class _ExprParser:
                     return "CAST('NaN' AS DOUBLE)"
                 return (f"CAST('{'-' if m.group(1) else ''}Infinity' "
                         f"AS DOUBLE)")
-        if fname in ("iff", "iif"):
-            if len(args) != 3:
-                raise ValueError("KQL: iff(cond, a, b) takes 3 args")
-            return f"(CASE WHEN {args[0]} THEN {args[1]} ELSE {args[2]} END)"
-        if fname == "substring":
-            if len(args) not in (2, 3):
-                raise ValueError("KQL: substring(s, start[, len])")
-            s, start = args[0], args[1]
-            if len(args) == 3:
-                return f"substr({s}, ({start}) + 1, {args[2]})"
-            return f"substr({s}, ({start}) + 1)"
-        if fname in ("toint", "tolong"):
-            # Kusto to*() conversions return NULL on unconvertible
-            # input; plain CAST under Spark ANSI mode would error.
-            # STRING operands also accept hex text ('0xff' -> 255,
-            # Kusto contract — r12 probe find); only they take the
-            # extended form, so numeric hot paths (every portable-
-            # rounded aggregate rides tolong) keep the bare try_cast.
-            sqlt = "INT" if fname == "toint" else "BIGINT"
-            x = args[0]
-            plain = f"try_cast({x} AS {sqlt})"
-            if self._ktype(x) != "string":
-                return plain
-            # conv to base -10 = SIGNED two's-complement, matching the
-            # hex-literal lexer's wrap (r12 review: the unsigned form
-            # gave -1 as a literal but null as a string conversion)
-            return (f"coalesce({plain}, CASE WHEN {x} RLIKE "
-                    f"'^0[xX][0-9a-fA-F]{{1,16}}$' THEN "
-                    f"try_cast(conv(substring({x}, 3), 16, -10) "
-                    f"AS {sqlt}) END)")
-        if fname == "todouble":
-            return f"try_cast({args[0]} AS DOUBLE)"
-        if fname == "tostring":
-            # Kusto tostring over a TIMESPAN renders the
-            # [-][d.]hh:mm:ss[.fffffff] text. Over a dynamic it renders
-            # JSON: VARIANT's string cast already does; a NATIVE
-            # array/map/struct operand (parse_csv, split, pack_array
-            # pipelines) must route through to_json or Spark's display
-            # rendering leaks ('[a, b,c, d]' — r12 probe find).
-            kt = self._ktype(args[0])
-            if kt == "timespan":
-                return self._timespan_text_sql(args[0])
-            if kt in _NATIVE_DYN:
-                return f"to_json({args[0]})"
-            return f"CAST({args[0]} AS STRING)"
-        if fname == "count":
-            return "count(*)" if not args or args == ["*"] else \
-                f"count({args[0]})"
-        if fname == "countif":
-            return f"sum(CASE WHEN {args[0]} THEN 1 ELSE 0 END)"
-        if fname == "dcount":
-            # dcount(x[, accuracy]): exact distinct (documented
-            # deviation — Kusto estimates); the accuracy knob is
-            # accepted and ignored, since exact dominates any accuracy
-            # level
-            if len(args) not in (1, 2):
-                raise ValueError("KQL: dcount(x[, accuracy])")
-            return f"count(DISTINCT {args[0]})"
-        if fname == "percentiles_array":
-            # percentiles_array(col, p1, p2, ...) -> array of exact
-            # interpolated percentiles (0-100 scale, like percentile())
-            if len(args) < 2:
-                raise ValueError(
-                    "KQL: percentiles_array(col, p1[, p2, ...])")
-            ps = ", ".join(f"CAST(({p}) / 100.0 AS DOUBLE)"
-                           for p in args[1:])
-            if _kt(args[0]) == "datetime":
-                # Spark's exact percentile takes numbers only: a
-                # datetime rides its µs carrier and is cast back
-                return (f"transform(percentile(unix_micros({args[0]}), "
-                        f"array({ps})), __pa_v -> "
-                        f"timestamp_micros(CAST(__pa_v AS BIGINT)))")
-            return f"percentile({args[0]}, array({ps}))"
-        if fname in ("pack", "bag_pack", "pack_dictionary"):
-            # pack('k1', v1, 'k2', v2, ...) -> dynamic property bag on
-            # VARIANT (JSON round-trip through named_struct); keys must
-            # be string literals, like Kusto's common usage
-            if len(args) < 2 or len(args) % 2:
-                raise ValueError(f"KQL: {fname}('k1', v1, ...) needs "
-                                 f"key/value pairs")
-            for k in args[::2]:
-                if not k.startswith("'"):
-                    raise ValueError(
-                        f"KQL: {fname} keys must be string literals")
-            pairs = ", ".join(f"{k}, {v}"
-                              for k, v in zip(args[::2], args[1::2]))
-            return f"parse_json(to_json(named_struct({pairs})))"
-        if fname == "bag_pack_columns":
-            # bag_pack_columns(c1, c2, ...) -> bag keyed by the COLUMN
-            # NAMES. Arguments must be bare column references (that is
-            # the Kusto contract too); a compiled column is exactly a
-            # backticked identifier, so the key is recoverable from
-            # the compiled argument. Nulls are kept, like pack_all's
-            # default.
-            if not args:
-                raise ValueError("KQL: bag_pack_columns(col1, ...)")
-            keys = []
-            for a in args:
-                m = re.fullmatch(r"`([^`]+)`", a)
-                if not m:
-                    raise ValueError(
-                        "KQL: bag_pack_columns arguments must be "
-                        "column references, got " + a)
-                keys.append(m.group(1).replace("'", "''"))
-            pairs = ", ".join(f"'{k}', {a}"
-                              for k, a in zip(keys, args))
-            return (f"parse_json(to_json(named_struct({pairs}), "
-                    f"map('ignoreNullFields', 'false')))")
-        if fname in ("exp2", "exp10"):
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(x)")
-            base = "2" if fname == "exp2" else "10"
-            return f"power({base}, {args[0]})"
-        if fname in ("array_sum", "array_avg"):
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(arr)")
-            # dynamic arrays ride VARIANT: one typed cast covers both
-            # native arrays and parse_json output. Kusto IGNORES
-            # null/non-numeric elements (try_cast turns them into null
-            # slots), so fold over the non-null filter — one poisoned
-            # element must not null the whole result — and array_avg
-            # divides by the count of elements actually summed.
-            arr = (f"filter(try_cast({args[0]} AS ARRAY<DOUBLE>), "
-                   f"__as_e -> __as_e IS NOT NULL)")
-            total = (f"aggregate({arr}, CAST(0.0 AS DOUBLE), "
-                     f"(__as_a, __as_x) -> __as_a + __as_x)")
-            if fname == "array_sum":
-                return total
-            return (f"(CASE WHEN size({arr}) > 0 THEN {total} "
-                    f"/ size({arr}) END)")
-        if fname == "array_index_of":
-            # array_index_of(arr, value [, start [, length
-            # [, occurrence]]]): 0-based index in the ORIGINAL array,
-            # -1 when missing; negative start counts from the end,
-            # length -1 = unbounded, occurrence is 1-based. Elements
-            # match numerically when both sides parse as doubles
-            # (exact), else by stringified equality.
-            if not 2 <= len(args) <= 5:
-                raise ValueError(
-                    "KQL: array_index_of(arr, value [, start "
-                    "[, length [, occurrence]]])")
-            a = f"from_json(to_json({args[0]}), 'array<variant>')"
-            v = args[1]
-            start = args[2] if len(args) >= 3 else "0"
-            length = args[3] if len(args) >= 4 else "-1"
-            occ = args[4] if len(args) == 5 else "1"
-            n = f"size({a})"
-            s = (f"IF(CAST({start} AS INT) < 0, "
-                 f"{n} + CAST({start} AS INT), CAST({start} AS INT))")
-            hi = (f"IF(CAST({length} AS INT) < 0, {n} - 1, "
-                  f"{s} + CAST({length} AS INT) - 1)")
-            e = f"try_element_at({a}, __aio_i + 1)"
-            match = (f"(coalesce(try_cast({e} AS DOUBLE) = "
-                     f"try_cast({v} AS DOUBLE), false) "
-                     f"OR coalesce(CAST({e} AS STRING) = "
-                     f"CAST({v} AS STRING), false))")
-            idxs = (f"filter(transform(sequence(0, {n} - 1), "
-                    f"__aio_i -> IF(__aio_i >= {s} "
-                    f"AND __aio_i <= {hi} AND {match}, "
-                    f"__aio_i, -1)), __aio_x -> __aio_x >= 0)")
-            return (f"CAST(coalesce(try_element_at({idxs}, "
-                    f"CAST({occ} AS INT)), -1) AS BIGINT)")
-        if fname == "base64_encode_tostring":
-            if len(args) != 1:
-                raise ValueError("KQL: base64_encode_tostring(s)")
-            return f"base64(encode({args[0]}, 'UTF-8'))"
-        if fname == "base64_decode_tostring":
-            if len(args) != 1:
-                raise ValueError("KQL: base64_decode_tostring(s)")
-            return f"decode(unbase64({args[0]}), 'UTF-8')"
-        if fname == "base64_decode_toarray":
-            # base64 text -> dynamic array of byte values (same byte
-            # rendering as the converter's binary sink,
-            # functions/conversion.bytes_to_int_array)
-            if len(args) != 1:
-                raise ValueError("KQL: base64_decode_toarray(s)")
-            b = f"unbase64({args[0]})"
-            arr = (f"transform(sequence(1, length({b})), __bd_i -> "
-                   f"CAST(conv(substring(hex({b}), "
-                   f"(__bd_i - 1) * 2 + 1, 2), 16, 10) AS INT))")
-            return (f"parse_json(to_json(CASE "
-                    f"WHEN {b} IS NULL THEN NULL "
-                    f"WHEN length({b}) = 0 THEN array() "
-                    f"ELSE {arr} END))")
-        if fname in ("zlib_compress_to_base64_string",
-                     "zlib_decompress_from_base64_string",
-                     "gzip_compress_to_base64_string",
-                     "gzip_decompress_from_base64_string",
-                     "punycode_from_string", "punycode_to_string",
-                     "punycode_domain_from_string",
-                     "punycode_domain_to_string"):
-            # Kusto codec scalars; Arrow-batched stdlib kernels (see
-            # _register_codec_udfs). Decoders return "" on bad input,
-            # per the Kusto docs.
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(string)")
-            udf = {
-                "zlib_compress_to_base64_string": "__kql_zlib_c",
-                "zlib_decompress_from_base64_string": "__kql_zlib_d",
-                "gzip_compress_to_base64_string": "__kql_gzip_c",
-                "gzip_decompress_from_base64_string": "__kql_gzip_d",
-                "punycode_from_string": "__kql_puny_e",
-                "punycode_to_string": "__kql_puny_d",
-                "punycode_domain_from_string": "__kql_idna_e",
-                "punycode_domain_to_string": "__kql_idna_d",
-            }[fname]
-            return f"{udf}({args[0]})"
-        if fname in ("parse_ipv6", "parse_ipv6_mask", "ipv6_compare",
-                     "ipv6_is_match", "ipv6_is_in_range",
-                     "ipv6_is_in_any_range", "has_ipv6",
-                     "has_any_ipv6"):
-            return self._ipv6_fn(fname, args)
-        if fname in ("gamma", "loggamma", "erf", "erfc"):
-            # Kusto special functions; libm kernels (see
-            # _register_math_udfs), domain errors -> null
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(x)")
-            udf = {"gamma": "__kql_gamma", "loggamma": "__kql_lgamma",
-                   "erf": "__kql_erf", "erfc": "__kql_erfc"}[fname]
-            return f"{udf}(CAST({args[0]} AS DOUBLE))"
-        if fname in ("beta_cdf", "beta_pdf", "beta_inv"):
-            if len(args) != 3:
-                raise ValueError(f"KQL: {fname}(x, alpha, beta)")
-            udf = {"beta_cdf": "__kql_beta_cdf",
-                   "beta_pdf": "__kql_beta_pdf",
-                   "beta_inv": "__kql_beta_inv"}[fname]
-            a = ", ".join(f"CAST({x} AS DOUBLE)" for x in args)
-            return f"{udf}({a})"
-        if fname == "welch_test":
-            # welch_test(mean1, var1, count1, mean2, var2, count2) ->
-            # two-sided p-value from per-sample moments
-            if len(args) != 6:
-                raise ValueError(
-                    "KQL: welch_test(mean1, variance1, count1, "
-                    "mean2, variance2, count2)")
-            a = ", ".join(f"CAST({x} AS DOUBLE)" for x in args)
-            return f"__kql_welch({a})"
-        if fname in ("percentile_tdigest", "percentrank_tdigest",
-                     "rank_tdigest", "percentile_array_tdigest"):
-            # scalars over the grid quantile sketch built by
-            # `evaluate tdigest(...)` (struct<scale, bs:array<(b,w)>>;
-            # see _tdigest for why a grid, not centroids). Pure
-            # higher-order SQL over the BOUNDED bucket array — stays
-            # JVM-side; totals bind ONCE via the named_struct/transform
-            # trick (an aggregate inlined into a lambda body would
-            # re-fold per element).
-            if fname != "percentile_array_tdigest" and len(args) != 2:
-                raise ValueError(f"KQL: {fname}(tdigest, arg)")
-            td, a = args[0], args[1]
-            tot = (f"aggregate({td}.bs, 0L, "
-                   f"(__tda, __tdx) -> __tda + __tdx.w)")
+        # any other operand: the Spark cast function of the same name
+        return f"{fname}({args[0]})"
 
-            def perc(a):
-                cross = (
-                    f"aggregate({td}.bs, "
-                    f"named_struct('c', 0L, 'r', "
-                    f"CAST(NULL AS BIGINT)), "
-                    f"(__tda, __tdx) -> named_struct("
-                    f"'c', __tda.c + __tdx.w, "
-                    f"'r', CASE WHEN __tda.r IS NULL AND "
-                    f"(__tda.c + __tdx.w) * 100.0e0 >= "
-                    f"({a}) * __tds.t THEN __tdx.b "
-                    f"ELSE __tda.r END), "
-                    f"__tda -> __tda.r)")
-                return (f"element_at(transform(array(named_struct("
-                        f"'t', {tot})), __tds -> "
-                        f"CAST({cross} AS DOUBLE) * {td}.scale), 1)")
-            if fname == "percentile_tdigest":
-                return perc(a)
-            if fname == "percentile_array_tdigest":
-                # percentile_array_tdigest(td, p1, p2, ...) or
-                # (td, dynamic([...])) -> dynamic array; one crossing
-                # fold per requested percentile over the bounded
-                # bucket array (the outer lambda var only carries the
-                # percentile, so the inner fold vars don't shadow)
-                if len(args) < 2:
-                    raise ValueError(
-                        "KQL: percentile_array_tdigest(td, p...)")
-                if len(args) == 2 and ("parse_json" in args[1]
-                                       or args[1].lstrip("(")
-                                       .startswith("array(")):
-                    parr = (f"from_json(to_json({args[1]}), "
-                            f"'array<double>')")
-                else:
-                    parr = ("array(" + ", ".join(
-                        f"CAST({x} AS DOUBLE)" for x in args[1:])
-                        + ")")
-                return (f"parse_json(to_json(transform({parr}, "
-                        f"__pat_p -> {perc('__pat_p')})))")
-            below = (f"aggregate(filter({td}.bs, __tdx -> __tdx.b <= "
-                     f"FLOOR(({a}) / {td}.scale + 0.5e0)), 0L, "
-                     f"(__tda, __tdx) -> __tda + __tdx.w)")
-            if fname == "rank_tdigest":
-                # rank of `a` = sketched values <= a (1..n when present)
-                return below
-            return (f"element_at(transform(array(named_struct("
-                    f"'t', {tot}, 'c', {below})), __tds -> "
-                    f"__tds.c * 100.0e0 / __tds.t), 1)")
-        if fname == "make_datetime":
-            # make_datetime(y, m, d [, h, mi, s]) — fractional seconds
-            # allowed, like Kusto
-            if len(args) not in (3, 6):
-                raise ValueError(
-                    "KQL: make_datetime(y, m, d [, h, mi, s])")
-            y, mo, d = args[:3]
-            h, mi, s = (args[3:] if len(args) == 6
-                        else ("0", "0", "0"))
-            return (f"make_timestamp(CAST({y} AS INT), "
-                    f"CAST({mo} AS INT), CAST({d} AS INT), "
-                    f"CAST({h} AS INT), CAST({mi} AS INT), "
-                    f"CAST({s} AS DECIMAL(16, 6)))")
-        if fname == "make_timespan":
-            # make_timespan([d,] h, m, s) -> microseconds (this
-            # compiler's timespan carrier); s may be fractional
-            if len(args) not in (3, 4):
-                raise ValueError("KQL: make_timespan([d,] h, m, s)")
-            d = args[0] if len(args) == 4 else "0"
-            h, mi, s = args[-3:]
-            return (f"(((CAST({d} AS BIGINT) * 24 "
-                    f"+ CAST({h} AS BIGINT)) * 60 "
-                    f"+ CAST({mi} AS BIGINT)) * 60000000 "
-                    f"+ CAST(CAST({s} AS DOUBLE) * 1000000 AS BIGINT))")
-        if fname in ("unixtime_seconds_todatetime",
-                     "unixtime_milliseconds_todatetime",
-                     "unixtime_microseconds_todatetime",
-                     "unixtime_nanoseconds_todatetime"):
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(value)")
-            x = f"CAST({args[0]} AS DOUBLE)"
-            scale = {"unixtime_seconds_todatetime": 1_000_000,
-                     "unixtime_milliseconds_todatetime": 1_000,
-                     "unixtime_microseconds_todatetime": 1,
-                     }.get(fname)
-            if scale is None:  # nanoseconds: integer div, no overflow
-                return (f"timestamp_micros(CAST({args[0]} AS BIGINT) "
-                        f"div 1000)")
-            return f"timestamp_micros(CAST({x} * {scale} AS BIGINT))"
-        if fname == "bitset_count_ones":
-            if len(args) != 1:
-                raise ValueError("KQL: bitset_count_ones(value)")
-            return f"CAST(bit_count(CAST({args[0]} AS BIGINT)) AS BIGINT)"
-        if fname == "array_reverse":
-            if len(args) != 1:
-                raise ValueError("KQL: array_reverse(arr)")
-            return (f"parse_json(to_json(reverse(from_json(to_json("
-                    f"{args[0]}), 'array<variant>'))))")
-        if fname == "toguid":
-            # canonical 8-4-4-4-12 (any case, optional braces) or
-            # bare 32-hex -> normalized lowercase guid text; else null
-            if len(args) != 1:
-                raise ValueError("KQL: toguid(value)")
-            s = f"trim(BOTH '{{}}' FROM CAST({args[0]} AS STRING))"
-            canon_pat = (r"'^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}"
-                         r"-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
-                         r"-[0-9a-fA-F]{12}$'")
-            hex32 = r"'^[0-9a-fA-F]{32}$'"
-            dashed = (f"concat_ws('-', substring({s}, 1, 8), "
-                      f"substring({s}, 9, 4), substring({s}, 13, 4), "
-                      f"substring({s}, 17, 4), substring({s}, 21, 12))")
-            return (f"(CASE WHEN {s} RLIKE {canon_pat} "
-                    f"THEN lower({s}) "
-                    f"WHEN {s} RLIKE {hex32} THEN lower({dashed}) "
-                    f"ELSE NULL END)")
-        if fname == "unicode_codepoints_from_string":
-            # (?s). iterates CODE POINTS in Java regex; ascii() maps a
-            # one-char string to its code point
-            if len(args) != 1:
-                raise ValueError(
-                    "KQL: unicode_codepoints_from_string(s)")
-            return (f"parse_json(to_json(transform(regexp_extract_all("
-                    f"{args[0]}, '(?s).', 0), "
-                    f"__cp_c -> ascii(__cp_c))))")
-        if fname in ("unicode_codepoints_to_string", "make_string"):
-            # make_string is Kusto's (deprecated) alias for
-            # unicode_codepoints_to_string — same signature
-            if len(args) < 1:
-                raise ValueError(
-                    f"KQL: {fname}(arr | cp, ...)")
-            if len(args) == 1:
-                a = (f"try_cast(variant_get(parse_json(to_json("
-                     f"named_struct('x', {args[0]}))), '$.x') "
-                     f"AS ARRAY<INT>)")
-            else:
-                a = ("array(" + ", ".join(
-                    f"CAST({x} AS INT)" for x in args) + ")")
-            # Spark's char() truncates above 255 — render each code
-            # point as a JSON \\uXXXX escape (surrogate pair above
-            # the BMP) and let from_json decode; escapes also make
-            # quote/backslash code points injection-safe
-            esc = (f"IF(__cs_i <= 65535, "
-                   f"concat('\\\\u', lpad(hex(__cs_i), 4, '0')), "
-                   f"concat("
-                   f"'\\\\u', lpad(hex(55296 "
-                   f"+ ((__cs_i - 65536) div 1024)), 4, '0'), "
-                   f"'\\\\u', lpad(hex(56320 "
-                   f"+ ((__cs_i - 65536) % 1024)), 4, '0')))")
-            # from_json needs a container schema — decode via a
-            # one-element JSON array
-            return (f"element_at(from_json(concat('[\"', "
-                    f"array_join(transform({a}, __cs_i -> {esc}), "
-                    f"''), '\"]'), 'array<string>'), 1)")
-        if fname == "parse_urlquery":
-            # query-string bag: Kusto's {"Query Parameters": {k: v}}
-            # shape; '?'-prefixed/full-URL input takes the part after
-            # '?', a '#fragment' tail is cut, keys and values
-            # url-decode (invalid %-escapes keep the raw text)
-            if len(args) != 1:
-                raise ValueError("KQL: parse_urlquery(query)")
-            q = f"CAST({args[0]} AS STRING)"
-            qs = (f"substring_index(CASE WHEN instr({q}, '?') > 0 "
-                  f"THEN substr({q}, instr({q}, '?') + 1) "
-                  f"ELSE {q} END, '#', 1)")
-            m = f"str_to_map({qs}, '&', '=')"
-            dec = (f"transform_values(transform_keys({m}, "
-                   f"(__uq_k, __uq_v) -> coalesce(try_url_decode("
-                   f"__uq_k), __uq_k)), (__uq_k, __uq_v) -> "
-                   f"coalesce(try_url_decode(__uq_v), __uq_v))")
-            return (f"parse_json(to_json(named_struct("
-                    f"'Query Parameters', {dec})))")
-        if fname in ("base64_encode_fromguid", "base64_decode_toguid"):
-            # .NET Guid <-> base64: the first three components are
-            # LITTLE-endian in the byte form (doc example
-            # ae3133f2-... <-> '8jMxriJurkmwahbmqbIS6w=='), so the hex
-            # stream is permuted [3210 54 76 89abcdef] — an involution,
-            # the same reorder serves both directions. Invalid input
-            # (bad base64, wrong length, malformed guid) -> null.
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(value)")
+    @_fn("iff iif", 3, 3, slice(1, None), "{name}(cond, a, b) takes 3 args")
+    def _fn_iff(self, fname: str, args: list[str]) -> str:
+        return f"(CASE WHEN {args[0]} THEN {args[1]} ELSE {args[2]} END)"
 
-            def reorder(h):
-                return (f"concat(substr({h}, 7, 2), substr({h}, 5, 2), "
-                        f"substr({h}, 3, 2), substr({h}, 1, 2), "
-                        f"substr({h}, 11, 2), substr({h}, 9, 2), "
-                        f"substr({h}, 15, 2), substr({h}, 13, 2), "
-                        f"substr({h}, 17, 16))")
-            if fname == "base64_encode_fromguid":
-                s = (f"lower(replace(trim(BOTH '{{}}' FROM "
-                     f"CAST({args[0]} AS STRING)), '-', ''))")
-                return (f"(CASE WHEN {s} RLIKE '^[0-9a-f]{{32}}$' "
-                        f"THEN base64(unhex({reorder(s)})) "
-                        f"ELSE NULL END)")
-            bx = f"try_to_binary({args[0]}, 'base64')"
-            hx = f"lower(hex({bx}))"
-            g = reorder(hx)
-            return (f"(CASE WHEN length({bx}) = 16 THEN "
-                    f"concat_ws('-', substr({g}, 1, 8), "
-                    f"substr({g}, 9, 4), substr({g}, 13, 4), "
-                    f"substr({g}, 17, 4), substr({g}, 21, 12)) "
-                    f"ELSE NULL END)")
-        if fname == "treepath":
-            # every node path of the bag, Kusto's bracket-quoted form
-            # (['a']['b'], numeric hops for arrays) — recursive walk in
-            # the dynamic kernel registry
-            if len(args) != 1:
-                raise ValueError("KQL: treepath(bag)")
-            return (f"parse_json(to_json(__kql_treepath("
-                    f"to_json({args[0]}))))")
-        if fname == "estimate_data_size":
-            # DOCUMENTED ESTIMATE (like Kusto's): the JSON text octet
-            # length of the argument tuple — a stable, engine-local
-            # payload proxy, not byte-exact storage accounting
-            if not args:
-                raise ValueError("KQL: estimate_data_size(e1, ...)")
-            fields = ", ".join(f"'f{i}', {a}"
-                               for i, a in enumerate(args))
-            return (f"CAST(octet_length(to_json(named_struct("
-                    f"{fields}))) AS BIGINT)")
-        if fname == "parse_url":
-            # Kusto parse_url -> dynamic bag. Built from Spark's native
-            # parse_url parts + str_to_map for the query string, JSON
-            # round-tripped onto VARIANT so d.Host / d.QueryParameters.k
-            # path access works like any other dynamic. Deviation: the
-            # query bag key is QueryParameters (no space; identifier
-            # paths cannot address 'Query Parameters').
-            if len(args) != 1:
-                raise ValueError("KQL: parse_url(url) takes 1 arg")
-            u = args[0]
-            qmap = (f"str_to_map(coalesce(parse_url({u}, 'QUERY'), ''), "
-                    f"'&', '=')")
-            # Spark's parse_url has no PORT part (HOST/PATH/QUERY/REF/
-            # PROTOCOL/FILE/AUTHORITY/USERINFO only; PORT yields NULL),
-            # so the port is cut from the AUTHORITY's ':NNNN' suffix;
-            # nullif keeps portless URLs consistent with the other
-            # components (null -> dropped by to_json, like Host etc.)
-            port = (f"nullif(regexp_extract(coalesce("
-                    f"parse_url({u}, 'AUTHORITY'), ''), "
-                    f"':([0-9]+)$', 1), '')")
-            obj = (f"named_struct("
-                   f"'Scheme', parse_url({u}, 'PROTOCOL'), "
-                   f"'Host', parse_url({u}, 'HOST'), "
-                   f"'Port', {port}, "
-                   f"'Path', parse_url({u}, 'PATH'), "
-                   f"'Fragment', parse_url({u}, 'REF'), "
-                   f"'QueryParameters', {qmap})")
-            return f"parse_json(to_json({obj}))"
-        if fname == "bag_merge":
-            # Kusto bag_merge(bag1, bag2, ...): merge property bags,
-            # FIRST occurrence of a key wins (earlier args shadow later
-            # ones). Pure expression: each variant bag round-trips
-            # through map<string,variant> (faithful — values stay
-            # typed variants), an aggregate fold concatenates with a
-            # keys-already-present filter (lambda vars, so the
-            # accumulator is never textually duplicated), and the
-            # merged map re-enters VARIANT. Null/non-object args act
-            # as empty bags.
-            if len(args) < 2:
-                raise ValueError("KQL: bag_merge(bag1, bag2, ...)")
-            maps = [f"coalesce(from_json(to_json({a}), "
-                    f"'map<string,variant>'), "
-                    f"from_json('{{}}', 'map<string,variant>'))"
-                    for a in args]
-            merged = (f"aggregate(array({', '.join(maps[1:])}), "
-                      f"{maps[0]}, (__bm_a, __bm_m) -> "
-                      f"map_concat(__bm_a, map_filter(__bm_m, "
-                      f"(__bm_k, __bm_v) -> NOT array_contains("
-                      f"map_keys(__bm_a), __bm_k))))")
-            return f"parse_json(to_json({merged}))"
-        if fname == "hll":
-            # Kusto hll(x): a mergeable HyperLogLog sketch intermediate
-            # -> Spark's Datasketches HLL aggregate. THE re-aggregation
-            # primitive at 100 TB: per-group sketches merge (hll_merge)
-            # without re-scanning the fact table.
-            return f"hll_sketch_agg({args[0]})"
-        if fname == "hll_merge":
-            return f"hll_union_agg({args[0]})"
-        if fname == "dcount_hll":
-            return f"hll_sketch_estimate({args[0]})"
-        if fname in ("make_list", "make_set"):
-            # optional maxSize SECOND arg caps the collection (Kusto
-            # semantics — silently ignoring it returned unbounded
-            # lists, a probe-found wrong answer). The slice happens
-            # after the aggregate: which elements survive is
-            # unspecified in Kusto too.
-            if len(args) not in (1, 2):
-                raise ValueError(f"KQL: {fname}(expr [, maxSize])")
-            agg = ("collect_list" if fname == "make_list"
-                   else "collect_set")
-            out = f"{agg}({args[0]})"
-            if len(args) == 2:
-                return f"slice({out}, 1, CAST({args[1]} AS INT))"
-            return out
-        if fname == "make_list_with_nulls":
-            # collect_list drops nulls; the struct wrap keeps them
-            # (a non-null struct with a null field collects fine)
-            return (f"transform(collect_list(named_struct("
-                    f"'v', {args[0]})), __mlwn -> __mlwn.v)")
-        if fname == "count_distinct":
-            # Kusto's EXACT distinct count (dcount is the HLL estimate)
-            if len(args) != 1:
-                raise ValueError("KQL: count_distinct(col)")
-            return f"count(DISTINCT {args[0]})"
-        if fname == "count_distinctif":
-            # exact distinct over rows passing the predicate (the
-            # exact sibling of dcountif, Kusto count_distinctif)
-            if len(args) != 2:
-                raise ValueError(
-                    "KQL: count_distinctif(col, predicate)")
-            return (f"count(DISTINCT CASE WHEN {args[1]} "
-                    f"THEN {args[0]} END)")
-        if fname in ("percentile", "percentiles"):
-            # KQL percentile(col, P) uses a 0-100 scale; Spark/ANSI use
-            # a 0-1 fraction. Exact interpolated percentile by default
-            # (real Kusto estimates via T-digest; same documented
-            # deviation as dcount); `set percentile_mode = approx;`
-            # compiles to approx_percentile instead — a GK sketch whose
-            # per-group state is bounded by the accuracy parameter, not
-            # the group size, so a skewed key cannot buffer its rows on
-            # one executor (the 100 TB path, and Kusto's own
-            # semantics).
-            # A timespan or datetime keeps its type: it rides the µs
-            # carrier (Spark's exact percentile takes numbers only and
-            # returns a DOUBLE), cast back after interpolation.
-            if len(args) != 2:
-                raise ValueError("KQL: percentile(col, P) takes 2 args")
-            x, kt = args[0], _kt(args[0])
-            if kt == "datetime":
-                x = f"unix_micros({x})"
-            if _COMPILE_CTX.get().percentile_mode == "approx":
-                sql = f"approx_percentile({x}, ({args[1]}) / 100.0, 10000)"
-            else:
-                sql = f"percentile({x}, ({args[1]}) / 100.0)"
-            if kt not in _TEMPORAL:
-                return sql
-            sql = f"CAST({sql} AS BIGINT)"
-            return f"timestamp_micros({sql})" if kt == "datetime" else sql
-        if fname == "extract":
-            # extract(regex, capture_group, text [, typeof(T)]) ->
-            # regexp_extract; the 4-arg form CONVERTS the capture
-            # (failed conversion / no match -> null, Kusto contract —
-            # r12 probe find)
-            if len(args) not in (3, 4):
-                raise ValueError(
-                    "KQL: extract(regex, group, text[, typeof(T)])")
-            base = f"regexp_extract({args[2]}, {args[0]}, {args[1]})"
-            if len(args) == 3:
-                # Kusto: no match -> NULL (regexp_extract alone yields
-                # '' — indistinguishable from a legit empty capture, so
-                # guard with an RLIKE probe; r13 probe sweep)
-                return (f"(CASE WHEN {args[2]} RLIKE {args[0]} "
-                        f"THEN {base} ELSE NULL END)")
-            mt = re.fullmatch(r"typeof\(\s*`?(\w+)`?\s*\)",
-                              args[3].strip())
-            sqlt = mt and _KTYPE_SQL.get(mt.group(1).lower())
-            if sqlt in (None, "VARIANT"):
-                raise ValueError(
-                    f"KQL: extract 4th arg must be typeof(<type>), "
-                    f"got {args[3]!r}")
-            if sqlt == "STRING":
-                return base
-            return f"try_cast(nullif({base}, '') AS {sqlt})"
-        if fname == "extract_all":
-            # extract_all(regex [, captureGroups], text) -> array of
-            # matches; with a groups array (or a LITERAL regex carrying
-            # more than one capture group — Kusto's 2-arg contract,
-            # r13 probe sweep) each match yields an array of its
-            # captures (one regexp_extract_all per group, bound ONCE
-            # via the struct hop, zipped by match index)
-            if len(args) == 2:
-                n = self._regex_literal_group_count(args[0])
-                if n == 0:
-                    # no capture groups: whole matches (Kusto)
-                    return (f"regexp_extract_all({args[1]}, "
-                            f"{args[0]}, 0)")
-                if n is None or n == 1:
-                    # non-literal regex: group 1 (documented narrowing
-                    # — the group count is unknowable at compile time)
-                    return (f"regexp_extract_all({args[1]}, "
-                            f"{args[0]}, 1)")
-                gs, text = list(range(1, n + 1)), args[1]
-            elif len(args) == 3:
-                import json as _json
-                # flat numeric dynamics compile to a native
-                # array(CAST(n AS BIGINT), ...) literal; nested ones to
-                # parse_json('...') — accept both compile-time forms
-                gs = []
-                mg = re.fullmatch(r"parse_json\('(.*)'\)", args[1],
-                                  re.DOTALL)
-                if mg:
-                    try:
-                        gs = [int(g) for g in _json.loads(mg.group(1))]
-                    except Exception:
-                        gs = []
-                elif re.fullmatch(
-                        r"array\((?:\s*CAST\(\d+ AS BIGINT\)\s*,?)+\)",
-                        args[1]):
-                    gs = [int(g) for g in
-                          re.findall(r"CAST\((\d+) AS BIGINT\)",
-                                     args[1])]
-                if not gs:
-                    raise ValueError(
-                        "KQL: extract_all captureGroups must be a "
-                        "dynamic([...]) literal of group numbers")
-                text = args[2]
-            else:
-                raise ValueError(
-                    "KQL: extract_all(regex [, captureGroups], text)")
-            arrs = [f"regexp_extract_all({text}, {args[0]}, {g})"
-                    for g in gs]
-            if len(arrs) == 1:
-                return arrs[0]
-            fields = ", ".join(f"'g{j}', {a}"
-                               for j, a in enumerate(arrs))
-            elems = ", ".join(
-                f"try_element_at(__ea_s.g{j}, __ea_i)"
-                for j in range(len(arrs)))
-            # sequence(1, 0) DESCENDS — zero matches must yield []
-            idx = (f"(CASE WHEN size(__ea_s.g0) >= 1 THEN "
-                   f"sequence(1, size(__ea_s.g0)) ELSE array() END)")
-            return (f"parse_json(to_json(element_at(transform(array("
-                    f"named_struct({fields})), __ea_s -> "
-                    f"transform({idx}, "
-                    f"__ea_i -> array({elems}))), 1)))")
-        if fname in ("series_sum", "series_avg", "series_max",
-                     "series_min", "series_product"):
-            # fold over the make-series value array, JVM-side
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(series) takes 1 arg")
-            arr = self._series_arg(args[0])
-            total = (f"aggregate({arr}, CAST(0 AS DOUBLE), "
-                     f"(a, v) -> a + CAST(v AS DOUBLE))")
-            if fname == "series_sum":
-                return total
-            if fname == "series_product":
-                return (f"aggregate({arr}, CAST(1 AS DOUBLE), "
-                        f"(a, v) -> a * CAST(v AS DOUBLE))")
-            if fname == "series_avg":
-                # empty-series guard: ANSI mode turns the /size division
-                # into a runtime DIVIDE_BY_ZERO crash (r12 registry
-                # property find) — Kusto yields null
-                return (f"(CASE WHEN size({arr}) = 0 THEN NULL "
-                        f"ELSE {total} / size({arr}) END)")
-            fn = "array_max" if fname == "series_max" else "array_min"
-            return f"CAST({fn}({arr}) AS DOUBLE)"
-        if fname in ("isnan", "isinf", "isfinite"):
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(x) takes 1 arg")
-            # Kusto contract: these return BOOL, never null — a null
-            # input is "not a finite number / not inf / not nan" = false
-            x = f"CAST({args[0]} AS DOUBLE)"
-            if fname == "isnan":
-                return f"coalesce(isnan({x}), false)"
-            if fname == "isinf":
-                return (f"coalesce(abs({x}) = CAST('Infinity' AS DOUBLE), "
-                        f"false)")
-            return (f"coalesce(NOT (isnan({x}) "
-                    f"OR abs({x}) = CAST('Infinity' AS DOUBLE)), false)")
-        if fname == "tohex":
-            # Kusto tohex emits lowercase digits; Spark hex is upper.
-            # Optional minLength zero-pads (lpad truncates from the
-            # LEFT when over, so guard with greatest of both lengths)
-            if len(args) not in (1, 2):
-                raise ValueError("KQL: tohex(int [, minLength])")
-            h = f"lower(hex({args[0]}))"
-            if len(args) == 2:
-                ml = f"CAST({args[1]} AS INT)"
-                return (f"lpad({h}, greatest(length({h}), {ml}), '0')")
-            return h
-        if fname == "strcmp":
-            if len(args) != 2:
-                raise ValueError("KQL: strcmp(s1, s2)")
-            a, b = args
-            return (f"(CASE WHEN {a} < {b} THEN -1 "
-                    f"WHEN {a} > {b} THEN 1 "
-                    f"WHEN {a} = {b} THEN 0 END)")
-        if fname == "string_size":
-            # size in BYTES (strlen is in characters)
-            if len(args) != 1:
-                raise ValueError("KQL: string_size(s)")
-            return f"octet_length({args[0]})"
-        if fname == "repeat":
-            if len(args) != 2:
-                raise ValueError("KQL: repeat(value, count)")
-            return f"array_repeat({args[0]}, CAST({args[1]} AS INT))"
-        if fname == "range" and len(args) in (2, 3):
-            # the SCALAR range(start, stop [, step]) -> dynamic array
-            # (the `range x from a to b` SOURCE operator is separate).
-            # stop is inclusive, like Kusto; a zero step is null, a
-            # step pointing away from stop yields an empty array
-            # (Spark's sequence would error); numeric domain (the
-            # datetime/timespan form is not supported — documented).
-            start, stop = args[0], args[1]
-            step = args[2] if len(args) == 3 else "1"
-            return (f"(CASE WHEN ({step}) = 0 THEN NULL "
-                    f"WHEN (({stop}) - ({start})) * ({step}) < 0 "
-                    f"THEN array() "
-                    f"ELSE sequence({start}, {stop}, {step}) END)")
-        if fname == "new_guid":
-            if args:
-                raise ValueError("KQL: new_guid() takes no args")
-            return "uuid()"
-        if fname == "rand":
-            # rand() -> [0,1) real; rand(n) -> integer in [0, n)
-            if len(args) == 0:
-                return "rand()"
-            if len(args) == 1:
-                return (f"CAST(floor(rand() * ({args[0]})) AS BIGINT)")
-            raise ValueError("KQL: rand([n])")
-        if fname == "parse_csv":
-            # one CSV record -> string array. Quote-aware via the
-            # classic lookahead split (documented subset: no embedded
-            # newlines), doubled quotes unescape
-            if len(args) != 1:
-                raise ValueError("KQL: parse_csv(record)")
-            parts = (f"split({args[0]}, "
-                     f"',(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)')")
-            return (f"transform({parts}, __pc_x -> CASE WHEN __pc_x "
-                    f"RLIKE '^\".*\"$' THEN replace(substring(__pc_x, "
-                    f"2, length(__pc_x) - 2), '\"\"', '\"') "
-                    f"ELSE __pc_x END)")
-        if fname in ("geo_distance_2points", "geo_point_in_circle"):
-            # great-circle distance in meters on the mean-radius sphere
-            # (haversine; documented deviation: Kusto computes WGS84
-            # geodesics — difference <0.5%, and the DuckDB oracle twin
-            # recomputes the same documented formula independently)
-            if fname == "geo_distance_2points" and len(args) != 4:
-                raise ValueError(
-                    "KQL: geo_distance_2points(lon1, lat1, lon2, lat2)")
-            if fname == "geo_point_in_circle" and len(args) != 5:
-                raise ValueError(
-                    "KQL: geo_point_in_circle(lon, lat, clon, clat, r)")
-            lon1, lat1, lon2, lat2 = args[:4]
+    @_fn("substring", 2, 3, "string", "substring(s, start[, len])")
+    def _fn_substring(self, fname: str, args: list[str]) -> str:
+        s, start = args[0], args[1]
+        if len(args) == 3:
+            return f"substr({s}, ({start}) + 1, {args[2]})"
+        return f"substr({s}, ({start}) + 1)"
 
-            def rad(x):
-                return f"radians(CAST({x} AS DOUBLE))"
-            hav = (f"(pow(sin(({rad(lat2)} - {rad(lat1)}) / 2), 2) "
-                   f"+ cos({rad(lat1)}) * cos({rad(lat2)}) "
-                   f"* pow(sin(({rad(lon2)} - {rad(lon1)}) / 2), 2))")
-            dist = f"(2 * 6371009.0 * asin(least(1.0, sqrt({hav}))))"
-            if fname == "geo_distance_2points":
-                return dist
-            return f"({dist} <= CAST({args[4]} AS DOUBLE))"
-        if fname in ("geo_point_to_geohash",
-                     "geo_geohash_to_central_point",
-                     "geo_geohash_to_polygon",
-                     "geo_geohash_neighbors"):
-            return self._geohash_fn(fname, args)
-        if fname == "geo_point_in_polygon":
-            return self._geo_point_in_polygon(args)
-        if fname in ("geo_line_length", "geo_polygon_area",
-                     "geo_polygon_centroid",
-                     "geo_distance_point_to_line",
-                     "geo_polygon_perimeter", "geo_line_centroid",
-                     "geo_distance_point_to_polygon"):
-            return self._geo_measure_fn(fname, args)
-        if fname == "geo_azimuth":
-            # initial great-circle bearing p1 -> p2, radians clockwise
-            # from true north in [0, 2*pi) (standard spherical
-            # formula; same mean-radius sphere as the rest of the geo
-            # family). Identical points or out-of-range coords -> null.
-            if len(args) != 4:
-                raise ValueError(
-                    "KQL: geo_azimuth(lon1, lat1, lon2, lat2)")
+    @_fn("toint", 1, 1, "int", "toint(value)")
+    @_fn("tolong", 1, 1, "long", "tolong(value)")
+    @_fn("todouble toreal", 1, 1, "real", "{name}(value)")
+    @_fn("todatetime", 1, 1, "datetime", "todatetime(value)")
+    @_fn("tobool", 1, 1, "bool", "tobool(value)")
+    @_fn("todecimal", 1, 1, "decimal", "todecimal(x)")
+    def _fn_toint(self, fname: str, args: list[str]) -> str:
+        # Kusto to*() conversions return NULL on unconvertible
+        # input; plain CAST under Spark ANSI mode would error.
+        # STRING operands of toint/tolong also accept hex text
+        # ('0xff' -> 255, Kusto contract — r12 probe find); only
+        # they take the extended form, so numeric hot paths (every
+        # portable-rounded aggregate rides tolong) keep the bare
+        # try_cast.
+        sqlt = {"toint": "INT", "tolong": "BIGINT", "todatetime":
+                "TIMESTAMP", "tobool": "BOOLEAN",
+                "todecimal": "DECIMAL(38, 18)"}.get(fname, "DOUBLE")
+        x = args[0]
+        plain = f"try_cast({x} AS {sqlt})"
+        if fname not in ("toint", "tolong") or self._ktype(x) != "string":
+            return plain
+        # conv to base -10 = SIGNED two's-complement, matching the
+        # hex-literal lexer's wrap (r12 review: the unsigned form
+        # gave -1 as a literal but null as a string conversion)
+        return (f"coalesce({plain}, CASE WHEN {x} RLIKE "
+                f"'^0[xX][0-9a-fA-F]{{1,16}}$' THEN "
+                f"try_cast(conv(substring({x}, 3), 16, -10) "
+                f"AS {sqlt}) END)")
 
-            def radx(x):
-                return f"radians(CAST({x} AS DOUBLE))"
-            lon1, lat1, lon2, lat2 = (radx(a) for a in args)
-            dlon = f"({lon2} - {lon1})"
-            az = (f"atan2(sin({dlon}) * cos({lat2}), "
-                  f"cos({lat1}) * sin({lat2}) "
-                  f"- sin({lat1}) * cos({lat2}) * cos({dlon}))")
-            ok = (f"(CAST({args[0]} AS DOUBLE) BETWEEN -180 AND 180 "
-                  f"AND CAST({args[1]} AS DOUBLE) BETWEEN -90 AND 90 "
-                  f"AND CAST({args[2]} AS DOUBLE) BETWEEN -180 AND 180 "
-                  f"AND CAST({args[3]} AS DOUBLE) BETWEEN -90 AND 90 "
-                  f"AND NOT (CAST({args[0]} AS DOUBLE) = "
-                  f"CAST({args[2]} AS DOUBLE) AND "
-                  f"CAST({args[1]} AS DOUBLE) = "
-                  f"CAST({args[3]} AS DOUBLE)))")
-            return (f"(CASE WHEN {ok} THEN "
-                    f"pmod({az}, 2 * pi()) ELSE NULL END)")
-        if fname == "geo_point_to_s2cell":
-            # S2 cell token (published s2geometry algorithm; Arrow
-            # kernel __kql_s2_encode). Kusto's default level is 11.
-            if len(args) not in (2, 3):
+    @_fn("tostring", 1, 1, "string", "tostring(value)")
+    def _fn_tostring(self, fname: str, args: list[str]) -> str:
+        # Kusto tostring over a TIMESPAN renders the
+        # [-][d.]hh:mm:ss[.fffffff] text. Over a dynamic it renders
+        # JSON: VARIANT's string cast already does; a NATIVE
+        # array/map/struct operand (parse_csv, split, pack_array
+        # pipelines) must route through to_json or Spark's display
+        # rendering leaks ('[a, b,c, d]' — r12 probe find).
+        kt = self._ktype(args[0])
+        if kt == "timespan":
+            return self._timespan_text_sql(args[0])
+        if kt in _NATIVE_DYN:
+            return f"to_json({args[0]})"
+        return f"CAST({args[0]} AS STRING)"
+
+    @_fn("count", 0, 1, "long", "count()")
+    def _fn_count(self, fname: str, args: list[str]) -> str:
+        return "count(*)" if not args or args == ["*"] else \
+            f"count({args[0]})"
+
+    @_fn("countif", 1, 1, "long", "countif(predicate)")
+    def _fn_countif(self, fname: str, args: list[str]) -> str:
+        return f"sum(CASE WHEN {args[0]} THEN 1 ELSE 0 END)"
+
+    @_fn("dcount", 1, 2, "long", "dcount(x[, accuracy])")
+    @_fn("count_distinct", 1, 1, "long", "count_distinct(col)")
+    def _fn_dcount(self, fname: str, args: list[str]) -> str:
+        # dcount(x[, accuracy]): exact distinct (documented
+        # deviation — Kusto estimates); the accuracy knob is
+        # accepted and ignored, since exact dominates any accuracy
+        # level. count_distinct is Kusto's exact count by name.
+        return f"count(DISTINCT {args[0]})"
+
+    @_fn("percentiles_array", 2, None, None,
+         "percentiles_array(col, p1[, p2, ...])")
+    def _fn_percentiles_array(self, fname: str, args: list[str]) -> str:
+        # percentiles_array(col, p1, p2, ...) -> array of exact
+        # interpolated percentiles (0-100 scale, like percentile())
+        ps = ", ".join(f"CAST(({p}) / 100.0 AS DOUBLE)"
+                       for p in args[1:])
+        if _kt(args[0]) == "datetime":
+            # Spark's exact percentile takes numbers only: a
+            # datetime rides its µs carrier and is cast back
+            return (f"transform(percentile(unix_micros({args[0]}), "
+                    f"array({ps})), __pa_v -> "
+                    f"timestamp_micros(CAST(__pa_v AS BIGINT)))")
+        return f"percentile({args[0]}, array({ps}))"
+
+    @_fn("pack bag_pack pack_dictionary", 2, None, "dynamic",
+         "{name}('k1', v1, ...) needs key/value pairs")
+    def _fn_pack(self, fname: str, args: list[str]) -> str:
+        # pack('k1', v1, 'k2', v2, ...) -> dynamic property bag on
+        # VARIANT (JSON round-trip through named_struct); keys must
+        # be string literals, like Kusto's common usage
+        if len(args) < 2 or len(args) % 2:
+            raise ValueError(f"KQL: {fname}('k1', v1, ...) needs "
+                             f"key/value pairs")
+        for k in args[::2]:
+            if not k.startswith("'"):
                 raise ValueError(
-                    "KQL: geo_point_to_s2cell(lon, lat [, level])")
-            lvl = args[2] if len(args) == 3 else "11"
-            return (f"__kql_s2_encode(CAST({args[0]} AS DOUBLE), "
-                    f"CAST({args[1]} AS DOUBLE), "
-                    f"CAST({lvl} AS INT))")
-        if fname == "geo_s2cell_to_central_point":
-            if len(args) != 1:
-                raise ValueError(
-                    "KQL: geo_s2cell_to_central_point(token)")
-            return (f"parse_json(__kql_s2_center("
-                    f"CAST({args[0]} AS STRING)))")
-        if fname == "geo_s2cell_parent":
-            # containing cell at `level` (default one level up);
-            # engine extension aligned with geo_h3cell_parent
-            if len(args) not in (1, 2):
-                raise ValueError(
-                    "KQL: geo_s2cell_parent(token [, level])")
-            lvl = args[1] if len(args) == 2 else "-1"
-            return (f"__kql_s2_parent(CAST({args[0]} AS STRING), "
-                    f"CAST({lvl} AS INT))")
-        if fname in ("geo_s2cell_children", "geo_s2cell_neighbors"):
-            # dynamic array of child (Hilbert order) / edge-neighbor
-            # (down,right,up,left) tokens; null on malformed input
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(token)")
-            kern = ("__kql_s2_children"
-                    if fname == "geo_s2cell_children"
-                    else "__kql_s2_neighbors")
-            return f"parse_json({kern}(CAST({args[0]} AS STRING)))"
-        if fname in ("geo_point_to_h3cell",
-                     "geo_h3cell_to_central_point",
-                     "geo_h3cell_parent", "geo_h3cell_children",
-                     "geo_h3cell_rings", "geo_h3cell_neighbors",
-                     "geo_h3cell_to_polygon"):
-            # H3 family: DELEGATED to the optional `h3` reference
-            # library (see _h3_api — the published base-cell constant
-            # tables are not re-derivable in closed form, and a
-            # lookalike would mint non-conformant tokens). Absent
-            # package -> loud COMPILE-TIME contract, not silent nulls.
-            if _h3_api() is None:
-                raise ValueError(
-                    f"KQL: {fname} requires the optional 'h3' package "
-                    f"(pip install h3) — the H3 base-cell tables are "
-                    f"not reproducible without it; the geohash and "
-                    f"S2 cell families are the built-in alternatives")
-            if fname == "geo_point_to_h3cell":
-                if len(args) not in (2, 3):
-                    raise ValueError(
-                        "KQL: geo_point_to_h3cell(lon, lat [, res])")
-                res = args[2] if len(args) == 3 else "9"
-                return (f"__kql_h3_encode(CAST({args[0]} AS DOUBLE), "
-                        f"CAST({args[1]} AS DOUBLE), "
-                        f"CAST({res} AS INT))")
-            if fname == "geo_h3cell_parent":
-                if len(args) not in (1, 2):
-                    raise ValueError(
-                        "KQL: geo_h3cell_parent(token [, level])")
-                lvl = args[1] if len(args) == 2 else "-1"
-                return (f"__kql_h3_parent(CAST({args[0]} AS STRING), "
-                        f"CAST({lvl} AS INT))")
-            if fname in ("geo_h3cell_rings", "geo_h3cell_neighbors"):
-                # neighbors == rings(1) minus self is Kusto's
-                # convention for the geohash family; H3's own
-                # neighbors doc returns the k-disk INCLUDING self —
-                # delegate both to grid_disk and let rings carry the
-                # k argument
-                k = "1"
-                if fname == "geo_h3cell_rings":
-                    if len(args) != 2:
-                        raise ValueError(
-                            "KQL: geo_h3cell_rings(token, k)")
-                    k = args[1]
-                elif len(args) != 1:
-                    raise ValueError(f"KQL: {fname}(token)")
-                return (f"parse_json(__kql_h3_rings("
-                        f"CAST({args[0]} AS STRING), "
-                        f"CAST({k} AS INT)))")
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(token)")
-            kern = {"geo_h3cell_to_central_point": "__kql_h3_center",
-                    "geo_h3cell_children": "__kql_h3_children",
-                    "geo_h3cell_to_polygon": "__kql_h3_polygon",
-                    }[fname]
-            return f"parse_json({kern}(CAST({args[0]} AS STRING)))"
-        if fname in ("geo_line_densify", "geo_line_simplify",
-                     "geo_polygon_densify", "geo_polygon_simplify"):
-            # shape transforms over GeoJSON dynamics (Arrow kernels:
-            # slerp subdivision / iterative RDP, see
-            # _register_geo_shape_udfs). Second arg = tolerance meters
-            # (densify: max edge length; simplify: RDP epsilon),
-            # default 10 like Kusto. Invalid geometry / collapsed
-            # rings -> null.
-            if len(args) not in (1, 2):
-                raise ValueError(f"KQL: {fname}(shape [, tolerance])")
-            tol = args[1] if len(args) == 2 else "10.0"
-            kern = {"geo_line_densify": "__kql_geo_densify_line",
-                    "geo_line_simplify": "__kql_geo_simplify_line",
-                    "geo_polygon_densify": "__kql_geo_densify_poly",
-                    "geo_polygon_simplify": "__kql_geo_simplify_poly",
-                    }[fname]
-            return (f"parse_json({kern}(to_json({args[0]}), "
-                    f"CAST({tol} AS DOUBLE)))")
-        if fname == "geo_intersects_2lines":
-            # planar segment sweep on raw lon/lat (the family's
-            # documented planar approximation); null on invalid input
-            if len(args) != 2:
-                raise ValueError(
-                    "KQL: geo_intersects_2lines(line1, line2)")
-            return (f"__kql_geo_isect2l(to_json({args[0]}), "
-                    f"to_json({args[1]}))")
-        if fname == "geo_s2cell_to_polygon":
-            # GeoJSON Polygon of the cell's 4 corners (chord edges;
-            # true S2 edges are great circles — documented deviation
-            # consistent with the planar geo measures)
-            if len(args) != 1:
-                raise ValueError("KQL: geo_s2cell_to_polygon(token)")
-            return (f"parse_json(__kql_s2_polygon("
-                    f"CAST({args[0]} AS STRING)))")
-        if fname == "bag_keys":
-            # dynamic bag -> array of top-level keys (JSON round-trip;
-            # VARIANT has no native key enumeration yet)
-            if len(args) != 1:
-                raise ValueError("KQL: bag_keys(bag)")
-            return f"json_object_keys(to_json({args[0]}))"
-        if fname == "jaccard_index":
-            if len(args) != 2:
-                raise ValueError("KQL: jaccard_index(set1, set2)")
-            a, b = args
-            inter = f"size(array_intersect({a}, {b}))"
-            uni = f"size(array_union({a}, {b}))"
-            return (f"(CASE WHEN {uni} = 0 THEN CAST(NULL AS DOUBLE) "
-                    f"ELSE CAST({inter} AS DOUBLE) / {uni} END)")
-        if fname == "set_has_element":
-            if len(args) != 2:
-                raise ValueError("KQL: set_has_element(arr, value)")
-            return f"array_contains({args[0]}, {args[1]})"
-        if fname in ("make_bag", "make_bag_if"):
-            # aggregate: merge per-row property bags into one bag.
-            # Kusto picks an arbitrary value for duplicate keys; here
-            # the first-merged bag wins (same policy as bag_merge) —
-            # deterministic given deterministic aggregation order, and
-            # oracled fixtures use disjoint keys so no policy shows.
-            if fname == "make_bag_if":
-                if len(args) != 2:
-                    raise ValueError("KQL: make_bag_if(bag, predicate)")
-                src = f"IF({args[1]}, {args[0]}, NULL)"
-            else:
-                if len(args) != 1:
-                    raise ValueError("KQL: make_bag(bag)")
-                src = args[0]
-            # collect_list drops null bags (rows failing the
-            # predicate). Merge = flatten all entries, keep each key's
-            # FIRST occurrence, rebuild the map. Deliberately NOT an
-            # aggregate() lambda-fold with a map accumulator: a Python
-            # UDF (dynamic_to_json) consuming to_json of that fold in
-            # the same aggregation fails Spark 4.1's UDF extraction on
-            # every execution after a session's first (INTERNAL_ERROR
-            # PythonUDF.eval); the entries-dedup shape is stable.
-            m = f"from_json(to_json({src}), 'map<string,variant>')"
-            ents = f"flatten(collect_list(map_entries({m})))"
-            keys = f"transform({ents}, __mb_x -> __mb_x.key)"
-            firsts = (f"filter(zip_with({ents}, "
-                      f"sequence(0, size({ents}) - 1), "
-                      f"(__mb_e, __mb_i) -> named_struct("
-                      f"'e', __mb_e, 'i', __mb_i)), "
-                      f"__mb_p -> array_position({keys}, "
-                      f"__mb_p.e.key) = __mb_p.i + 1)")
-            merged = (f"map_from_entries(transform({firsts}, "
-                      f"__mb_p -> __mb_p.e))")
-            return f"parse_json(to_json({merged}))"
-        if fname == "percentilew":
-            # weighted percentile: the smallest value whose running
-            # weight (ascending value order) reaches P% of the total.
-            # Exact — real Kusto estimates via T-digest, the same
-            # documented deviation as percentile()/dcount(). Buffers
-            # the group's (value, weight) pairs like Spark's own exact
-            # percentile; null/non-positive weights drop.
-            if len(args) != 3:
-                raise ValueError(
-                    "KQL: percentilew(col, weight, percentile)")
-            return self._percentilew_sql(*args)
-        if fname in ("percentilesw", "percentilesw_array"):
-            # plural weighted percentiles -> one array (Kusto's
-            # percentilesw via summarize tuple assignment, or the
-            # _array form directly). Each element is the exact fold;
-            # the sorted-pairs collect_list is IDENTICAL across
-            # elements, so Spark's aggregation planner deduplicates it
-            # to a single buffered aggregate per group.
-            if len(args) < 3:
-                raise ValueError(
-                    "KQL: percentilesw(col, weight, p1, p2, ...)")
-            v, w = args[0], args[1]
-            elems = ", ".join(self._percentilew_sql(v, w, p)
-                              for p in args[2:])
-            return f"array({elems})"
-        if fname == "gettype":
-            # runtime type name in Kusto vocabulary. The value lifts
-            # to VARIANT through a named_struct JSON round-trip —
-            # analysis-valid for EVERY input type, where a direct
-            # schema_of_variant / CAST(.. AS VARIANT) rejects typed
-            # columns at analysis. Deviations, per this compiler's
-            # carriers: timespans ride as bigint µs (-> 'long');
-            # decimals -> 'real'; datetimes INSIDE a dynamic
-            # stringify (-> 'string'; top-level datetime columns are
-            # caught by the typeof branch).
-            if len(args) != 1:
-                raise ValueError("KQL: gettype(value)")
-            x = args[0]
-            vt = (f"schema_of_variant(variant_get(parse_json("
-                  f"to_json(named_struct('x', {x}))), '$.x'))")
-            return (f"CASE WHEN {x} IS NULL THEN 'null' "
-                    f"WHEN typeof({x}) = 'timestamp' THEN 'datetime' "
-                    f"WHEN {vt} = 'VOID' THEN 'null' "
-                    f"WHEN {vt} IN ('BIGINT', 'INT', 'SMALLINT', "
-                    f"'TINYINT') THEN 'long' "
-                    f"WHEN {vt} IN ('DOUBLE', 'FLOAT') "
-                    f"OR {vt} LIKE 'DECIMAL%' THEN 'real' "
-                    f"WHEN {vt} = 'STRING' THEN 'string' "
-                    f"WHEN {vt} = 'BOOLEAN' THEN 'bool' "
-                    f"WHEN {vt} LIKE 'ARRAY%' THEN 'array' "
-                    f"ELSE 'dictionary' END")
-        if fname == "bag_remove_keys":
-            # top-level key removal (Kusto also accepts JSON paths for
-            # nested keys; the common top-level form is what compiles)
-            if len(args) != 2:
-                raise ValueError("KQL: bag_remove_keys(bag, keys)")
-            bag, keys = args
-            m = f"from_json(to_json({bag}), 'map<string,variant>')"
-            ks = f"from_json(to_json({keys}), 'array<string>')"
-            out = (f"map_filter({m}, (__brk_k, __brk_v) -> "
-                   f"NOT array_contains({ks}, __brk_k))")
-            return f"parse_json(to_json({out}))"
-        if fname == "bag_set_key":
-            # set/overwrite one top-level key; null/missing bag seeds
-            # an empty one (matching Kusto's upsert behavior)
-            if len(args) != 3:
-                raise ValueError("KQL: bag_set_key(bag, key, value)")
-            bag, key, val = args
-            m = (f"coalesce(from_json(to_json({bag}), "
-                 f"'map<string,variant>'), "
-                 f"from_json('{{}}', 'map<string,variant>'))")
-            k = f"CAST({key} AS STRING)"
-            # named_struct round-trip lifts ANY value type to variant
-            # (to_json rejects bare scalars)
-            vv = (f"variant_get(parse_json(to_json(named_struct("
-                  f"'v', {val}))), '$.v')")
-            out = (f"map_concat(map_filter({m}, "
-                   f"(__bsk_k, __bsk_v) -> __bsk_k <> {k}), "
-                   f"map({k}, {vv}))")
-            return f"parse_json(to_json({out}))"
-        if fname == "array_split":
-            # split an array into contiguous chunks at the given
-            # 0-based indices (scalar or array; negatives wrap, values
-            # clamp to [0, n])
-            if len(args) != 2:
-                raise ValueError("KQL: array_split(arr, indices)")
-            arr, idx = args
-            a = f"from_json(to_json({arr}), 'array<variant>')"
-            vi = (f"variant_get(parse_json(to_json(named_struct("
-                  f"'x', {idx}))), '$.x')")
-            raw = (f"coalesce(try_cast({vi} AS ARRAY<BIGINT>), "
-                   f"array(try_cast({vi} AS BIGINT)))")
-            n = f"CAST(size({a}) AS BIGINT)"
-            norm = (f"array_sort(transform({raw}, __as_i -> "
-                    f"greatest(CAST(0 AS BIGINT), least({n}, "
-                    f"IF(__as_i < 0, {n} + __as_i, __as_i)))))")
-            bounds = (f"concat(array(CAST(0 AS BIGINT)), {norm}, "
-                      f"array({n}))")
-            parts = (f"transform(sequence(1, size({bounds}) - 1), "
-                     f"__as_j -> slice({a}, "
-                     f"CAST(element_at({bounds}, __as_j) AS INT) + 1, "
-                     f"CAST(element_at({bounds}, __as_j + 1) "
-                     f"- element_at({bounds}, __as_j) AS INT)))")
-            return (f"CASE WHEN {a} IS NULL THEN NULL "
-                    f"ELSE parse_json(to_json({parts})) END")
-        if fname == "has_any_index":
-            # 0-based index of the first term in `values` that the
-            # source string `has` (whole-term match); -1 when none
-            if len(args) != 2:
-                raise ValueError("KQL: has_any_index(source, values)")
-            src, vals = args
-            toks = (f"split(lower({_str_if_variant(src)}), "
-                    f"'[^a-z0-9]+')")
-            vv = f"from_json(to_json({vals}), 'array<string>')"
-            hits = (f"filter(transform(sequence(0, size({vv}) - 1), "
-                    f"__hai_i -> IF(array_contains({toks}, "
-                    f"lower(element_at({vv}, "
-                    f"CAST(__hai_i + 1 AS INT)))), __hai_i, -1)), "
-                    f"__hai_x -> __hai_x >= 0)")
-            return (f"CASE WHEN {vv} IS NULL OR size({vv}) = 0 "
-                    f"THEN -1 "
-                    f"ELSE coalesce(try_element_at({hits}, 1), -1) "
-                    f"END")
-        if fname == "dynamic_to_json":
-            # canonical JSON text: keys sorted at every nesting level
-            # (json.dumps sort_keys in an Arrow-batched UDF — key
-            # ordering is a text-level property Spark SQL can't see)
-            if len(args) != 1:
-                raise ValueError("KQL: dynamic_to_json(value)")
-            return f"__kql_dyn2json(to_json({args[0]}))"
-        if fname == "totimespan":
-            # parse "[-][d.]hh:mm:ss[.fffffff]" (Kusto timespan text)
-            # into MICROSECONDS — the same unit timespan literals carry
-            # through this compiler; unparseable -> null
-            if len(args) != 1:
-                raise ValueError("KQL: totimespan(text)")
-            s = f"CAST({args[0]} AS STRING)"
-            body = f"ltrim('-', {s})"
-            pat = (r"'^(?:(\\d+)\\.)?(\\d+):(\\d+):(\\d+)"
-                   r"(?:\\.(\\d+))?$'")
-            grp = (lambda i:
-                   f"coalesce(try_cast(nullif(regexp_extract({body}, "
-                   f"{pat}, {i}), '') AS BIGINT), 0)")
-            frac = (f"coalesce(try_cast(substring(rpad(nullif("
-                    f"regexp_extract({body}, {pat}, 5), ''), 6, '0'), "
-                    f"1, 6) AS BIGINT), 0)")
-            total = (f"({grp(1)} * 86400000000 + {grp(2)} * 3600000000 "
-                     f"+ {grp(3)} * 60000000 + {grp(4)} * 1000000 "
-                     f"+ {frac})")
-            return (f"(CASE WHEN {body} RLIKE {pat} THEN "
-                    f"IF(startswith({s}, '-'), -{total}, {total}) "
-                    f"ELSE NULL END)")
-        if fname in ("array_iff", "array_iif"):
-            # element-wise conditional merge of two arrays by a
-            # boolean-array mask (index-aligned; null past either end);
-            # array_iif is Kusto's documented alias. Empty-mask guard:
-            # sequence(1, 0) DESCENDS to [1, 0] (the round-5 gotcha),
-            # so an empty cond array must short-circuit.
-            if len(args) != 3:
-                raise ValueError(f"KQL: {fname}(cond_arr, a, b)")
-            c, a, b = [self._dyn_arr_arg(x) for x in args]
-            return (f"(CASE WHEN size({c}) <= 0 THEN array() ELSE "
-                    f"transform(sequence(1, size({c})), __ai_i -> "
-                    f"IF(CAST(try_element_at({c}, __ai_i) AS BOOLEAN), "
-                    f"try_element_at({a}, __ai_i), "
-                    f"try_element_at({b}, __ai_i))) END)")
-        if fname in ("array_rotate_left", "array_rotate_right"):
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(arr, n)")
-            arr, n = self._dyn_arr_arg(args[0]), args[1]
-            # normalize the shift into [0, size) (negative n rotates
-            # the other way, like Kusto)
-            k = (f"CAST(pmod({'-' if fname.endswith('right') else ''}"
-                 f"({n}), size({arr})) AS INT)")
-            return (f"(CASE WHEN size({arr}) = 0 THEN {arr} ELSE "
-                    f"concat(slice({arr}, {k} + 1, "
-                    f"size({arr}) - {k}), "
-                    f"slice({arr}, 1, {k})) END)")
-        if fname in ("array_shift_left", "array_shift_right"):
-            # shift with null (or `fill`) padding, Kusto semantics;
-            # negative n shifts the other way
-            if len(args) not in (2, 3):
-                raise ValueError(f"KQL: {fname}(arr, n[, fill])")
-            arr, n = self._dyn_arr_arg(args[0]), args[1]
-            fill = args[2] if len(args) == 3 else "NULL"
-            if fname == "array_shift_right":
-                n = f"(-({n}))"
-            # empty-array guard: sequence(1, 0) descends to [1, 0]
-            # (round-5 gotcha) — an empty input must stay empty
-            return (f"(CASE WHEN size({arr}) <= 0 THEN {arr} ELSE "
-                    f"transform(sequence(1, size({arr})), __as_i -> "
-                    f"CASE WHEN __as_i + ({n}) BETWEEN 1 AND "
-                    f"size({arr}) THEN "
-                    f"element_at({arr}, CAST(__as_i + ({n}) AS INT)) "
-                    f"ELSE {fill} END) END)")
-        if fname == "zip":
-            # zip(a1, a2, ...) -> dynamic array of n-tuples (arrays),
-            # null-padded to the LONGEST input (Kusto). Each input is
-            # JSON-lifted to array<variant> (accepts native arrays AND
-            # dynamic literals — the r10 coercion pattern); the lifts
-            # bind ONCE via the struct hop so the per-element lambda
-            # body doesn't re-evaluate them (r9 O(n^2) gotcha).
-            if len(args) < 2:
-                raise ValueError("KQL: zip(arr1, arr2, ...)")
-            binds = ", ".join(
-                f"'z{i}', from_json(to_json({a}), 'array<variant>')"
-                for i, a in enumerate(args))
-            sizes = ", ".join(f"size(__zs.z{i})"
-                              for i in range(len(args)))
-            row = ", ".join(f"try_element_at(__zs.z{i}, __zp_i)"
-                            for i in range(len(args)))
-            return (f"element_at(transform(array(named_struct({binds})"
-                    f"), __zs -> CASE WHEN greatest({sizes}) <= 0 "
-                    f"THEN parse_json('[]') ELSE parse_json(to_json("
-                    f"transform(sequence(1, greatest({sizes})), "
-                    f"__zp_i -> array({row})))) END), 1)")
-        if fname == "isutf8":
-            # Kusto: true when the value is a valid utf8 string. Spark
-            # strings are validated on decode, so test the utf-8 BYTES
-            # of the string (surrogate damage -> false); null -> null.
-            if len(args) != 1:
-                raise ValueError("KQL: isutf8(s)")
-            return (f"is_valid_utf8(CAST({args[0]} AS STRING))")
-        if fname == "regex_quote":
-            # RE2 QuoteMeta semantics: escape every ASCII char outside
-            # [A-Za-z0-9_]; non-ASCII code points pass through (RE2
-            # would not escape them and '\é' is not valid RE2). The
-            # pattern/replacement are built via chr(92) concat because
-            # Spark SQL literal backslash-escape processing mangles
-            # '\x..' forms.
-            if len(args) != 1:
-                raise ValueError("KQL: regex_quote(s)")
-            pat = (r"concat('([^A-Za-z0-9_', chr(92), 'x80-', "
-                   r"chr(92), 'x{10FFFF}])')")
-            rep = "concat(chr(92), chr(92), '$1')"
-            return (f"regexp_replace(CAST({args[0]} AS STRING), "
-                    f"{pat}, {rep})")
-        if fname == "column_ifexists":
-            # schema-defensive column reference: the REAL column when
-            # it exists, else the default (resolved at compile time
-            # against the pipeline schema, like Kusto)
-            if len(args) != 2:
-                raise ValueError(
-                    "KQL: column_ifexists('name', default)")
-            m = re.fullmatch(r"\s*'([^']*)'\s*", args[0])
+                    f"KQL: {fname} keys must be string literals")
+        pairs = ", ".join(f"{k}, {v}"
+                          for k, v in zip(args[::2], args[1::2]))
+        return f"parse_json(to_json(named_struct({pairs})))"
+
+    @_fn("bag_pack_columns", 1, None, "dynamic", "bag_pack_columns(col1, ...)")
+    def _fn_bag_pack_columns(self, fname: str, args: list[str]) -> str:
+        # bag_pack_columns(c1, c2, ...) -> bag keyed by the COLUMN
+        # NAMES. Arguments must be bare column references (that is
+        # the Kusto contract too); a compiled column is exactly a
+        # backticked identifier, so the key is recoverable from
+        # the compiled argument. Nulls are kept, like pack_all's
+        # default.
+        keys = []
+        for a in args:
+            m = re.fullmatch(r"`([^`]+)`", a)
             if not m:
                 raise ValueError(
-                    "KQL: column_ifexists needs a literal column name")
-            if self.df is not None and m.group(1) in self.df.columns:
-                return f"`{m.group(1)}`"
-            return args[1]
-        if fname == "strcat_array":
-            if len(args) != 2:
-                raise ValueError("KQL: strcat_array(array, sep)")
-            return (f"array_join(transform({args[0]}, "
-                    f"v -> CAST(v AS STRING)), {args[1]})")
-        if fname == "split":
-            # KQL split: LITERAL delimiter (Spark's split takes a regex
-            # — \Q..\E-quote it); the 3-arg form returns a one-element
-            # array with the 0-based requested part, empty array past
-            # the end (Kusto's contract)
-            if len(args) not in (2, 3):
-                raise ValueError("KQL: split(source, delimiter[, index])")
-            parts = f"split({args[0]}, concat('\\\\Q', {args[1]}, '\\\\E'))"
-            if len(args) == 2:
-                return parts
-            idx = args[2]
-            return (f"(CASE WHEN size({parts}) > ({idx}) AND ({idx}) >= 0 "
-                    f"THEN array(element_at({parts}, ({idx}) + 1)) "
-                    f"ELSE array() END)")
-        if fname == "translate":
-            # Kusto arg order is (searchList, replacementList, text);
-            # Spark's translate is (text, from, to)
-            if len(args) != 3:
-                raise ValueError(
-                    "KQL: translate(searchList, replacementList, text)")
-            return f"translate({args[2]}, {args[0]}, {args[1]})"
-        if fname == "url_encode":
-            # form-style encoding ('+' for space); hex digits are
-            # uppercase (documented deviation: Kusto emits lowercase)
-            if len(args) != 1:
-                raise ValueError("KQL: url_encode(url)")
-            return f"url_encode({args[0]})"
-        if fname == "url_encode_component":
-            if len(args) != 1:
-                raise ValueError("KQL: url_encode_component(url)")
-            return f"replace(url_encode({args[0]}), '+', '%20')"
-        if fname == "url_decode":
-            if len(args) != 1:
-                raise ValueError("KQL: url_decode(url)")
-            return f"url_decode({args[0]})"
-        if fname == "todecimal":
-            if len(args) != 1:
-                raise ValueError("KQL: todecimal(x)")
-            return f"try_cast({args[0]} AS DECIMAL(38, 18))"
-        if fname in ("binary_and", "binary_or", "binary_xor"):
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(a, b)")
-            op = {"binary_and": "&", "binary_or": "|",
-                  "binary_xor": "^"}[fname]
-            return f"({args[0]} {op} {args[1]})"
-        if fname == "binary_not":
-            if len(args) != 1:
-                raise ValueError("KQL: binary_not(a)")
-            return f"(~({args[0]}))"
-        if fname in ("binary_shift_left", "binary_shift_right"):
-            # 64-bit shifts (CAST keeps Spark's int shift from wrapping
-            # at 32)
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(value, shift)")
-            fn = ("shiftleft" if fname == "binary_shift_left"
-                  else "shiftright")
-            return f"{fn}(CAST({args[0]} AS BIGINT), {args[1]})"
-        if fname == "parse_version":
-            # "a.b.c.d" -> a·10^24 + b·10^16 + c·10^8 + d as
-            # DECIMAL(38,0) (Kusto's comparable normalization; up to 4
-            # numeric parts of <= 8 digits, anything else -> null)
-            if len(args) != 1:
-                raise ValueError("KQL: parse_version(version)")
-            parts = f"split({args[0]}, '\\\\.')"
+                    "KQL: bag_pack_columns arguments must be "
+                    "column references, got " + a)
+            keys.append(m.group(1).replace("'", "''"))
+        pairs = ", ".join(f"'{k}', {a}"
+                          for k, a in zip(keys, args))
+        return (f"parse_json(to_json(named_struct({pairs}), "
+                f"map('ignoreNullFields', 'false')))")
 
-            def _vp(i):
-                return (f"CAST(coalesce(try_cast(try_element_at("
-                        f"{parts}, {i}) AS BIGINT), 0) AS DECIMAL(38,0))")
-            valid = (f"(size({parts}) BETWEEN 1 AND 4 AND forall({parts},"
-                     f" __pv_x -> try_cast(__pv_x AS BIGINT) IS NOT NULL"
-                     f" AND try_cast(__pv_x AS BIGINT) "
-                     f"BETWEEN 0 AND 99999999))")
-            expr = (f"((({_vp(1)} * 100000000 + {_vp(2)}) * 100000000 "
-                    f"+ {_vp(3)}) * 100000000 + {_vp(4)})")
-            return (f"(CASE WHEN {valid} "
-                    f"THEN CAST({expr} AS DECIMAL(38,0)) ELSE NULL END)")
-        if fname in ("parse_ipv4", "parse_ipv4_mask", "ipv4_is_private",
-                     "ipv4_is_in_range", "format_ipv4",
-                     "format_ipv4_mask", "ipv4_netmask_suffix",
-                     "ipv4_compare", "ipv4_is_match",
-                     "ipv4_range_to_cidr_list"):
-            return self._ipv4_fn(fname, args)
-        if fname in ("has_ipv4", "has_any_ipv4", "has_ipv4_prefix",
-                     "has_any_ipv4_prefix", "ipv4_is_in_any_range"):
-            return self._ipv4_scan_fn(fname, args)
-        if fname == "datetime_part":
-            # datetime_part('part', dt) -> long; sub-second parts from
-            # the in-second epoch-µs remainder (storage is µs, so the
-            # nanosecond part carries trailing zeros — documented)
-            if len(args) != 2:
-                raise ValueError("KQL: datetime_part(part, dt)")
-            pm2 = re.fullmatch(r"\s*'(\w+)'\s*", args[0] or "")
-            if not pm2:
+    @_fn("exp2 exp10", 1, 1, "real", "{name}(x)")
+    def _fn_exp2(self, fname: str, args: list[str]) -> str:
+        base = "2" if fname == "exp2" else "10"
+        return f"power({base}, {args[0]})"
+
+    @_fn("array_sum array_avg", 1, 1, "real", "{name}(arr)")
+    def _fn_array_sum(self, fname: str, args: list[str]) -> str:
+        # dynamic arrays ride VARIANT: one typed cast covers both
+        # native arrays and parse_json output. Kusto IGNORES
+        # null/non-numeric elements (try_cast turns them into null
+        # slots), so fold over the non-null filter — one poisoned
+        # element must not null the whole result — and array_avg
+        # divides by the count of elements actually summed.
+        arr = (f"filter(try_cast({args[0]} AS ARRAY<DOUBLE>), "
+               f"__as_e -> __as_e IS NOT NULL)")
+        total = (f"aggregate({arr}, CAST(0.0 AS DOUBLE), "
+                 f"(__as_a, __as_x) -> __as_a + __as_x)")
+        if fname == "array_sum":
+            return total
+        return (f"(CASE WHEN size({arr}) > 0 THEN {total} "
+                f"/ size({arr}) END)")
+
+    @_fn("array_index_of", 2, 5, "long",
+         "array_index_of(arr, value [, start [, length [, occurrence]]])")
+    def _fn_array_index_of(self, fname: str, args: list[str]) -> str:
+        # array_index_of(arr, value [, start [, length
+        # [, occurrence]]]): 0-based index in the ORIGINAL array,
+        # -1 when missing; negative start counts from the end,
+        # length -1 = unbounded, occurrence is 1-based. Elements
+        # match numerically when both sides parse as doubles
+        # (exact), else by stringified equality.
+        a = f"from_json(to_json({args[0]}), 'array<variant>')"
+        v = args[1]
+        start = args[2] if len(args) >= 3 else "0"
+        length = args[3] if len(args) >= 4 else "-1"
+        occ = args[4] if len(args) == 5 else "1"
+        n = f"size({a})"
+        s = (f"IF(CAST({start} AS INT) < 0, "
+             f"{n} + CAST({start} AS INT), CAST({start} AS INT))")
+        hi = (f"IF(CAST({length} AS INT) < 0, {n} - 1, "
+              f"{s} + CAST({length} AS INT) - 1)")
+        e = f"try_element_at({a}, __aio_i + 1)"
+        match = (f"(coalesce(try_cast({e} AS DOUBLE) = "
+                 f"try_cast({v} AS DOUBLE), false) "
+                 f"OR coalesce(CAST({e} AS STRING) = "
+                 f"CAST({v} AS STRING), false))")
+        idxs = (f"filter(transform(sequence(0, {n} - 1), "
+                f"__aio_i -> IF(__aio_i >= {s} "
+                f"AND __aio_i <= {hi} AND {match}, "
+                f"__aio_i, -1)), __aio_x -> __aio_x >= 0)")
+        return (f"CAST(coalesce(try_element_at({idxs}, "
+                f"CAST({occ} AS INT)), -1) AS BIGINT)")
+
+    @_fn("base64_encode_tostring", 1, 1, "string", "base64_encode_tostring(s)")
+    def _fn_base64_encode_tostring(self, fname: str, args: list[str]) -> str:
+        return f"base64(encode({args[0]}, 'UTF-8'))"
+
+    @_fn("base64_decode_tostring", 1, 1, "string", "base64_decode_tostring(s)")
+    def _fn_base64_decode_tostring(self, fname: str, args: list[str]) -> str:
+        return f"decode(unbase64({args[0]}), 'UTF-8')"
+
+    @_fn("base64_decode_toarray", 1, 1, "dynamic", "base64_decode_toarray(s)")
+    def _fn_base64_decode_toarray(self, fname: str, args: list[str]) -> str:
+        # base64 text -> dynamic array of byte values (same byte
+        # rendering as the converter's binary sink,
+        # functions/conversion.bytes_to_int_array)
+        b = f"unbase64({args[0]})"
+        arr = (f"transform(sequence(1, length({b})), __bd_i -> "
+               f"CAST(conv(substring(hex({b}), "
+               f"(__bd_i - 1) * 2 + 1, 2), 16, 10) AS INT))")
+        return (f"parse_json(to_json(CASE "
+                f"WHEN {b} IS NULL THEN NULL "
+                f"WHEN length({b}) = 0 THEN array() "
+                f"ELSE {arr} END))")
+
+    @_fn("zlib_compress_to_base64_string zlib_decompress_from_base64_string "
+         "gzip_compress_to_base64_string gzip_decompress_from_base64_string "
+         "punycode_from_string punycode_to_string "
+         "punycode_domain_from_string punycode_domain_to_string", 1, 1, None,
+         "{name}(string)")
+    def _fn_zlib_compress_to_base64_string(self, fname: str,
+                                           args: list[str]) -> str:
+        # Kusto codec scalars; Arrow-batched stdlib kernels (see
+        # _register_codec_udfs). Decoders return "" on bad input,
+        # per the Kusto docs.
+        udf = {
+            "zlib_compress_to_base64_string": "__kql_zlib_c",
+            "zlib_decompress_from_base64_string": "__kql_zlib_d",
+            "gzip_compress_to_base64_string": "__kql_gzip_c",
+            "gzip_decompress_from_base64_string": "__kql_gzip_d",
+            "punycode_from_string": "__kql_puny_e",
+            "punycode_to_string": "__kql_puny_d",
+            "punycode_domain_from_string": "__kql_idna_e",
+            "punycode_domain_to_string": "__kql_idna_d",
+        }[fname]
+        return f"{udf}({args[0]})"
+
+    @_fn("gamma loggamma erf erfc", 1, 1, None, "{name}(x)")
+    def _fn_gamma(self, fname: str, args: list[str]) -> str:
+        # Kusto special functions; libm kernels (see
+        # _register_math_udfs), domain errors -> null
+        udf = {"gamma": "__kql_gamma", "loggamma": "__kql_lgamma",
+               "erf": "__kql_erf", "erfc": "__kql_erfc"}[fname]
+        return f"{udf}(CAST({args[0]} AS DOUBLE))"
+
+    @_fn("beta_cdf beta_pdf beta_inv", 3, 3, None, "{name}(x, alpha, beta)")
+    def _fn_beta_cdf(self, fname: str, args: list[str]) -> str:
+        udf = {"beta_cdf": "__kql_beta_cdf",
+               "beta_pdf": "__kql_beta_pdf",
+               "beta_inv": "__kql_beta_inv"}[fname]
+        a = ", ".join(f"CAST({x} AS DOUBLE)" for x in args)
+        return f"{udf}({a})"
+
+    @_fn("welch_test", 6, 6, None,
+         "welch_test(mean1, variance1, count1, mean2, variance2, count2)")
+    def _fn_welch_test(self, fname: str, args: list[str]) -> str:
+        # welch_test(mean1, var1, count1, mean2, var2, count2) ->
+        # two-sided p-value from per-sample moments
+        a = ", ".join(f"CAST({x} AS DOUBLE)" for x in args)
+        return f"__kql_welch({a})"
+
+    @_fn("percentile_tdigest percentrank_tdigest rank_tdigest", 2, 2, None,
+         "{name}(tdigest, arg)")
+    @_fn("percentile_array_tdigest", 2, None, None,
+         "percentile_array_tdigest(td, p...)")
+    def _fn_percentile_tdigest(self, fname: str, args: list[str]) -> str:
+        # scalars over the grid quantile sketch built by
+        # `evaluate tdigest(...)` (struct<scale, bs:array<(b,w)>>;
+        # see _tdigest for why a grid, not centroids). Pure
+        # higher-order SQL over the BOUNDED bucket array — stays
+        # JVM-side; totals bind ONCE via the named_struct/transform
+        # trick (an aggregate inlined into a lambda body would
+        # re-fold per element).
+        td, a = args[0], args[1]
+        tot = (f"aggregate({td}.bs, 0L, "
+               f"(__tda, __tdx) -> __tda + __tdx.w)")
+
+        def perc(a):
+            cross = (
+                f"aggregate({td}.bs, "
+                f"named_struct('c', 0L, 'r', "
+                f"CAST(NULL AS BIGINT)), "
+                f"(__tda, __tdx) -> named_struct("
+                f"'c', __tda.c + __tdx.w, "
+                f"'r', CASE WHEN __tda.r IS NULL AND "
+                f"(__tda.c + __tdx.w) * 100.0e0 >= "
+                f"({a}) * __tds.t THEN __tdx.b "
+                f"ELSE __tda.r END), "
+                f"__tda -> __tda.r)")
+            return (f"element_at(transform(array(named_struct("
+                    f"'t', {tot})), __tds -> "
+                    f"CAST({cross} AS DOUBLE) * {td}.scale), 1)")
+        if fname == "percentile_tdigest":
+            return perc(a)
+        if fname == "percentile_array_tdigest":
+            # percentile_array_tdigest(td, p1, p2, ...) or
+            # (td, dynamic([...])) -> dynamic array; one crossing
+            # fold per requested percentile over the bounded
+            # bucket array (the outer lambda var only carries the
+            # percentile, so the inner fold vars don't shadow)
+            if len(args) == 2 and ("parse_json" in args[1]
+                                   or args[1].lstrip("(")
+                                   .startswith("array(")):
+                parr = (f"from_json(to_json({args[1]}), "
+                        f"'array<double>')")
+            else:
+                parr = ("array(" + ", ".join(
+                    f"CAST({x} AS DOUBLE)" for x in args[1:])
+                    + ")")
+            return (f"parse_json(to_json(transform({parr}, "
+                    f"__pat_p -> {perc('__pat_p')})))")
+        below = (f"aggregate(filter({td}.bs, __tdx -> __tdx.b <= "
+                 f"FLOOR(({a}) / {td}.scale + 0.5e0)), 0L, "
+                 f"(__tda, __tdx) -> __tda + __tdx.w)")
+        if fname == "rank_tdigest":
+            # rank of `a` = sketched values <= a (1..n when present)
+            return below
+        return (f"element_at(transform(array(named_struct("
+                f"'t', {tot}, 'c', {below})), __tds -> "
+                f"__tds.c * 100.0e0 / __tds.t), 1)")
+
+    @_fn("make_datetime", 3, 6, "datetime",
+         "make_datetime(y, m, d [, h, mi, s])")
+    def _fn_make_datetime(self, fname: str, args: list[str]) -> str:
+        # make_datetime(y, m, d [, h, mi, s]) — fractional seconds
+        # allowed, like Kusto
+        if len(args) not in (3, 6):
+            raise ValueError(
+                "KQL: make_datetime(y, m, d [, h, mi, s])")
+        y, mo, d = args[:3]
+        h, mi, s = (args[3:] if len(args) == 6
+                    else ("0", "0", "0"))
+        return (f"make_timestamp(CAST({y} AS INT), "
+                f"CAST({mo} AS INT), CAST({d} AS INT), "
+                f"CAST({h} AS INT), CAST({mi} AS INT), "
+                f"CAST({s} AS DECIMAL(16, 6)))")
+
+    @_fn("make_timespan", 3, 4, "timespan", "make_timespan([d,] h, m, s)")
+    def _fn_make_timespan(self, fname: str, args: list[str]) -> str:
+        # make_timespan([d,] h, m, s) -> microseconds (this
+        # compiler's timespan carrier); s may be fractional
+        d = args[0] if len(args) == 4 else "0"
+        h, mi, s = args[-3:]
+        return (f"(((CAST({d} AS BIGINT) * 24 "
+                f"+ CAST({h} AS BIGINT)) * 60 "
+                f"+ CAST({mi} AS BIGINT)) * 60000000 "
+                f"+ CAST(CAST({s} AS DOUBLE) * 1000000 AS BIGINT))")
+
+    @_fn("unixtime_seconds_todatetime unixtime_milliseconds_todatetime "
+         "unixtime_microseconds_todatetime unixtime_nanoseconds_todatetime",
+         1, 1, "datetime",
+         "{name}(value)")
+    def _fn_unixtime_seconds_todatetime(self, fname: str,
+                                        args: list[str]) -> str:
+        x = f"CAST({args[0]} AS DOUBLE)"
+        scale = {"unixtime_seconds_todatetime": 1_000_000,
+                 "unixtime_milliseconds_todatetime": 1_000,
+                 "unixtime_microseconds_todatetime": 1,
+                 }.get(fname)
+        if scale is None:  # nanoseconds: integer div, no overflow
+            return (f"timestamp_micros(CAST({args[0]} AS BIGINT) "
+                    f"div 1000)")
+        return f"timestamp_micros(CAST({x} * {scale} AS BIGINT))"
+
+    @_fn("bitset_count_ones", 1, 1, None, "bitset_count_ones(value)")
+    def _fn_bitset_count_ones(self, fname: str, args: list[str]) -> str:
+        return f"CAST(bit_count(CAST({args[0]} AS BIGINT)) AS BIGINT)"
+
+    @_fn("array_reverse", 1, 1, None, "array_reverse(arr)")
+    def _fn_array_reverse(self, fname: str, args: list[str]) -> str:
+        return (f"parse_json(to_json(reverse(from_json(to_json("
+                f"{args[0]}), 'array<variant>'))))")
+
+    @_fn("toguid", 1, 1, "string", "toguid(value)")
+    def _fn_toguid(self, fname: str, args: list[str]) -> str:
+        # canonical 8-4-4-4-12 (any case, optional braces) or
+        # bare 32-hex -> normalized lowercase guid text; else null
+        s = f"trim(BOTH '{{}}' FROM CAST({args[0]} AS STRING))"
+        canon_pat = (r"'^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}"
+                     r"-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
+                     r"-[0-9a-fA-F]{12}$'")
+        hex32 = r"'^[0-9a-fA-F]{32}$'"
+        dashed = (f"concat_ws('-', substring({s}, 1, 8), "
+                  f"substring({s}, 9, 4), substring({s}, 13, 4), "
+                  f"substring({s}, 17, 4), substring({s}, 21, 12))")
+        return (f"(CASE WHEN {s} RLIKE {canon_pat} "
+                f"THEN lower({s}) "
+                f"WHEN {s} RLIKE {hex32} THEN lower({dashed}) "
+                f"ELSE NULL END)")
+
+    @_fn("unicode_codepoints_from_string", 1, 1, "dynamic",
+         "unicode_codepoints_from_string(s)")
+    def _fn_unicode_codepoints_from_string(self, fname: str,
+                                           args: list[str]) -> str:
+        # (?s). iterates CODE POINTS in Java regex; ascii() maps a
+        # one-char string to its code point
+        return (f"parse_json(to_json(transform(regexp_extract_all("
+                f"{args[0]}, '(?s).', 0), "
+                f"__cp_c -> ascii(__cp_c))))")
+
+    @_fn("unicode_codepoints_to_string make_string", 1, None, None,
+         "{name}(arr | cp, ...)")
+    def _fn_unicode_codepoints_to_string(self, fname: str,
+                                         args: list[str]) -> str:
+        # make_string is Kusto's (deprecated) alias for
+        # unicode_codepoints_to_string — same signature
+        if len(args) == 1:
+            a = (f"try_cast(variant_get(parse_json(to_json("
+                 f"named_struct('x', {args[0]}))), '$.x') "
+                 f"AS ARRAY<INT>)")
+        else:
+            a = ("array(" + ", ".join(
+                f"CAST({x} AS INT)" for x in args) + ")")
+        # Spark's char() truncates above 255 — render each code
+        # point as a JSON \\uXXXX escape (surrogate pair above
+        # the BMP) and let from_json decode; escapes also make
+        # quote/backslash code points injection-safe
+        esc = (f"IF(__cs_i <= 65535, "
+               f"concat('\\\\u', lpad(hex(__cs_i), 4, '0')), "
+               f"concat("
+               f"'\\\\u', lpad(hex(55296 "
+               f"+ ((__cs_i - 65536) div 1024)), 4, '0'), "
+               f"'\\\\u', lpad(hex(56320 "
+               f"+ ((__cs_i - 65536) % 1024)), 4, '0')))")
+        # from_json needs a container schema — decode via a
+        # one-element JSON array
+        return (f"element_at(from_json(concat('[\"', "
+                f"array_join(transform({a}, __cs_i -> {esc}), "
+                f"''), '\"]'), 'array<string>'), 1)")
+
+    @_fn("parse_urlquery", 1, 1, "dynamic", "parse_urlquery(query)")
+    def _fn_parse_urlquery(self, fname: str, args: list[str]) -> str:
+        # query-string bag: Kusto's {"Query Parameters": {k: v}}
+        # shape; '?'-prefixed/full-URL input takes the part after
+        # '?', a '#fragment' tail is cut, keys and values
+        # url-decode (invalid %-escapes keep the raw text)
+        q = f"CAST({args[0]} AS STRING)"
+        qs = (f"substring_index(CASE WHEN instr({q}, '?') > 0 "
+              f"THEN substr({q}, instr({q}, '?') + 1) "
+              f"ELSE {q} END, '#', 1)")
+        m = f"str_to_map({qs}, '&', '=')"
+        dec = (f"transform_values(transform_keys({m}, "
+               f"(__uq_k, __uq_v) -> coalesce(try_url_decode("
+               f"__uq_k), __uq_k)), (__uq_k, __uq_v) -> "
+               f"coalesce(try_url_decode(__uq_v), __uq_v))")
+        return (f"parse_json(to_json(named_struct("
+                f"'Query Parameters', {dec})))")
+
+    @_fn("base64_encode_fromguid base64_decode_toguid", 1, 1, None,
+         "{name}(value)")
+    def _fn_base64_encode_fromguid(self, fname: str, args: list[str]) -> str:
+        # .NET Guid <-> base64: the first three components are
+        # LITTLE-endian in the byte form (doc example
+        # ae3133f2-... <-> '8jMxriJurkmwahbmqbIS6w=='), so the hex
+        # stream is permuted [3210 54 76 89abcdef] — an involution,
+        # the same reorder serves both directions. Invalid input
+        # (bad base64, wrong length, malformed guid) -> null.
+
+        def reorder(h):
+            return (f"concat(substr({h}, 7, 2), substr({h}, 5, 2), "
+                    f"substr({h}, 3, 2), substr({h}, 1, 2), "
+                    f"substr({h}, 11, 2), substr({h}, 9, 2), "
+                    f"substr({h}, 15, 2), substr({h}, 13, 2), "
+                    f"substr({h}, 17, 16))")
+        if fname == "base64_encode_fromguid":
+            s = (f"lower(replace(trim(BOTH '{{}}' FROM "
+                 f"CAST({args[0]} AS STRING)), '-', ''))")
+            return (f"(CASE WHEN {s} RLIKE '^[0-9a-f]{{32}}$' "
+                    f"THEN base64(unhex({reorder(s)})) "
+                    f"ELSE NULL END)")
+        bx = f"try_to_binary({args[0]}, 'base64')"
+        hx = f"lower(hex({bx}))"
+        g = reorder(hx)
+        return (f"(CASE WHEN length({bx}) = 16 THEN "
+                f"concat_ws('-', substr({g}, 1, 8), "
+                f"substr({g}, 9, 4), substr({g}, 13, 4), "
+                f"substr({g}, 17, 4), substr({g}, 21, 12)) "
+                f"ELSE NULL END)")
+
+    @_fn("treepath", 1, 1, None, "treepath(bag)")
+    def _fn_treepath(self, fname: str, args: list[str]) -> str:
+        # every node path of the bag, Kusto's bracket-quoted form
+        # (['a']['b'], numeric hops for arrays) — recursive walk in
+        # the dynamic kernel registry
+        return (f"parse_json(to_json(__kql_treepath("
+                f"to_json({args[0]}))))")
+
+    @_fn("estimate_data_size", 1, None, None, "estimate_data_size(e1, ...)")
+    def _fn_estimate_data_size(self, fname: str, args: list[str]) -> str:
+        # DOCUMENTED ESTIMATE (like Kusto's): the JSON text octet
+        # length of the argument tuple — a stable, engine-local
+        # payload proxy, not byte-exact storage accounting
+        fields = ", ".join(f"'f{i}', {a}"
+                           for i, a in enumerate(args))
+        return (f"CAST(octet_length(to_json(named_struct("
+                f"{fields}))) AS BIGINT)")
+
+    @_fn("parse_url", 1, 1, "dynamic", "parse_url(url) takes 1 arg")
+    def _fn_parse_url(self, fname: str, args: list[str]) -> str:
+        # Kusto parse_url -> dynamic bag. Built from Spark's native
+        # parse_url parts + str_to_map for the query string, JSON
+        # round-tripped onto VARIANT so d.Host / d.QueryParameters.k
+        # path access works like any other dynamic. Deviation: the
+        # query bag key is QueryParameters (no space; identifier
+        # paths cannot address 'Query Parameters').
+        u = args[0]
+        qmap = (f"str_to_map(coalesce(parse_url({u}, 'QUERY'), ''), "
+                f"'&', '=')")
+        # Spark's parse_url has no PORT part (HOST/PATH/QUERY/REF/
+        # PROTOCOL/FILE/AUTHORITY/USERINFO only; PORT yields NULL),
+        # so the port is cut from the AUTHORITY's ':NNNN' suffix;
+        # nullif keeps portless URLs consistent with the other
+        # components (null -> dropped by to_json, like Host etc.)
+        port = (f"nullif(regexp_extract(coalesce("
+                f"parse_url({u}, 'AUTHORITY'), ''), "
+                f"':([0-9]+)$', 1), '')")
+        obj = (f"named_struct("
+               f"'Scheme', parse_url({u}, 'PROTOCOL'), "
+               f"'Host', parse_url({u}, 'HOST'), "
+               f"'Port', {port}, "
+               f"'Path', parse_url({u}, 'PATH'), "
+               f"'Fragment', parse_url({u}, 'REF'), "
+               f"'QueryParameters', {qmap})")
+        return f"parse_json(to_json({obj}))"
+
+    @_fn("bag_merge", 2, None, "dynamic", "bag_merge(bag1, bag2, ...)")
+    def _fn_bag_merge(self, fname: str, args: list[str]) -> str:
+        # Kusto bag_merge(bag1, bag2, ...): merge property bags,
+        # FIRST occurrence of a key wins (earlier args shadow later
+        # ones). Pure expression: each variant bag round-trips
+        # through map<string,variant> (faithful — values stay
+        # typed variants), an aggregate fold concatenates with a
+        # keys-already-present filter (lambda vars, so the
+        # accumulator is never textually duplicated), and the
+        # merged map re-enters VARIANT. Null/non-object args act
+        # as empty bags.
+        maps = [f"coalesce(from_json(to_json({a}), "
+                f"'map<string,variant>'), "
+                f"from_json('{{}}', 'map<string,variant>'))"
+                for a in args]
+        merged = (f"aggregate(array({', '.join(maps[1:])}), "
+                  f"{maps[0]}, (__bm_a, __bm_m) -> "
+                  f"map_concat(__bm_a, map_filter(__bm_m, "
+                  f"(__bm_k, __bm_v) -> NOT array_contains("
+                  f"map_keys(__bm_a), __bm_k))))")
+        return f"parse_json(to_json({merged}))"
+
+    @_fn("make_list make_set", 1, 2, "array", "{name}(expr [, maxSize])")
+    def _fn_make_list(self, fname: str, args: list[str]) -> str:
+        # optional maxSize SECOND arg caps the collection (Kusto
+        # semantics — silently ignoring it returned unbounded
+        # lists, a probe-found wrong answer). The slice happens
+        # after the aggregate: which elements survive is
+        # unspecified in Kusto too.
+        agg = ("collect_list" if fname == "make_list"
+               else "collect_set")
+        out = f"{agg}({args[0]})"
+        if len(args) == 2:
+            return f"slice({out}, 1, CAST({args[1]} AS INT))"
+        return out
+
+    @_fn("make_list_with_nulls", 1, 1, None, "make_list_with_nulls(expr)")
+    def _fn_make_list_with_nulls(self, fname: str, args: list[str]) -> str:
+        # collect_list drops nulls; the struct wrap keeps them
+        # (a non-null struct with a null field collects fine)
+        return (f"transform(collect_list(named_struct("
+                f"'v', {args[0]})), __mlwn -> __mlwn.v)")
+
+    @_fn("percentile percentiles", 2, 2, _temporal_ktype,
+         "{name}(col, P) takes 2 args")
+    def _fn_percentile(self, fname: str, args: list[str]) -> str:
+        # KQL percentile(col, P) uses a 0-100 scale; Spark/ANSI use
+        # a 0-1 fraction. Exact interpolated percentile by default
+        # (real Kusto estimates via T-digest; same documented
+        # deviation as dcount); `set percentile_mode = approx;`
+        # compiles to approx_percentile instead — a GK sketch whose
+        # per-group state is bounded by the accuracy parameter, not
+        # the group size, so a skewed key cannot buffer its rows on
+        # one executor (the 100 TB path, and Kusto's own
+        # semantics).
+        # A timespan or datetime keeps its type: it rides the µs
+        # carrier (Spark's exact percentile takes numbers only and
+        # returns a DOUBLE), cast back after interpolation.
+        x, kt = args[0], _kt(args[0])
+        if kt == "datetime":
+            x = f"unix_micros({x})"
+        if _COMPILE_CTX.get().percentile_mode == "approx":
+            sql = f"approx_percentile({x}, ({args[1]}) / 100.0, 10000)"
+        else:
+            sql = f"percentile({x}, ({args[1]}) / 100.0)"
+        if kt not in _TEMPORAL:
+            return sql
+        sql = f"CAST({sql} AS BIGINT)"
+        return f"timestamp_micros({sql})" if kt == "datetime" else sql
+
+    @_fn("extract", 3, 4, None, "extract(regex, group, text[, typeof(T)])")
+    def _fn_extract(self, fname: str, args: list[str]) -> str:
+        # extract(regex, capture_group, text [, typeof(T)]) ->
+        # regexp_extract; the 4-arg form CONVERTS the capture
+        # (failed conversion / no match -> null, Kusto contract —
+        # r12 probe find)
+        base = f"regexp_extract({args[2]}, {args[0]}, {args[1]})"
+        if len(args) == 3:
+            # Kusto: no match -> NULL (regexp_extract alone yields
+            # '' — indistinguishable from a legit empty capture, so
+            # guard with an RLIKE probe; r13 probe sweep)
+            return (f"(CASE WHEN {args[2]} RLIKE {args[0]} "
+                    f"THEN {base} ELSE NULL END)")
+        mt = re.fullmatch(r"typeof\(\s*`?(\w+)`?\s*\)",
+                          args[3].strip())
+        sqlt = mt and _KTYPE_SQL.get(mt.group(1).lower())
+        if sqlt in (None, "VARIANT"):
+            raise ValueError(
+                f"KQL: extract 4th arg must be typeof(<type>), "
+                f"got {args[3]!r}")
+        if sqlt == "STRING":
+            return base
+        return f"try_cast(nullif({base}, '') AS {sqlt})"
+
+    @_fn("extract_all", 2, 3, None,
+         "extract_all(regex, [captureGroups,] source)")
+    def _fn_extract_all(self, fname: str, args: list[str]) -> str:
+        # extract_all(regex [, captureGroups], text) -> array of
+        # matches; with a groups array (or a LITERAL regex carrying
+        # more than one capture group — Kusto's 2-arg contract,
+        # r13 probe sweep) each match yields an array of its
+        # captures (one regexp_extract_all per group, bound ONCE
+        # via the struct hop, zipped by match index)
+        if len(args) == 2:
+            n = self._regex_literal_group_count(args[0])
+            if n == 0:
+                # no capture groups: whole matches (Kusto)
+                return (f"regexp_extract_all({args[1]}, "
+                        f"{args[0]}, 0)")
+            if n is None or n == 1:
+                # non-literal regex: group 1 (documented narrowing
+                # — the group count is unknowable at compile time)
+                return (f"regexp_extract_all({args[1]}, "
+                        f"{args[0]}, 1)")
+            gs, text = list(range(1, n + 1)), args[1]
+        elif len(args) == 3:
+            import json as _json
+            # flat numeric dynamics compile to a native
+            # array(CAST(n AS BIGINT), ...) literal; nested ones to
+            # parse_json('...') — accept both compile-time forms
+            gs = []
+            mg = re.fullmatch(r"parse_json\('(.*)'\)", args[1],
+                              re.DOTALL)
+            if mg:
+                try:
+                    gs = [int(g) for g in _json.loads(mg.group(1))]
+                except Exception:
+                    gs = []
+            elif re.fullmatch(
+                    r"array\((?:\s*CAST\(\d+ AS BIGINT\)\s*,?)+\)",
+                    args[1]):
+                gs = [int(g) for g in
+                      re.findall(r"CAST\((\d+) AS BIGINT\)",
+                                 args[1])]
+            if not gs:
                 raise ValueError(
-                    "KQL: datetime_part needs a literal part name")
-            part = pm2.group(1).lower()
-            dt = args[1]
-            frac = f"pmod(unix_micros({dt}), 1000000)"
-            exprs = {
-                "year": f"year({dt})",
-                "quarter": f"quarter({dt})",
-                "month": f"month({dt})",
-                "week_of_year": f"weekofyear({dt})",
-                "day": f"day({dt})",
-                "dayofyear": f"dayofyear({dt})",
-                "hour": f"hour({dt})",
-                "minute": f"minute({dt})",
-                "second": f"second({dt})",
-                "millisecond": f"({frac} div 1000)",
-                "microsecond": frac,
-                "nanosecond": f"({frac} * 1000)",
-            }
-            if part not in exprs:
-                raise ValueError(
-                    f"KQL: datetime_part: unknown part {part!r}")
-            return f"CAST({exprs[part]} AS BIGINT)"
-        if fname in ("datetime_utc_to_local", "datetime_local_to_utc"):
-            # IANA tz-database conversions (Spark's JVM carries the tz
-            # rules, incl. DST transitions)
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(dt, timezone)")
-            fn = ("from_utc_timestamp"
-                  if fname == "datetime_utc_to_local"
-                  else "to_utc_timestamp")
-            return f"{fn}({args[0]}, {args[1]})"
-        if fname in ("datetime_add", "datetime_diff"):
-            return self._datetime_math(fname, args)
-        if fname in self._UNIT_TABLES or fname == "convert_temperature":
-            return self._convert_unit(fname, args)
-        if fname == "series_fir":
-            # Two forms (r13 probe sweep). Kusto's documented
-            # signature: series_fir(series, filter[, normalize[,
-            # center]]) — finite-impulse-response convolution with a
-            # coefficient ARRAY; out-of-range taps read 0
-            # (zero-padding), normalize divides by sum(filter)
-            # (default: yes iff no coefficient is negative — Kusto
-            # errors there; this engine's omitted-arg default is the
-            # same rule evaluated at runtime), center=true centers the
-            # window on the current point (shift floor(m/2)).
-            # ENGINE EXTENSION kept for decompose internals and
-            # banked oracles: a NUMERIC second arg is a trailing
-            # moving average of that width, averaging over the ACTUAL
-            # (partial at the left edge) window.
-            if len(args) not in (2, 3, 4):
-                raise ValueError(
-                    "KQL: series_fir(series, filter[, normalize"
-                    "[, center]])")
-            arr = self._series_arg(args[0])
-            is_arr = self._ktype(args[1]) in ("array", "dynamic")
-            if len(args) == 2 and not is_arr:
+                    "KQL: extract_all captureGroups must be a "
+                    "dynamic([...]) literal of group numbers")
+            text = args[2]
+        else:
+            raise ValueError(
+                "KQL: extract_all(regex [, captureGroups], text)")
+        arrs = [f"regexp_extract_all({text}, {args[0]}, {g})"
+                for g in gs]
+        if len(arrs) == 1:
+            return arrs[0]
+        fields = ", ".join(f"'g{j}', {a}"
+                           for j, a in enumerate(arrs))
+        elems = ", ".join(
+            f"try_element_at(__ea_s.g{j}, __ea_i)"
+            for j in range(len(arrs)))
+        # sequence(1, 0) DESCENDS — zero matches must yield []
+        idx = (f"(CASE WHEN size(__ea_s.g0) >= 1 THEN "
+               f"sequence(1, size(__ea_s.g0)) ELSE array() END)")
+        return (f"parse_json(to_json(element_at(transform(array("
+                f"named_struct({fields})), __ea_s -> "
+                f"transform({idx}, "
+                f"__ea_i -> array({elems}))), 1)))")
+
+    @_fn("series_sum series_avg series_max series_min series_product",
+         1, 1, None,
+         "{name}(series) takes 1 arg")
+    def _fn_series_sum(self, fname: str, args: list[str]) -> str:
+        # fold over the make-series value array, JVM-side
+        arr = self._series_arg(args[0])
+        total = (f"aggregate({arr}, CAST(0 AS DOUBLE), "
+                 f"(a, v) -> a + CAST(v AS DOUBLE))")
+        if fname == "series_sum":
+            return total
+        if fname == "series_product":
+            return (f"aggregate({arr}, CAST(1 AS DOUBLE), "
+                    f"(a, v) -> a * CAST(v AS DOUBLE))")
+        if fname == "series_avg":
+            # empty-series guard: ANSI mode turns the /size division
+            # into a runtime DIVIDE_BY_ZERO crash (r12 registry
+            # property find) — Kusto yields null
+            return (f"(CASE WHEN size({arr}) = 0 THEN NULL "
+                    f"ELSE {total} / size({arr}) END)")
+        fn = "array_max" if fname == "series_max" else "array_min"
+        return f"CAST({fn}({arr}) AS DOUBLE)"
+
+    @_fn("isnan isinf isfinite", 1, 1, "bool", "{name}(x) takes 1 arg")
+    def _fn_isnan(self, fname: str, args: list[str]) -> str:
+        # Kusto contract: these return BOOL, never null — a null
+        # input is "not a finite number / not inf / not nan" = false
+        x = f"CAST({args[0]} AS DOUBLE)"
+        if fname == "isnan":
+            return f"coalesce(isnan({x}), false)"
+        if fname == "isinf":
+            return (f"coalesce(abs({x}) = CAST('Infinity' AS DOUBLE), "
+                    f"false)")
+        return (f"coalesce(NOT (isnan({x}) "
+                f"OR abs({x}) = CAST('Infinity' AS DOUBLE)), false)")
+
+    @_fn("tohex", 1, 2, "string", "tohex(int [, minLength])")
+    def _fn_tohex(self, fname: str, args: list[str]) -> str:
+        # Kusto tohex emits lowercase digits; Spark hex is upper.
+        # Optional minLength zero-pads (lpad truncates from the
+        # LEFT when over, so guard with greatest of both lengths)
+        h = f"lower(hex({args[0]}))"
+        if len(args) == 2:
+            ml = f"CAST({args[1]} AS INT)"
+            return (f"lpad({h}, greatest(length({h}), {ml}), '0')")
+        return h
+
+    @_fn("strcmp", 2, 2, "long", "strcmp(s1, s2)")
+    def _fn_strcmp(self, fname: str, args: list[str]) -> str:
+        a, b = args
+        return (f"(CASE WHEN {a} < {b} THEN -1 "
+                f"WHEN {a} > {b} THEN 1 "
+                f"WHEN {a} = {b} THEN 0 END)")
+
+    @_fn("repeat", 2, 2, None, "repeat(value, count)")
+    def _fn_repeat(self, fname: str, args: list[str]) -> str:
+        return f"array_repeat({args[0]}, CAST({args[1]} AS INT))"
+
+    @_fn("range", 2, 3, None, "range(start, stop[, step])")
+    def _fn_range(self, fname: str, args: list[str]) -> str:
+        # the SCALAR range(start, stop [, step]) -> dynamic array
+        # (the `range x from a to b` SOURCE operator is separate).
+        # stop is inclusive, like Kusto; a zero step is null, a
+        # step pointing away from stop yields an empty array
+        # (Spark's sequence would error); numeric domain (the
+        # datetime/timespan form is not supported — documented).
+        start, stop = args[0], args[1]
+        step = args[2] if len(args) == 3 else "1"
+        return (f"(CASE WHEN ({step}) = 0 THEN NULL "
+                f"WHEN (({stop}) - ({start})) * ({step}) < 0 "
+                f"THEN array() "
+                f"ELSE sequence({start}, {stop}, {step}) END)")
+
+    @_fn("new_guid", 0, 0, "string", "new_guid() takes no args")
+    def _fn_new_guid(self, fname: str, args: list[str]) -> str:
+        return "uuid()"
+
+    @_fn("rand", 0, 1, None, "rand([n])")
+    def _fn_rand(self, fname: str, args: list[str]) -> str:
+        # rand() -> [0,1) real; rand(n) -> integer in [0, n)
+        if len(args) == 0:
+            return "rand()"
+        if len(args) == 1:
+            return (f"CAST(floor(rand() * ({args[0]})) AS BIGINT)")
+        raise ValueError("KQL: rand([n])")
+
+    @_fn("parse_csv", 1, 1, None, "parse_csv(record)")
+    def _fn_parse_csv(self, fname: str, args: list[str]) -> str:
+        # one CSV record -> string array. Quote-aware via the
+        # classic lookahead split (documented subset: no embedded
+        # newlines), doubled quotes unescape
+        parts = (f"split({args[0]}, "
+                 f"',(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)')")
+        return (f"transform({parts}, __pc_x -> CASE WHEN __pc_x "
+                f"RLIKE '^\".*\"$' THEN replace(substring(__pc_x, "
+                f"2, length(__pc_x) - 2), '\"\"', '\"') "
+                f"ELSE __pc_x END)")
+
+    @_fn("geo_distance_2points", 4, 4, "real",
+         "geo_distance_2points(lon1, lat1, lon2, lat2)")
+    @_fn("geo_point_in_circle", 5, 5, "bool",
+         "geo_point_in_circle(lon, lat, clon, clat, r)")
+    def _fn_geo_distance_2points(self, fname: str, args: list[str]) -> str:
+        # great-circle distance in meters on the mean-radius sphere
+        # (haversine; documented deviation: Kusto computes WGS84
+        # geodesics — difference <0.5%, and the DuckDB oracle twin
+        # recomputes the same documented formula independently)
+        lon1, lat1, lon2, lat2 = args[:4]
+
+        def rad(x):
+            return f"radians(CAST({x} AS DOUBLE))"
+        hav = (f"(pow(sin(({rad(lat2)} - {rad(lat1)}) / 2), 2) "
+               f"+ cos({rad(lat1)}) * cos({rad(lat2)}) "
+               f"* pow(sin(({rad(lon2)} - {rad(lon1)}) / 2), 2))")
+        dist = f"(2 * 6371009.0 * asin(least(1.0, sqrt({hav}))))"
+        if fname == "geo_distance_2points":
+            return dist
+        return f"({dist} <= CAST({args[4]} AS DOUBLE))"
+
+    @_fn("geo_azimuth", 4, 4, "real", "geo_azimuth(lon1, lat1, lon2, lat2)")
+    def _fn_geo_azimuth(self, fname: str, args: list[str]) -> str:
+        # initial great-circle bearing p1 -> p2, radians clockwise
+        # from true north in [0, 2*pi) (standard spherical
+        # formula; same mean-radius sphere as the rest of the geo
+        # family). Identical points or out-of-range coords -> null.
+
+        def radx(x):
+            return f"radians(CAST({x} AS DOUBLE))"
+        lon1, lat1, lon2, lat2 = (radx(a) for a in args)
+        dlon = f"({lon2} - {lon1})"
+        az = (f"atan2(sin({dlon}) * cos({lat2}), "
+              f"cos({lat1}) * sin({lat2}) "
+              f"- sin({lat1}) * cos({lat2}) * cos({dlon}))")
+        ok = (f"(CAST({args[0]} AS DOUBLE) BETWEEN -180 AND 180 "
+              f"AND CAST({args[1]} AS DOUBLE) BETWEEN -90 AND 90 "
+              f"AND CAST({args[2]} AS DOUBLE) BETWEEN -180 AND 180 "
+              f"AND CAST({args[3]} AS DOUBLE) BETWEEN -90 AND 90 "
+              f"AND NOT (CAST({args[0]} AS DOUBLE) = "
+              f"CAST({args[2]} AS DOUBLE) AND "
+              f"CAST({args[1]} AS DOUBLE) = "
+              f"CAST({args[3]} AS DOUBLE)))")
+        return (f"(CASE WHEN {ok} THEN "
+                f"pmod({az}, 2 * pi()) ELSE NULL END)")
+
+    @_fn("geo_point_to_s2cell", 2, 3, None,
+         "geo_point_to_s2cell(lon, lat [, level])")
+    def _fn_geo_point_to_s2cell(self, fname: str, args: list[str]) -> str:
+        # S2 cell token (published s2geometry algorithm; Arrow
+        # kernel __kql_s2_encode). Kusto's default level is 11.
+        lvl = args[2] if len(args) == 3 else "11"
+        return (f"__kql_s2_encode(CAST({args[0]} AS DOUBLE), "
+                f"CAST({args[1]} AS DOUBLE), "
+                f"CAST({lvl} AS INT))")
+
+    @_fn("geo_s2cell_to_central_point", 1, 1, None,
+         "geo_s2cell_to_central_point(token)")
+    def _fn_geo_s2cell_to_central_point(self, fname: str,
+                                        args: list[str]) -> str:
+        return (f"parse_json(__kql_s2_center("
+                f"CAST({args[0]} AS STRING)))")
+
+    @_fn("geo_s2cell_parent", 1, 2, None, "geo_s2cell_parent(token [, level])")
+    def _fn_geo_s2cell_parent(self, fname: str, args: list[str]) -> str:
+        # containing cell at `level` (default one level up);
+        # engine extension aligned with geo_h3cell_parent
+        lvl = args[1] if len(args) == 2 else "-1"
+        return (f"__kql_s2_parent(CAST({args[0]} AS STRING), "
+                f"CAST({lvl} AS INT))")
+
+    @_fn("geo_s2cell_children geo_s2cell_neighbors", 1, 1, None,
+         "{name}(token)")
+    def _fn_geo_s2cell_children(self, fname: str, args: list[str]) -> str:
+        # dynamic array of child (Hilbert order) / edge-neighbor
+        # (down,right,up,left) tokens; null on malformed input
+        kern = ("__kql_s2_children"
+                if fname == "geo_s2cell_children"
+                else "__kql_s2_neighbors")
+        return f"parse_json({kern}(CAST({args[0]} AS STRING)))"
+
+    @_fn("geo_point_to_h3cell", 2, 3, None,
+         "geo_point_to_h3cell(lon, lat [, res])")
+    @_fn("geo_h3cell_to_central_point geo_h3cell_children "
+         "geo_h3cell_neighbors geo_h3cell_to_polygon", 1, 1, None,
+         "{name}(token)")
+    @_fn("geo_h3cell_parent", 1, 2, None, "geo_h3cell_parent(token [, level])")
+    @_fn("geo_h3cell_rings", 2, 2, None, "geo_h3cell_rings(token, k)")
+    def _fn_geo_point_to_h3cell(self, fname: str, args: list[str]) -> str:
+        # H3 family: DELEGATED to the optional `h3` reference
+        # library (see _h3_api — the published base-cell constant
+        # tables are not re-derivable in closed form, and a
+        # lookalike would mint non-conformant tokens). Absent
+        # package -> loud COMPILE-TIME contract, not silent nulls.
+        if _h3_api() is None:
+            raise ValueError(
+                f"KQL: {fname} requires the optional 'h3' package "
+                f"(pip install h3) — the H3 base-cell tables are "
+                f"not reproducible without it; the geohash and "
+                f"S2 cell families are the built-in alternatives")
+        if fname == "geo_point_to_h3cell":
+            res = args[2] if len(args) == 3 else "9"
+            return (f"__kql_h3_encode(CAST({args[0]} AS DOUBLE), "
+                    f"CAST({args[1]} AS DOUBLE), "
+                    f"CAST({res} AS INT))")
+        if fname == "geo_h3cell_parent":
+            lvl = args[1] if len(args) == 2 else "-1"
+            return (f"__kql_h3_parent(CAST({args[0]} AS STRING), "
+                    f"CAST({lvl} AS INT))")
+        if fname in ("geo_h3cell_rings", "geo_h3cell_neighbors"):
+            # neighbors == rings(1) minus self is Kusto's
+            # convention for the geohash family; H3's own
+            # neighbors doc returns the k-disk INCLUDING self —
+            # delegate both to grid_disk and let rings carry the
+            # k argument
+            k = "1"
+            if fname == "geo_h3cell_rings":
                 k = args[1]
-                return (f"transform({arr}, (__fir_v, __fir_i) -> "
-                        f"aggregate(slice({arr}, "
-                        f"greatest(__fir_i + 2 - {k}, 1), "
-                        f"least(__fir_i + 1, {k})), CAST(0 AS DOUBLE), "
-                        f"(__fir_a, __fir_x) -> "
-                        f"__fir_a + CAST(__fir_x AS DOUBLE)) "
-                        f"/ least(__fir_i + 1, {k}))")
-            fl = (f"transform(try_cast({args[1]} AS ARRAY<DOUBLE>), "
-                  f"__fir_c -> CAST(__fir_c AS DOUBLE))")
-            m = f"size({fl})"
-            if len(args) >= 3:
-                denom = (f"(CASE WHEN CAST({args[2]} AS BOOLEAN) "
-                         f"THEN aggregate({fl}, CAST(0 AS DOUBLE), "
-                         f"(__fir_a, __fir_c) -> __fir_a + __fir_c) "
-                         f"ELSE 1.0 END)")
-            else:
-                denom = (f"(CASE WHEN array_min({fl}) >= 0 "
-                         f"THEN aggregate({fl}, CAST(0 AS DOUBLE), "
-                         f"(__fir_a, __fir_c) -> __fir_a + __fir_c) "
-                         f"ELSE 1.0 END)")
-            shift = (f"CAST(floor({m} / 2) AS INT)"
-                     if len(args) == 4 else "0")
-            shift = (f"(CASE WHEN CAST({args[3]} AS BOOLEAN) "
-                     f"THEN {shift} ELSE 0 END)"
-                     if len(args) == 4 else "0")
-            xs = (f"transform({arr}, __fir_x -> "
-                  f"CAST(__fir_x AS DOUBLE))")
-            return (
-                f"(CASE WHEN {m} IS NULL OR {m} <= 0 OR {denom} = 0 "
-                f"THEN NULL ELSE "
-                f"transform({xs}, (__fir_v, __fir_i) -> "
-                f"aggregate(sequence(1, {m}), CAST(0 AS DOUBLE), "
-                f"(__fir_a, __fir_j) -> __fir_a "
-                f"+ element_at({fl}, __fir_j) "
-                f"* coalesce(CASE WHEN __fir_i + 2 - __fir_j "
-                f"+ {shift} >= 1 THEN try_element_at({xs}, "
-                f"__fir_i + 2 - __fir_j + {shift}) END, 0.0)) "
-                f"/ {denom}) END)")
-        if fname == "series_fill_const":
-            # Kusto: series_fill_const(series[, constant_value]) —
-            # constant defaults to 0 (r13 probe sweep)
-            if len(args) not in (1, 2):
+            return (f"parse_json(__kql_h3_rings("
+                    f"CAST({args[0]} AS STRING), "
+                    f"CAST({k} AS INT)))")
+        kern = {"geo_h3cell_to_central_point": "__kql_h3_center",
+                "geo_h3cell_children": "__kql_h3_children",
+                "geo_h3cell_to_polygon": "__kql_h3_polygon",
+                }[fname]
+        return f"parse_json({kern}(CAST({args[0]} AS STRING)))"
+
+    @_fn("geo_line_densify geo_line_simplify geo_polygon_densify "
+         "geo_polygon_simplify", 1, 2, None,
+         "{name}(shape [, tolerance])")
+    def _fn_geo_line_densify(self, fname: str, args: list[str]) -> str:
+        # shape transforms over GeoJSON dynamics (Arrow kernels:
+        # slerp subdivision / iterative RDP, see
+        # _register_geo_shape_udfs). Second arg = tolerance meters
+        # (densify: max edge length; simplify: RDP epsilon),
+        # default 10 like Kusto. Invalid geometry / collapsed
+        # rings -> null.
+        tol = args[1] if len(args) == 2 else "10.0"
+        kern = {"geo_line_densify": "__kql_geo_densify_line",
+                "geo_line_simplify": "__kql_geo_simplify_line",
+                "geo_polygon_densify": "__kql_geo_densify_poly",
+                "geo_polygon_simplify": "__kql_geo_simplify_poly",
+                }[fname]
+        return (f"parse_json({kern}(to_json({args[0]}), "
+                f"CAST({tol} AS DOUBLE)))")
+
+    @_fn("geo_intersects_2lines", 2, 2, None,
+         "geo_intersects_2lines(line1, line2)")
+    def _fn_geo_intersects_2lines(self, fname: str, args: list[str]) -> str:
+        # planar segment sweep on raw lon/lat (the family's
+        # documented planar approximation); null on invalid input
+        return (f"__kql_geo_isect2l(to_json({args[0]}), "
+                f"to_json({args[1]}))")
+
+    @_fn("geo_s2cell_to_polygon", 1, 1, None, "geo_s2cell_to_polygon(token)")
+    def _fn_geo_s2cell_to_polygon(self, fname: str, args: list[str]) -> str:
+        # GeoJSON Polygon of the cell's 4 corners (chord edges;
+        # true S2 edges are great circles — documented deviation
+        # consistent with the planar geo measures)
+        return (f"parse_json(__kql_s2_polygon("
+                f"CAST({args[0]} AS STRING)))")
+
+    @_fn("bag_keys", 1, 1, None, "bag_keys(bag)")
+    def _fn_bag_keys(self, fname: str, args: list[str]) -> str:
+        # dynamic bag -> array of top-level keys (JSON round-trip;
+        # VARIANT has no native key enumeration yet)
+        return f"json_object_keys(to_json({args[0]}))"
+
+    @_fn("jaccard_index", 2, 2, None, "jaccard_index(set1, set2)")
+    def _fn_jaccard_index(self, fname: str, args: list[str]) -> str:
+        a, b = args
+        inter = f"size(array_intersect({a}, {b}))"
+        uni = f"size(array_union({a}, {b}))"
+        return (f"(CASE WHEN {uni} = 0 THEN CAST(NULL AS DOUBLE) "
+                f"ELSE CAST({inter} AS DOUBLE) / {uni} END)")
+
+    @_fn("make_bag", 1, 1, None, "make_bag(bag)")
+    @_fn("make_bag_if", 2, 2, None, "make_bag_if(bag, predicate)")
+    def _fn_make_bag(self, fname: str, args: list[str]) -> str:
+        # aggregate: merge per-row property bags into one bag.
+        # Kusto picks an arbitrary value for duplicate keys; here
+        # the first-merged bag wins (same policy as bag_merge) —
+        # deterministic given deterministic aggregation order, and
+        # oracled fixtures use disjoint keys so no policy shows.
+        if fname == "make_bag_if":
+            src = f"IF({args[1]}, {args[0]}, NULL)"
+        else:
+            src = args[0]
+        # collect_list drops null bags (rows failing the
+        # predicate). Merge = flatten all entries, keep each key's
+        # FIRST occurrence, rebuild the map. Deliberately NOT an
+        # aggregate() lambda-fold with a map accumulator: a Python
+        # UDF (dynamic_to_json) consuming to_json of that fold in
+        # the same aggregation fails Spark 4.1's UDF extraction on
+        # every execution after a session's first (INTERNAL_ERROR
+        # PythonUDF.eval); the entries-dedup shape is stable.
+        m = f"from_json(to_json({src}), 'map<string,variant>')"
+        ents = f"flatten(collect_list(map_entries({m})))"
+        keys = f"transform({ents}, __mb_x -> __mb_x.key)"
+        firsts = (f"filter(zip_with({ents}, "
+                  f"sequence(0, size({ents}) - 1), "
+                  f"(__mb_e, __mb_i) -> named_struct("
+                  f"'e', __mb_e, 'i', __mb_i)), "
+                  f"__mb_p -> array_position({keys}, "
+                  f"__mb_p.e.key) = __mb_p.i + 1)")
+        merged = (f"map_from_entries(transform({firsts}, "
+                  f"__mb_p -> __mb_p.e))")
+        return f"parse_json(to_json({merged}))"
+
+    @_fn("percentilew", 3, 3, _temporal_ktype,
+         "percentilew(col, weight, percentile)")
+    def _fn_percentilew(self, fname: str, args: list[str]) -> str:
+        # weighted percentile: the smallest value whose running
+        # weight (ascending value order) reaches P% of the total.
+        # Exact — real Kusto estimates via T-digest, the same
+        # documented deviation as percentile()/dcount(). Buffers
+        # the group's (value, weight) pairs like Spark's own exact
+        # percentile; null/non-positive weights drop.
+        return self._percentilew_sql(*args)
+
+    @_fn("percentilesw percentilesw_array", 3, None, None,
+         "{name}(col, weight, p1, p2, ...)")
+    def _fn_percentilesw(self, fname: str, args: list[str]) -> str:
+        # plural weighted percentiles -> one array (Kusto's
+        # percentilesw via summarize tuple assignment, or the
+        # _array form directly). Each element is the exact fold;
+        # the sorted-pairs collect_list is IDENTICAL across
+        # elements, so Spark's aggregation planner deduplicates it
+        # to a single buffered aggregate per group.
+        v, w = args[0], args[1]
+        elems = ", ".join(self._percentilew_sql(v, w, p)
+                          for p in args[2:])
+        return f"array({elems})"
+
+    @_fn("gettype", 1, 1, "string", "gettype(value)")
+    def _fn_gettype(self, fname: str, args: list[str]) -> str:
+        # runtime type name in Kusto vocabulary. The value lifts
+        # to VARIANT through a named_struct JSON round-trip —
+        # analysis-valid for EVERY input type, where a direct
+        # schema_of_variant / CAST(.. AS VARIANT) rejects typed
+        # columns at analysis. Deviations, per this compiler's
+        # carriers: timespans ride as bigint µs (-> 'long');
+        # decimals -> 'real'; datetimes INSIDE a dynamic
+        # stringify (-> 'string'; top-level datetime columns are
+        # caught by the typeof branch).
+        x = args[0]
+        vt = (f"schema_of_variant(variant_get(parse_json("
+              f"to_json(named_struct('x', {x}))), '$.x'))")
+        return (f"CASE WHEN {x} IS NULL THEN 'null' "
+                f"WHEN typeof({x}) = 'timestamp' THEN 'datetime' "
+                f"WHEN {vt} = 'VOID' THEN 'null' "
+                f"WHEN {vt} IN ('BIGINT', 'INT', 'SMALLINT', "
+                f"'TINYINT') THEN 'long' "
+                f"WHEN {vt} IN ('DOUBLE', 'FLOAT') "
+                f"OR {vt} LIKE 'DECIMAL%' THEN 'real' "
+                f"WHEN {vt} = 'STRING' THEN 'string' "
+                f"WHEN {vt} = 'BOOLEAN' THEN 'bool' "
+                f"WHEN {vt} LIKE 'ARRAY%' THEN 'array' "
+                f"ELSE 'dictionary' END")
+
+    @_fn("bag_remove_keys", 2, 2, "dynamic", "bag_remove_keys(bag, keys)")
+    def _fn_bag_remove_keys(self, fname: str, args: list[str]) -> str:
+        # top-level key removal (Kusto also accepts JSON paths for
+        # nested keys; the common top-level form is what compiles)
+        bag, keys = args
+        m = f"from_json(to_json({bag}), 'map<string,variant>')"
+        ks = f"from_json(to_json({keys}), 'array<string>')"
+        out = (f"map_filter({m}, (__brk_k, __brk_v) -> "
+               f"NOT array_contains({ks}, __brk_k))")
+        return f"parse_json(to_json({out}))"
+
+    @_fn("bag_set_key", 3, 3, "dynamic", "bag_set_key(bag, key, value)")
+    def _fn_bag_set_key(self, fname: str, args: list[str]) -> str:
+        # set/overwrite one top-level key; null/missing bag seeds
+        # an empty one (matching Kusto's upsert behavior)
+        bag, key, val = args
+        m = (f"coalesce(from_json(to_json({bag}), "
+             f"'map<string,variant>'), "
+             f"from_json('{{}}', 'map<string,variant>'))")
+        k = f"CAST({key} AS STRING)"
+        # named_struct round-trip lifts ANY value type to variant
+        # (to_json rejects bare scalars)
+        vv = (f"variant_get(parse_json(to_json(named_struct("
+              f"'v', {val}))), '$.v')")
+        out = (f"map_concat(map_filter({m}, "
+               f"(__bsk_k, __bsk_v) -> __bsk_k <> {k}), "
+               f"map({k}, {vv}))")
+        return f"parse_json(to_json({out}))"
+
+    @_fn("array_split", 2, 2, None, "array_split(arr, indices)")
+    def _fn_array_split(self, fname: str, args: list[str]) -> str:
+        # split an array into contiguous chunks at the given
+        # 0-based indices (scalar or array; negatives wrap, values
+        # clamp to [0, n])
+        arr, idx = args
+        a = f"from_json(to_json({arr}), 'array<variant>')"
+        vi = (f"variant_get(parse_json(to_json(named_struct("
+              f"'x', {idx}))), '$.x')")
+        raw = (f"coalesce(try_cast({vi} AS ARRAY<BIGINT>), "
+               f"array(try_cast({vi} AS BIGINT)))")
+        n = f"CAST(size({a}) AS BIGINT)"
+        norm = (f"array_sort(transform({raw}, __as_i -> "
+                f"greatest(CAST(0 AS BIGINT), least({n}, "
+                f"IF(__as_i < 0, {n} + __as_i, __as_i)))))")
+        bounds = (f"concat(array(CAST(0 AS BIGINT)), {norm}, "
+                  f"array({n}))")
+        parts = (f"transform(sequence(1, size({bounds}) - 1), "
+                 f"__as_j -> slice({a}, "
+                 f"CAST(element_at({bounds}, __as_j) AS INT) + 1, "
+                 f"CAST(element_at({bounds}, __as_j + 1) "
+                 f"- element_at({bounds}, __as_j) AS INT)))")
+        return (f"CASE WHEN {a} IS NULL THEN NULL "
+                f"ELSE parse_json(to_json({parts})) END")
+
+    @_fn("has_any_index", 2, 2, "long", "has_any_index(source, values)")
+    def _fn_has_any_index(self, fname: str, args: list[str]) -> str:
+        # 0-based index of the first term in `values` that the
+        # source string `has` (whole-term match); -1 when none
+        src, vals = args
+        toks = (f"split(lower({_str_if_variant(src)}), "
+                f"'[^a-z0-9]+')")
+        vv = f"from_json(to_json({vals}), 'array<string>')"
+        hits = (f"filter(transform(sequence(0, size({vv}) - 1), "
+                f"__hai_i -> IF(array_contains({toks}, "
+                f"lower(element_at({vv}, "
+                f"CAST(__hai_i + 1 AS INT)))), __hai_i, -1)), "
+                f"__hai_x -> __hai_x >= 0)")
+        return (f"CASE WHEN {vv} IS NULL OR size({vv}) = 0 "
+                f"THEN -1 "
+                f"ELSE coalesce(try_element_at({hits}, 1), -1) "
+                f"END")
+
+    @_fn("dynamic_to_json", 1, 1, "string", "dynamic_to_json(value)")
+    def _fn_dynamic_to_json(self, fname: str, args: list[str]) -> str:
+        # canonical JSON text: keys sorted at every nesting level
+        # (json.dumps sort_keys in an Arrow-batched UDF — key
+        # ordering is a text-level property Spark SQL can't see)
+        return f"__kql_dyn2json(to_json({args[0]}))"
+
+    @_fn("totimespan", 1, 1, "timespan", "totimespan(text)")
+    def _fn_totimespan(self, fname: str, args: list[str]) -> str:
+        # parse "[-][d.]hh:mm:ss[.fffffff]" (Kusto timespan text)
+        # into MICROSECONDS — the same unit timespan literals carry
+        # through this compiler; unparseable -> null
+        s = f"CAST({args[0]} AS STRING)"
+        body = f"ltrim('-', {s})"
+        pat = (r"'^(?:(\\d+)\\.)?(\\d+):(\\d+):(\\d+)"
+               r"(?:\\.(\\d+))?$'")
+        grp = (lambda i:
+               f"coalesce(try_cast(nullif(regexp_extract({body}, "
+               f"{pat}, {i}), '') AS BIGINT), 0)")
+        frac = (f"coalesce(try_cast(substring(rpad(nullif("
+                f"regexp_extract({body}, {pat}, 5), ''), 6, '0'), "
+                f"1, 6) AS BIGINT), 0)")
+        total = (f"({grp(1)} * 86400000000 + {grp(2)} * 3600000000 "
+                 f"+ {grp(3)} * 60000000 + {grp(4)} * 1000000 "
+                 f"+ {frac})")
+        return (f"(CASE WHEN {body} RLIKE {pat} THEN "
+                f"IF(startswith({s}, '-'), -{total}, {total}) "
+                f"ELSE NULL END)")
+
+    @_fn("array_iff array_iif", 3, 3, None, "{name}(cond_arr, a, b)")
+    def _fn_array_iff(self, fname: str, args: list[str]) -> str:
+        # element-wise conditional merge of two arrays by a
+        # boolean-array mask (index-aligned; null past either end);
+        # array_iif is Kusto's documented alias. Empty-mask guard:
+        # sequence(1, 0) DESCENDS to [1, 0] (the round-5 gotcha),
+        # so an empty cond array must short-circuit.
+        c, a, b = [self._dyn_arr_arg(x) for x in args]
+        return (f"(CASE WHEN size({c}) <= 0 THEN array() ELSE "
+                f"transform(sequence(1, size({c})), __ai_i -> "
+                f"IF(CAST(try_element_at({c}, __ai_i) AS BOOLEAN), "
+                f"try_element_at({a}, __ai_i), "
+                f"try_element_at({b}, __ai_i))) END)")
+
+    @_fn("array_rotate_left array_rotate_right", 2, 2, None, "{name}(arr, n)")
+    def _fn_array_rotate_left(self, fname: str, args: list[str]) -> str:
+        arr, n = self._dyn_arr_arg(args[0]), args[1]
+        # normalize the shift into [0, size) (negative n rotates
+        # the other way, like Kusto)
+        k = (f"CAST(pmod({'-' if fname.endswith('right') else ''}"
+             f"({n}), size({arr})) AS INT)")
+        return (f"(CASE WHEN size({arr}) = 0 THEN {arr} ELSE "
+                f"concat(slice({arr}, {k} + 1, "
+                f"size({arr}) - {k}), "
+                f"slice({arr}, 1, {k})) END)")
+
+    @_fn("array_shift_left array_shift_right", 2, 3, None,
+         "{name}(arr, n[, fill])")
+    def _fn_array_shift_left(self, fname: str, args: list[str]) -> str:
+        # shift with null (or `fill`) padding, Kusto semantics;
+        # negative n shifts the other way
+        arr, n = self._dyn_arr_arg(args[0]), args[1]
+        fill = args[2] if len(args) == 3 else "NULL"
+        if fname == "array_shift_right":
+            n = f"(-({n}))"
+        # empty-array guard: sequence(1, 0) descends to [1, 0]
+        # (round-5 gotcha) — an empty input must stay empty
+        return (f"(CASE WHEN size({arr}) <= 0 THEN {arr} ELSE "
+                f"transform(sequence(1, size({arr})), __as_i -> "
+                f"CASE WHEN __as_i + ({n}) BETWEEN 1 AND "
+                f"size({arr}) THEN "
+                f"element_at({arr}, CAST(__as_i + ({n}) AS INT)) "
+                f"ELSE {fill} END) END)")
+
+    @_fn("zip", 2, None, "dynamic", "zip(arr1, arr2, ...)")
+    def _fn_zip(self, fname: str, args: list[str]) -> str:
+        # zip(a1, a2, ...) -> dynamic array of n-tuples (arrays),
+        # null-padded to the LONGEST input (Kusto). Each input is
+        # JSON-lifted to array<variant> (accepts native arrays AND
+        # dynamic literals — the r10 coercion pattern); the lifts
+        # bind ONCE via the struct hop so the per-element lambda
+        # body doesn't re-evaluate them (r9 O(n^2) gotcha).
+        binds = ", ".join(
+            f"'z{i}', from_json(to_json({a}), 'array<variant>')"
+            for i, a in enumerate(args))
+        sizes = ", ".join(f"size(__zs.z{i})"
+                          for i in range(len(args)))
+        row = ", ".join(f"try_element_at(__zs.z{i}, __zp_i)"
+                        for i in range(len(args)))
+        return (f"element_at(transform(array(named_struct({binds})"
+                f"), __zs -> CASE WHEN greatest({sizes}) <= 0 "
+                f"THEN parse_json('[]') ELSE parse_json(to_json("
+                f"transform(sequence(1, greatest({sizes})), "
+                f"__zp_i -> array({row})))) END), 1)")
+
+    @_fn("isutf8", 1, 1, "bool", "isutf8(s)")
+    def _fn_isutf8(self, fname: str, args: list[str]) -> str:
+        # Kusto: true when the value is a valid utf8 string. Spark
+        # strings are validated on decode, so test the utf-8 BYTES
+        # of the string (surrogate damage -> false); null -> null.
+        return (f"is_valid_utf8(CAST({args[0]} AS STRING))")
+
+    @_fn("regex_quote", 1, 1, "string", "regex_quote(s)")
+    def _fn_regex_quote(self, fname: str, args: list[str]) -> str:
+        # RE2 QuoteMeta semantics: escape every ASCII char outside
+        # [A-Za-z0-9_]; non-ASCII code points pass through (RE2
+        # would not escape them and '\é' is not valid RE2). The
+        # pattern/replacement are built via chr(92) concat because
+        # Spark SQL literal backslash-escape processing mangles
+        # '\x..' forms.
+        pat = (r"concat('([^A-Za-z0-9_', chr(92), 'x80-', "
+               r"chr(92), 'x{10FFFF}])')")
+        rep = "concat(chr(92), chr(92), '$1')"
+        return (f"regexp_replace(CAST({args[0]} AS STRING), "
+                f"{pat}, {rep})")
+
+    @_fn("column_ifexists", 2, 2, None, "column_ifexists('name', default)")
+    def _fn_column_ifexists(self, fname: str, args: list[str]) -> str:
+        # schema-defensive column reference: the REAL column when
+        # it exists, else the default (resolved at compile time
+        # against the pipeline schema, like Kusto)
+        m = re.fullmatch(r"\s*'([^']*)'\s*", args[0])
+        if not m:
+            raise ValueError(
+                "KQL: column_ifexists needs a literal column name")
+        if self.df is not None and m.group(1) in self.df.columns:
+            return f"`{m.group(1)}`"
+        return args[1]
+
+    @_fn("strcat_array", 2, 2, "string", "strcat_array(array, sep)")
+    def _fn_strcat_array(self, fname: str, args: list[str]) -> str:
+        return (f"array_join(transform({args[0]}, "
+                f"v -> CAST(v AS STRING)), {args[1]})")
+
+    @_fn("split", 2, 3, None, "split(source, delimiter[, index])")
+    def _fn_split(self, fname: str, args: list[str]) -> str:
+        # KQL split: LITERAL delimiter (Spark's split takes a regex
+        # — \Q..\E-quote it); the 3-arg form returns a one-element
+        # array with the 0-based requested part, empty array past
+        # the end (Kusto's contract)
+        parts = f"split({args[0]}, concat('\\\\Q', {args[1]}, '\\\\E'))"
+        if len(args) == 2:
+            return parts
+        idx = args[2]
+        return (f"(CASE WHEN size({parts}) > ({idx}) AND ({idx}) >= 0 "
+                f"THEN array(element_at({parts}, ({idx}) + 1)) "
+                f"ELSE array() END)")
+
+    @_fn("translate", 3, 3, None,
+         "translate(searchList, replacementList, text)")
+    def _fn_translate(self, fname: str, args: list[str]) -> str:
+        # Kusto arg order is (searchList, replacementList, text);
+        # Spark's translate is (text, from, to)
+        return f"translate({args[2]}, {args[0]}, {args[1]})"
+
+    @_fn("url_encode_component", 1, 1, "string", "url_encode_component(url)")
+    def _fn_url_encode_component(self, fname: str, args: list[str]) -> str:
+        return f"replace(url_encode({args[0]}), '+', '%20')"
+
+    @_fn("binary_and binary_or binary_xor", 2, 2, None, "{name}(a, b)")
+    def _fn_binary_and(self, fname: str, args: list[str]) -> str:
+        op = {"binary_and": "&", "binary_or": "|",
+              "binary_xor": "^"}[fname]
+        return f"({args[0]} {op} {args[1]})"
+
+    @_fn("binary_not", 1, 1, None, "binary_not(a)")
+    def _fn_binary_not(self, fname: str, args: list[str]) -> str:
+        return f"(~({args[0]}))"
+
+    @_fn("binary_shift_left binary_shift_right", 2, 2, None,
+         "{name}(value, shift)")
+    def _fn_binary_shift_left(self, fname: str, args: list[str]) -> str:
+        # 64-bit shifts (CAST keeps Spark's int shift from wrapping
+        # at 32)
+        fn = ("shiftleft" if fname == "binary_shift_left"
+              else "shiftright")
+        return f"{fn}(CAST({args[0]} AS BIGINT), {args[1]})"
+
+    @_fn("parse_version", 1, 1, "decimal", "parse_version(version)")
+    def _fn_parse_version(self, fname: str, args: list[str]) -> str:
+        # "a.b.c.d" -> a·10^24 + b·10^16 + c·10^8 + d as
+        # DECIMAL(38,0) (Kusto's comparable normalization; up to 4
+        # numeric parts of <= 8 digits, anything else -> null)
+        parts = f"split({args[0]}, '\\\\.')"
+
+        def _vp(i):
+            return (f"CAST(coalesce(try_cast(try_element_at("
+                    f"{parts}, {i}) AS BIGINT), 0) AS DECIMAL(38,0))")
+        valid = (f"(size({parts}) BETWEEN 1 AND 4 AND forall({parts},"
+                 f" __pv_x -> try_cast(__pv_x AS BIGINT) IS NOT NULL"
+                 f" AND try_cast(__pv_x AS BIGINT) "
+                 f"BETWEEN 0 AND 99999999))")
+        expr = (f"((({_vp(1)} * 100000000 + {_vp(2)}) * 100000000 "
+                f"+ {_vp(3)}) * 100000000 + {_vp(4)})")
+        return (f"(CASE WHEN {valid} "
+                f"THEN CAST({expr} AS DECIMAL(38,0)) ELSE NULL END)")
+
+    @_fn("datetime_part", 2, 2, "long", "datetime_part(part, dt)")
+    def _fn_datetime_part(self, fname: str, args: list[str]) -> str:
+        # datetime_part('part', dt) -> long; sub-second parts from
+        # the in-second epoch-µs remainder (storage is µs, so the
+        # nanosecond part carries trailing zeros — documented)
+        pm2 = re.fullmatch(r"\s*'(\w+)'\s*", args[0] or "")
+        if not pm2:
+            raise ValueError(
+                "KQL: datetime_part needs a literal part name")
+        part = pm2.group(1).lower()
+        dt = args[1]
+        frac = f"pmod(unix_micros({dt}), 1000000)"
+        exprs = {
+            "year": f"year({dt})",
+            "quarter": f"quarter({dt})",
+            "month": f"month({dt})",
+            "week_of_year": f"weekofyear({dt})",
+            "day": f"day({dt})",
+            "dayofyear": f"dayofyear({dt})",
+            "hour": f"hour({dt})",
+            "minute": f"minute({dt})",
+            "second": f"second({dt})",
+            "millisecond": f"({frac} div 1000)",
+            "microsecond": frac,
+            "nanosecond": f"({frac} * 1000)",
+        }
+        if part not in exprs:
+            raise ValueError(
+                f"KQL: datetime_part: unknown part {part!r}")
+        return f"CAST({exprs[part]} AS BIGINT)"
+
+    @_fn("datetime_utc_to_local datetime_local_to_utc", 2, 2, "datetime",
+         "{name}(dt, timezone)")
+    def _fn_datetime_utc_to_local(self, fname: str, args: list[str]) -> str:
+        # IANA tz-database conversions (Spark's JVM carries the tz
+        # rules, incl. DST transitions)
+        fn = ("from_utc_timestamp"
+              if fname == "datetime_utc_to_local"
+              else "to_utc_timestamp")
+        return f"{fn}({args[0]}, {args[1]})"
+
+    @_fn("series_fir", 2, 4, "array",
+         "series_fir(series, filter[, normalize[, center]])")
+    def _fn_series_fir(self, fname: str, args: list[str]) -> str:
+        # Two forms (r13 probe sweep). Kusto's documented
+        # signature: series_fir(series, filter[, normalize[,
+        # center]]) — finite-impulse-response convolution with a
+        # coefficient ARRAY; out-of-range taps read 0
+        # (zero-padding), normalize divides by sum(filter)
+        # (default: yes iff no coefficient is negative — Kusto
+        # errors there; this engine's omitted-arg default is the
+        # same rule evaluated at runtime), center=true centers the
+        # window on the current point (shift floor(m/2)).
+        # ENGINE EXTENSION kept for decompose internals and
+        # banked oracles: a NUMERIC second arg is a trailing
+        # moving average of that width, averaging over the ACTUAL
+        # (partial at the left edge) window.
+        arr = self._series_arg(args[0])
+        is_arr = self._ktype(args[1]) in ("array", "dynamic")
+        if len(args) == 2 and not is_arr:
+            k = args[1]
+            return (f"transform({arr}, (__fir_v, __fir_i) -> "
+                    f"aggregate(slice({arr}, "
+                    f"greatest(__fir_i + 2 - {k}, 1), "
+                    f"least(__fir_i + 1, {k})), CAST(0 AS DOUBLE), "
+                    f"(__fir_a, __fir_x) -> "
+                    f"__fir_a + CAST(__fir_x AS DOUBLE)) "
+                    f"/ least(__fir_i + 1, {k}))")
+        fl = (f"transform(try_cast({args[1]} AS ARRAY<DOUBLE>), "
+              f"__fir_c -> CAST(__fir_c AS DOUBLE))")
+        m = f"size({fl})"
+        if len(args) >= 3:
+            denom = (f"(CASE WHEN CAST({args[2]} AS BOOLEAN) "
+                     f"THEN aggregate({fl}, CAST(0 AS DOUBLE), "
+                     f"(__fir_a, __fir_c) -> __fir_a + __fir_c) "
+                     f"ELSE 1.0 END)")
+        else:
+            denom = (f"(CASE WHEN array_min({fl}) >= 0 "
+                     f"THEN aggregate({fl}, CAST(0 AS DOUBLE), "
+                     f"(__fir_a, __fir_c) -> __fir_a + __fir_c) "
+                     f"ELSE 1.0 END)")
+        shift = (f"CAST(floor({m} / 2) AS INT)"
+                 if len(args) == 4 else "0")
+        shift = (f"(CASE WHEN CAST({args[3]} AS BOOLEAN) "
+                 f"THEN {shift} ELSE 0 END)"
+                 if len(args) == 4 else "0")
+        xs = (f"transform({arr}, __fir_x -> "
+              f"CAST(__fir_x AS DOUBLE))")
+        return (
+            f"(CASE WHEN {m} IS NULL OR {m} <= 0 OR {denom} = 0 "
+            f"THEN NULL ELSE "
+            f"transform({xs}, (__fir_v, __fir_i) -> "
+            f"aggregate(sequence(1, {m}), CAST(0 AS DOUBLE), "
+            f"(__fir_a, __fir_j) -> __fir_a "
+            f"+ element_at({fl}, __fir_j) "
+            f"* coalesce(CASE WHEN __fir_i + 2 - __fir_j "
+            f"+ {shift} >= 1 THEN try_element_at({xs}, "
+            f"__fir_i + 2 - __fir_j + {shift}) END, 0.0)) "
+            f"/ {denom}) END)")
+
+    @_fn("series_fill_const", 1, 2, "array",
+         "series_fill_const(series[, value])")
+    def _fn_series_fill_const(self, fname: str, args: list[str]) -> str:
+        # Kusto: series_fill_const(series[, constant_value]) —
+        # constant defaults to 0 (r13 probe sweep)
+        const = args[1] if len(args) == 2 else "0.0"
+        return (f"transform({self._series_arg(args[0])}, v -> coalesce("
+                f"CAST(v AS DOUBLE), CAST({const} AS DOUBLE)))")
+
+    @_fn("series_fill_forward series_fill_backward", 1, 2, "array",
+         "{name}(series[, missing_value_placeholder])")
+    def _fn_series_fill_forward(self, fname: str, args: list[str]) -> str:
+        # O(n) fold building the filled array; try_element_at(acc, -1)
+        # is null on the empty accumulator, so leading (resp.
+        # trailing) nulls stay null — Kusto's edge behavior.
+        # Optional missing_value_placeholder (r13 probe sweep):
+        # points equal to it count as missing too (make-series
+        # grids filled with a sentinel default).
+        arr = self._series_arg(args[0])
+        if len(args) == 2:
+            arr = (f"transform({arr}, __sfp_v -> CASE WHEN "
+                   f"CAST(__sfp_v AS DOUBLE) <=> "
+                   f"CAST({args[1]} AS DOUBLE) THEN NULL "
+                   f"ELSE CAST(__sfp_v AS DOUBLE) END)")
+        if fname == "series_fill_backward":
+            arr = f"reverse({arr})"
+        ff = (f"aggregate({arr}, CAST(array() AS ARRAY<DOUBLE>), "
+              f"(a, v) -> array_append(a, coalesce(CAST(v AS DOUBLE), "
+              f"try_element_at(a, -1))))")
+        return ff if fname == "series_fill_forward" else f"reverse({ff})"
+
+    @_fn("series_fill_linear", 1, 4, "array",
+         "series_fill_linear(series[, missing_value_placeholder[, "
+         "fill_edges[, constant_value]]])")
+    def _fn_series_fill_linear(self, fname: str, args: list[str]) -> str:
+        # linear interpolation between the nearest non-null anchors;
+        # edges take the nearest anchor (Kusto series_fill_linear).
+        # Pure higher-order SQL: per position, the prev/next anchor
+        # is found by filtering the (value, index) pairs — O(n²) in
+        # the SERIES length (calendar-bounded), zero Python.
+        # Full Kusto signature (r13 probe sweep):
+        # series_fill_linear(series[, missing_value_placeholder
+        # [, fill_edges[, constant_value]]]) — points equal to the
+        # placeholder count as missing; fill_edges=false leaves
+        # edge gaps at constant_value (default null) instead of
+        # the nearest anchor.
+        arr = self._series_arg(args[0])
+        if len(args) >= 2 and args[1].upper().strip() not in (
+                "NULL", "CAST(NULL AS DOUBLE)"):
+            arr = (f"transform({arr}, __sfp_v -> CASE WHEN "
+                   f"CAST(__sfp_v AS DOUBLE) <=> "
+                   f"CAST({args[1]} AS DOUBLE) THEN NULL "
+                   f"ELSE CAST(__sfp_v AS DOUBLE) END)")
+        edge_const = args[3] if len(args) == 4 else "NULL"
+        fill_edges = args[2] if len(args) >= 3 else "true"
+        # lambda vars carry a __sfl_ prefix so they can never shadow
+        # a user column referenced from the inlined array expression
+        wi = (f"zip_with({arr}, sequence(1, size({arr})), "
+              f"(__sfl_v, __sfl_i) -> struct(CAST(__sfl_v AS DOUBLE) "
+              f"AS v, __sfl_i AS i))")
+        nn = f"filter({wi}, __sfl_q -> __sfl_q.v IS NOT NULL)"
+        prev = (f"try_element_at(filter({nn}, "
+                f"__sfl_p -> __sfl_p.i < __sfl_s.i), -1)")
+        nxt = (f"try_element_at(filter({nn}, "
+               f"__sfl_p -> __sfl_p.i > __sfl_s.i), 1)")
+        # empty-input guard: sequence(1, 0) DESCENDS (round-5
+        # gotcha) and zip_with pads to the LONGER side, so an
+        # empty series would yield 2 garbage elements
+        edge = (f"CAST({edge_const} AS DOUBLE)"
+                if len(args) >= 3 else "__sfl_edge_anchor")
+        near_p = (f"(CASE WHEN CAST({fill_edges} AS BOOLEAN) "
+                  f"THEN {prev}.v ELSE {edge} END)"
+                  if len(args) >= 3 else f"{prev}.v")
+        near_n = (f"(CASE WHEN CAST({fill_edges} AS BOOLEAN) "
+                  f"THEN {nxt}.v ELSE {edge} END)"
+                  if len(args) >= 3 else f"{nxt}.v")
+        return (
+            f"(CASE WHEN size({arr}) <= 0 "
+            f"THEN CAST(array() AS ARRAY<DOUBLE>) ELSE "
+            f"transform({wi}, __sfl_s -> "
+            f"CASE WHEN __sfl_s.v IS NOT NULL THEN __sfl_s.v "
+            f"WHEN {prev} IS NULL AND {nxt} IS NULL THEN NULL "
+            f"WHEN {prev} IS NULL THEN {near_n} "
+            f"WHEN {nxt} IS NULL THEN {near_p} "
+            f"ELSE {prev}.v + ({nxt}.v - {prev}.v) "
+            f"* (__sfl_s.i - {prev}.i) / ({nxt}.i - {prev}.i) END) "
+            f"END)")
+
+    @_fn("series_outliers", 1, 5, "array",
+         "series_outliers(series[, kind[, ignore_val[, min_percentile[, "
+         "max_percentile]]]])")
+    def _fn_series_outliers(self, fname: str, args: list[str]) -> str:
+        # Tukey-fence anomaly score, full Kusto signature (r13
+        # probe sweep): series_outliers(series [, kind [,
+        # ignore_val [, min_percentile [, max_percentile]]]]).
+        # kind (string LITERAL): 'ctukey' (DEFAULT, like Kusto) =
+        # custom percentile range, default 10-90; 'tukey' = the
+        # classic 25-75 quartiles. Score is 0 inside
+        # [q_lo - 1.5·range, q_hi + 1.5·range], else signed
+        # distance past the fence in range units. Percentiles use
+        # the nearest-rank (ceil) method over the sorted non-null
+        # values so the DuckDB oracle reproduces them bit-for-bit
+        # (documented deviation: Kusto's own quantile estimator is
+        # unpublished). Points equal to ignore_val are treated as
+        # missing (excluded from the percentiles, scored null).
+        arr = self._series_arg(args[0])
+        kind = "ctukey"
+        if len(args) >= 2:
+            km = re.fullmatch(r"\s*'((?:[^'\\]|\\.)*)'\s*", args[1])
+            if not km or km.group(1) not in ("tukey", "ctukey"):
                 raise ValueError(
-                    "KQL: series_fill_const(series[, value])")
-            const = args[1] if len(args) == 2 else "0.0"
-            return (f"transform({self._series_arg(args[0])}, v -> coalesce("
-                    f"CAST(v AS DOUBLE), CAST({const} AS DOUBLE)))")
-        if fname in ("series_fill_forward", "series_fill_backward"):
-            # O(n) fold building the filled array; try_element_at(acc, -1)
-            # is null on the empty accumulator, so leading (resp.
-            # trailing) nulls stay null — Kusto's edge behavior.
-            # Optional missing_value_placeholder (r13 probe sweep):
-            # points equal to it count as missing too (make-series
-            # grids filled with a sentinel default).
-            if len(args) not in (1, 2):
+                    "KQL: series_outliers kind must be the "
+                    "literal 'tukey' or 'ctukey'")
+            kind = km.group(1)
+        ign = args[2] if len(args) >= 3 else "NULL"
+        if kind == "tukey":
+            plo, phi = "0.25", "0.75"
+            if len(args) > 3:
                 raise ValueError(
-                    f"KQL: {fname}(series[, missing_value_placeholder])")
-            arr = self._series_arg(args[0])
-            if len(args) == 2:
-                arr = (f"transform({arr}, __sfp_v -> CASE WHEN "
-                       f"CAST(__sfp_v AS DOUBLE) <=> "
-                       f"CAST({args[1]} AS DOUBLE) THEN NULL "
-                       f"ELSE CAST(__sfp_v AS DOUBLE) END)")
-            if fname == "series_fill_backward":
-                arr = f"reverse({arr})"
-            ff = (f"aggregate({arr}, CAST(array() AS ARRAY<DOUBLE>), "
-                  f"(a, v) -> array_append(a, coalesce(CAST(v AS DOUBLE), "
-                  f"try_element_at(a, -1))))")
-            return ff if fname == "series_fill_forward" else f"reverse({ff})"
-        if fname == "series_fill_linear":
-            # linear interpolation between the nearest non-null anchors;
-            # edges take the nearest anchor (Kusto series_fill_linear).
-            # Pure higher-order SQL: per position, the prev/next anchor
-            # is found by filtering the (value, index) pairs — O(n²) in
-            # the SERIES length (calendar-bounded), zero Python.
-            # Full Kusto signature (r13 probe sweep):
-            # series_fill_linear(series[, missing_value_placeholder
-            # [, fill_edges[, constant_value]]]) — points equal to the
-            # placeholder count as missing; fill_edges=false leaves
-            # edge gaps at constant_value (default null) instead of
-            # the nearest anchor.
-            if len(args) not in (1, 2, 3, 4):
-                raise ValueError(
-                    "KQL: series_fill_linear(series[, "
-                    "missing_value_placeholder[, fill_edges"
-                    "[, constant_value]]])")
-            arr = self._series_arg(args[0])
-            if len(args) >= 2 and args[1].upper().strip() not in (
-                    "NULL", "CAST(NULL AS DOUBLE)"):
-                arr = (f"transform({arr}, __sfp_v -> CASE WHEN "
-                       f"CAST(__sfp_v AS DOUBLE) <=> "
-                       f"CAST({args[1]} AS DOUBLE) THEN NULL "
-                       f"ELSE CAST(__sfp_v AS DOUBLE) END)")
-            edge_const = args[3] if len(args) == 4 else "NULL"
-            fill_edges = args[2] if len(args) >= 3 else "true"
-            # lambda vars carry a __sfl_ prefix so they can never shadow
-            # a user column referenced from the inlined array expression
-            wi = (f"zip_with({arr}, sequence(1, size({arr})), "
-                  f"(__sfl_v, __sfl_i) -> struct(CAST(__sfl_v AS DOUBLE) "
-                  f"AS v, __sfl_i AS i))")
-            nn = f"filter({wi}, __sfl_q -> __sfl_q.v IS NOT NULL)"
-            prev = (f"try_element_at(filter({nn}, "
-                    f"__sfl_p -> __sfl_p.i < __sfl_s.i), -1)")
-            nxt = (f"try_element_at(filter({nn}, "
-                   f"__sfl_p -> __sfl_p.i > __sfl_s.i), 1)")
-            # empty-input guard: sequence(1, 0) DESCENDS (round-5
-            # gotcha) and zip_with pads to the LONGER side, so an
-            # empty series would yield 2 garbage elements
-            edge = (f"CAST({edge_const} AS DOUBLE)"
-                    if len(args) >= 3 else "__sfl_edge_anchor")
-            near_p = (f"(CASE WHEN CAST({fill_edges} AS BOOLEAN) "
-                      f"THEN {prev}.v ELSE {edge} END)"
-                      if len(args) >= 3 else f"{prev}.v")
-            near_n = (f"(CASE WHEN CAST({fill_edges} AS BOOLEAN) "
-                      f"THEN {nxt}.v ELSE {edge} END)"
-                      if len(args) >= 3 else f"{nxt}.v")
-            return (
-                f"(CASE WHEN size({arr}) <= 0 "
+                    "KQL: series_outliers percentiles apply to "
+                    "kind 'ctukey' only")
+        else:
+            plo = (f"(CAST({args[3]} AS DOUBLE) / 100.0)"
+                   if len(args) >= 4 else "0.10")
+            phi = (f"(CAST({args[4]} AS DOUBLE) / 100.0)"
+                   if len(args) == 5 else "0.90")
+        # __so_ lambda-var prefix: the series expression is inlined
+        # INSIDE the outer lambda body, so plain names could shadow
+        # the user's column
+        miss = (f"(__so_x IS NULL OR ({ign}) IS NOT NULL "
+                f"AND __so_x <=> CAST({ign} AS DOUBLE))")
+        srt = (f"array_sort(filter(transform({arr}, "
+               f"__so_x -> CAST(__so_x AS DOUBLE)), "
+               f"__so_x -> NOT {miss}))")
+        q1 = (f"element_at({srt}, greatest(CAST(ceil("
+              f"size({srt}) * {plo}) AS INT), 1))")
+        q3 = (f"element_at({srt}, greatest(CAST(ceil("
+              f"size({srt}) * {phi}) AS INT), 1))")
+        iqr = f"({q3} - {q1})"
+        hi = f"({q3} + 1.5 * {iqr})"
+        lo = f"({q1} - 1.5 * {iqr})"
+        vmiss = (f"(__so_v IS NULL OR ({ign}) IS NOT NULL "
+                 f"AND CAST(__so_v AS DOUBLE) "
+                 f"<=> CAST({ign} AS DOUBLE))")
+        return (
+            f"transform({arr}, __so_v -> "
+            f"CASE WHEN {vmiss} THEN NULL "
+            f"WHEN size({srt}) = 0 OR {iqr} <= 0 THEN 0.0 "
+            f"WHEN CAST(__so_v AS DOUBLE) > {hi} "
+            f"THEN (CAST(__so_v AS DOUBLE) - {hi}) / {iqr} "
+            f"WHEN CAST(__so_v AS DOUBLE) < {lo} "
+            f"THEN (CAST(__so_v AS DOUBLE) - {lo}) / {iqr} "
+            f"ELSE 0.0 END)")
+
+    @_fn("series_stdev", 1, 1, "real", "series_stdev(series) takes 1 arg")
+    def _fn_series_stdev(self, fname: str, args: list[str]) -> str:
+        # population stdev of the non-null points (E[x²] − E[x]²)
+        arr = self._series_arg(args[0])
+        nn = (f"filter(transform({arr}, __sd_x -> "
+              f"CAST(__sd_x AS DOUBLE)), __sd_x -> "
+              f"__sd_x IS NOT NULL)")
+        s1 = (f"aggregate({nn}, CAST(0 AS DOUBLE), "
+              f"(__sd_a, __sd_v) -> __sd_a + __sd_v)")
+        s2 = (f"aggregate({nn}, CAST(0 AS DOUBLE), "
+              f"(__sd_a, __sd_v) -> __sd_a + __sd_v * __sd_v)")
+        n = f"size({nn})"
+        return (f"CASE WHEN {n} = 0 THEN NULL ELSE "
+                f"sqrt(greatest({s2} / {n} - ({s1} / {n}) "
+                f"* ({s1} / {n}), 0.0)) END")
+
+    @_fn("series_seasonal", 2, 2, "array", "series_seasonal(series, period)")
+    def _fn_series_seasonal(self, fname: str, args: list[str]) -> str:
+        # zero-sum seasonal component with period p: per-phase mean
+        # minus the overall mean (the seasonal part of a classic
+        # additive decomposition; pair with series_fir for trend and
+        # series_subtract for the residual). Pure higher-order SQL
+        # over the in-row array — O(n²/p) in the calendar-bounded
+        # series length, zero shuffles.
+        arr, p = self._series_arg(args[0]), args[1]
+        wi = (f"zip_with({arr}, sequence(1, size({arr})), "
+              f"(__ss_v, __ss_i) -> struct(CAST(__ss_v AS DOUBLE) "
+              f"AS v, __ss_i AS i))")
+        phase = (f"filter({wi}, __ss_q -> "
+                 f"pmod(__ss_q.i - 1, {p}) = pmod(__ss_s.i - 1, {p})"
+                 f" AND __ss_q.v IS NOT NULL)")
+        ph_mean = (f"(aggregate({phase}, CAST(0 AS DOUBLE), "
+                   f"(__ss_a, __ss_e) -> __ss_a + __ss_e.v) "
+                   f"/ size({phase}))")
+        nn = (f"filter(transform({arr}, __ss_x -> "
+              f"CAST(__ss_x AS DOUBLE)), __ss_x -> "
+              f"__ss_x IS NOT NULL)")
+        overall = (f"(aggregate({nn}, CAST(0 AS DOUBLE), "
+                   f"(__ss_a, __ss_v) -> __ss_a + __ss_v) "
+                   f"/ size({nn}))")
+        # empty-input guard: see series_fill_linear — zip_with over
+        # a descending sequence(1, 0) pads 2 garbage elements
+        return (f"(CASE WHEN size({arr}) <= 0 "
                 f"THEN CAST(array() AS ARRAY<DOUBLE>) ELSE "
-                f"transform({wi}, __sfl_s -> "
-                f"CASE WHEN __sfl_s.v IS NOT NULL THEN __sfl_s.v "
-                f"WHEN {prev} IS NULL AND {nxt} IS NULL THEN NULL "
-                f"WHEN {prev} IS NULL THEN {near_n} "
-                f"WHEN {nxt} IS NULL THEN {near_p} "
-                f"ELSE {prev}.v + ({nxt}.v - {prev}.v) "
-                f"* (__sfl_s.i - {prev}.i) / ({nxt}.i - {prev}.i) END) "
-                f"END)")
-        if fname == "series_outliers":
-            # Tukey-fence anomaly score, full Kusto signature (r13
-            # probe sweep): series_outliers(series [, kind [,
-            # ignore_val [, min_percentile [, max_percentile]]]]).
-            # kind (string LITERAL): 'ctukey' (DEFAULT, like Kusto) =
-            # custom percentile range, default 10-90; 'tukey' = the
-            # classic 25-75 quartiles. Score is 0 inside
-            # [q_lo - 1.5·range, q_hi + 1.5·range], else signed
-            # distance past the fence in range units. Percentiles use
-            # the nearest-rank (ceil) method over the sorted non-null
-            # values so the DuckDB oracle reproduces them bit-for-bit
-            # (documented deviation: Kusto's own quantile estimator is
-            # unpublished). Points equal to ignore_val are treated as
-            # missing (excluded from the percentiles, scored null).
-            if len(args) not in (1, 2, 3, 4, 5):
-                raise ValueError(
-                    "KQL: series_outliers(series[, kind[, ignore_val"
-                    "[, min_percentile[, max_percentile]]]])")
-            arr = self._series_arg(args[0])
-            kind = "ctukey"
-            if len(args) >= 2:
-                km = re.fullmatch(r"\s*'((?:[^'\\]|\\.)*)'\s*", args[1])
-                if not km or km.group(1) not in ("tukey", "ctukey"):
-                    raise ValueError(
-                        "KQL: series_outliers kind must be the "
-                        "literal 'tukey' or 'ctukey'")
-                kind = km.group(1)
-            ign = args[2] if len(args) >= 3 else "NULL"
-            if kind == "tukey":
-                plo, phi = "0.25", "0.75"
-                if len(args) > 3:
-                    raise ValueError(
-                        "KQL: series_outliers percentiles apply to "
-                        "kind 'ctukey' only")
-            else:
-                plo = (f"(CAST({args[3]} AS DOUBLE) / 100.0)"
-                       if len(args) >= 4 else "0.10")
-                phi = (f"(CAST({args[4]} AS DOUBLE) / 100.0)"
-                       if len(args) == 5 else "0.90")
-            # __so_ lambda-var prefix: the series expression is inlined
-            # INSIDE the outer lambda body, so plain names could shadow
-            # the user's column
-            miss = (f"(__so_x IS NULL OR ({ign}) IS NOT NULL "
-                    f"AND __so_x <=> CAST({ign} AS DOUBLE))")
-            srt = (f"array_sort(filter(transform({arr}, "
-                   f"__so_x -> CAST(__so_x AS DOUBLE)), "
-                   f"__so_x -> NOT {miss}))")
-            q1 = (f"element_at({srt}, greatest(CAST(ceil("
-                  f"size({srt}) * {plo}) AS INT), 1))")
-            q3 = (f"element_at({srt}, greatest(CAST(ceil("
-                  f"size({srt}) * {phi}) AS INT), 1))")
-            iqr = f"({q3} - {q1})"
-            hi = f"({q3} + 1.5 * {iqr})"
-            lo = f"({q1} - 1.5 * {iqr})"
-            vmiss = (f"(__so_v IS NULL OR ({ign}) IS NOT NULL "
-                     f"AND CAST(__so_v AS DOUBLE) "
-                     f"<=> CAST({ign} AS DOUBLE))")
-            return (
-                f"transform({arr}, __so_v -> "
-                f"CASE WHEN {vmiss} THEN NULL "
-                f"WHEN size({srt}) = 0 OR {iqr} <= 0 THEN 0.0 "
-                f"WHEN CAST(__so_v AS DOUBLE) > {hi} "
-                f"THEN (CAST(__so_v AS DOUBLE) - {hi}) / {iqr} "
-                f"WHEN CAST(__so_v AS DOUBLE) < {lo} "
-                f"THEN (CAST(__so_v AS DOUBLE) - {lo}) / {iqr} "
-                f"ELSE 0.0 END)")
-        if fname == "series_stdev":
-            # population stdev of the non-null points (E[x²] − E[x]²)
-            if len(args) != 1:
-                raise ValueError("KQL: series_stdev(series) takes 1 arg")
-            arr = self._series_arg(args[0])
-            nn = (f"filter(transform({arr}, __sd_x -> "
-                  f"CAST(__sd_x AS DOUBLE)), __sd_x -> "
-                  f"__sd_x IS NOT NULL)")
-            s1 = (f"aggregate({nn}, CAST(0 AS DOUBLE), "
-                  f"(__sd_a, __sd_v) -> __sd_a + __sd_v)")
-            s2 = (f"aggregate({nn}, CAST(0 AS DOUBLE), "
-                  f"(__sd_a, __sd_v) -> __sd_a + __sd_v * __sd_v)")
-            n = f"size({nn})"
-            return (f"CASE WHEN {n} = 0 THEN NULL ELSE "
-                    f"sqrt(greatest({s2} / {n} - ({s1} / {n}) "
-                    f"* ({s1} / {n}), 0.0)) END")
-        if fname == "series_seasonal":
-            # zero-sum seasonal component with period p: per-phase mean
-            # minus the overall mean (the seasonal part of a classic
-            # additive decomposition; pair with series_fir for trend and
-            # series_subtract for the residual). Pure higher-order SQL
-            # over the in-row array — O(n²/p) in the calendar-bounded
-            # series length, zero shuffles.
-            if len(args) != 2:
-                raise ValueError("KQL: series_seasonal(series, period)")
-            arr, p = self._series_arg(args[0]), args[1]
-            wi = (f"zip_with({arr}, sequence(1, size({arr})), "
-                  f"(__ss_v, __ss_i) -> struct(CAST(__ss_v AS DOUBLE) "
-                  f"AS v, __ss_i AS i))")
-            phase = (f"filter({wi}, __ss_q -> "
-                     f"pmod(__ss_q.i - 1, {p}) = pmod(__ss_s.i - 1, {p})"
-                     f" AND __ss_q.v IS NOT NULL)")
-            ph_mean = (f"(aggregate({phase}, CAST(0 AS DOUBLE), "
-                       f"(__ss_a, __ss_e) -> __ss_a + __ss_e.v) "
-                       f"/ size({phase}))")
-            nn = (f"filter(transform({arr}, __ss_x -> "
-                  f"CAST(__ss_x AS DOUBLE)), __ss_x -> "
-                  f"__ss_x IS NOT NULL)")
-            overall = (f"(aggregate({nn}, CAST(0 AS DOUBLE), "
-                       f"(__ss_a, __ss_v) -> __ss_a + __ss_v) "
-                       f"/ size({nn}))")
-            # empty-input guard: see series_fill_linear — zip_with over
-            # a descending sequence(1, 0) pads 2 garbage elements
-            return (f"(CASE WHEN size({arr}) <= 0 "
-                    f"THEN CAST(array() AS ARRAY<DOUBLE>) ELSE "
-                    f"transform({wi}, __ss_s -> "
-                    f"CASE WHEN __ss_s.v IS NULL THEN NULL "
-                    f"WHEN size({phase}) = 0 THEN NULL "
-                    f"ELSE {ph_mean} - {overall} END) END)")
-        if fname == "series_pearson_correlation":
-            # Pearson r over the pairwise-non-null points of two series
-            # (population formula; null when either variance is 0)
-            if len(args) != 2:
-                raise ValueError(
-                    "KQL: series_pearson_correlation(series1, series2)")
-            a, b = self._series_arg(args[0]), self._series_arg(args[1])
-            pairs = (f"filter(zip_with({a}, {b}, (__pc_x, __pc_y) -> "
-                     f"struct(CAST(__pc_x AS DOUBLE) AS x, "
-                     f"CAST(__pc_y AS DOUBLE) AS y)), "
-                     f"__pc_p -> __pc_p.x IS NOT NULL "
-                     f"AND __pc_p.y IS NOT NULL)")
-            def fold(expr):
-                return (f"aggregate({pairs}, CAST(0 AS DOUBLE), "
-                        f"(__pc_a, __pc_e) -> __pc_a + {expr})")
-            n = f"CAST(size({pairs}) AS DOUBLE)"
-            sx, sy = fold("__pc_e.x"), fold("__pc_e.y")
-            sxy = fold("__pc_e.x * __pc_e.y")
-            sxx = fold("__pc_e.x * __pc_e.x")
-            syy = fold("__pc_e.y * __pc_e.y")
-            vx = f"({n} * {sxx} - {sx} * {sx})"
-            vy = f"({n} * {syy} - {sy} * {sy})"
-            return (f"CASE WHEN size({pairs}) = 0 OR {vx} <= 0 "
-                    f"OR {vy} <= 0 THEN NULL "
-                    f"ELSE ({n} * {sxy} - {sx} * {sy}) "
-                    f"/ (sqrt({vx}) * sqrt({vy})) END")
-        if fname in ("series_stats", "series_stats_dynamic"):
-            # one-pass stats bag over the in-row series: min/min_idx/
-            # max/max_idx/avg/variance/stdev (population, matching
-            # series_stdev; 0-based indexes of the FIRST extreme).
-            # The non-dynamic spelling is the same bag — Kusto's tuple
-            # form is handled by extend's multi-assign. Optional
-            # ignore_nonfinite (r13 probe sweep): true drops NaN/±Inf
-            # points before the stats.
-            if len(args) not in (1, 2):
-                raise ValueError(
-                    f"KQL: {fname}(series[, ignore_nonfinite])")
-            arr = self._series_arg(args[0])
-            if len(args) == 2:
-                # non-finite -> null (not dropped) so min_idx/max_idx
-                # keep referring to ORIGINAL series positions
-                arr = (f"transform({arr}, __snf_x -> CASE WHEN "
-                       f"CAST({args[1]} AS BOOLEAN) "
-                       f"AND (isnan(CAST(__snf_x AS DOUBLE)) "
-                       f"OR abs(CAST(__snf_x AS DOUBLE)) = "
-                       f"CAST('Infinity' AS DOUBLE)) THEN NULL "
-                       f"ELSE CAST(__snf_x AS DOUBLE) END)")
-            nn = (f"filter(transform({arr}, __st_x -> "
-                  f"CAST(__st_x AS DOUBLE)), "
-                  f"__st_x -> __st_x IS NOT NULL)")
-            wi = (f"zip_with({arr}, sequence(0, size({arr}) - 1), "
-                  f"(__st_v, __st_i) -> struct("
-                  f"CAST(__st_v AS DOUBLE) AS v, __st_i AS i))")
+                f"transform({wi}, __ss_s -> "
+                f"CASE WHEN __ss_s.v IS NULL THEN NULL "
+                f"WHEN size({phase}) = 0 THEN NULL "
+                f"ELSE {ph_mean} - {overall} END) END)")
 
-            def first_idx(m):
-                return (f"try_element_at(filter({wi}, __st_p -> "
-                        f"__st_p.v <=> {m}), 1).i")
-            mn, mx = f"array_min({nn})", f"array_max({nn})"
-            avg = self._render_call("series_avg", [arr])
-            sd = self._render_call("series_stdev", [arr])
+    @_fn("series_pearson_correlation", 2, 2, "real",
+         "series_pearson_correlation(series1, series2)")
+    def _fn_series_pearson_correlation(self, fname: str,
+                                       args: list[str]) -> str:
+        # Pearson r over the pairwise-non-null points of two series
+        # (population formula; null when either variance is 0)
+        a, b = self._series_arg(args[0]), self._series_arg(args[1])
+        pairs = (f"filter(zip_with({a}, {b}, (__pc_x, __pc_y) -> "
+                 f"struct(CAST(__pc_x AS DOUBLE) AS x, "
+                 f"CAST(__pc_y AS DOUBLE) AS y)), "
+                 f"__pc_p -> __pc_p.x IS NOT NULL "
+                 f"AND __pc_p.y IS NOT NULL)")
+        def fold(expr):
+            return (f"aggregate({pairs}, CAST(0 AS DOUBLE), "
+                    f"(__pc_a, __pc_e) -> __pc_a + {expr})")
+        n = f"CAST(size({pairs}) AS DOUBLE)"
+        sx, sy = fold("__pc_e.x"), fold("__pc_e.y")
+        sxy = fold("__pc_e.x * __pc_e.y")
+        sxx = fold("__pc_e.x * __pc_e.x")
+        syy = fold("__pc_e.y * __pc_e.y")
+        vx = f"({n} * {sxx} - {sx} * {sx})"
+        vy = f"({n} * {syy} - {sy} * {sy})"
+        return (f"CASE WHEN size({pairs}) = 0 OR {vx} <= 0 "
+                f"OR {vy} <= 0 THEN NULL "
+                f"ELSE ({n} * {sxy} - {sx} * {sy}) "
+                f"/ (sqrt({vx}) * sqrt({vy})) END")
+
+    @_fn("series_stats series_stats_dynamic", 1, 2, None,
+         "{name}(series[, ignore_nonfinite])")
+    def _fn_series_stats(self, fname: str, args: list[str]) -> str:
+        # one-pass stats bag over the in-row series: min/min_idx/
+        # max/max_idx/avg/variance/stdev (population, matching
+        # series_stdev; 0-based indexes of the FIRST extreme).
+        # The non-dynamic spelling is the same bag — Kusto's tuple
+        # form is handled by extend's multi-assign. Optional
+        # ignore_nonfinite (r13 probe sweep): true drops NaN/±Inf
+        # points before the stats.
+        arr = self._series_arg(args[0])
+        if len(args) == 2:
+            # non-finite -> null (not dropped) so min_idx/max_idx
+            # keep referring to ORIGINAL series positions
+            arr = (f"transform({arr}, __snf_x -> CASE WHEN "
+                   f"CAST({args[1]} AS BOOLEAN) "
+                   f"AND (isnan(CAST(__snf_x AS DOUBLE)) "
+                   f"OR abs(CAST(__snf_x AS DOUBLE)) = "
+                   f"CAST('Infinity' AS DOUBLE)) THEN NULL "
+                   f"ELSE CAST(__snf_x AS DOUBLE) END)")
+        nn = (f"filter(transform({arr}, __st_x -> "
+              f"CAST(__st_x AS DOUBLE)), "
+              f"__st_x -> __st_x IS NOT NULL)")
+        wi = (f"zip_with({arr}, sequence(0, size({arr}) - 1), "
+              f"(__st_v, __st_i) -> struct("
+              f"CAST(__st_v AS DOUBLE) AS v, __st_i AS i))")
+
+        def first_idx(m):
+            return (f"try_element_at(filter({wi}, __st_p -> "
+                    f"__st_p.v <=> {m}), 1).i")
+        mn, mx = f"array_min({nn})", f"array_max({nn})"
+        avg = self._call("series_avg", [arr])
+        sd = self._call("series_stdev", [arr])
+        obj = (f"named_struct("
+               f"'min', {mn}, 'min_idx', {first_idx(mn)}, "
+               f"'max', {mx}, 'max_idx', {first_idx(mx)}, "
+               f"'avg', {avg}, "
+               f"'variance', {sd} * {sd}, "
+               f"'stdev', {sd})")
+        return f"parse_json(to_json({obj}))"
+
+    @_fn("series_iir", 3, 3, "array", "series_iir(x, b, a)")
+    def _fn_series_iir(self, fname: str, args: list[str]) -> str:
+        # infinite-impulse-response filter: y[i] = (sum_j b[j]
+        # x[i-j] - sum_{j>=1} a[j] y[i-j]) / a[0] — recursive, so
+        # a numpy Arrow-batched kernel (the series_fir sibling;
+        # a = [1] degenerates to FIR). Null/empty/zero-a0 -> null.
+        x, b, a = (f"try_cast({v} AS ARRAY<DOUBLE>)" for v in args)
+        return f"parse_json(to_json(__kql_iir({x}, {b}, {a})))"
+
+    @_fn("series_fit_poly_dynamic", 1, 3, None,
+         "series_fit_poly_dynamic(y [, x [, degree]])")
+    def _fn_series_fit_poly_dynamic(self, fname: str, args: list[str]) -> str:
+        # least-squares polynomial fit (numpy Arrow-batched kernel,
+        # same transport as series_fft): bag {rsquare, coefficients
+        # (HIGHEST power first, numpy.polyfit order), variance,
+        # rvariance, poly_fit}; optional x series and degree
+        # (default 1); fewer than degree+1 valid points -> null
+        y = f"try_cast({args[0]} AS ARRAY<DOUBLE>)"
+        x = (f"try_cast({args[1]} AS ARRAY<DOUBLE>)"
+             if len(args) >= 2 else
+             "CAST(NULL AS ARRAY<DOUBLE>)")
+        deg = (f"CAST({args[2]} AS INT)" if len(args) == 3
+               else "1")
+        return (f"parse_json(to_json(__kql_fitpoly({y}, {x}, "
+                f"{deg})))")
+
+    @_fn("series_fft_dynamic series_ifft_dynamic", 1, 2, None,
+         "{name}(x_real [, x_imag])")
+    def _fn_series_fft_dynamic(self, fname: str, args: list[str]) -> str:
+        udf = ("__kql_fft" if fname.startswith("series_fft")
+               else "__kql_ifft")
+        xr = f"try_cast({args[0]} AS ARRAY<DOUBLE>)"
+        xi = (f"try_cast({args[1]} AS ARRAY<DOUBLE>)"
+              if len(args) == 2 else
+              f"transform({xr}, __ff_x -> CAST(0.0 AS DOUBLE))")
+        return f"parse_json(to_json({udf}({xr}, {xi})))"
+
+    @_fn("series_dot_product series_cosine_similarity", 2, 2, None,
+         "{name}(series1, series2)")
+    def _fn_series_dot_product(self, fname: str, args: list[str]) -> str:
+        # JSON-lift (the series_magnitude pattern): VARIANT
+        # dynamics — todynamic() strings, dynamic literals —
+        # work alongside native make-series / float arrays
+        a, b = (f"from_json(to_json({x}), 'array<double>', "
+                f"map('mode', 'PERMISSIVE'))" for x in args)
+
+        def dot(x, y):
+            return (f"aggregate(zip_with({x}, {y}, "
+                    f"(__dp_x, __dp_y) -> CAST(__dp_x AS DOUBLE) "
+                    f"* CAST(__dp_y AS DOUBLE)), CAST(0 AS DOUBLE), "
+                    f"(__dp_a, __dp_v) -> __dp_a + __dp_v)")
+        if fname == "series_dot_product":
+            return dot(a, b)
+        na, nb = dot(a, a), dot(b, b)
+        return (f"(CASE WHEN {na} = 0 OR {nb} = 0 THEN NULL "
+                f"ELSE {dot(a, b)} / (sqrt({na}) * sqrt({nb})) END)")
+
+    @_fn("series_magnitude", 1, 1, None, "series_magnitude(series)")
+    def _fn_series_magnitude(self, fname: str, args: list[str]) -> str:
+        # JSON-lift so VARIANT dynamics (e.g. the empty-array
+        # literal) work alongside native make-series arrays
+        s = f"from_json(to_json({args[0]}), 'array<double>')"
+        return (f"sqrt(aggregate(transform({s}, __sm_x -> "
+                f"CAST(__sm_x AS DOUBLE) * CAST(__sm_x AS DOUBLE)),"
+                f" CAST(0 AS DOUBLE), "
+                f"(__sm_a, __sm_v) -> __sm_a + __sm_v))")
+
+    @_fn("isascii", 1, 1, "bool", "isascii(s)")
+    def _fn_isascii(self, fname: str, args: list[str]) -> str:
+        return (f"(CASE WHEN {args[0]} IS NULL THEN NULL ELSE "
+                f"{args[0]} RLIKE '^[\\\\x00-\\\\x7F]*$' END)")
+
+    @_fn("base64_encode_fromarray", 1, 1, None, "base64_encode_fromarray(arr)")
+    def _fn_base64_encode_fromarray(self, fname: str, args: list[str]) -> str:
+        # inverse of base64_decode_toarray: byte-number array ->
+        # base64 text (per-element hex render + binary concat fold)
+        # JSON round-trip lift: accepts native arrays AND dynamic
+        # (VARIANT) values — base64_decode_toarray returns VARIANT
+        arr = f"from_json(to_json({args[0]}), 'array<bigint>')"
+        return (f"base64(aggregate({arr}, CAST('' AS BINARY), "
+                f"(__bf_a, __bf_b) -> concat(__bf_a, "
+                f"unhex(lpad(hex(pmod(__bf_b, 256)), 2, '0')))))")
+
+    @_fn("series_abs series_exp series_log series_sign series_sqrt "
+         "series_floor series_ceiling series_sin series_cos series_tan "
+         "series_asin series_acos series_atan", 1, 1, "array",
+         "{name}(series) takes 1 arg")
+    def _fn_series_abs(self, fname: str, args: list[str]) -> str:
+        # elementwise unary transforms over the in-row series
+        # (trig family added in r11 — same Spark builtin names)
+        fn = fname.removeprefix("series_")
+        return (f"transform({self._series_arg(args[0])}, __su_v -> "
+                f"CAST({fn}(CAST(__su_v AS DOUBLE)) AS DOUBLE))")
+
+    @_fn("series_equals series_not_equals series_greater "
+         "series_greater_equals series_less series_less_equals", 2, 2, "array",
+         "{name}(series1, series2)")
+    def _fn_series_equals(self, fname: str, args: list[str]) -> str:
+        # pairwise comparison series -> boolean array (Kusto
+        # returns a dynamic array of bool; null elements compare
+        # to null, like the scalar operators)
+        op_sym = {"series_equals": "=", "series_not_equals": "!=",
+                  "series_greater": ">",
+                  "series_greater_equals": ">=",
+                  "series_less": "<",
+                  "series_less_equals": "<="}[fname]
+        return (f"zip_with({self._series_arg(args[0])}, "
+                f"{self._series_arg(args[1])}, "
+                f"(__sc_x, __sc_y) -> CAST(__sc_x AS DOUBLE) "
+                f"{op_sym} CAST(__sc_y AS DOUBLE))")
+
+    @_fn("series_add series_subtract series_multiply series_divide "
+         "series_pow", 2, 2, "array",
+         "{name}(series1, series2)")
+    def _fn_series_add(self, fname: str, args: list[str]) -> str:
+        # element-wise arithmetic over two parallel series
+        # (zip_with, codegen); divide-by-zero yields null (Kusto
+        # real null). Either operand may be a NUMERIC SCALAR
+        # (Kusto broadcasts it across the other series — r13
+        # probe sweep); an unresolvable operand type is assumed
+        # to be a series, the historic behavior.
+
+        def is_scalar(raw: str) -> bool:
+            return self._ktype(raw) in _NUMERIC + ("timespan",)
+        ops = {"series_add": "({x} + {y})",
+               "series_subtract": "({x} - {y})",
+               "series_multiply": "({x} * {y})",
+               "series_pow": "pow({x}, {y})",
+               "series_divide": ("CASE WHEN {y} = 0.0 THEN NULL "
+                                 "ELSE {x} / {y} END")}[fname]
+        a_sc, b_sc = is_scalar(args[0]), is_scalar(args[1])
+        if a_sc and b_sc:
+            raise ValueError(
+                f"KQL: {fname} needs at least one series operand")
+        if b_sc:
+            body = ops.format(x="CAST(__sb_v AS DOUBLE)",
+                              y=f"CAST({args[1]} AS DOUBLE)")
+            return (f"transform({self._series_arg(args[0])}, "
+                    f"__sb_v -> {body})")
+        if a_sc:
+            body = ops.format(x=f"CAST({args[0]} AS DOUBLE)",
+                              y="CAST(__sb_v AS DOUBLE)")
+            return (f"transform({self._series_arg(args[1])}, "
+                    f"__sb_v -> {body})")
+        a, b = self._series_arg(args[0]), self._series_arg(args[1])
+        body = ops.format(x="CAST(x AS DOUBLE)",
+                          y="CAST(y AS DOUBLE)")
+        return f"zip_with({a}, {b}, (x, y) -> {body})"
+
+    @_fn("series_fit_line_dynamic", 1, 1, None,
+         "series_fit_line_dynamic(series)")
+    @_fn("series_decompose_forecast", 2, 5, None,
+         "series_decompose_forecast(series, points[, period[, trend[, "
+         "seasonality_threshold]]]])")
+    def _fn_series_fit_line_dynamic(self, fname: str, args: list[str]) -> str:
+        # Shared least-squares machinery over the in-row series
+        # (x = 0-based index, non-null points only): pure
+        # higher-order SQL folds, zero shuffles — the in-row twin
+        # of regr_slope/regr_intercept. __fl_ lambda-var prefix so
+        # inlined series expressions can't be shadowed.
+        arr = self._series_arg(args[0])
+        wi = (f"zip_with({arr}, sequence(0, size({arr}) - 1), "
+              f"(__fl_v, __fl_i) -> struct("
+              f"CAST(__fl_v AS DOUBLE) AS v, "
+              f"CAST(__fl_i AS DOUBLE) AS i))")
+        pairs = f"filter({wi}, __fl_p -> __fl_p.v IS NOT NULL)"
+
+        def fold(expr):
+            return (f"aggregate({pairs}, CAST(0 AS DOUBLE), "
+                    f"(__fl_a, __fl_e) -> __fl_a + {expr})")
+        n = f"CAST(size({pairs}) AS DOUBLE)"
+        sx, sy = fold("__fl_e.i"), fold("__fl_e.v")
+        sxx, sxy = fold("__fl_e.i * __fl_e.i"), \
+            fold("__fl_e.i * __fl_e.v")
+        syy = fold("__fl_e.v * __fl_e.v")
+        den = f"({n} * {sxx} - {sx} * {sx})"
+        slope = (f"(CASE WHEN {n} < 2 OR {den} = 0 THEN NULL "
+                 f"ELSE ({n} * {sxy} - {sx} * {sy}) / {den} END)")
+        icept = f"(({sy} - {slope} * {sx}) / {n})"
+        if fname == "series_fit_line_dynamic":
+            # Kusto series_fit_line_dynamic: a dynamic bag
+            # {rsquare, slope, variance, rvariance, interception,
+            # line_fit}. Population variance convention (documented
+            # deviation: Kusto does not publish its estimator);
+            # degenerate series (n<2 or zero x-variance) yield null
+            # slope/interception.
+            sstot = f"({syy} - {sy} * {sy} / {n})"
+            ssres = fold(
+                f"(__fl_e.v - ({icept} + {slope} * __fl_e.i)) "
+                f"* (__fl_e.v - ({icept} + {slope} * __fl_e.i))")
+            rsq = (f"(CASE WHEN {sstot} <= 0 THEN 1.0 "
+                   f"ELSE 1.0 - {ssres} / {sstot} END)")
+            line = (f"transform(sequence(0, size({arr}) - 1), "
+                    f"__fl_j -> {icept} + {slope} * "
+                    f"CAST(__fl_j AS DOUBLE))")
             obj = (f"named_struct("
-                   f"'min', {mn}, 'min_idx', {first_idx(mn)}, "
-                   f"'max', {mx}, 'max_idx', {first_idx(mx)}, "
-                   f"'avg', {avg}, "
-                   f"'variance', {sd} * {sd}, "
-                   f"'stdev', {sd})")
-            return f"parse_json(to_json({obj}))"
-        if fname == "series_iir":
-            # infinite-impulse-response filter: y[i] = (sum_j b[j]
-            # x[i-j] - sum_{j>=1} a[j] y[i-j]) / a[0] — recursive, so
-            # a numpy Arrow-batched kernel (the series_fir sibling;
-            # a = [1] degenerates to FIR). Null/empty/zero-a0 -> null.
-            if len(args) != 3:
-                raise ValueError("KQL: series_iir(x, b, a)")
-            x, b, a = (f"try_cast({v} AS ARRAY<DOUBLE>)" for v in args)
-            return f"parse_json(to_json(__kql_iir({x}, {b}, {a})))"
-        if fname == "series_fit_poly_dynamic":
-            # least-squares polynomial fit (numpy Arrow-batched kernel,
-            # same transport as series_fft): bag {rsquare, coefficients
-            # (HIGHEST power first, numpy.polyfit order), variance,
-            # rvariance, poly_fit}; optional x series and degree
-            # (default 1); fewer than degree+1 valid points -> null
-            if len(args) not in (1, 2, 3):
+                   f"'rsquare', {rsq}, "
+                   f"'slope', {slope}, "
+                   f"'variance', {sstot} / {n}, "
+                   f"'rvariance', {ssres} / {n}, "
+                   f"'interception', {icept}, "
+                   f"'line_fit', {line})")
+            # zero-point guard: with no non-null points the moment
+            # divisions hit ANSI DIVIDE_BY_ZERO (r12 registry
+            # property find) — Kusto yields null for the whole bag
+            return (f"(CASE WHEN {n} = 0 THEN NULL "
+                    f"ELSE parse_json(to_json({obj})) END)")
+        # series_decompose_forecast(series, points[, period
+        # [, trend[, seasonality_threshold]]]): linear-trend
+        # forecast extended `points` past the observed range; with
+        # a seasonality period the zero-sum per-phase mean
+        # component (series_seasonal's convention) is added
+        # periodically. Kusto's default trend IS 'linefit' — this
+        # engine's default matches; 'avg' and 'none' select the
+        # overall mean / zero trend (r13 probe sweep). Period -1
+        # auto-detects like series_decompose. Documented subset:
+        # seasonal = periodic phase means — exactly oracle-able,
+        # unlike the reference's unpublished STL variant.
+        pts = args[1]
+        if len(args) >= 4:
+            tm = re.fullmatch(r"\s*'((?:[^'\\]|\\.)*)'\s*",
+                              args[3])
+            if not tm or tm.group(1) not in ("avg", "linefit",
+                                             "none"):
                 raise ValueError(
-                    "KQL: series_fit_poly(y [, x [, degree]])")
-            y = f"try_cast({args[0]} AS ARRAY<DOUBLE>)"
-            x = (f"try_cast({args[1]} AS ARRAY<DOUBLE>)"
-                 if len(args) >= 2 else
-                 "CAST(NULL AS ARRAY<DOUBLE>)")
-            deg = (f"CAST({args[2]} AS INT)" if len(args) == 3
-                   else "1")
-            return (f"parse_json(to_json(__kql_fitpoly({y}, {x}, "
-                    f"{deg})))")
-        if fname == "series_fit_2lines":
-            # bare name = the same exact pure-SQL enumeration as the
-            # _dynamic form (the bag now carries variance/rvariance so
-            # Kusto's tuple-assign order splits via _MULTI_ASSIGN)
-            return self._render_call("series_fit_2lines_dynamic", args)
-        if fname in ("series_fft_dynamic", "series_ifft_dynamic"):
-            if len(args) not in (1, 2):
-                raise ValueError(f"KQL: {fname}(x_real [, x_imag])")
-            udf = ("__kql_fft" if fname.startswith("series_fft")
-                   else "__kql_ifft")
-            xr = f"try_cast({args[0]} AS ARRAY<DOUBLE>)"
-            xi = (f"try_cast({args[1]} AS ARRAY<DOUBLE>)"
-                  if len(args) == 2 else
-                  f"transform({xr}, __ff_x -> CAST(0.0 AS DOUBLE))")
-            return f"parse_json(to_json({udf}({xr}, {xi})))"
-        if fname in ("series_dot_product", "series_cosine_similarity"):
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(series1, series2)")
-            # JSON-lift (the series_magnitude pattern): VARIANT
-            # dynamics — todynamic() strings, dynamic literals —
-            # work alongside native make-series / float arrays
-            a, b = (f"from_json(to_json({x}), 'array<double>', "
-                    f"map('mode', 'PERMISSIVE'))" for x in args)
+                    "KQL: forecast trend must be the literal "
+                    "'avg', 'linefit' or 'none'")
+            if tm.group(1) == "avg":
+                slope, icept = "0.0", f"({sy} / {n})"
+            elif tm.group(1) == "none":
+                slope, icept = "0.0", "0.0"
+        total = f"(size({arr}) + CAST({pts} AS INT))"
+        trend = f"({icept} + {slope} * CAST(__df_i AS DOUBLE))"
+        if len(args) >= 3 and args[2].strip() not in ("0", "(0)"):
+            p = self._decompose_period_sql(
+                args[0], args[2],
+                args[4] if len(args) == 5 else "0.7")
+            p = f"greatest(({p}), 1)"
+            phase = (f"filter({pairs}, __df_q -> "
+                     f"pmod(CAST(__df_q.i AS INT), {p}) "
+                     f"= pmod(__df_i, {p}))")
+            ph_sum = (f"aggregate({phase}, CAST(0 AS DOUBLE), "
+                      f"(__df_a, __df_e) -> __df_a + __df_e.v)")
+            seas = (f"(CASE WHEN size({phase}) = 0 THEN 0.0 "
+                    f"ELSE {ph_sum} / size({phase}) "
+                    f"- {sy} / {n} END)")
+        else:
+            seas = "0.0"
+        # sequence(0, k) DESCENDS for k < 0 (Spark gotcha) — empty
+        # series + zero points must yield an empty array instead
+        return (f"(CASE WHEN {total} < 1 THEN array() "
+                f"ELSE transform(sequence(0, {total} - 1), "
+                f"__df_i -> {trend} + {seas}) END)")
 
-            def dot(x, y):
-                return (f"aggregate(zip_with({x}, {y}, "
-                        f"(__dp_x, __dp_y) -> CAST(__dp_x AS DOUBLE) "
-                        f"* CAST(__dp_y AS DOUBLE)), CAST(0 AS DOUBLE), "
-                        f"(__dp_a, __dp_v) -> __dp_a + __dp_v)")
-            if fname == "series_dot_product":
-                return dot(a, b)
-            na, nb = dot(a, a), dot(b, b)
-            return (f"(CASE WHEN {na} = 0 OR {nb} = 0 THEN NULL "
-                    f"ELSE {dot(a, b)} / (sqrt({na}) * sqrt({nb})) END)")
-        if fname == "series_magnitude":
-            if len(args) != 1:
-                raise ValueError("KQL: series_magnitude(series)")
-            # JSON-lift so VARIANT dynamics (e.g. the empty-array
-            # literal) work alongside native make-series arrays
-            s = f"from_json(to_json({args[0]}), 'array<double>')"
-            return (f"sqrt(aggregate(transform({s}, __sm_x -> "
-                    f"CAST(__sm_x AS DOUBLE) * CAST(__sm_x AS DOUBLE)),"
-                    f" CAST(0 AS DOUBLE), "
-                    f"(__sm_a, __sm_v) -> __sm_a + __sm_v))")
-        if fname == "isascii":
-            if len(args) != 1:
-                raise ValueError("KQL: isascii(s)")
-            return (f"(CASE WHEN {args[0]} IS NULL THEN NULL ELSE "
-                    f"{args[0]} RLIKE '^[\\\\x00-\\\\x7F]*$' END)")
-        if fname == "base64_encode_fromarray":
-            # inverse of base64_decode_toarray: byte-number array ->
-            # base64 text (per-element hex render + binary concat fold)
-            if len(args) != 1:
-                raise ValueError("KQL: base64_encode_fromarray(arr)")
-            # JSON round-trip lift: accepts native arrays AND dynamic
-            # (VARIANT) values — base64_decode_toarray returns VARIANT
-            arr = f"from_json(to_json({args[0]}), 'array<bigint>')"
-            return (f"base64(aggregate({arr}, CAST('' AS BINARY), "
-                    f"(__bf_a, __bf_b) -> concat(__bf_a, "
-                    f"unhex(lpad(hex(pmod(__bf_b, 256)), 2, '0')))))")
-        if fname in ("series_abs", "series_exp", "series_log",
-                     "series_sign", "series_sqrt", "series_floor",
-                     "series_ceiling", "series_sin", "series_cos",
-                     "series_tan", "series_asin", "series_acos",
-                     "series_atan"):
-            # elementwise unary transforms over the in-row series
-            # (trig family added in r11 — same Spark builtin names)
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(series) takes 1 arg")
-            fn = fname.removeprefix("series_")
-            return (f"transform({self._series_arg(args[0])}, __su_v -> "
-                    f"CAST({fn}(CAST(__su_v AS DOUBLE)) AS DOUBLE))")
-        if fname in ("series_equals", "series_not_equals",
-                     "series_greater", "series_greater_equals",
-                     "series_less", "series_less_equals"):
-            # pairwise comparison series -> boolean array (Kusto
-            # returns a dynamic array of bool; null elements compare
-            # to null, like the scalar operators)
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(series1, series2)")
-            op_sym = {"series_equals": "=", "series_not_equals": "!=",
-                      "series_greater": ">",
-                      "series_greater_equals": ">=",
-                      "series_less": "<",
-                      "series_less_equals": "<="}[fname]
-            return (f"zip_with({self._series_arg(args[0])}, "
-                    f"{self._series_arg(args[1])}, "
-                    f"(__sc_x, __sc_y) -> CAST(__sc_x AS DOUBLE) "
-                    f"{op_sym} CAST(__sc_y AS DOUBLE))")
-        if fname in ("series_add", "series_subtract", "series_multiply",
-                     "series_divide", "series_pow"):
-            # element-wise arithmetic over two parallel series
-            # (zip_with, codegen); divide-by-zero yields null (Kusto
-            # real null). Either operand may be a NUMERIC SCALAR
-            # (Kusto broadcasts it across the other series — r13
-            # probe sweep); an unresolvable operand type is assumed
-            # to be a series, the historic behavior.
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(series1, series2)")
-
-            def is_scalar(raw: str) -> bool:
-                return self._ktype(raw) in _NUMERIC + ("timespan",)
-            ops = {"series_add": "({x} + {y})",
-                   "series_subtract": "({x} - {y})",
-                   "series_multiply": "({x} * {y})",
-                   "series_pow": "pow({x}, {y})",
-                   "series_divide": ("CASE WHEN {y} = 0.0 THEN NULL "
-                                     "ELSE {x} / {y} END")}[fname]
-            a_sc, b_sc = is_scalar(args[0]), is_scalar(args[1])
-            if a_sc and b_sc:
+    # the bare name in expression position: the bag form (the
+    # tuple-assign form is handled by extend's multi-assign)
+    @_fn("series_decompose series_decompose_dynamic", 1, 5, None,
+         "{name}(series[, period[, trend[, test_points[, "
+         "seasonality_threshold]]]])")
+    def _fn_series_decompose_dynamic(self, fname: str, args: list[str]) -> str:
+        # Full additive decomposition bag over the in-row series:
+        # seasonal (zero-sum periodic phase means), trend, baseline
+        # = seasonal + trend, residual = series - baseline — the
+        # same composition the anomalies entry verifies piecewise,
+        # bundled Kusto-style. Full signature (r13 probe sweep):
+        # series_decompose(series[, period[, trend[, test_points
+        # [, seasonality_threshold]]]]) — period -1 auto-detects
+        # via the ACF peak-picker (accepted when its score clears
+        # seasonality_threshold, default 0.7; else no seasonal),
+        # period 0 disables the seasonal component; trend is the
+        # string LITERAL 'avg' (overall mean), 'linefit'
+        # (least-squares line) or 'none'. (Documented deviation:
+        # Kusto's own trend default is lowess; this engine's
+        # OMITTED-trend default is the trailing FIR of the period
+        # width — the pre-r13 contract the banked oracles pin.
+        # test_points is accepted at its default 0 only.)
+        arr = args[0]
+        per_arg = args[1] if len(args) >= 2 else "7"
+        thr = args[4] if len(args) == 5 else "0.7"
+        tp = 0
+        if len(args) >= 4:
+            tpm = re.fullmatch(r"[\s()]*(\d+)[\s()]*", args[3])
+            if not tpm:
                 raise ValueError(
-                    f"KQL: {fname} needs at least one series operand")
-            if b_sc:
-                body = ops.format(x="CAST(__sb_v AS DOUBLE)",
-                                  y=f"CAST({args[1]} AS DOUBLE)")
-                return (f"transform({self._series_arg(args[0])}, "
-                        f"__sb_v -> {body})")
-            if a_sc:
-                body = ops.format(x=f"CAST({args[0]} AS DOUBLE)",
-                                  y="CAST(__sb_v AS DOUBLE)")
-                return (f"transform({self._series_arg(args[1])}, "
-                        f"__sb_v -> {body})")
-            a, b = self._series_arg(args[0]), self._series_arg(args[1])
-            body = ops.format(x="CAST(x AS DOUBLE)",
-                              y="CAST(y AS DOUBLE)")
-            return f"zip_with({a}, {b}, (x, y) -> {body})"
-        if fname in ("series_fit_line_dynamic",
-                     "series_decompose_forecast"):
-            # Shared least-squares machinery over the in-row series
-            # (x = 0-based index, non-null points only): pure
-            # higher-order SQL folds, zero shuffles — the in-row twin
-            # of regr_slope/regr_intercept. __fl_ lambda-var prefix so
-            # inlined series expressions can't be shadowed.
-            arr = self._series_arg(args[0])
-            wi = (f"zip_with({arr}, sequence(0, size({arr}) - 1), "
-                  f"(__fl_v, __fl_i) -> struct("
-                  f"CAST(__fl_v AS DOUBLE) AS v, "
-                  f"CAST(__fl_i AS DOUBLE) AS i))")
-            pairs = f"filter({wi}, __fl_p -> __fl_p.v IS NOT NULL)"
-
-            def fold(expr):
-                return (f"aggregate({pairs}, CAST(0 AS DOUBLE), "
-                        f"(__fl_a, __fl_e) -> __fl_a + {expr})")
-            n = f"CAST(size({pairs}) AS DOUBLE)"
-            sx, sy = fold("__fl_e.i"), fold("__fl_e.v")
-            sxx, sxy = fold("__fl_e.i * __fl_e.i"), \
-                fold("__fl_e.i * __fl_e.v")
-            syy = fold("__fl_e.v * __fl_e.v")
-            den = f"({n} * {sxx} - {sx} * {sx})"
-            slope = (f"(CASE WHEN {n} < 2 OR {den} = 0 THEN NULL "
-                     f"ELSE ({n} * {sxy} - {sx} * {sy}) / {den} END)")
-            icept = f"(({sy} - {slope} * {sx}) / {n})"
-            if fname == "series_fit_line_dynamic":
-                # Kusto series_fit_line_dynamic: a dynamic bag
-                # {rsquare, slope, variance, rvariance, interception,
-                # line_fit}. Population variance convention (documented
-                # deviation: Kusto does not publish its estimator);
-                # degenerate series (n<2 or zero x-variance) yield null
-                # slope/interception.
-                if len(args) != 1:
-                    raise ValueError(
-                        "KQL: series_fit_line_dynamic(series)")
-                sstot = f"({syy} - {sy} * {sy} / {n})"
-                ssres = fold(
-                    f"(__fl_e.v - ({icept} + {slope} * __fl_e.i)) "
-                    f"* (__fl_e.v - ({icept} + {slope} * __fl_e.i))")
-                rsq = (f"(CASE WHEN {sstot} <= 0 THEN 1.0 "
-                       f"ELSE 1.0 - {ssres} / {sstot} END)")
-                line = (f"transform(sequence(0, size({arr}) - 1), "
-                        f"__fl_j -> {icept} + {slope} * "
-                        f"CAST(__fl_j AS DOUBLE))")
-                obj = (f"named_struct("
-                       f"'rsquare', {rsq}, "
-                       f"'slope', {slope}, "
-                       f"'variance', {sstot} / {n}, "
-                       f"'rvariance', {ssres} / {n}, "
-                       f"'interception', {icept}, "
-                       f"'line_fit', {line})")
-                # zero-point guard: with no non-null points the moment
-                # divisions hit ANSI DIVIDE_BY_ZERO (r12 registry
-                # property find) — Kusto yields null for the whole bag
-                return (f"(CASE WHEN {n} = 0 THEN NULL "
-                        f"ELSE parse_json(to_json({obj})) END)")
-            # series_decompose_forecast(series, points[, period
-            # [, trend[, seasonality_threshold]]]): linear-trend
-            # forecast extended `points` past the observed range; with
-            # a seasonality period the zero-sum per-phase mean
-            # component (series_seasonal's convention) is added
-            # periodically. Kusto's default trend IS 'linefit' — this
-            # engine's default matches; 'avg' and 'none' select the
-            # overall mean / zero trend (r13 probe sweep). Period -1
-            # auto-detects like series_decompose. Documented subset:
-            # seasonal = periodic phase means — exactly oracle-able,
-            # unlike the reference's unpublished STL variant.
-            if len(args) not in (2, 3, 4, 5):
+                    "KQL: series_decompose test_points must be a "
+                    "non-negative integer literal")
+            tp = int(tpm.group(1))
+        # bind the resolved period ONCE (__dp0 hop): the
+        # auto-detect expression embeds the whole ACF machinery,
+        # and the period is spliced into every component's lambdas
+        # — textual composition would explode the Catalyst tree
+        # (same OOM class as the anomalies bind, below)
+        per = "__dp0.p"
+        if tp == 0:
+            per_sql = self._decompose_period_sql(arr, per_arg,
+                                                 thr)
+            trend = self._decompose_trend_sql(
+                arr, per, args[2] if len(args) >= 3 else None)
+            seasonal = self._decompose_seasonal_sql(arr, per)
+        else:
+            # test_points > 0 (r14 — documented non-fix through
+            # r13): the LAST tp points are excluded from learning
+            # (Kusto's validation holdout) — period auto-detect,
+            # trend fit, and seasonal phase means all run on the
+            # training prefix, then evaluate over the FULL length
+            # (trend extrapolates by index; the zero-sum phase
+            # means repeat periodically). The engine's
+            # trailing-FIR default trend has no separable
+            # learning window, so an explicit trend literal is
+            # required. Scalars and the train-length seasonal
+            # array are bound ONCE via struct hops (the r9/r13
+            # per-element-recompute lesson).
+            # test_points is positionally AFTER trend, so an
+            # explicit trend literal is always present here (the
+            # engine's trailing-FIR default — which has no
+            # separable learning window — is unreachable with a
+            # holdout, by construction)
+            mode = args[2]
+            tm = re.fullmatch(r"\s*'((?:[^'\\]|\\.)*)'\s*", mode)
+            if not tm or tm.group(1) not in ("avg", "linefit",
+                                             "none"):
                 raise ValueError(
-                    "KQL: series_decompose_forecast(series, points"
-                    "[, period[, trend[, seasonality_threshold]]]])")
-            pts = args[1]
-            if len(args) >= 4:
-                tm = re.fullmatch(r"\s*'((?:[^'\\]|\\.)*)'\s*",
-                                  args[3])
-                if not tm or tm.group(1) not in ("avg", "linefit",
-                                                 "none"):
-                    raise ValueError(
-                        "KQL: forecast trend must be the literal "
-                        "'avg', 'linefit' or 'none'")
-                if tm.group(1) == "avg":
-                    slope, icept = "0.0", f"({sy} / {n})"
-                elif tm.group(1) == "none":
-                    slope, icept = "0.0", "0.0"
-            total = f"(size({arr}) + CAST({pts} AS INT))"
-            trend = f"({icept} + {slope} * CAST(__df_i AS DOUBLE))"
-            if len(args) >= 3 and args[2].strip() not in ("0", "(0)"):
-                p = self._decompose_period_sql(
-                    args[0], args[2],
-                    args[4] if len(args) == 5 else "0.7")
-                p = f"greatest(({p}), 1)"
-                phase = (f"filter({pairs}, __df_q -> "
-                         f"pmod(CAST(__df_q.i AS INT), {p}) "
-                         f"= pmod(__df_i, {p}))")
-                ph_sum = (f"aggregate({phase}, CAST(0 AS DOUBLE), "
-                          f"(__df_a, __df_e) -> __df_a + __df_e.v)")
-                seas = (f"(CASE WHEN size({phase}) = 0 THEN 0.0 "
-                        f"ELSE {ph_sum} / size({phase}) "
-                        f"- {sy} / {n} END)")
-            else:
-                seas = "0.0"
-            # sequence(0, k) DESCENDS for k < 0 (Spark gotcha) — empty
-            # series + zero points must yield an empty array instead
-            return (f"(CASE WHEN {total} < 1 THEN array() "
-                    f"ELSE transform(sequence(0, {total} - 1), "
-                    f"__df_i -> {trend} + {seas}) END)")
-        if fname == "series_decompose":
-            # expression position: the bag form (the tuple-assign form
-            # is handled by extend's multi-assign)
-            return self._render_call("series_decompose_dynamic", args)
-        if fname == "series_decompose_dynamic":
-            # Full additive decomposition bag over the in-row series:
-            # seasonal (zero-sum periodic phase means), trend, baseline
-            # = seasonal + trend, residual = series - baseline — the
-            # same composition the anomalies entry verifies piecewise,
-            # bundled Kusto-style. Full signature (r13 probe sweep):
-            # series_decompose(series[, period[, trend[, test_points
-            # [, seasonality_threshold]]]]) — period -1 auto-detects
-            # via the ACF peak-picker (accepted when its score clears
-            # seasonality_threshold, default 0.7; else no seasonal),
-            # period 0 disables the seasonal component; trend is the
-            # string LITERAL 'avg' (overall mean), 'linefit'
-            # (least-squares line) or 'none'. (Documented deviation:
-            # Kusto's own trend default is lowess; this engine's
-            # OMITTED-trend default is the trailing FIR of the period
-            # width — the pre-r13 contract the banked oracles pin.
-            # test_points is accepted at its default 0 only.)
-            if len(args) not in (1, 2, 3, 4, 5):
-                raise ValueError(
-                    "KQL: series_decompose(series[, period[, trend"
-                    "[, test_points[, seasonality_threshold]]]])")
-            arr = args[0]
-            per_arg = args[1] if len(args) >= 2 else "7"
-            thr = args[4] if len(args) == 5 else "0.7"
-            tp = 0
-            if len(args) >= 4:
-                tpm = re.fullmatch(r"[\s()]*(\d+)[\s()]*", args[3])
-                if not tpm:
-                    raise ValueError(
-                        "KQL: series_decompose test_points must be a "
-                        "non-negative integer literal")
-                tp = int(tpm.group(1))
-            # bind the resolved period ONCE (__dp0 hop): the
-            # auto-detect expression embeds the whole ACF machinery,
-            # and the period is spliced into every component's lambdas
-            # — textual composition would explode the Catalyst tree
-            # (same OOM class as the anomalies bind, below)
-            per = "__dp0.p"
-            if tp == 0:
-                per_sql = self._decompose_period_sql(arr, per_arg,
-                                                     thr)
-                trend = self._decompose_trend_sql(
-                    arr, per, args[2] if len(args) >= 3 else None)
-                seasonal = self._decompose_seasonal_sql(arr, per)
-            else:
-                # test_points > 0 (r14 — documented non-fix through
-                # r13): the LAST tp points are excluded from learning
-                # (Kusto's validation holdout) — period auto-detect,
-                # trend fit, and seasonal phase means all run on the
-                # training prefix, then evaluate over the FULL length
-                # (trend extrapolates by index; the zero-sum phase
-                # means repeat periodically). The engine's
-                # trailing-FIR default trend has no separable
-                # learning window, so an explicit trend literal is
-                # required. Scalars and the train-length seasonal
-                # array are bound ONCE via struct hops (the r9/r13
-                # per-element-recompute lesson).
-                # test_points is positionally AFTER trend, so an
-                # explicit trend literal is always present here (the
-                # engine's trailing-FIR default — which has no
-                # separable learning window — is unreachable with a
-                # holdout, by construction)
-                mode = args[2]
-                tm = re.fullmatch(r"\s*'((?:[^'\\]|\\.)*)'\s*", mode)
-                if not tm or tm.group(1) not in ("avg", "linefit",
-                                                 "none"):
-                    raise ValueError(
-                        "KQL: decompose trend must be the literal "
-                        "'avg', 'linefit' or 'none'")
-                kind = tm.group(1)
-                a_full = self._series_arg(arr)
-                train = (f"slice({a_full}, 1, "
-                         f"greatest(size({a_full}) - {tp}, 0))")
-                per_sql = self._decompose_period_sql(train, per_arg,
-                                                     thr)
-                if kind == "none":
-                    trend = (f"transform({a_full}, "
-                             f"__dtp_v -> CAST(0 AS DOUBLE))")
-                elif kind == "avg":
-                    nn = (f"filter({train}, "
-                          f"__dtp_x -> __dtp_x IS NOT NULL)")
-                    mean = (f"(CASE WHEN size({nn}) = 0 THEN NULL "
-                            f"ELSE aggregate({nn}, "
-                            f"CAST(0 AS DOUBLE), (__dtp_s, __dtp_v) "
-                            f"-> __dtp_s + __dtp_v) / size({nn}) "
-                            f"END)")
-                    trend = (f"element_at(transform(array("
-                             f"named_struct('mu', {mean})), __dtp_b "
-                             f"-> transform({a_full}, "
-                             f"__dtp_v -> __dtp_b.mu)), 1)")
-                else:  # linefit
-                    fit = self._render_call(
-                        "series_fit_line_dynamic", [train])
-                    slope = (f"try_cast(variant_get({fit}, "
-                             f"'$.slope') AS DOUBLE)")
-                    icept = (f"try_cast(variant_get({fit}, "
-                             f"'$.interception') AS DOUBLE)")
-                    trend = (
-                        f"(CASE WHEN size({a_full}) = 0 THEN "
-                        f"CAST(array() AS ARRAY<DOUBLE>) ELSE "
-                        f"element_at(transform(array(named_struct("
-                        f"'sl', {slope}, 'ic', {icept})), __dtp_b -> "
-                        f"zip_with({a_full}, sequence(0, "
-                        f"greatest(size({a_full}) - 1, 0)), "
-                        f"(__dtp_v, __dtp_i) -> __dtp_b.ic + "
-                        f"__dtp_b.sl * CAST(__dtp_i AS DOUBLE))), 1) "
+                    "KQL: decompose trend must be the literal "
+                    "'avg', 'linefit' or 'none'")
+            kind = tm.group(1)
+            a_full = self._series_arg(arr)
+            train = (f"slice({a_full}, 1, "
+                     f"greatest(size({a_full}) - {tp}, 0))")
+            per_sql = self._decompose_period_sql(train, per_arg,
+                                                 thr)
+            if kind == "none":
+                trend = (f"transform({a_full}, "
+                         f"__dtp_v -> CAST(0 AS DOUBLE))")
+            elif kind == "avg":
+                nn = (f"filter({train}, "
+                      f"__dtp_x -> __dtp_x IS NOT NULL)")
+                mean = (f"(CASE WHEN size({nn}) = 0 THEN NULL "
+                        f"ELSE aggregate({nn}, "
+                        f"CAST(0 AS DOUBLE), (__dtp_s, __dtp_v) "
+                        f"-> __dtp_s + __dtp_v) / size({nn}) "
                         f"END)")
-                seas_train = self._decompose_seasonal_sql(train, per)
-                seasonal = (
+                trend = (f"element_at(transform(array("
+                         f"named_struct('mu', {mean})), __dtp_b "
+                         f"-> transform({a_full}, "
+                         f"__dtp_v -> __dtp_b.mu)), 1)")
+            else:  # linefit
+                fit = self._call(
+                    "series_fit_line_dynamic", [train])
+                slope = (f"try_cast(variant_get({fit}, "
+                         f"'$.slope') AS DOUBLE)")
+                icept = (f"try_cast(variant_get({fit}, "
+                         f"'$.interception') AS DOUBLE)")
+                trend = (
                     f"(CASE WHEN size({a_full}) = 0 THEN "
                     f"CAST(array() AS ARRAY<DOUBLE>) ELSE "
                     f"element_at(transform(array(named_struct("
-                    f"'se', {seas_train})), __dtp_b -> "
+                    f"'sl', {slope}, 'ic', {icept})), __dtp_b -> "
                     f"zip_with({a_full}, sequence(0, "
                     f"greatest(size({a_full}) - 1, 0)), "
-                    f"(__dtp_v, __dtp_i) -> CASE WHEN ({per}) <= 0 "
-                    f"THEN CAST(0 AS DOUBLE) ELSE "
-                    f"coalesce(try_element_at(__dtp_b.se, "
-                    f"pmod(__dtp_i, ({per})) + 1), "
-                    f"CAST(0 AS DOUBLE)) END)), 1) END)")
-            baseline = self._render_call("series_add",
-                                         [seasonal, trend])
-            resid = self._render_call("series_subtract",
-                                      [arr, baseline])
-            obj = (f"named_struct('baseline', {baseline}, "
-                   f"'seasonal', {seasonal}, 'trend', {trend}, "
-                   f"'residual', {resid})")
-            nested = (f"element_at(transform(array(named_struct("
-                      f"'p', CAST({per_sql} AS INT))), "
-                      f"__dp0 -> {obj}), 1)")
-            return f"parse_json(to_json({nested}))"
-        if fname == "series_decompose_anomalies":
-            return self._render_call(
-                "series_decompose_anomalies_dynamic", args)
-        if fname == "series_decompose_anomalies_dynamic":
-            # Kusto's canonical anomaly pipeline bundled by name: the
-            # exact composition the q_kql_series_anomalies entry
-            # verifies piecewise — decompose (zero-sum seasonal +
-            # trend), Tukey-fence scores on the residual, flags at
-            # +/-threshold (default 1.5). Full signature (r13 probe
-            # sweep): series_decompose_anomalies(series[, threshold
-            # [, period[, trend[, test_points[, ad_method
-            # [, seasonality_threshold]]]]]]) — period -1/0 and the
-            # trend literals behave as in series_decompose (omitted
-            # trend keeps the engine's FIR default the banked oracles
-            # pin); ad_method is series_outliers' kind ('ctukey'
-            # default, like Kusto). Returns the Kusto-shaped bag
-            # {ad_flag, ad_score, baseline}; tuple-assign order via
-            # _MULTI_ASSIGN.
-            if len(args) not in (1, 2, 3, 4, 5, 6, 7):
-                raise ValueError(
-                    "KQL: series_decompose_anomalies(series[, "
-                    "threshold[, period[, trend[, test_points[, "
-                    "ad_method[, seasonality_threshold]]]]]])")
-            arr = args[0]
-            thr = args[1] if len(args) >= 2 else "1.5"
-            per = args[2] if len(args) >= 3 else "7"
-            if len(args) >= 5 and args[4].strip() not in ("0", "(0)"):
-                raise ValueError(
-                    "KQL: series_decompose_anomalies test_points is "
-                    "supported at its default 0 only")
-            sthr = args[6] if len(args) == 7 else "0.7"
-            per_sql = self._decompose_period_sql(arr, per, sthr)
-            per = "__dp0.p"  # bound once in the outermost hop below
-            trend = self._decompose_trend_sql(
-                arr, per, args[3] if len(args) >= 4 else None)
-            seasonal = self._decompose_seasonal_sql(arr, per)
-            baseline = self._render_call("series_add",
-                                         [seasonal, trend])
-            # bind-once struct hops: series_outliers splices its input
-            # ~10x textually — composing it directly over resid (which
-            # itself contains baseline/trend) multiplies the expression
-            # tree into a Catalyst OOM for the heavier trend modes
-            # (measured with 'linefit'). Each big component is bound
-            # exactly once; the single-element transform evaluates its
-            # body once (the established bind-once idiom).
-            resid = self._render_call("series_subtract",
-                                      [arr, "__an1.b"])
-            score = self._render_call(
-                "series_outliers",
-                ["__an2.r"] + ([args[5]] if len(args) >= 6 else []))
-            flag = (f"transform(__an3.sc, __sda_s -> "
-                    f"CASE WHEN __sda_s IS NULL THEN NULL "
-                    f"WHEN __sda_s > ({thr}) THEN 1 "
-                    f"WHEN __sda_s < -({thr}) THEN -1 "
-                    f"ELSE 0 END)")
-            obj = (f"named_struct('ad_flag', {flag}, "
-                   f"'ad_score', __an3.sc, 'baseline', __an1.b)")
-            nested = (
+                    f"(__dtp_v, __dtp_i) -> __dtp_b.ic + "
+                    f"__dtp_b.sl * CAST(__dtp_i AS DOUBLE))), 1) "
+                    f"END)")
+            seas_train = self._decompose_seasonal_sql(train, per)
+            seasonal = (
+                f"(CASE WHEN size({a_full}) = 0 THEN "
+                f"CAST(array() AS ARRAY<DOUBLE>) ELSE "
                 f"element_at(transform(array(named_struct("
-                f"'p', CAST({per_sql} AS INT))), __dp0 -> "
-                f"element_at(transform(array(named_struct("
-                f"'b', {baseline})), __an1 -> "
-                f"element_at(transform(array(named_struct("
-                f"'r', {resid})), __an2 -> "
-                f"element_at(transform(array(named_struct("
-                f"'sc', {score})), __an3 -> {obj}), 1)), 1)), 1)), 1)")
-            return f"parse_json(to_json({nested}))"
-        if fname == "series_periods_detect":
-            return self._render_call("series_periods_detect_dynamic",
-                                     args)
-        if fname in ("series_periods_validate",
-                     "series_periods_validate_dynamic"):
-            # scores for CALLER-SUPPLIED candidate periods: the same
-            # biased mean-centered ACF as series_periods_detect, no
-            # peak search — {periods: [given...], scores: [...]}
-            if len(args) < 2:
-                raise ValueError(
-                    "KQL: series_periods_validate(series, p1, ...)")
-            arr = args[0]
-            acf = self._acf_sql(arr)
-            plist = ", ".join(f"CAST(floor({p}) AS INT)"
-                              for p in args[1:])
-            obj = (f"named_struct("
-                   f"'periods', array({', '.join('CAST(' + p + ' AS DOUBLE)' for p in args[1:])}), "
-                   f"'scores', transform(array({plist}), "
-                   f"__spd_p -> {acf}))")
-            return f"parse_json(to_json({obj}))"
-        if fname == "series_periods_detect_dynamic":
-            # Period detection over the in-row series (completes the
-            # series_decompose family — the seasonality argument no
-            # longer has to be caller-supplied): mean-centered
-            # autocorrelation at every integer lag in [min_period,
-            # max_period], kept only at LOCAL MAXIMA of the ACF curve
-            # (acf[p] > acf[p-1] and >= acf[p+1] — a plateau of
-            # near-equal neighbors like lags 11/12/13 around a true
-            # period 12 yields one peak, not three), ranked by score
-            # desc (ties -> smaller period), top num_periods returned
-            # as the Kusto-shaped bag {periods: [..], scores: [..]}
-            # with periods as doubles. Documented deviation: Kusto's
-            # own detector is unpublished; this engine's contract is
-            # the classic ACF peak-picker. Pure higher-order SQL —
-            # O(n * max_period) folds per row, zero shuffles, zero
-            # Python. Nulls in the series null the result (run a
-            # series_fill_* first; make-series grids are filled).
-            if len(args) != 4:
-                raise ValueError(
-                    "KQL: series_periods_detect(series, min_period, "
-                    "max_period, num_periods)")
-            arr, minp, maxp, nump = args
-            xs = f"transform({arr}, __spd_x -> CAST(__spd_x AS DOUBLE))"
-            n = f"size({xs})"
-            acf = self._acf_sql(arr)
-            mi = f"greatest(CAST(floor({minp}) AS INT), 1)"
-            hi = f"least(CAST(floor({maxp}) AS INT), {n} - 2)"
-            # scored lags over the EXTENDED range [mi-1, hi+1] so the
-            # local-max test can see both neighbors of every candidate
-            ps = (f"(CASE WHEN {hi} + 1 >= {mi} - 1 THEN "
-                  f"transform(sequence({mi} - 1, {hi} + 1), "
-                  f"__spd_p -> named_struct('p', __spd_p, 's', {acf})) "
-                  f"ELSE CAST(array() AS "
-                  f"ARRAY<STRUCT<p: INT, s: DOUBLE>>) END)")
-            cand = (f"filter(transform("
-                    f"CASE WHEN size({ps}) >= 3 THEN "
-                    f"sequence(2, size({ps}) - 1) "
-                    f"ELSE CAST(array() AS ARRAY<INT>) END, "
-                    f"__spd_i -> named_struct("
-                    f"'period', element_at({ps}, __spd_i).p, "
-                    f"'score', element_at({ps}, __spd_i).s, "
-                    f"'prv', element_at({ps}, __spd_i - 1).s, "
-                    f"'nxt', element_at({ps}, __spd_i + 1).s)), "
-                    f"__spd_c -> __spd_c.score IS NOT NULL "
-                    f"AND (__spd_c.prv IS NULL "
-                    f"OR __spd_c.score > __spd_c.prv) "
-                    f"AND (__spd_c.nxt IS NULL "
-                    f"OR __spd_c.score >= __spd_c.nxt))")
-            top = (f"slice(array_sort({cand}, (__spd_l, __spd_r) -> "
-                   f"CASE WHEN __spd_l.score > __spd_r.score THEN -1 "
-                   f"WHEN __spd_l.score < __spd_r.score THEN 1 "
-                   f"WHEN __spd_l.period < __spd_r.period THEN -1 "
-                   f"WHEN __spd_l.period > __spd_r.period THEN 1 "
-                   f"ELSE 0 END), 1, "
-                   f"greatest(CAST({nump} AS INT), 0))")
-            obj = (f"named_struct("
-                   f"'periods', transform({top}, "
-                   f"__spd_t -> CAST(__spd_t.period AS DOUBLE)), "
-                   f"'scores', transform({top}, "
-                   f"__spd_t -> __spd_t.score))")
-            return f"parse_json(to_json({obj}))"
-        if fname == "series_fit_2lines_dynamic":
-            # Best two-segment piecewise-linear fit: for every split k
-            # the two sides get closed-form least squares; the split
-            # with minimal total SSE wins (ties -> smallest k). Exact
-            # enumeration over the in-row array — O(n²) folds in the
-            # calendar-bounded series length, zero shuffles, zero
-            # Python. Returns the Kusto-shaped dynamic bag
-            # {rsquare, split_idx, line_fit, left:{slope,interception},
-            # right:{slope,interception}}. The split index is spliced
-            # in via the __F2SPLIT__ placeholder so the same side
-            # algebra serves both the enumeration lambda and the
-            # winning-split projection.
-            if len(args) != 1:
-                raise ValueError("KQL: series_fit_2lines_dynamic(series)")
-            arr = args[0]
-            wi = (f"zip_with({arr}, sequence(0, size({arr}) - 1), "
-                  f"(__f2_v, __f2_i) -> struct("
-                  f"CAST(__f2_v AS DOUBLE) AS v, "
-                  f"CAST(__f2_i AS DOUBLE) AS i))")
-            pairs = f"filter({wi}, __f2_p -> __f2_p.v IS NOT NULL)"
+                f"'se', {seas_train})), __dtp_b -> "
+                f"zip_with({a_full}, sequence(0, "
+                f"greatest(size({a_full}) - 1, 0)), "
+                f"(__dtp_v, __dtp_i) -> CASE WHEN ({per}) <= 0 "
+                f"THEN CAST(0 AS DOUBLE) ELSE "
+                f"coalesce(try_element_at(__dtp_b.se, "
+                f"pmod(__dtp_i, ({per})) + 1), "
+                f"CAST(0 AS DOUBLE)) END)), 1) END)")
+        baseline = self._call("series_add",
+                                     [seasonal, trend])
+        resid = self._call("series_subtract",
+                                  [arr, baseline])
+        obj = (f"named_struct('baseline', {baseline}, "
+               f"'seasonal', {seasonal}, 'trend', {trend}, "
+               f"'residual', {resid})")
+        nested = (f"element_at(transform(array(named_struct("
+                  f"'p', CAST({per_sql} AS INT))), "
+                  f"__dp0 -> {obj}), 1)")
+        return f"parse_json(to_json({nested}))"
 
-            def side(cond):
-                S = f"filter({pairs}, __f2_q -> {cond})"
+    @_fn("series_decompose_anomalies series_decompose_anomalies_dynamic",
+         1, 7, None, "{name}(series[, threshold[, period[, trend[, "
+         "test_points[, ad_method[, seasonality_threshold]]]]]])")
+    def _fn_series_decompose_anomalies_dynamic(self, fname: str,
+                                               args: list[str]) -> str:
+        # Kusto's canonical anomaly pipeline bundled by name: the
+        # exact composition the q_kql_series_anomalies entry
+        # verifies piecewise — decompose (zero-sum seasonal +
+        # trend), Tukey-fence scores on the residual, flags at
+        # +/-threshold (default 1.5). Full signature (r13 probe
+        # sweep): series_decompose_anomalies(series[, threshold
+        # [, period[, trend[, test_points[, ad_method
+        # [, seasonality_threshold]]]]]]) — period -1/0 and the
+        # trend literals behave as in series_decompose (omitted
+        # trend keeps the engine's FIR default the banked oracles
+        # pin); ad_method is series_outliers' kind ('ctukey'
+        # default, like Kusto). Returns the Kusto-shaped bag
+        # {ad_flag, ad_score, baseline}; tuple-assign order via
+        # _MULTI_ASSIGN.
+        arr = args[0]
+        thr = args[1] if len(args) >= 2 else "1.5"
+        per = args[2] if len(args) >= 3 else "7"
+        if len(args) >= 5 and args[4].strip() not in ("0", "(0)"):
+            raise ValueError(
+                "KQL: series_decompose_anomalies test_points is "
+                "supported at its default 0 only")
+        sthr = args[6] if len(args) == 7 else "0.7"
+        per_sql = self._decompose_period_sql(arr, per, sthr)
+        per = "__dp0.p"  # bound once in the outermost hop below
+        trend = self._decompose_trend_sql(
+            arr, per, args[3] if len(args) >= 4 else None)
+        seasonal = self._decompose_seasonal_sql(arr, per)
+        baseline = self._call("series_add",
+                                     [seasonal, trend])
+        # bind-once struct hops: series_outliers splices its input
+        # ~10x textually — composing it directly over resid (which
+        # itself contains baseline/trend) multiplies the expression
+        # tree into a Catalyst OOM for the heavier trend modes
+        # (measured with 'linefit'). Each big component is bound
+        # exactly once; the single-element transform evaluates its
+        # body once (the established bind-once idiom).
+        resid = self._call("series_subtract",
+                                  [arr, "__an1.b"])
+        score = self._call(
+            "series_outliers",
+            ["__an2.r"] + ([args[5]] if len(args) >= 6 else []))
+        flag = (f"transform(__an3.sc, __sda_s -> "
+                f"CASE WHEN __sda_s IS NULL THEN NULL "
+                f"WHEN __sda_s > ({thr}) THEN 1 "
+                f"WHEN __sda_s < -({thr}) THEN -1 "
+                f"ELSE 0 END)")
+        obj = (f"named_struct('ad_flag', {flag}, "
+               f"'ad_score', __an3.sc, 'baseline', __an1.b)")
+        nested = (
+            f"element_at(transform(array(named_struct("
+            f"'p', CAST({per_sql} AS INT))), __dp0 -> "
+            f"element_at(transform(array(named_struct("
+            f"'b', {baseline})), __an1 -> "
+            f"element_at(transform(array(named_struct("
+            f"'r', {resid})), __an2 -> "
+            f"element_at(transform(array(named_struct("
+            f"'sc', {score})), __an3 -> {obj}), 1)), 1)), 1)), 1)")
+        return f"parse_json(to_json({nested}))"
 
-                def fold(e):
-                    return (f"aggregate({S}, CAST(0 AS DOUBLE), "
-                            f"(__f2_a, __f2_e) -> __f2_a + {e})")
-                n = f"CAST(size({S}) AS DOUBLE)"
-                sx, sy = fold("__f2_e.i"), fold("__f2_e.v")
-                sxx = fold("__f2_e.i * __f2_e.i")
-                sxy = fold("__f2_e.i * __f2_e.v")
-                syy = fold("__f2_e.v * __f2_e.v")
-                den = f"({n} * {sxx} - {sx} * {sx})"
-                sl = (f"(CASE WHEN {n} < 2 OR {den} = 0 THEN 0.0 ELSE "
-                      f"({n} * {sxy} - {sx} * {sy}) / {den} END)")
-                ic = (f"(CASE WHEN {n} = 0 THEN 0.0 ELSE "
-                      f"({sy} - {sl} * {sx}) / {n} END)")
-                # SSE expanded algebraically (one pass, no re-fold on
-                # the fitted values)
-                sse = (f"({syy} - 2 * {sl} * {sxy} - 2 * {ic} * {sy} "
-                       f"+ {sl} * {sl} * {sxx} "
-                       f"+ 2 * {sl} * {ic} * {sx} + {n} * {ic} * {ic})")
-                return sl, ic, sse
+    @_fn("series_periods_validate series_periods_validate_dynamic",
+         2, None, None,
+         "{name}(series, p1, ...)")
+    def _fn_series_periods_validate(self, fname: str, args: list[str]) -> str:
+        # scores for CALLER-SUPPLIED candidate periods: the same
+        # biased mean-centered ACF as series_periods_detect, no
+        # peak search — {periods: [given...], scores: [...]}
+        arr = args[0]
+        acf = self._acf_sql(arr)
+        plist = ", ".join(f"CAST(floor({p}) AS INT)"
+                          for p in args[1:])
+        obj = (f"named_struct("
+               f"'periods', array({', '.join('CAST(' + p + ' AS DOUBLE)' for p in args[1:])}), "
+               f"'scores', transform(array({plist}), "
+               f"__spd_p -> {acf}))")
+        return f"parse_json(to_json({obj}))"
 
-            lsl, lic, lsse = side("__f2_q.i < __F2SPLIT__")
-            rsl, ric, rsse = side("__f2_q.i >= __F2SPLIT__")
-            sse_tot = f"({lsse} + {rsse})".replace("__F2SPLIT__",
-                                                   "__f2_k")
-            cands = (f"transform(transform(sequence(1, size({arr}) - 1),"
-                     f" __f2_ki -> CAST(__f2_ki AS DOUBLE)), "
-                     f"__f2_k -> named_struct('k', __f2_k, "
-                     f"'sse', {sse_tot}))")
-            best = (f"aggregate({cands}, "
-                    f"named_struct('k', CAST(-1 AS DOUBLE), "
-                    f"'sse', CAST('Infinity' AS DOUBLE)), "
-                    f"(__f2_bacc, __f2_c) -> CASE WHEN __f2_c.sse "
-                    f"< __f2_bacc.sse THEN __f2_c ELSE __f2_bacc END)")
+    @_fn("series_periods_detect series_periods_detect_dynamic", 4, 4, None,
+         "{name}(series, min_period, max_period, num_periods)")
+    def _fn_series_periods_detect_dynamic(self, fname: str,
+                                          args: list[str]) -> str:
+        # Period detection over the in-row series (completes the
+        # series_decompose family — the seasonality argument no
+        # longer has to be caller-supplied): mean-centered
+        # autocorrelation at every integer lag in [min_period,
+        # max_period], kept only at LOCAL MAXIMA of the ACF curve
+        # (acf[p] > acf[p-1] and >= acf[p+1] — a plateau of
+        # near-equal neighbors like lags 11/12/13 around a true
+        # period 12 yields one peak, not three), ranked by score
+        # desc (ties -> smaller period), top num_periods returned
+        # as the Kusto-shaped bag {periods: [..], scores: [..]}
+        # with periods as doubles. Documented deviation: Kusto's
+        # own detector is unpublished; this engine's contract is
+        # the classic ACF peak-picker. Pure higher-order SQL —
+        # O(n * max_period) folds per row, zero shuffles, zero
+        # Python. Nulls in the series null the result (run a
+        # series_fill_* first; make-series grids are filled).
+        arr, minp, maxp, nump = args
+        xs = f"transform({arr}, __spd_x -> CAST(__spd_x AS DOUBLE))"
+        n = f"size({xs})"
+        acf = self._acf_sql(arr)
+        mi = f"greatest(CAST(floor({minp}) AS INT), 1)"
+        hi = f"least(CAST(floor({maxp}) AS INT), {n} - 2)"
+        # scored lags over the EXTENDED range [mi-1, hi+1] so the
+        # local-max test can see both neighbors of every candidate
+        ps = (f"(CASE WHEN {hi} + 1 >= {mi} - 1 THEN "
+              f"transform(sequence({mi} - 1, {hi} + 1), "
+              f"__spd_p -> named_struct('p', __spd_p, 's', {acf})) "
+              f"ELSE CAST(array() AS "
+              f"ARRAY<STRUCT<p: INT, s: DOUBLE>>) END)")
+        cand = (f"filter(transform("
+                f"CASE WHEN size({ps}) >= 3 THEN "
+                f"sequence(2, size({ps}) - 1) "
+                f"ELSE CAST(array() AS ARRAY<INT>) END, "
+                f"__spd_i -> named_struct("
+                f"'period', element_at({ps}, __spd_i).p, "
+                f"'score', element_at({ps}, __spd_i).s, "
+                f"'prv', element_at({ps}, __spd_i - 1).s, "
+                f"'nxt', element_at({ps}, __spd_i + 1).s)), "
+                f"__spd_c -> __spd_c.score IS NOT NULL "
+                f"AND (__spd_c.prv IS NULL "
+                f"OR __spd_c.score > __spd_c.prv) "
+                f"AND (__spd_c.nxt IS NULL "
+                f"OR __spd_c.score >= __spd_c.nxt))")
+        top = (f"slice(array_sort({cand}, (__spd_l, __spd_r) -> "
+               f"CASE WHEN __spd_l.score > __spd_r.score THEN -1 "
+               f"WHEN __spd_l.score < __spd_r.score THEN 1 "
+               f"WHEN __spd_l.period < __spd_r.period THEN -1 "
+               f"WHEN __spd_l.period > __spd_r.period THEN 1 "
+               f"ELSE 0 END), 1, "
+               f"greatest(CAST({nump} AS INT), 0))")
+        obj = (f"named_struct("
+               f"'periods', transform({top}, "
+               f"__spd_t -> CAST(__spd_t.period AS DOUBLE)), "
+               f"'scores', transform({top}, "
+               f"__spd_t -> __spd_t.score))")
+        return f"parse_json(to_json({obj}))"
 
-            def fold_all(e):
-                return (f"aggregate({pairs}, CAST(0 AS DOUBLE), "
+    # the bare name is the same exact pure-SQL enumeration (the bag
+    # carries variance/rvariance so Kusto's tuple-assign order splits
+    # via _MULTI_ASSIGN)
+    @_fn("series_fit_2lines series_fit_2lines_dynamic", 1, 1, None,
+         "{name}(series)")
+    def _fn_series_fit_2lines_dynamic(self, fname: str,
+                                      args: list[str]) -> str:
+        # Best two-segment piecewise-linear fit: for every split k
+        # the two sides get closed-form least squares; the split
+        # with minimal total SSE wins (ties -> smallest k). Exact
+        # enumeration over the in-row array — O(n²) folds in the
+        # calendar-bounded series length, zero shuffles, zero
+        # Python. Returns the Kusto-shaped dynamic bag
+        # {rsquare, split_idx, line_fit, left:{slope,interception},
+        # right:{slope,interception}}. The split index is spliced
+        # in via the __F2SPLIT__ placeholder so the same side
+        # algebra serves both the enumeration lambda and the
+        # winning-split projection.
+        arr = args[0]
+        wi = (f"zip_with({arr}, sequence(0, size({arr}) - 1), "
+              f"(__f2_v, __f2_i) -> struct("
+              f"CAST(__f2_v AS DOUBLE) AS v, "
+              f"CAST(__f2_i AS DOUBLE) AS i))")
+        pairs = f"filter({wi}, __f2_p -> __f2_p.v IS NOT NULL)"
+
+        def side(cond):
+            S = f"filter({pairs}, __f2_q -> {cond})"
+
+            def fold(e):
+                return (f"aggregate({S}, CAST(0 AS DOUBLE), "
                         f"(__f2_a, __f2_e) -> __f2_a + {e})")
-            nn = f"CAST(size({pairs}) AS DOUBLE)"
-            syall = fold_all("__f2_e.v")
-            syyall = fold_all("__f2_e.v * __f2_e.v")
-            sstot = f"({syyall} - {syall} * {syall} / {nn})"
-            line = (f"transform({wi}, __f2_s -> CASE "
-                    f"WHEN __f2_s.i < __F2SPLIT__ "
-                    f"THEN {lsl} * __f2_s.i + {lic} "
-                    f"ELSE {rsl} * __f2_s.i + {ric} END)")
-            # reference `best` exactly ONCE: project the final bag
-            # inside a transform over a single-element array, with the
-            # winning split bound to __f2_bb.k
-            final = (f"named_struct("
-                     f"'rsquare', CASE WHEN {sstot} <= 0 THEN 1.0 "
-                     f"ELSE 1.0 - __f2_bb.sse / {sstot} END, "
-                     f"'split_idx', CAST(__f2_bb.k AS INT), "
-                     # variance/rvariance (population forms, like
-                     # fit_line) complete Kusto's documented field set
-                     # so the bare-name tuple assignment can split
-                     f"'variance', (CASE WHEN {nn} = 0 THEN 0.0 "
-                     f"ELSE {sstot} / {nn} END), "
-                     f"'rvariance', (CASE WHEN {nn} = 0 THEN 0.0 "
-                     f"ELSE __f2_bb.sse / {nn} END), "
-                     f"'left', named_struct('slope', {lsl}, "
-                     f"'interception', {lic}), "
-                     f"'right', named_struct('slope', {rsl}, "
-                     f"'interception', {ric}), "
-                     f"'line_fit', {line})").replace("__F2SPLIT__",
-                                                     "__f2_bb.k")
-            out = (f"element_at(transform(array({best}), "
-                   f"__f2_bb -> {final}), 1)")
-            return f"parse_json(to_json({out}))"
-        if fname in ("startofday", "startofweek", "startofmonth",
-                     "startofyear", "startofquarter"):
-            # optional Kusto offset: the start of the period `offset`
-            # periods away (expression-valued via make_interval)
-            if len(args) not in (1, 2):
-                raise ValueError(f"KQL: {fname}(ts [, offset])")
-            if fname == "startofweek":
-                # Kusto weeks start SUNDAY; Spark's WEEK truncation is
-                # Monday-based. Shift by one day around the truncation.
-                base = (f"(date_trunc('WEEK', {args[0]} + INTERVAL 1 "
-                        f"DAY) - INTERVAL 1 DAY)")
-            else:
-                unit = {"startofday": "DAY", "startofmonth": "MONTH",
-                        "startofyear": "YEAR",
-                        "startofquarter": "QUARTER"}[fname]
-                base = f"date_trunc('{unit}', {args[0]})"
-            if len(args) == 1:
-                return base
-            n = f"CAST({args[1]} AS INT)"
-            shift = {
-                "startofday": f"make_interval(0, 0, 0, {n})",
-                "startofweek": f"make_interval(0, 0, {n})",
-                "startofmonth": f"make_interval(0, {n})",
-                "startofquarter": f"make_interval(0, 3 * {n})",
-                "startofyear": f"make_interval({n})"}[fname]
-            return f"({base} + {shift})"
-        if fname in ("extractjson", "extract_json"):
-            # extractjson(jsonPath, text) -> get_json_object;
-            # extract_json is Kusto's documented alias
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(jsonPath, text)")
-            return f"get_json_object({args[1]}, {args[0]})"
-        if fname == "bag_has_key":
-            # top-level (or JSONPath '$.a.b') key membership on a
-            # dynamic bag; rides the same JSON round-trip as bag_keys
-            if len(args) != 2:
-                raise ValueError("KQL: bag_has_key(bag, key)")
-            bag, key = args
-            # JSONPath form when the key LITERAL starts with '$.'
-            m = re.fullmatch(r"\s*'(\$\.[^']*)'\s*", key or "")
-            if m:
-                return (f"(get_json_object(to_json({bag}), "
-                        f"'{m.group(1)}') IS NOT NULL "
-                        f"OR array_contains(json_object_keys("
-                        f"get_json_object(to_json({bag}), "
-                        f"'{m.group(1)[:m.group(1).rfind('.')] or '$'}')"
-                        f"), '{m.group(1).split('.')[-1]}'))")
-            return (f"array_contains(json_object_keys(to_json({bag})), "
-                    f"CAST({key} AS STRING))")
-        if fname == "arg_max":
-            if len(args) != 2:
-                raise ValueError("KQL: arg_max(rank_expr, return_expr)")
-            return f"max_by({args[1]}, {args[0]})"
-        if fname == "arg_min":
-            if len(args) != 2:
-                raise ValueError("KQL: arg_min(rank_expr, return_expr)")
-            return f"min_by({args[1]}, {args[0]})"
-        if fname == "case":
-            if len(args) < 3 or len(args) % 2 == 0:
-                raise ValueError(
-                    "KQL: case(pred1, val1, ..., default) needs an odd "
-                    "number of args >= 3")
-            whens = "".join(
-                f" WHEN {args[i]} THEN {args[i + 1]}"
-                for i in range(0, len(args) - 1, 2))
-            return f"(CASE{whens} ELSE {args[-1]} END)"
-        if fname in ("isempty", "isnotempty"):
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(x) takes 1 arg")
-            neg = "NOT " if fname == "isnotempty" else ""
-            return (f"({neg}(({args[0]}) IS NULL "
-                    f"OR CAST({args[0]} AS STRING) = ''))")
-        if fname in ("trim", "trim_start", "trim_end"):
-            # Kusto signature: trim(regex, text) — strip a REGEX match
-            # from the edges (trim(' +', s) etc.), not a charset
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(regex, text)")
-            rx = args[0]
-            # Kusto strips ALL leading/trailing matches, not one —
-            # wrap the user regex in a repetition group
-            pats = {"trim": f"concat('^(', {rx}, ')+|(', {rx}, ')+$')",
-                    "trim_start": f"concat('^(', {rx}, ')+')",
-                    "trim_end": f"concat('(', {rx}, ')+$')"}
-            return f"regexp_replace({args[1]}, {pats[fname]}, '')"
-        if fname == "replace_string":
-            if len(args) != 3:
-                raise ValueError("KQL: replace_string(text, lookup, rewrite)")
-            return f"replace({args[0]}, {args[1]}, {args[2]})"
-        if fname == "replace_regex":
-            if len(args) != 3:
-                raise ValueError("KQL: replace_regex(text, regex, rewrite)")
-            return f"regexp_replace({args[0]}, {args[1]}, {args[2]})"
-        if fname == "replace_strings":
-            # replace_strings(text, lookups, rewrites): sequential
-            # literal replacement driven by two parallel dynamic
-            # arrays (a lambda-fold — each rewrite sees the previous
-            # step's output, Kusto's documented order). Mismatched
-            # array lengths yield null, matching Kusto's error-free
-            # null convention for invalid dynamic args.
-            if len(args) != 3:
-                raise ValueError(
-                    "KQL: replace_strings(text, lookups, rewrites)")
-            lk = f"from_json(to_json({args[1]}), 'array<string>')"
-            rw = f"from_json(to_json({args[2]}), 'array<string>')"
-            pairs = (f"zip_with({lk}, {rw}, (__rs_l, __rs_r) -> "
-                     f"named_struct('l', __rs_l, 'r', __rs_r))")
-            fold = (f"aggregate({pairs}, CAST({args[0]} AS STRING), "
-                    f"(__rs_a, __rs_p) -> replace(__rs_a, __rs_p.l, "
-                    f"coalesce(__rs_p.r, '')))")
-            return (f"(CASE WHEN size({lk}) = size({rw}) "
-                    f"THEN {fold} ELSE NULL END)")
-        if fname in ("parse_json", "todynamic"):
-            # Kusto dynamic == Spark 4 VARIANT: binary-encoded
-            # semi-structured values, predicate/path evaluation without
-            # re-parsing JSON text per access
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(text) takes 1 arg")
-            # Kusto's parse_json NEVER errors: invalid JSON (incl.
-            # the empty string) yields the input itself as a dynamic
-            # string. try_parse_json covers the happy path; the
-            # fallback lifts the raw string to VARIANT via the
-            # named_struct hop (a bare string can't CAST to VARIANT).
-            # NULL stays NULL (to_json drops the null field -> '{}'
-            # -> variant_get returns null).
-            s = f"CAST({args[0]} AS STRING)"
-            lift = (f"variant_get(parse_json(to_json(named_struct("
-                    f"'x', {s}))), '$.x')")
-            return f"coalesce(try_parse_json({s}), {lift})"
-        if fname == "todatetime":
-            # null on unparseable input, per Kusto (ANSI CAST errors)
-            return f"try_cast({args[0]} AS TIMESTAMP)"
-        if fname == "tobool":
-            return f"try_cast({args[0]} AS BOOLEAN)"
-        if fname == "toreal":
-            return f"try_cast({args[0]} AS DOUBLE)"
-        if fname == "now":
-            return "current_timestamp()"
-        if fname == "ago":
-            # arg is a timespan literal, already rendered as microseconds
-            if len(args) != 1:
-                raise ValueError("KQL: ago(timespan)")
-            return (f"timestampadd(MICROSECOND, -({args[0]}), "
-                    f"current_timestamp())")
-        if fname == "format_datetime":
-            # Kusto format specifiers (yyyy MM dd HH mm ss) are the Java
-            # subset date_format understands
-            if len(args) != 2:
-                raise ValueError("KQL: format_datetime(dt, format)")
-            return f"date_format({args[0]}, {args[1]})"
-        if fname == "format_timespan":
-            # timespan = epoch-µs int in this engine; the format is a
-            # compile-time literal parsed into d/h/m/s/f runs, each a
-            # zero-padded component expression, separators verbatim
-            if len(args) != 2:
-                raise ValueError("KQL: format_timespan(ts, format)")
-            t = args[0]
-            fm = re.fullmatch(r"\s*'(.*)'\s*", args[1] or "",
-                              re.DOTALL)
-            if not fm:
-                raise ValueError("KQL: format_timespan needs a "
-                                 "literal format string")
-            at = f"abs(CAST({t} AS BIGINT))"
-            comp = {
-                "d": f"CAST({at} div 86400000000 AS STRING)",
-                "h": f"CAST(({at} div 3600000000) % 24 AS STRING)",
-                "m": f"CAST(({at} div 60000000) % 60 AS STRING)",
-                "s": f"CAST(({at} div 1000000) % 60 AS STRING)",
-            }
-            parts, i2, spec = [], 0, fm.group(1)
-            while i2 < len(spec):
-                c = spec[i2]
-                j2 = i2
-                while j2 < len(spec) and spec[j2] == c:
-                    j2 += 1
-                k2 = j2 - i2
-                if c in "dhms":
-                    e = comp[c]
-                    if k2 > 1:
-                        e = f"lpad({e}, {k2}, '0')"
-                    parts.append(e)
-                elif c == "f":
-                    if k2 > 7:
-                        raise ValueError(
-                            "KQL: format_timespan: at most 7 'f'")
-                    parts.append(
-                        f"substr(lpad(CAST({at} % 1000000 AS STRING),"
-                        f" 6, '0') || '0', 1, {k2})")
-                else:
-                    lit = spec[i2:j2].replace("'", "\\'")
-                    parts.append(f"'{lit}'")
-                i2 = j2
-            sign = (f"(CASE WHEN CAST({t} AS BIGINT) < 0 "
-                    f"THEN '-' ELSE '' END)")
-            return f"concat({sign}, {', '.join(parts)})"
-        if fname == "format_bytes":
-            # format_bytes(size [, precision [, units]]): humanized
-            # 1024-based size string; auto-picks the largest unit with
-            # value >= 1 unless a literal unit name is given
-            if len(args) not in (1, 2, 3):
-                raise ValueError(
-                    "KQL: format_bytes(size[, precision[, units]])")
-            sz = f"CAST({args[0]} AS DOUBLE)"
-            prec = args[1] if len(args) >= 2 else "0"
-            try:
-                p = int(prec.strip("() "))
-            except ValueError:
-                raise ValueError("KQL: format_bytes precision must "
-                                 "be an integer literal")
-            units = ["Bytes", "KB", "MB", "GB", "TB", "PB", "EB"]
-            if len(args) == 3:
-                um = re.fullmatch(r"\s*'(\w+)'\s*", args[2])
-                if not um or um.group(1) not in units:
+            n = f"CAST(size({S}) AS DOUBLE)"
+            sx, sy = fold("__f2_e.i"), fold("__f2_e.v")
+            sxx = fold("__f2_e.i * __f2_e.i")
+            sxy = fold("__f2_e.i * __f2_e.v")
+            syy = fold("__f2_e.v * __f2_e.v")
+            den = f"({n} * {sxx} - {sx} * {sx})"
+            sl = (f"(CASE WHEN {n} < 2 OR {den} = 0 THEN 0.0 ELSE "
+                  f"({n} * {sxy} - {sx} * {sy}) / {den} END)")
+            ic = (f"(CASE WHEN {n} = 0 THEN 0.0 ELSE "
+                  f"({sy} - {sl} * {sx}) / {n} END)")
+            # SSE expanded algebraically (one pass, no re-fold on
+            # the fitted values)
+            sse = (f"({syy} - 2 * {sl} * {sxy} - 2 * {ic} * {sy} "
+                   f"+ {sl} * {sl} * {sxx} "
+                   f"+ 2 * {sl} * {ic} * {sx} + {n} * {ic} * {ic})")
+            return sl, ic, sse
+
+        lsl, lic, lsse = side("__f2_q.i < __F2SPLIT__")
+        rsl, ric, rsse = side("__f2_q.i >= __F2SPLIT__")
+        sse_tot = f"({lsse} + {rsse})".replace("__F2SPLIT__",
+                                               "__f2_k")
+        cands = (f"transform(transform(sequence(1, size({arr}) - 1),"
+                 f" __f2_ki -> CAST(__f2_ki AS DOUBLE)), "
+                 f"__f2_k -> named_struct('k', __f2_k, "
+                 f"'sse', {sse_tot}))")
+        best = (f"aggregate({cands}, "
+                f"named_struct('k', CAST(-1 AS DOUBLE), "
+                f"'sse', CAST('Infinity' AS DOUBLE)), "
+                f"(__f2_bacc, __f2_c) -> CASE WHEN __f2_c.sse "
+                f"< __f2_bacc.sse THEN __f2_c ELSE __f2_bacc END)")
+
+        def fold_all(e):
+            return (f"aggregate({pairs}, CAST(0 AS DOUBLE), "
+                    f"(__f2_a, __f2_e) -> __f2_a + {e})")
+        nn = f"CAST(size({pairs}) AS DOUBLE)"
+        syall = fold_all("__f2_e.v")
+        syyall = fold_all("__f2_e.v * __f2_e.v")
+        sstot = f"({syyall} - {syall} * {syall} / {nn})"
+        line = (f"transform({wi}, __f2_s -> CASE "
+                f"WHEN __f2_s.i < __F2SPLIT__ "
+                f"THEN {lsl} * __f2_s.i + {lic} "
+                f"ELSE {rsl} * __f2_s.i + {ric} END)")
+        # reference `best` exactly ONCE: project the final bag
+        # inside a transform over a single-element array, with the
+        # winning split bound to __f2_bb.k
+        final = (f"named_struct("
+                 f"'rsquare', CASE WHEN {sstot} <= 0 THEN 1.0 "
+                 f"ELSE 1.0 - __f2_bb.sse / {sstot} END, "
+                 f"'split_idx', CAST(__f2_bb.k AS INT), "
+                 # variance/rvariance (population forms, like
+                 # fit_line) complete Kusto's documented field set
+                 # so the bare-name tuple assignment can split
+                 f"'variance', (CASE WHEN {nn} = 0 THEN 0.0 "
+                 f"ELSE {sstot} / {nn} END), "
+                 f"'rvariance', (CASE WHEN {nn} = 0 THEN 0.0 "
+                 f"ELSE __f2_bb.sse / {nn} END), "
+                 f"'left', named_struct('slope', {lsl}, "
+                 f"'interception', {lic}), "
+                 f"'right', named_struct('slope', {rsl}, "
+                 f"'interception', {ric}), "
+                 f"'line_fit', {line})").replace("__F2SPLIT__",
+                                                 "__f2_bb.k")
+        out = (f"element_at(transform(array({best}), "
+               f"__f2_bb -> {final}), 1)")
+        return f"parse_json(to_json({out}))"
+
+    @_fn("startofday startofweek startofmonth startofyear startofquarter",
+         1, 2, "datetime",
+         "{name}(ts [, offset])")
+    def _fn_startofday(self, fname: str, args: list[str]) -> str:
+        # optional Kusto offset: the start of the period `offset`
+        # periods away (expression-valued via make_interval)
+        if fname == "startofweek":
+            # Kusto weeks start SUNDAY; Spark's WEEK truncation is
+            # Monday-based. Shift by one day around the truncation.
+            base = (f"(date_trunc('WEEK', {args[0]} + INTERVAL 1 "
+                    f"DAY) - INTERVAL 1 DAY)")
+        else:
+            unit = {"startofday": "DAY", "startofmonth": "MONTH",
+                    "startofyear": "YEAR",
+                    "startofquarter": "QUARTER"}[fname]
+            base = f"date_trunc('{unit}', {args[0]})"
+        if len(args) == 1:
+            return base
+        n = f"CAST({args[1]} AS INT)"
+        shift = {
+            "startofday": f"make_interval(0, 0, 0, {n})",
+            "startofweek": f"make_interval(0, 0, {n})",
+            "startofmonth": f"make_interval(0, {n})",
+            "startofquarter": f"make_interval(0, 3 * {n})",
+            "startofyear": f"make_interval({n})"}[fname]
+        return f"({base} + {shift})"
+
+    @_fn("extractjson extract_json", 2, 2, None, "{name}(jsonPath, text)")
+    def _fn_extractjson(self, fname: str, args: list[str]) -> str:
+        # extractjson(jsonPath, text) -> get_json_object;
+        # extract_json is Kusto's documented alias
+        return f"get_json_object({args[1]}, {args[0]})"
+
+    @_fn("bag_has_key", 2, 2, "bool", "bag_has_key(bag, key)")
+    def _fn_bag_has_key(self, fname: str, args: list[str]) -> str:
+        # top-level (or JSONPath '$.a.b') key membership on a
+        # dynamic bag; rides the same JSON round-trip as bag_keys
+        bag, key = args
+        # JSONPath form when the key LITERAL starts with '$.'
+        m = re.fullmatch(r"\s*'(\$\.[^']*)'\s*", key or "")
+        if m:
+            return (f"(get_json_object(to_json({bag}), "
+                    f"'{m.group(1)}') IS NOT NULL "
+                    f"OR array_contains(json_object_keys("
+                    f"get_json_object(to_json({bag}), "
+                    f"'{m.group(1)[:m.group(1).rfind('.')] or '$'}')"
+                    f"), '{m.group(1).split('.')[-1]}'))")
+        return (f"array_contains(json_object_keys(to_json({bag})), "
+                f"CAST({key} AS STRING))")
+
+    @_fn("arg_max arg_min", 2, 2, slice(1, 2),
+         "{name}(rank_expr, return_expr)")
+    def _fn_arg_max(self, fname: str, args: list[str]) -> str:
+        return f"{fname[4:]}_by({args[1]}, {args[0]})"
+
+    @_fn("case", 3, None, slice(1, None, 2),
+         "case(pred1, val1, ..., default) needs an odd number of args >= 3")
+    def _fn_case(self, fname: str, args: list[str]) -> str:
+        if len(args) < 3 or len(args) % 2 == 0:
+            raise ValueError(
+                "KQL: case(pred1, val1, ..., default) needs an odd "
+                "number of args >= 3")
+        whens = "".join(
+            f" WHEN {args[i]} THEN {args[i + 1]}"
+            for i in range(0, len(args) - 1, 2))
+        return f"(CASE{whens} ELSE {args[-1]} END)"
+
+    @_fn("isempty isnotempty", 1, 1, "bool", "{name}(x) takes 1 arg")
+    def _fn_isempty(self, fname: str, args: list[str]) -> str:
+        neg = "NOT " if fname == "isnotempty" else ""
+        return (f"({neg}(({args[0]}) IS NULL "
+                f"OR CAST({args[0]} AS STRING) = ''))")
+
+    @_fn("trim trim_start trim_end", 2, 2, "string", "{name}(regex, text)")
+    def _fn_trim(self, fname: str, args: list[str]) -> str:
+        # Kusto signature: trim(regex, text) — strip a REGEX match
+        # from the edges (trim(' +', s) etc.), not a charset
+        rx = args[0]
+        # Kusto strips ALL leading/trailing matches, not one —
+        # wrap the user regex in a repetition group
+        pats = {"trim": f"concat('^(', {rx}, ')+|(', {rx}, ')+$')",
+                "trim_start": f"concat('^(', {rx}, ')+')",
+                "trim_end": f"concat('(', {rx}, ')+$')"}
+        return f"regexp_replace({args[1]}, {pats[fname]}, '')"
+
+    @_fn("replace_strings", 3, 3, None,
+         "replace_strings(text, lookups, rewrites)")
+    def _fn_replace_strings(self, fname: str, args: list[str]) -> str:
+        # replace_strings(text, lookups, rewrites): sequential
+        # literal replacement driven by two parallel dynamic
+        # arrays (a lambda-fold — each rewrite sees the previous
+        # step's output, Kusto's documented order). Mismatched
+        # array lengths yield null, matching Kusto's error-free
+        # null convention for invalid dynamic args.
+        lk = f"from_json(to_json({args[1]}), 'array<string>')"
+        rw = f"from_json(to_json({args[2]}), 'array<string>')"
+        pairs = (f"zip_with({lk}, {rw}, (__rs_l, __rs_r) -> "
+                 f"named_struct('l', __rs_l, 'r', __rs_r))")
+        fold = (f"aggregate({pairs}, CAST({args[0]} AS STRING), "
+                f"(__rs_a, __rs_p) -> replace(__rs_a, __rs_p.l, "
+                f"coalesce(__rs_p.r, '')))")
+        return (f"(CASE WHEN size({lk}) = size({rw}) "
+                f"THEN {fold} ELSE NULL END)")
+
+    @_fn("parse_json todynamic", 1, 1, "dynamic", "{name}(text) takes 1 arg")
+    def _fn_parse_json(self, fname: str, args: list[str]) -> str:
+        # Kusto dynamic == Spark 4 VARIANT: binary-encoded
+        # semi-structured values, predicate/path evaluation without
+        # re-parsing JSON text per access
+        # Kusto's parse_json NEVER errors: invalid JSON (incl.
+        # the empty string) yields the input itself as a dynamic
+        # string. try_parse_json covers the happy path; the
+        # fallback lifts the raw string to VARIANT via the
+        # named_struct hop (a bare string can't CAST to VARIANT).
+        # NULL stays NULL (to_json drops the null field -> '{}'
+        # -> variant_get returns null).
+        s = f"CAST({args[0]} AS STRING)"
+        lift = (f"variant_get(parse_json(to_json(named_struct("
+                f"'x', {s}))), '$.x')")
+        return f"coalesce(try_parse_json({s}), {lift})"
+
+    @_fn("now", 0, 1, "datetime", "now([offset])")
+    def _fn_now(self, fname: str, args: list[str]) -> str:
+        return "current_timestamp()"
+
+    @_fn("ago", 1, 1, "datetime", "ago(timespan)")
+    def _fn_ago(self, fname: str, args: list[str]) -> str:
+        # arg is a timespan literal, already rendered as microseconds
+        return (f"timestampadd(MICROSECOND, -({args[0]}), "
+                f"current_timestamp())")
+
+    @_fn("format_timespan", 2, 2, "string", "format_timespan(ts, format)")
+    def _fn_format_timespan(self, fname: str, args: list[str]) -> str:
+        # timespan = epoch-µs int in this engine; the format is a
+        # compile-time literal parsed into d/h/m/s/f runs, each a
+        # zero-padded component expression, separators verbatim
+        t = args[0]
+        fm = re.fullmatch(r"\s*'(.*)'\s*", args[1] or "",
+                          re.DOTALL)
+        if not fm:
+            raise ValueError("KQL: format_timespan needs a "
+                             "literal format string")
+        at = f"abs(CAST({t} AS BIGINT))"
+        comp = {
+            "d": f"CAST({at} div 86400000000 AS STRING)",
+            "h": f"CAST(({at} div 3600000000) % 24 AS STRING)",
+            "m": f"CAST(({at} div 60000000) % 60 AS STRING)",
+            "s": f"CAST(({at} div 1000000) % 60 AS STRING)",
+        }
+        parts, i2, spec = [], 0, fm.group(1)
+        while i2 < len(spec):
+            c = spec[i2]
+            j2 = i2
+            while j2 < len(spec) and spec[j2] == c:
+                j2 += 1
+            k2 = j2 - i2
+            if c in "dhms":
+                e = comp[c]
+                if k2 > 1:
+                    e = f"lpad({e}, {k2}, '0')"
+                parts.append(e)
+            elif c == "f":
+                if k2 > 7:
                     raise ValueError(
-                        f"KQL: format_bytes units must be a literal "
-                        f"in {units}")
-                k2 = units.index(um.group(1))
-                val = f"round({sz} / {float(1024 ** k2)}, {p})"
-                num = (f"CAST(CAST({val} AS DECIMAL(38, {p})) "
-                       f"AS STRING)" if p > 0
-                       else f"CAST(CAST({val} AS BIGINT) AS STRING)")
-                return f"concat({num}, ' ', '{units[k2]}')"
-            branches = []
-            for k2 in range(len(units) - 1, 0, -1):
-                div = float(1024 ** k2)
-                val = f"round({sz} / {div}, {p})"
-                num = (f"CAST(CAST({val} AS DECIMAL(38, {p})) "
-                       f"AS STRING)" if p > 0
-                       else f"CAST(CAST({val} AS BIGINT) AS STRING)")
-                branches.append(f"WHEN {sz} >= {div} THEN "
-                                f"concat({num}, ' {units[k2]}')")
-            val0 = f"round({sz}, {p})"
-            num0 = (f"CAST(CAST({val0} AS DECIMAL(38, {p})) AS STRING)"
-                    if p > 0
-                    else f"CAST(CAST({val0} AS BIGINT) AS STRING)")
-            return (f"(CASE {' '.join(branches)} "
-                    f"ELSE concat({num0}, ' Bytes') END)")
-        if fname == "indexof":
-            # 0-based; -1 when absent (instr/locate are 1-based, 0
-            # when absent). Full Kusto signature: indexof(text,
-            # lookup [, start [, length [, occurrence]]]) — start
-            # offsets the search, length bounds the searched window
-            # (-1 = to the end), occurrence picks the n-th match.
-            if len(args) not in (2, 3, 4, 5):
-                raise ValueError("KQL: indexof(text, lookup "
-                                 "[, start [, length [, occurrence]]])")
-            if len(args) == 2:
-                return f"(instr({args[0]}, {args[1]}) - 1)"
-            text, look = args[0], args[1]
-            # negative start: offset from the END by abs(start)
-            # (Kusto; r11 advice — locate() with a non-positive
-            # position returns 0, which read as a silent miss)
-            start0 = f"CAST({args[2]} AS INT)"
-            start = (f"(CASE WHEN {start0} < 0 THEN "
-                     f"greatest(0, CAST(length({text}) AS INT) "
-                     f"+ {start0}) ELSE {start0} END)")
-            if len(args) >= 4:
-                ln = f"CAST({args[3]} AS INT)"
-                window = (f"(CASE WHEN {ln} = -1 THEN {text} ELSE "
-                          f"substr({text}, 1, {start} + {ln}) END)")
+                        "KQL: format_timespan: at most 7 'f'")
+                parts.append(
+                    f"substr(lpad(CAST({at} % 1000000 AS STRING),"
+                    f" 6, '0') || '0', 1, {k2})")
             else:
-                window = text
-            occ = (f"CAST({args[4]} AS INT)" if len(args) == 5
-                   else "1")
-            # locate(substr, str, pos) handles start; the n-th
-            # occurrence walks via a bounded fold over 1..occ
-            hit = (f"aggregate(sequence(1, {occ}), "
-                   f"CAST({start} + 1 AS INT), (__io_p, __io_i) -> "
-                   f"CAST(CASE WHEN __io_p <= 0 "
-                   f"OR locate({look}, {window}, __io_p) = 0 THEN 0 "
-                   f"ELSE locate({look}, {window}, __io_p) "
-                   f"+ (CASE WHEN __io_i < {occ} THEN "
-                   f"length({look}) ELSE 0 END) END AS INT))")
-            return f"({hit} - 1)"
-        if fname == "indexof_regex":
-            # 0-based position of the first regex match; -1 on miss
-            # (regexp_instr is 1-based, 0 on miss)
-            if len(args) != 2:
-                raise ValueError("KQL: indexof_regex(text, regex)")
-            return f"(regexp_instr({args[0]}, {args[1]}) - 1)"
-        if fname == "reverse":
-            # Kusto reverse(): string reversal (typed arrays reverse
-            # too — Spark's reverse covers both; dynamics need
-            # a typed cast first)
-            if len(args) != 1:
-                raise ValueError("KQL: reverse(value)")
-            return f"reverse({_str_if_variant(args[0])})"
-        if fname == "parse_path":
-            # file-path bag: Scheme / RootPath / DirectoryPath /
-            # DirectoryName / Filename / Extension /
-            # AlternateDataStreamName ('file.txt:stream'), both
-            # separators, pure regex — dynamic bag out
-            if len(args) != 1:
-                raise ValueError("KQL: parse_path(path)")
-            p = args[0]
-            scheme = (f"regexp_extract({p}, "
-                      f"'^([A-Za-z][A-Za-z0-9+.\\\\-]*)://', 1)")
-            body = (f"regexp_replace({p}, "
-                    f"'^[A-Za-z][A-Za-z0-9+.\\\\-]*://', '')")
-            root = (f"regexp_extract({body}, "
-                    f"'^([A-Za-z]:|[/\\\\\\\\])', 1)")
-            last = f"regexp_extract({body}, '[^/\\\\\\\\]*$', 0)"
-            fname_ = f"split_part({last}, ':', 1)"
-            ads = f"nullif(split_part({last}, ':', 2), '')"
-            dirp = (f"(CASE WHEN {body} RLIKE '[/\\\\\\\\]' THEN "
-                    f"regexp_replace({body}, "
-                    f"'[/\\\\\\\\][^/\\\\\\\\]*$', '') ELSE '' END)")
-            dirn = f"regexp_extract({dirp}, '[^/\\\\\\\\]*$', 0)"
-            ext = f"regexp_extract({fname_}, '\\\\.([^.]*)$', 1)"
-            obj = (f"named_struct("
-                   f"'Scheme', {scheme}, "
-                   f"'RootPath', {root}, "
-                   f"'DirectoryPath', {dirp}, "
-                   f"'DirectoryName', {dirn}, "
-                   f"'Filename', {fname_}, "
-                   f"'Extension', {ext}, "
-                   f"'AlternateDataStreamName', "
-                   f"coalesce({ads}, ''))")
-            return f"parse_json(to_json({obj}))"
-        if fname == "parse_user_agent":
-            return self._parse_user_agent(args)
-        if fname == "parse_xml":
-            # XML -> dynamic via the stdlib ElementTree kernel
-            # (__kql_parse_xml, _register_codec_udfs): Kusto's
-            # convention — '@attr' keys, '#text' for mixed content,
-            # repeated sibling tags -> array, invalid XML -> null
-            if len(args) != 1:
-                raise ValueError("KQL: parse_xml(xml_text)")
-            return (f"parse_json(__kql_parse_xml("
-                    f"CAST({args[0]} AS STRING)))")
-        if fname == "parse_command_line":
-            # command text -> dynamic array of arguments via the
-            # __kql_parse_cmdline kernel (_register_codec_udfs).
-            # Kusto documents the 'windows' parser (CommandLineToArgvW
-            # rules); 'posix' (stdlib shlex) is an extension. The
-            # parser type must be a string literal, like Kusto.
-            if len(args) != 2:
+                lit = spec[i2:j2].replace("'", "\\'")
+                parts.append(f"'{lit}'")
+            i2 = j2
+        sign = (f"(CASE WHEN CAST({t} AS BIGINT) < 0 "
+                f"THEN '-' ELSE '' END)")
+        return f"concat({sign}, {', '.join(parts)})"
+
+    @_fn("format_bytes", 1, 3, "string",
+         "format_bytes(size[, precision[, units]])")
+    def _fn_format_bytes(self, fname: str, args: list[str]) -> str:
+        # format_bytes(size [, precision [, units]]): humanized
+        # 1024-based size string; auto-picks the largest unit with
+        # value >= 1 unless a literal unit name is given
+        sz = f"CAST({args[0]} AS DOUBLE)"
+        prec = args[1] if len(args) >= 2 else "0"
+        try:
+            p = int(prec.strip("() "))
+        except ValueError:
+            raise ValueError("KQL: format_bytes precision must "
+                             "be an integer literal")
+        units = ["Bytes", "KB", "MB", "GB", "TB", "PB", "EB"]
+        if len(args) == 3:
+            um = re.fullmatch(r"\s*'(\w+)'\s*", args[2])
+            if not um or um.group(1) not in units:
                 raise ValueError(
-                    "KQL: parse_command_line(command, parser_type)")
-            pm = re.fullmatch(r"\s*'(\w+)'\s*", args[1] or "")
-            if not pm or pm.group(1).lower() not in ("windows",
-                                                     "posix"):
-                raise ValueError(
-                    "KQL: parse_command_line parser_type must be the "
-                    "literal 'windows' or 'posix'")
-            return (f"parse_json(__kql_parse_cmdline("
-                    f"CAST({args[0]} AS STRING), "
-                    f"'{pm.group(1).lower()}'))")
-        if fname == "countof":
-            # countof(text, search[, kind]): kind='regex' counts
-            # pattern matches; default counts non-overlapping plain
-            # occurrences (documented deviation: Kusto's plain kind
-            # counts overlapping matches)
-            if len(args) not in (2, 3):
-                raise ValueError("KQL: countof(text, search[, kind])")
-            s, sub = args[0], args[1]
-            kind = (args[2].strip().strip("'").lower()
-                    if len(args) == 3 else "normal")
-            if kind == "regex":
-                return f"size(regexp_extract_all({s}, {sub}, 0))"
-            if kind != "normal":
-                raise ValueError(
-                    f"KQL: countof kind {kind!r} (normal/regex)")
-            return (f"((length({s}) - length(replace({s}, {sub}, ''))) "
-                    f"div length({sub}))")
-        if fname in ("hash", "hash_xxhash64"):
-            # Kusto hash()/hash_xxhash64() is xxhash64; the optional
-            # second argument is a MODULUS (hash(v, m) in [0, m)), not
-            # a second hashed value. Deviation note (stable within
-            # this engine): Spark's xxhash64 hashes the value's
-            # internal binary form with seed 42, not Kusto's exact
-            # byte stream, so absolute hash values differ across
-            # engines — all dedup/salting uses here only need a
-            # stable uniform 64-bit hash.
-            if len(args) not in (1, 2):
-                raise ValueError(f"KQL: {fname}(value [, mod])")
-            h = f"xxhash64({args[0]})"
-            if len(args) == 2:
-                return f"pmod({h}, CAST({args[1]} AS BIGINT))"
-            return h
-        if fname in ("hash_sha256", "hash_sha1", "hash_md5"):
-            # cryptographic digests of the value's string form (hex
-            # text out, like Kusto); the pseudonymization workhorses
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(value)")
-            s = f"CAST({args[0]} AS STRING)"
-            if fname == "hash_sha256":
-                return f"sha2({s}, 256)"
-            return f"{'sha1' if fname == 'hash_sha1' else 'md5'}({s})"
-        if fname in ("hash_combine", "hash_many"):
-            # combined 64-bit hash of all arguments (xxhash64 over the
-            # tuple — Kusto does not publish its mixer; documented
-            # deviation, stable within this engine)
-            if len(args) < 2:
-                raise ValueError(f"KQL: {fname}(v1, v2, ...)")
-            return f"xxhash64({', '.join(args)})"
-        if fname == "strrep":
-            # strrep(text, n [, delimiter]) — the 3-arg form joins the
-            # repeats with the delimiter (r13 probe sweep)
-            if len(args) not in (2, 3):
-                raise ValueError("KQL: strrep(text, n[, delimiter])")
-            if len(args) == 3:
-                return (f"array_join(array_repeat({args[0]}, "
-                        f"CAST({args[1]} AS INT)), {args[2]})")
-            return f"repeat({args[0]}, {args[1]})"
-        if fname in ("getyear", "getmonth", "dayofmonth", "hourofday",
-                     "monthofyear", "dayofyear", "week_of_year"):
-            fn = {"getyear": "year", "getmonth": "month",
-                  "dayofmonth": "day", "hourofday": "hour",
-                  "monthofyear": "month", "dayofyear": "dayofyear",
-                  # ISO 8601 weeks on both sides
-                  "week_of_year": "weekofyear"}[fname]
-            return f"{fn}({args[0]})"
-        if fname in ("endofday", "endofweek", "endofmonth", "endofyear",
-                     "endofquarter"):
-            # optional Kusto offset, like the startof* family
-            if len(args) not in (1, 2):
-                raise ValueError(f"KQL: {fname}(ts [, offset])")
-            n = (f"CAST({args[1]} AS INT)" if len(args) == 2
-                 else "0")
-            if fname == "endofweek":
-                # Sunday-based weeks (see startofweek): next week start - 1µs
-                return (f"(date_trunc('WEEK', {args[0]} + INTERVAL 8 DAY)"
-                        f" - INTERVAL 1 DAY "
-                        f"+ make_interval(0, 0, {n})"
-                        f" - INTERVAL 1 MICROSECOND)")
-            unit = {"endofday": "DAY", "endofmonth": "MONTH",
-                    "endofyear": "YEAR", "endofquarter": "QUARTER"}[fname]
-            step = {"endofday": f"make_interval(0, 0, 0, {n} + 1)",
-                    "endofmonth": f"make_interval(0, {n} + 1)",
-                    "endofyear": f"make_interval({n} + 1)",
-                    "endofquarter":
-                        f"make_interval(0, 3 * {n} + 3)"}[fname]
-            return (f"(date_trunc('{unit}', {args[0]}) + {step} "
-                    f"- INTERVAL 1 MICROSECOND)")
-        if fname == "dayofweek":
-            # Kusto returns a TIMESPAN (days since Sunday); timespans in
-            # this compiler are microseconds, so 'dayofweek(t) == 1d'
-            # compares correctly (Spark dayofweek: 1=Sunday)
-            return f"(CAST(dayofweek({args[0]}) - 1 AS BIGINT) * 86400000000)"
-        if fname == "pack_array":
-            # native typed array — the fast path every set-op/series
-            # consumer relies on. DOCUMENTED DEVIATION: Kusto's
-            # pack_array accepts MIXED element types (dynamic out);
-            # here mixed inputs fail analysis — write the dynamic
-            # literal (dynamic([1, "a", true])) for that case, which
-            # compiles to VARIANT directly.
-            return f"array({', '.join(args)})"
-        if fname == "array_length":
-            return f"CAST(size({self._dyn_arr_arg(args[0])}) AS BIGINT)"
-        if fname == "array_concat":
-            # lift each operand: concat() over VARIANTs silently does
-            # STRING concatenation ('[]' || '[]' -> '[][]') — caught by
-            # the r12 registry property test
-            return (f"concat("
-                    f"{', '.join(self._dyn_arr_arg(a) for a in args)})")
-        if fname == "array_slice":
-            # Kusto: 0-based inclusive [start, end]
-            if len(args) != 3:
-                raise ValueError("KQL: array_slice(arr, start, end)")
-            a, s, e = self._dyn_arr_arg(args[0]), args[1], args[2]
-            return f"slice({a}, ({s}) + 1, ({e}) - ({s}) + 1)"
-        if fname in ("array_sort_asc", "array_sort_desc"):
-            desc = fname.endswith("desc")
-            if len(args) == 1:
-                return (f"reverse(array_sort({args[0]}))" if desc
-                        else f"array_sort({args[0]})")
-            # Kusto parallel-array co-sort: sort the FIRST array and
-            # permute the others by the same order; returns a dynamic
-            # array-of-arrays. Arrays whose length differs from the
-            # first come back null (Kusto's contract). try_element_at
-            # everywhere (ANSI-safe); the empty first array
-            # short-circuits (sequence(1, 0) DESCENDS — the round-5
-            # gotcha).
-            a0 = args[0]
-            pairs = (f"zip_with({a0}, sequence(1, size({a0})), "
-                     f"(__as_v, __as_i) -> named_struct("
-                     f"'v', __as_v, 'i', __as_i))")
-            srt = f"array_sort({pairs})"
-            if desc:
-                srt = f"reverse({srt})"
-            order = f"transform({srt}, __as_p -> __as_p.i)"
-            outs = []
-            for a in args:
-                permuted = (f"transform({order}, __as_k -> "
-                            f"try_element_at({a}, __as_k))")
-                outs.append(
-                    f"IF(size({a}) = size({a0}), {permuted}, NULL)")
-            # arrays of DIFFERENT element types can't share a SQL
-            # array() — render each to JSON text and assemble the
-            # outer array textually (null -> the JSON literal)
-            cells = ", ".join(
-                f"coalesce(to_json(IF(size({a0}) = 0, "
-                f"IF(size({a}) = 0, {a}, NULL), {o})), 'null')"
-                for a, o in zip(args, outs))
-            return (f"parse_json(concat('[', "
-                    f"concat_ws(',', {cells}), ']'))")
-        if fname == "set_union":
-            out = args[0]
-            for a in args[1:]:
-                out = f"array_union({out}, {a})"
-            return out
-        if fname == "set_intersect":
-            out = args[0]
-            for a in args[1:]:
-                out = f"array_intersect({out}, {a})"
-            return out
-        if fname == "set_difference":
-            out = args[0]
-            for a in args[1:]:
-                out = f"array_except({out}, {a})"
-            return out
-        if fname == "strcat_delim":
-            if len(args) < 2:
-                raise ValueError("KQL: strcat_delim(delim, arg1, ...)")
-            return f"concat_ws({', '.join(args)})"
-        if fname == "anyif":
-            fname = "take_anyif"  # Kusto's legacy alias
-        if fname in ("sumif", "avgif", "minif", "maxif", "dcountif",
-                     "stdevif", "varianceif", "take_anyif"):
-            if len(args) != 2:
-                raise ValueError(f"KQL: {fname}(expr, predicate)")
-            agg = {"sumif": "sum", "avgif": "avg", "minif": "min",
-                   "maxif": "max", "stdevif": "stddev_samp",
-                   "varianceif": "var_samp", "take_anyif": "any_value",
-                   "dcountif": "count(DISTINCT"}[fname]
-            if fname == "dcountif":
-                return (f"count(DISTINCT CASE WHEN {args[1]} "
-                        f"THEN {args[0]} END)")
-            if fname == "take_anyif":
-                # ignoreNulls=true: the CASE's non-matching nulls must
-                # not be pickable
-                return (f"any_value(CASE WHEN {args[1]} "
-                        f"THEN {args[0]} END, true)")
-            return f"{agg}(CASE WHEN {args[1]} THEN {args[0]} END)"
-        if fname in ("covariance", "covariancep", "covarianceif",
-                     "covariancepif"):
-            # sample/population covariance (+ the predicate-gated
-            # forms: the CASE pair nulls BOTH sides for non-matching
-            # rows, so covar_* skips them — Kusto's *if contract)
-            base = ("covar_samp" if "p" not in fname.replace(
-                "covariance", "") else "covar_pop")
-            if fname in ("covariance", "covariancep"):
-                if len(args) != 2:
-                    raise ValueError(f"KQL: {fname}(x, y)")
-                return f"{base}({args[0]}, {args[1]})"
-            if len(args) != 3:
-                raise ValueError(f"KQL: {fname}(x, y, predicate)")
-            return (f"{base}(CASE WHEN {args[2]} THEN {args[0]} END, "
-                    f"CASE WHEN {args[2]} THEN {args[1]} END)")
-        if fname == "around":
-            # around(value, center, delta): |value - center| <= delta
-            if len(args) != 3:
-                raise ValueError("KQL: around(value, center, delta)")
-            return (f"(abs(CAST({args[0]} AS DOUBLE) "
-                    f"- CAST({args[1]} AS DOUBLE)) "
-                    f"<= CAST({args[2]} AS DOUBLE))")
-        if fname in ("binary_all_and", "binary_all_or",
-                     "binary_all_xor"):
-            # bitwise-reduction aggregates -> Spark bit_and/or/xor
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(expr) takes 1 arg")
-            fn = {"binary_all_and": "bit_and", "binary_all_or": "bit_or",
-                  "binary_all_xor": "bit_xor"}[fname]
-            return f"{fn}({args[0]})"
-        if fname in ("make_list_if", "make_set_if"):
-            # conditional collection (collect_* skips the CASE's
-            # nulls); optional third arg = maxSize cap, like
-            # make_list/make_set
-            if len(args) not in (2, 3):
-                raise ValueError(
-                    f"KQL: {fname}(expr, predicate [, maxSize])")
-            agg = ("collect_list" if fname == "make_list_if"
-                   else "collect_set")
-            out = f"{agg}(CASE WHEN {args[1]} THEN {args[0]} END)"
-            if len(args) == 3:
-                return f"slice({out}, 1, CAST({args[2]} AS INT))"
-            return out
-        if fname == "hll_if":
-            # conditional sketch build (the CASE's nulls never enter
-            # the sketch) — pairs with dcount_intersect fixtures
-            if len(args) != 2:
-                raise ValueError("KQL: hll_if(expr, predicate)")
-            return (f"hll_sketch_agg(CASE WHEN {args[1]} "
-                    f"THEN {args[0]} END)")
-        if fname == "take_any":
-            return f"any_value({args[0]})"
-        if fname == "buildschema":
-            # merged schema of a dynamic column across the group.
-            # DOCUMENTED DEVIATION: Kusto renders a nested bag like
-            # {"x":"long"}; this engine returns the merged VARIANT
-            # schema in Spark DDL text (schema_of_variant_agg) — the
-            # same information, deterministic, already the form
-            # evaluate bag_unpack consumes internally
-            if len(args) != 1:
-                raise ValueError("KQL: buildschema(dynamicColumn)")
-            return f"schema_of_variant_agg({args[0]})"
-        if fname == "bag_zip":
-            # bag_zip(keys, values) -> bag keyed by position; extra
-            # keys null-pad (try_element_at), extra values drop,
-            # null/empty keys drop (map keys cannot be null)
-            if len(args) != 2:
-                raise ValueError("KQL: bag_zip(keys, values)")
-            # PERMISSIVE mode: a non-array operand (e.g. a scalar
-            # dynamic) nulls out instead of erroring under the
-            # session's FAILFAST default — Kusto's mismatch contract
-            ks = (f"from_json(to_json({args[0]}), 'array<string>', "
-                  f"map('mode', 'PERMISSIVE'))")
-            vs = (f"from_json(to_json({args[1]}), 'array<variant>', "
-                  f"map('mode', 'PERMISSIVE'))")
-            ent = (f"filter(transform({ks}, (__bz_k, __bz_i) -> "
-                   f"struct(__bz_k AS key, try_element_at({vs}, "
-                   f"__bz_i + 1) AS value, __bz_i AS idx)), __bz_e -> "
-                   f"__bz_e.key IS NOT NULL)")
-            # duplicate keys: LAST wins (Kusto bag semantics) — keep
-            # only each key's max-index entry, or Spark's EXCEPTION
-            # map-key dedup policy aborts the job at runtime on valid
-            # Kusto input (r11 advice). Bags are tiny; the quadratic
-            # per-row filter stays inside one codegen expression.
-            ded = (f"filter({ent}, __bz_d -> __bz_d.idx = "
-                   f"array_max(transform(filter({ent}, __bz_s -> "
-                   f"__bz_s.key = __bz_d.key), __bz_m -> __bz_m.idx)))")
-            fin = (f"transform({ded}, __bz_f -> struct("
-                   f"__bz_f.key AS key, __bz_f.value AS value))")
-            return (f"(CASE WHEN {ks} IS NULL OR {vs} IS NULL "
-                    f"THEN NULL ELSE "
-                    f"parse_json(to_json(map_from_entries({fin}), "
-                    f"map('ignoreNullFields', 'false'))) END)")
-        if fname == "stdev":
-            return f"stddev_samp({args[0]})"
-        if fname == "stdevp":
-            return f"stddev_pop({args[0]})"
-        if fname == "variance":
-            return f"var_samp({args[0]})"
-        if fname == "variancep":
-            return f"var_pop({args[0]})"
-        mapped = _FN_RENAME.get(fname, fname)
-        if fname in ("floor", "ceiling") and len(args) == 1 \
-                and _kt(args[0]) == "real":
-            # Spark floors a DOUBLE to BIGINT; Kusto's result is real
-            return f"CAST({mapped}({args[0]}) AS DOUBLE)"
-        return f"{mapped}({', '.join(args)})"
+                    f"KQL: format_bytes units must be a literal "
+                    f"in {units}")
+            k2 = units.index(um.group(1))
+            val = f"round({sz} / {float(1024 ** k2)}, {p})"
+            num = (f"CAST(CAST({val} AS DECIMAL(38, {p})) "
+                   f"AS STRING)" if p > 0
+                   else f"CAST(CAST({val} AS BIGINT) AS STRING)")
+            return f"concat({num}, ' ', '{units[k2]}')"
+        branches = []
+        for k2 in range(len(units) - 1, 0, -1):
+            div = float(1024 ** k2)
+            val = f"round({sz} / {div}, {p})"
+            num = (f"CAST(CAST({val} AS DECIMAL(38, {p})) "
+                   f"AS STRING)" if p > 0
+                   else f"CAST(CAST({val} AS BIGINT) AS STRING)")
+            branches.append(f"WHEN {sz} >= {div} THEN "
+                            f"concat({num}, ' {units[k2]}')")
+        val0 = f"round({sz}, {p})"
+        num0 = (f"CAST(CAST({val0} AS DECIMAL(38, {p})) AS STRING)"
+                if p > 0
+                else f"CAST(CAST({val0} AS BIGINT) AS STRING)")
+        return (f"(CASE {' '.join(branches)} "
+                f"ELSE concat({num0}, ' Bytes') END)")
+
+    @_fn("indexof", 2, 5, "long",
+         "indexof(text, lookup [, start [, length [, occurrence]]])")
+    def _fn_indexof(self, fname: str, args: list[str]) -> str:
+        # 0-based; -1 when absent (instr/locate are 1-based, 0
+        # when absent). Full Kusto signature: indexof(text,
+        # lookup [, start [, length [, occurrence]]]) — start
+        # offsets the search, length bounds the searched window
+        # (-1 = to the end), occurrence picks the n-th match.
+        if len(args) == 2:
+            return f"(instr({args[0]}, {args[1]}) - 1)"
+        text, look = args[0], args[1]
+        # negative start: offset from the END by abs(start)
+        # (Kusto; r11 advice — locate() with a non-positive
+        # position returns 0, which read as a silent miss)
+        start0 = f"CAST({args[2]} AS INT)"
+        start = (f"(CASE WHEN {start0} < 0 THEN "
+                 f"greatest(0, CAST(length({text}) AS INT) "
+                 f"+ {start0}) ELSE {start0} END)")
+        if len(args) >= 4:
+            ln = f"CAST({args[3]} AS INT)"
+            window = (f"(CASE WHEN {ln} = -1 THEN {text} ELSE "
+                      f"substr({text}, 1, {start} + {ln}) END)")
+        else:
+            window = text
+        occ = (f"CAST({args[4]} AS INT)" if len(args) == 5
+               else "1")
+        # locate(substr, str, pos) handles start; the n-th
+        # occurrence walks via a bounded fold over 1..occ
+        hit = (f"aggregate(sequence(1, {occ}), "
+               f"CAST({start} + 1 AS INT), (__io_p, __io_i) -> "
+               f"CAST(CASE WHEN __io_p <= 0 "
+               f"OR locate({look}, {window}, __io_p) = 0 THEN 0 "
+               f"ELSE locate({look}, {window}, __io_p) "
+               f"+ (CASE WHEN __io_i < {occ} THEN "
+               f"length({look}) ELSE 0 END) END AS INT))")
+        return f"({hit} - 1)"
+
+    @_fn("indexof_regex", 2, 2, "long", "indexof_regex(text, regex)")
+    def _fn_indexof_regex(self, fname: str, args: list[str]) -> str:
+        # 0-based position of the first regex match; -1 on miss
+        # (regexp_instr is 1-based, 0 on miss)
+        return f"(regexp_instr({args[0]}, {args[1]}) - 1)"
+
+    @_fn("reverse", 1, 1, slice(0, 1), "reverse(value)")
+    def _fn_reverse(self, fname: str, args: list[str]) -> str:
+        # Kusto reverse(): string reversal (typed arrays reverse
+        # too — Spark's reverse covers both; dynamics need
+        # a typed cast first)
+        return f"reverse({_str_if_variant(args[0])})"
+
+    @_fn("parse_path", 1, 1, "dynamic", "parse_path(path)")
+    def _fn_parse_path(self, fname: str, args: list[str]) -> str:
+        # file-path bag: Scheme / RootPath / DirectoryPath /
+        # DirectoryName / Filename / Extension /
+        # AlternateDataStreamName ('file.txt:stream'), both
+        # separators, pure regex — dynamic bag out
+        p = args[0]
+        scheme = (f"regexp_extract({p}, "
+                  f"'^([A-Za-z][A-Za-z0-9+.\\\\-]*)://', 1)")
+        body = (f"regexp_replace({p}, "
+                f"'^[A-Za-z][A-Za-z0-9+.\\\\-]*://', '')")
+        root = (f"regexp_extract({body}, "
+                f"'^([A-Za-z]:|[/\\\\\\\\])', 1)")
+        last = f"regexp_extract({body}, '[^/\\\\\\\\]*$', 0)"
+        fname_ = f"split_part({last}, ':', 1)"
+        ads = f"nullif(split_part({last}, ':', 2), '')"
+        dirp = (f"(CASE WHEN {body} RLIKE '[/\\\\\\\\]' THEN "
+                f"regexp_replace({body}, "
+                f"'[/\\\\\\\\][^/\\\\\\\\]*$', '') ELSE '' END)")
+        dirn = f"regexp_extract({dirp}, '[^/\\\\\\\\]*$', 0)"
+        ext = f"regexp_extract({fname_}, '\\\\.([^.]*)$', 1)"
+        obj = (f"named_struct("
+               f"'Scheme', {scheme}, "
+               f"'RootPath', {root}, "
+               f"'DirectoryPath', {dirp}, "
+               f"'DirectoryName', {dirn}, "
+               f"'Filename', {fname_}, "
+               f"'Extension', {ext}, "
+               f"'AlternateDataStreamName', "
+               f"coalesce({ads}, ''))")
+        return f"parse_json(to_json({obj}))"
+
+    @_fn("parse_xml", 1, 1, "dynamic", "parse_xml(xml_text)")
+    def _fn_parse_xml(self, fname: str, args: list[str]) -> str:
+        # XML -> dynamic via the stdlib ElementTree kernel
+        # (__kql_parse_xml, _register_codec_udfs): Kusto's
+        # convention — '@attr' keys, '#text' for mixed content,
+        # repeated sibling tags -> array, invalid XML -> null
+        return (f"parse_json(__kql_parse_xml("
+                f"CAST({args[0]} AS STRING)))")
+
+    @_fn("parse_command_line", 2, 2, None,
+         "parse_command_line(command, parser_type)")
+    def _fn_parse_command_line(self, fname: str, args: list[str]) -> str:
+        # command text -> dynamic array of arguments via the
+        # __kql_parse_cmdline kernel (_register_codec_udfs).
+        # Kusto documents the 'windows' parser (CommandLineToArgvW
+        # rules); 'posix' (stdlib shlex) is an extension. The
+        # parser type must be a string literal, like Kusto.
+        pm = re.fullmatch(r"\s*'(\w+)'\s*", args[1] or "")
+        if not pm or pm.group(1).lower() not in ("windows",
+                                                 "posix"):
+            raise ValueError(
+                "KQL: parse_command_line parser_type must be the "
+                "literal 'windows' or 'posix'")
+        return (f"parse_json(__kql_parse_cmdline("
+                f"CAST({args[0]} AS STRING), "
+                f"'{pm.group(1).lower()}'))")
+
+    @_fn("countof", 2, 3, "long", "countof(text, search[, kind])")
+    def _fn_countof(self, fname: str, args: list[str]) -> str:
+        # countof(text, search[, kind]): kind='regex' counts
+        # pattern matches; default counts non-overlapping plain
+        # occurrences (documented deviation: Kusto's plain kind
+        # counts overlapping matches)
+        s, sub = args[0], args[1]
+        kind = (args[2].strip().strip("'").lower()
+                if len(args) == 3 else "normal")
+        if kind == "regex":
+            return f"size(regexp_extract_all({s}, {sub}, 0))"
+        if kind != "normal":
+            raise ValueError(
+                f"KQL: countof kind {kind!r} (normal/regex)")
+        return (f"((length({s}) - length(replace({s}, {sub}, ''))) "
+                f"div length({sub}))")
+
+    @_fn("hash hash_xxhash64", 1, 2, "long", "{name}(value [, mod])")
+    def _fn_hash(self, fname: str, args: list[str]) -> str:
+        # Kusto hash()/hash_xxhash64() is xxhash64; the optional
+        # second argument is a MODULUS (hash(v, m) in [0, m)), not
+        # a second hashed value. Deviation note (stable within
+        # this engine): Spark's xxhash64 hashes the value's
+        # internal binary form with seed 42, not Kusto's exact
+        # byte stream, so absolute hash values differ across
+        # engines — all dedup/salting uses here only need a
+        # stable uniform 64-bit hash.
+        h = f"xxhash64({args[0]})"
+        if len(args) == 2:
+            return f"pmod({h}, CAST({args[1]} AS BIGINT))"
+        return h
+
+    @_fn("hash_sha256 hash_sha1 hash_md5", 1, 1, "string", "{name}(value)")
+    def _fn_hash_sha256(self, fname: str, args: list[str]) -> str:
+        # cryptographic digests of the value's string form (hex
+        # text out, like Kusto); the pseudonymization workhorses
+        s = f"CAST({args[0]} AS STRING)"
+        if fname == "hash_sha256":
+            return f"sha2({s}, 256)"
+        return f"{'sha1' if fname == 'hash_sha1' else 'md5'}({s})"
+
+    @_fn("strrep", 2, 3, "string", "strrep(text, n[, delimiter])")
+    def _fn_strrep(self, fname: str, args: list[str]) -> str:
+        # strrep(text, n [, delimiter]) — the 3-arg form joins the
+        # repeats with the delimiter (r13 probe sweep)
+        if len(args) == 3:
+            return (f"array_join(array_repeat({args[0]}, "
+                    f"CAST({args[1]} AS INT)), {args[2]})")
+        return f"repeat({args[0]}, {args[1]})"
+
+    @_fn("getyear getmonth dayofmonth hourofday", 1, 1, "long", "{name}(date)")
+    @_fn("monthofyear dayofyear week_of_year", 1, 1, None, "{name}(date)")
+    def _fn_getyear(self, fname: str, args: list[str]) -> str:
+        fn = {"getyear": "year", "getmonth": "month",
+              "dayofmonth": "day", "hourofday": "hour",
+              "monthofyear": "month", "dayofyear": "dayofyear",
+              # ISO 8601 weeks on both sides
+              "week_of_year": "weekofyear"}[fname]
+        return f"{fn}({args[0]})"
+
+    @_fn("endofday endofweek endofmonth endofyear endofquarter",
+         1, 2, "datetime",
+         "{name}(ts [, offset])")
+    def _fn_endofday(self, fname: str, args: list[str]) -> str:
+        # optional Kusto offset, like the startof* family
+        n = (f"CAST({args[1]} AS INT)" if len(args) == 2
+             else "0")
+        if fname == "endofweek":
+            # Sunday-based weeks (see startofweek): next week start - 1µs
+            return (f"(date_trunc('WEEK', {args[0]} + INTERVAL 8 DAY)"
+                    f" - INTERVAL 1 DAY "
+                    f"+ make_interval(0, 0, {n})"
+                    f" - INTERVAL 1 MICROSECOND)")
+        unit = {"endofday": "DAY", "endofmonth": "MONTH",
+                "endofyear": "YEAR", "endofquarter": "QUARTER"}[fname]
+        step = {"endofday": f"make_interval(0, 0, 0, {n} + 1)",
+                "endofmonth": f"make_interval(0, {n} + 1)",
+                "endofyear": f"make_interval({n} + 1)",
+                "endofquarter":
+                    f"make_interval(0, 3 * {n} + 3)"}[fname]
+        return (f"(date_trunc('{unit}', {args[0]}) + {step} "
+                f"- INTERVAL 1 MICROSECOND)")
+
+    @_fn("dayofweek", 1, 1, "timespan", "dayofweek(date)")
+    def _fn_dayofweek(self, fname: str, args: list[str]) -> str:
+        # Kusto returns a TIMESPAN (days since Sunday); timespans in
+        # this compiler are microseconds, so 'dayofweek(t) == 1d'
+        # compares correctly (Spark dayofweek: 1=Sunday)
+        return f"(CAST(dayofweek({args[0]}) - 1 AS BIGINT) * 86400000000)"
+
+    @_fn("array_length", 1, 1, "long", "array_length(array)")
+    def _fn_array_length(self, fname: str, args: list[str]) -> str:
+        return f"CAST(size({self._dyn_arr_arg(args[0])}) AS BIGINT)"
+
+    @_fn("array_concat", 1, None, None, "array_concat(array1[, array2, ...])")
+    def _fn_array_concat(self, fname: str, args: list[str]) -> str:
+        # lift each operand: concat() over VARIANTs silently does
+        # STRING concatenation ('[]' || '[]' -> '[][]') — caught by
+        # the r12 registry property test
+        return (f"concat("
+                f"{', '.join(self._dyn_arr_arg(a) for a in args)})")
+
+    @_fn("array_slice", 3, 3, None, "array_slice(arr, start, end)")
+    def _fn_array_slice(self, fname: str, args: list[str]) -> str:
+        # Kusto: 0-based inclusive [start, end]
+        a, s, e = self._dyn_arr_arg(args[0]), args[1], args[2]
+        return f"slice({a}, ({s}) + 1, ({e}) - ({s}) + 1)"
+
+    @_fn("array_sort_asc array_sort_desc", 1, None, None,
+         "{name}(array1[, array2, ...])")
+    def _fn_array_sort_asc(self, fname: str, args: list[str]) -> str:
+        desc = fname.endswith("desc")
+        if len(args) == 1:
+            return (f"reverse(array_sort({args[0]}))" if desc
+                    else f"array_sort({args[0]})")
+        # Kusto parallel-array co-sort: sort the FIRST array and
+        # permute the others by the same order; returns a dynamic
+        # array-of-arrays. Arrays whose length differs from the
+        # first come back null (Kusto's contract). try_element_at
+        # everywhere (ANSI-safe); the empty first array
+        # short-circuits (sequence(1, 0) DESCENDS — the round-5
+        # gotcha).
+        a0 = args[0]
+        pairs = (f"zip_with({a0}, sequence(1, size({a0})), "
+                 f"(__as_v, __as_i) -> named_struct("
+                 f"'v', __as_v, 'i', __as_i))")
+        srt = f"array_sort({pairs})"
+        if desc:
+            srt = f"reverse({srt})"
+        order = f"transform({srt}, __as_p -> __as_p.i)"
+        outs = []
+        for a in args:
+            permuted = (f"transform({order}, __as_k -> "
+                        f"try_element_at({a}, __as_k))")
+            outs.append(
+                f"IF(size({a}) = size({a0}), {permuted}, NULL)")
+        # arrays of DIFFERENT element types can't share a SQL
+        # array() — render each to JSON text and assemble the
+        # outer array textually (null -> the JSON literal)
+        cells = ", ".join(
+            f"coalesce(to_json(IF(size({a0}) = 0, "
+            f"IF(size({a}) = 0, {a}, NULL), {o})), 'null')"
+            for a, o in zip(args, outs))
+        return (f"parse_json(concat('[', "
+                f"concat_ws(',', {cells}), ']'))")
+
+    @_fn("set_union set_intersect set_difference", 2, None, None,
+         "{name}(set1, set2[, set3, ...])")
+    def _fn_set_union(self, fname: str, args: list[str]) -> str:
+        fn = {"set_union": "array_union", "set_intersect":
+              "array_intersect", "set_difference": "array_except"}[fname]
+        out = args[0]
+        for a in args[1:]:
+            out = f"{fn}({out}, {a})"
+        return out
+
+    @_fn("sumif minif maxif", 2, 2, slice(0, 1), "{name}(expr, predicate)")
+    @_fn("dcountif", 2, 2, "long", "dcountif(expr, predicate)")
+    @_fn("count_distinctif", 2, 2, "long", "count_distinctif(col, predicate)")
+    @_fn("stdevif varianceif", 2, 2, None, "{name}(expr, predicate)")
+    # anyif: Kusto's legacy alias of take_anyif
+    @_fn("take_anyif anyif", 2, 2, None, "{name}(expr, predicate)")
+    def _fn_sumif(self, fname: str, args: list[str]) -> str:
+        x = f"CASE WHEN {args[1]} THEN {args[0]} END"
+        if fname in ("dcountif", "count_distinctif"):
+            return f"count(DISTINCT {x})"
+        if fname in ("take_anyif", "anyif"):
+            # ignoreNulls=true: the CASE's non-matching nulls must
+            # not be pickable
+            return f"any_value({x}, true)"
+        agg = {"sumif": "sum", "minif": "min", "maxif": "max",
+               "stdevif": "stddev_samp", "varianceif": "var_samp"}[fname]
+        return f"{agg}({x})"
+
+    @_fn("avg", 1, 1, _avg_ktype, "avg(expr)")
+    @_fn("avgif", 2, 2, _avg_ktype, "avgif(expr, predicate)")
+    def _fn_avg(self, fname: str, args: list[str]) -> str:
+        x = (args[0] if fname == "avg"
+             else f"CASE WHEN {args[1]} THEN {args[0]} END")
+        if _kt(args[0]) != "timespan":
+            return f"avg({x})"
+        # Kusto averages timespans to a timespan: back onto the µs
+        # carrier
+        return f"CAST(avg({x}) AS BIGINT)"
+
+    @_fn("covariance covariancep", 2, 2, None, "{name}(x, y)")
+    @_fn("covarianceif covariancepif", 3, 3, None, "{name}(x, y, predicate)")
+    def _fn_covariance(self, fname: str, args: list[str]) -> str:
+        # sample/population covariance (+ the predicate-gated
+        # forms: the CASE pair nulls BOTH sides for non-matching
+        # rows, so covar_* skips them — Kusto's *if contract)
+        base = ("covar_samp" if "p" not in fname.replace(
+            "covariance", "") else "covar_pop")
+        if fname in ("covariance", "covariancep"):
+            return f"{base}({args[0]}, {args[1]})"
+        return (f"{base}(CASE WHEN {args[2]} THEN {args[0]} END, "
+                f"CASE WHEN {args[2]} THEN {args[1]} END)")
+
+    @_fn("around", 3, 3, None, "around(value, center, delta)")
+    def _fn_around(self, fname: str, args: list[str]) -> str:
+        # around(value, center, delta): |value - center| <= delta
+        return (f"(abs(CAST({args[0]} AS DOUBLE) "
+                f"- CAST({args[1]} AS DOUBLE)) "
+                f"<= CAST({args[2]} AS DOUBLE))")
+
+    @_fn("binary_all_and binary_all_or binary_all_xor", 1, 1, None,
+         "{name}(expr) takes 1 arg")
+    def _fn_binary_all_and(self, fname: str, args: list[str]) -> str:
+        # bitwise-reduction aggregates -> Spark bit_and/or/xor
+        fn = {"binary_all_and": "bit_and", "binary_all_or": "bit_or",
+              "binary_all_xor": "bit_xor"}[fname]
+        return f"{fn}({args[0]})"
+
+    @_fn("make_list_if make_set_if", 2, 3, None,
+         "{name}(expr, predicate [, maxSize])")
+    def _fn_make_list_if(self, fname: str, args: list[str]) -> str:
+        # conditional collection (collect_* skips the CASE's
+        # nulls); optional third arg = maxSize cap, like
+        # make_list/make_set
+        agg = ("collect_list" if fname == "make_list_if"
+               else "collect_set")
+        out = f"{agg}(CASE WHEN {args[1]} THEN {args[0]} END)"
+        if len(args) == 3:
+            return f"slice({out}, 1, CAST({args[2]} AS INT))"
+        return out
+
+    @_fn("hll_if", 2, 2, None, "hll_if(expr, predicate)")
+    def _fn_hll_if(self, fname: str, args: list[str]) -> str:
+        # conditional sketch build (the CASE's nulls never enter
+        # the sketch) — pairs with dcount_intersect fixtures
+        return (f"hll_sketch_agg(CASE WHEN {args[1]} "
+                f"THEN {args[0]} END)")
+
+    @_fn("bag_zip", 2, 2, None, "bag_zip(keys, values)")
+    def _fn_bag_zip(self, fname: str, args: list[str]) -> str:
+        # bag_zip(keys, values) -> bag keyed by position; extra
+        # keys null-pad (try_element_at), extra values drop,
+        # null/empty keys drop (map keys cannot be null)
+        # PERMISSIVE mode: a non-array operand (e.g. a scalar
+        # dynamic) nulls out instead of erroring under the
+        # session's FAILFAST default — Kusto's mismatch contract
+        ks = (f"from_json(to_json({args[0]}), 'array<string>', "
+              f"map('mode', 'PERMISSIVE'))")
+        vs = (f"from_json(to_json({args[1]}), 'array<variant>', "
+              f"map('mode', 'PERMISSIVE'))")
+        ent = (f"filter(transform({ks}, (__bz_k, __bz_i) -> "
+               f"struct(__bz_k AS key, try_element_at({vs}, "
+               f"__bz_i + 1) AS value, __bz_i AS idx)), __bz_e -> "
+               f"__bz_e.key IS NOT NULL)")
+        # duplicate keys: LAST wins (Kusto bag semantics) — keep
+        # only each key's max-index entry, or Spark's EXCEPTION
+        # map-key dedup policy aborts the job at runtime on valid
+        # Kusto input (r11 advice). Bags are tiny; the quadratic
+        # per-row filter stays inside one codegen expression.
+        ded = (f"filter({ent}, __bz_d -> __bz_d.idx = "
+               f"array_max(transform(filter({ent}, __bz_s -> "
+               f"__bz_s.key = __bz_d.key), __bz_m -> __bz_m.idx)))")
+        fin = (f"transform({ded}, __bz_f -> struct("
+               f"__bz_f.key AS key, __bz_f.value AS value))")
+        return (f"(CASE WHEN {ks} IS NULL OR {vs} IS NULL "
+                f"THEN NULL ELSE "
+                f"parse_json(to_json(map_from_entries({fin}), "
+                f"map('ignoreNullFields', 'false'))) END)")
 
     @staticmethod
     def _bind1(fields: dict[str, str], var: str, body: str) -> str:
@@ -4406,14 +4357,23 @@ class _ExprParser:
             f"+ {o(4)})")
         return valid, num
 
+    @_fn("parse_ipv4", 1, 1, "long", "parse_ipv4(ip)")
+    @_fn("parse_ipv4_mask", 2, 2, "long", "parse_ipv4_mask(ip, prefix)")
+    @_fn("ipv4_is_private", 1, 1, "bool", "ipv4_is_private(ip)")
+    @_fn("ipv4_is_in_range", 2, 2, "bool", "ipv4_is_in_range(ip, range)")
+    @_fn("format_ipv4 format_ipv4_mask", 1, 2, "string",
+         "{name}(ip [, prefix])")
+    @_fn("ipv4_netmask_suffix", 1, 1, None, "ipv4_netmask_suffix(ip)")
+    @_fn("ipv4_compare", 2, 3, "long", "ipv4_compare(ip1, ip2[, prefix])")
+    @_fn("ipv4_is_match", 2, 3, "bool", "ipv4_is_match(ip1, ip2[, prefix])")
+    @_fn("ipv4_range_to_cidr_list", 2, 2, None,
+         "ipv4_range_to_cidr_list(start_ip, end_ip)")
     def _ipv4_fn(self, fname: str, args: list[str]) -> str:
         """IPv4 family: dotted-quad parse to a BIGINT, prefix masks, RFC
         1918 private ranges, CIDR containment — all pure JVM integer
         expressions (the standard log-curation predicates). Invalid
         addresses yield null (try_cast guards, ANSI-safe)."""
         if fname == "parse_ipv4":
-            if len(args) != 1:
-                raise ValueError("KQL: parse_ipv4(ip)")
             ip = args[0]
             valid, num = self._ipv4_num(ip)
             # an 'a.b.c.d/p' input is masked to its network address
@@ -4430,8 +4390,6 @@ class _ExprParser:
                 f"(CASE WHEN __ip4_s.v AND __ip4_s.x BETWEEN 0 AND 32 "
                 f"THEN {masked} ELSE NULL END)")
         if fname == "parse_ipv4_mask":
-            if len(args) != 2:
-                raise ValueError("KQL: parse_ipv4_mask(ip, prefix)")
             ip, pfx = args
             valid, num = self._ipv4_num(ip)
             masked = (f"(__ipm_s.n & ~(shiftleft(CAST(1 AS BIGINT), "
@@ -4448,9 +4406,6 @@ class _ExprParser:
             # range needs at most 64 blocks, so a bounded fold over
             # sequence(1, 64) is exact — pure JVM integer/bit codegen,
             # zero Python. Invalid addresses or start > end -> null.
-            if len(args) != 2:
-                raise ValueError(
-                    "KQL: ipv4_range_to_cidr_list(start_ip, end_ip)")
             sv, sn = self._ipv4_num(f"CAST({args[0]} AS STRING)")
             ev, en = self._ipv4_num(f"CAST({args[1]} AS STRING)")
             low = (f"(CASE WHEN __cr_s.c = 0 THEN 4294967296 "
@@ -4483,8 +4438,6 @@ class _ExprParser:
             # render a numeric OR dotted-quad input back to a dotted
             # quad, masked to `prefix` (2nd arg; else the input's own
             # /suffix; else 32). format_ipv4_mask appends '/prefix'.
-            if len(args) not in (1, 2):
-                raise ValueError(f"KQL: {fname}(ip [, prefix])")
             ip = args[0]
             s = f"CAST({ip} AS STRING)"
             valid, num = self._ipv4_num(s)
@@ -4512,8 +4465,6 @@ class _ExprParser:
         if fname == "ipv4_netmask_suffix":
             # the '/suffix' as a long; 32 when absent; null when the
             # address or suffix is invalid
-            if len(args) != 1:
-                raise ValueError("KQL: ipv4_netmask_suffix(ip)")
             ip = args[0]
             valid, _ = self._ipv4_num(ip)
             pfx = (f"(CASE WHEN nullif(split_part({ip}, '/', 2), '') "
@@ -4522,8 +4473,6 @@ class _ExprParser:
             return (f"(CASE WHEN {valid} AND {pfx} BETWEEN 0 AND 32 "
                     f"THEN CAST({pfx} AS BIGINT) ELSE NULL END)")
         if fname == "ipv4_is_private":
-            if len(args) != 1:
-                raise ValueError("KQL: ipv4_is_private(ip)")
             valid, num = self._ipv4_num(args[0])
             # 10.0.0.0/8, 172.16.0.0/12, 192.168.0.0/16
             return self._bind1(
@@ -4540,8 +4489,6 @@ class _ExprParser:
             # either side (or the prefix) is invalid — Kusto's
             # documented IP-prefix comparison. ipv4_is_match is the
             # equality form (compare == 0).
-            if len(args) not in (2, 3):
-                raise ValueError(f"KQL: {fname}(ip1, ip2[, prefix])")
             a, b = args[0], args[1]
             va, na = self._ipv4_num(a)
             vb, nb = self._ipv4_num(b)
@@ -4572,8 +4519,6 @@ class _ExprParser:
                 f"AND {pfx} BETWEEN 0 AND 32 "
                 f"THEN CAST({body} AS {typ}) ELSE NULL END)")
         # ipv4_is_in_range(ip, 'net/prefix' | exact ip)
-        if len(args) != 2:
-            raise ValueError("KQL: ipv4_is_in_range(ip, range)")
         ip, rng = args
         v1, n1 = self._ipv4_num(ip)
         v2, n2 = self._ipv4_num(rng)
@@ -4595,6 +4540,13 @@ class _ExprParser:
     _IPV4_SCAN_RE = (r"(?<![0-9A-Za-z.])((?:[0-9]{1,3}\\.){3}"
                      r"[0-9]{1,3})(?![0-9A-Za-z.])")
 
+    @_fn("has_ipv4", 1, 1, "bool", "has_ipv4(source)")
+    @_fn("has_any_ipv4", 2, None, "bool", "has_any_ipv4(source, ip...)")
+    @_fn("has_ipv4_prefix", 2, 2, "bool", "has_ipv4_prefix(source, prefix)")
+    @_fn("has_any_ipv4_prefix", 2, None, None,
+         "has_any_ipv4_prefix(source, prefix...)")
+    @_fn("ipv4_is_in_any_range", 2, None, "bool",
+         "ipv4_is_in_any_range(ip, range...)")
     def _ipv4_scan_fn(self, fname: str, args: list[str]) -> str:
         """Embedded-IP text scanning (has_ipv4 / has_any_ipv4 /
         has_ipv4_prefix) and the multi-range membership OR
@@ -4603,9 +4555,6 @@ class _ExprParser:
         one regexp pass, then validate octet ranges with array
         predicates — all whole-stage-codegen expressions, no UDF."""
         if fname == "ipv4_is_in_any_range":
-            if len(args) < 2:
-                raise ValueError(
-                    "KQL: ipv4_is_in_any_range(ip, range...)")
             terms = [self._ipv4_fn("ipv4_is_in_range", [args[0], r])
                      for r in args[1:]]
             return "(" + " OR ".join(terms) + ")"
@@ -4615,29 +4564,29 @@ class _ExprParser:
         quad_ok = ("forall(split(__is_c, '\\\\.'), __is_x -> "
                    "try_cast(__is_x AS INT) BETWEEN 0 AND 255)")
         if fname == "has_ipv4":
-            if len(args) != 1:
-                raise ValueError("KQL: has_ipv4(source)")
             return f"exists({cands}, __is_c -> {quad_ok})"
         if fname == "has_ipv4_prefix":
-            if len(args) != 2:
-                raise ValueError("KQL: has_ipv4_prefix(source, prefix)")
             return (f"exists({cands}, __is_c -> {quad_ok} "
                     f"AND startswith(__is_c, {args[1]}))")
         if fname == "has_any_ipv4_prefix":
-            if len(args) < 2:
-                raise ValueError(
-                    "KQL: has_any_ipv4_prefix(source, prefix...)")
             pref = " OR ".join(f"startswith(__is_c, {p})"
                                for p in args[1:])
             return (f"exists({cands}, __is_c -> {quad_ok} "
                     f"AND ({pref}))")
         # has_any_ipv4(source, ip1 [, ip2, ...])
-        if len(args) < 2:
-            raise ValueError("KQL: has_any_ipv4(source, ip...)")
         wanted = ", ".join(args[1:])
         return (f"exists({cands}, __is_c -> {quad_ok} "
                 f"AND __is_c IN ({wanted}))")
 
+    @_fn("parse_ipv6", 1, 1, "string", "parse_ipv6(ip)")
+    @_fn("parse_ipv6_mask", 2, 2, "string", "parse_ipv6_mask(ip, prefix)")
+    @_fn("ipv6_compare", 2, 3, None, "ipv6_compare(a, b [, prefix])")
+    @_fn("ipv6_is_match", 2, 3, "bool", "ipv6_is_match(a, b [, prefix])")
+    @_fn("ipv6_is_in_range", 2, 2, "bool", "ipv6_is_in_range(ip, range)")
+    @_fn("ipv6_is_in_any_range", 2, None, "bool",
+         "ipv6_is_in_any_range(ip, range...)")
+    @_fn("has_ipv6", 1, 1, "bool", "has_ipv6(source)")
+    @_fn("has_any_ipv6", 2, None, "bool", "has_any_ipv6(source, ip...)")
     def _ipv6_fn(self, fname: str, args: list[str]) -> str:
         """IPv6 family (parse_ipv6 / parse_ipv6_mask / ipv6_compare /
         ipv6_is_match / ipv6_is_in_range / ipv6_is_in_any_range).
@@ -4651,47 +4600,38 @@ class _ExprParser:
         argument prefix and both in-address suffixes, in_range masks
         with the range's prefix, invalid input -> null."""
         if fname == "parse_ipv6":
-            if len(args) != 1:
-                raise ValueError("KQL: parse_ipv6(ip)")
             return f"__kql_ipv6_parse({args[0]})"
         if fname == "parse_ipv6_mask":
-            if len(args) != 2:
-                raise ValueError("KQL: parse_ipv6_mask(ip, prefix)")
             return (f"__kql_ipv6_parse_mask({args[0]}, "
                     f"CAST({args[1]} AS BIGINT))")
         if fname in ("ipv6_compare", "ipv6_is_match"):
-            if len(args) not in (2, 3):
-                raise ValueError(f"KQL: {fname}(a, b [, prefix])")
             p = args[2] if len(args) == 3 else "128"
             cmp = (f"__kql_ipv6_cmp({args[0]}, {args[1]}, "
                    f"CAST({p} AS BIGINT))")
             return cmp if fname == "ipv6_compare" else f"({cmp} = 0)"
         if fname == "has_ipv6":
-            if len(args) != 1:
-                raise ValueError("KQL: has_ipv6(source)")
             return (f"__kql_ipv6_scan({args[0]}, "
                     f"CAST(NULL AS STRING))")
         if fname == "has_any_ipv6":
             # wanted list canonicalized at runtime so any accepted
             # notation of the same address matches (concat_ws drops
             # unparseable entries)
-            if len(args) < 2:
-                raise ValueError("KQL: has_any_ipv6(source, ip...)")
             wanted = ", ".join(f"__kql_ipv6_parse({a})"
                                for a in args[1:])
             return (f"__kql_ipv6_scan({args[0]}, "
                     f"concat_ws(',', {wanted}))")
         # ipv6_is_in_range(ip, range) / ipv6_is_in_any_range(ip, r...)
-        if len(args) < 2:
-            raise ValueError(f"KQL: {fname}(ip, range...)")
-        if fname == "ipv6_is_in_range" and len(args) != 2:
-            raise ValueError("KQL: ipv6_is_in_range(ip, range)")
         terms = [f"__kql_ipv6_in_range({args[0]}, {r})"
                  for r in args[1:]]
         return "(" + " OR ".join(terms) + ")"
 
     _GH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
+    @_fn("geo_point_to_geohash", 2, 3, None,
+         "geo_point_to_geohash(lon, lat [, accuracy])")
+    @_fn("geo_geohash_to_central_point geo_geohash_to_polygon "
+         "geo_geohash_neighbors", 1, 1, None,
+         "{name}(gh)")
     def _geohash_fn(self, fname: str, args: list[str]) -> str:
         """Geohash codec — the spatial BUCKETING primitive (a geohash
         prefix groupBy is how a 100 TB corpus co-locates nearby points
@@ -4713,9 +4653,6 @@ class _ExprParser:
         exact, so both engines produce bit-identical doubles). Returns
         a dynamic GeoJSON point like Kusto; invalid input -> null."""
         if fname == "geo_point_to_geohash":
-            if len(args) not in (2, 3):
-                raise ValueError(
-                    "KQL: geo_point_to_geohash(lon, lat [, accuracy])")
             lon, lat = args[0], args[1]
             try:
                 p = int(args[2]) if len(args) == 3 else 5
@@ -4761,8 +4698,6 @@ class _ExprParser:
         # shared geohash DECODE machinery: central_point / polygon /
         # neighbors all start from the de-interleaved quantized cell
         # coordinates (runtime-length higher-order folds)
-        if len(args) != 1:
-            raise ValueError(f"KQL: {fname}(gh)")
         gh = args[0]
         total = f"(length({gh}) * 5)"
         # bit t (0-based from the MSB): alphabet index of char t div 5,
@@ -4870,6 +4805,15 @@ class _ExprParser:
                f"* pow(sin(({lon2} - {lon1}) / 2), 2))")
         return f"(2 * {self._GEO_R} * asin(least(1.0, sqrt({hav}))))"
 
+    @_fn("geo_line_length", 1, 1, "real", "geo_line_length(lineString)")
+    @_fn("geo_polygon_area geo_polygon_perimeter", 1, 1, "real",
+         "{name}(polygon)")
+    @_fn("geo_polygon_centroid", 1, 1, None, "geo_polygon_centroid(polygon)")
+    @_fn("geo_distance_point_to_line", 3, 3, "real",
+         "geo_distance_point_to_line(lon, lat, line)")
+    @_fn("geo_line_centroid", 1, 1, None, "geo_line_centroid(lineString)")
+    @_fn("geo_distance_point_to_polygon", 3, 3, "real",
+         "geo_distance_point_to_polygon(lon, lat, polygon)")
     def _geo_measure_fn(self, fname: str, args: list[str]) -> str:
         """Runtime geo measures over GeoJSON dynamics — pure
         higher-order SQL folds, no UDF, so they ride whole-stage
@@ -4916,8 +4860,6 @@ class _ExprParser:
             return f"from_json({src}, '{schema}')"
 
         if fname == "geo_line_length":
-            if len(args) != 1:
-                raise ValueError("KQL: geo_line_length(lineString)")
             raw = parsed(args[0], "struct<type:string,coordinates:array<array<double>>>")
             ls = "__gll_b.g"
             pts = f"({ls}).coordinates"
@@ -4931,8 +4873,6 @@ class _ExprParser:
                         f"AND size({pts}) >= 2 THEN {total} "
                         f"ELSE NULL END)", "__gll_b")
         if fname in ("geo_polygon_area", "geo_polygon_centroid"):
-            if len(args) != 1:
-                raise ValueError(f"KQL: {fname}(polygon)")
             raw = parsed(args[0], "struct<type:string,coordinates:array<array<array<double>>>>")
             pg = "__gpa_b.g"
             rings = f"({pg}).coordinates"
@@ -5000,8 +4940,6 @@ class _ExprParser:
             # EVERY ring (outer + holes), matching Kusto's perimeter
             # convention; GeoJSON rings repeat the first point last so
             # the edge fold needs no closing term
-            if len(args) != 1:
-                raise ValueError("KQL: geo_polygon_perimeter(polygon)")
             raw = parsed(args[0], "struct<type:string,coordinates:array<array<array<double>>>>")
             pg = "__gpp_b.g"
             rings = f"({pg}).coordinates"
@@ -5026,8 +4964,6 @@ class _ExprParser:
             # planar-midpoint approximation consistent with the
             # family). A zero-length line degenerates to its first
             # point; wrong type / <2 points -> null.
-            if len(args) != 1:
-                raise ValueError("KQL: geo_line_centroid(lineString)")
             raw = parsed(args[0], "struct<type:string,coordinates:array<array<double>>>")
             ls = "__glc_b.g"
             pts = f"({ls}).coordinates"
@@ -5068,9 +5004,6 @@ class _ExprParser:
             # the local equirectangular frame (meters) — the same
             # planar approximations as geo_distance_point_to_line /
             # geo_point_in_polygon, documented there
-            if len(args) != 3:
-                raise ValueError("KQL: geo_distance_point_to_polygon("
-                                 "lon, lat, polygon)")
             raw_x = f"CAST({args[0]} AS DOUBLE)"
             raw_y = f"CAST({args[1]} AS DOUBLE)"
             raw = parsed(args[2], "struct<type:string,coordinates:array<array<array<double>>>>")
@@ -5131,9 +5064,6 @@ class _ExprParser:
         # geo_distance_point_to_line(lon, lat, line): min planar
         # point-to-segment distance in a local equirectangular frame
         # centered on the point (meters)
-        if len(args) != 3:
-            raise ValueError(
-                "KQL: geo_distance_point_to_line(lon, lat, line)")
         raw_x, raw_y = f"CAST({args[0]} AS DOUBLE)", \
             f"CAST({args[1]} AS DOUBLE)"
         raw = parsed(args[2], "struct<type:string,coordinates:array<array<double>>>")
@@ -5167,7 +5097,9 @@ class _ExprParser:
                     f"THEN {best} ELSE NULL END)", "__gdl_b",
                     extra={"x": raw_x, "y": raw_y})
 
-    def _geo_point_in_polygon(self, args: list[str]) -> str:
+    @_fn("geo_point_in_polygon", 3, 3, "bool",
+         "geo_point_in_polygon(lon, lat, polygon)")
+    def _geo_point_in_polygon(self, fname: str, args: list[str]) -> str:
         """geo_point_in_polygon(lon, lat, polygon) — the polygon must
         be a dynamic(...) GeoJSON LITERAL (type Polygon, outer ring +
         optional holes), which the dynamic lexer has already compiled
@@ -5199,9 +5131,6 @@ class _ExprParser:
         the compile-time unroll scales linearly in vertex count so
         densified rings stay codegen-friendly."""
         import json as _json
-        if len(args) != 3:
-            raise ValueError(
-                "KQL: geo_point_in_polygon(lon, lat, polygon)")
         m = re.fullmatch(r"parse_json\('(.*)'\)", args[2], re.DOTALL)
         if not m:
             raise ValueError(
@@ -5263,7 +5192,11 @@ class _ExprParser:
         the window plan agree on every input and the accumulation is
         an exact long sum — adding an unrelated sibling aggregate
         (which flips summarize between the two plans) can never change
-        the answer (r12 review)."""
+        the answer (r12 review). A timespan or datetime value rides
+        its µs carrier and is cast back, as in percentile()."""
+        kt = _kt(v)
+        if kt == "datetime":
+            v = f"unix_micros({v})"
         pairs = (f"array_sort(collect_list(IF({v} IS NULL "
                  f"OR {w} IS NULL OR CAST({w} AS DOUBLE) <= 0, "
                  f"NULL, named_struct("
@@ -5281,10 +5214,14 @@ class _ExprParser:
                 f"'c', CAST(0 AS BIGINT), "
                 f"'ans', CAST(NULL AS DOUBLE)), {step}, "
                 f"__pw_f -> __pw_f.ans)")
-        return (f"element_at(transform(array(named_struct("
-                f"'arr', {pairs}, "
-                f"'t', (({p}) / 100.0) * {tot})), "
-                f"__pw_s -> {fold}), 1)")
+        out = (f"element_at(transform(array(named_struct("
+               f"'arr', {pairs}, "
+               f"'t', (({p}) / 100.0) * {tot})), "
+               f"__pw_s -> {fold}), 1)")
+        if kt not in _TEMPORAL:
+            return out
+        out = f"CAST({out} AS BIGINT)"
+        return f"timestamp_micros({out})" if kt == "datetime" else out
 
     # Kusto's convert_* unit-conversion scalars (UnitsNet unit names).
     # Factors map each unit to the family's SI base; the conversion is
@@ -5351,9 +5288,11 @@ class _ExprParser:
         "DegreeFahrenheit": (5.0 / 9.0, 273.15 - 32.0 * 5.0 / 9.0),
     }
 
+    @_fn("convert_angle convert_length convert_mass convert_speed "
+         "convert_volume convert_energy convert_force convert_power "
+         "convert_pressure convert_temperature", 3, 3, None,
+         "{name}(value, from, to)")
     def _convert_unit(self, fname: str, args: list[str]) -> str:
-        if len(args) != 3:
-            raise ValueError(f"KQL: {fname}(value, from, to)")
         units = []
         for a in args[1:]:
             m = re.fullmatch(r"\s*'(\w+)'\s*", a or "")
@@ -5416,7 +5355,8 @@ class _ExprParser:
         "Linux": "Linux",
     }
 
-    def _parse_user_agent(self, args: list[str]) -> str:
+    @_fn("parse_user_agent", 2, 2, "dynamic", "parse_user_agent(ua, look_for)")
+    def _parse_user_agent(self, fname: str, args: list[str]) -> str:
         """parse_user_agent(ua, look_for) — look_for is a literal
         'browser' | 'os' | 'device' or a dynamic array of them; output
         is a dynamic bag shaped like Kusto's
@@ -5427,8 +5367,6 @@ class _ExprParser:
         approximation); missing version parts render ''. Device is the
         coarse class: iPhone/iPad by token, Android models from the
         '; <model> Build/' convention, else Other."""
-        if len(args) != 2:
-            raise ValueError("KQL: parse_user_agent(ua, look_for)")
         ua = f"CAST({args[0]} AS STRING)"
         spec = args[1].strip()
         wants: list[str] = []
@@ -5497,6 +5435,8 @@ class _ExprParser:
         return (f"parse_json(to_json(named_struct({', '.join(fields)}"
                 f")))")
 
+    @_fn("datetime_add", 3, 3, "datetime", "datetime_add(period, amount, dt)")
+    @_fn("datetime_diff", 3, 3, "long", "datetime_diff(period, dt1, dt2)")
     def _datetime_math(self, fname: str, args: list[str]) -> str:
         """datetime_add / datetime_diff with Kusto's period names.
         datetime_diff counts BOUNDARY crossings (calendar parts via
@@ -5510,8 +5450,6 @@ class _ExprParser:
                 f"{args[0]!r}")
         part = m.group(1).lower()
         if fname == "datetime_add":
-            if len(args) != 3:
-                raise ValueError("KQL: datetime_add(period, amount, dt)")
             a, dt = args[1], args[2]
             secs = ("CAST(({a}) / 1000.0 AS DECIMAL(18, 6))"
                     if part == "millisecond" else
@@ -5532,8 +5470,6 @@ class _ExprParser:
                 raise ValueError(
                     f"KQL: datetime_add period {part!r} not supported")
             return f"({dt} + {iv.format(a=a)})"
-        if len(args) != 3:
-            raise ValueError("KQL: datetime_diff(period, dt1, dt2)")
         d1, d2 = args[1], args[2]
         if part == "year":
             return f"(year({d1}) - year({d2}))"
@@ -6349,16 +6285,6 @@ def _guard_global_serial(calls: list[str], df: DataFrame | None) -> None:
         _warn_global_serialize(", ".join(dict.fromkeys(calls)), df)
 
 
-#: Kusto's serialized functions -> (usage, min args, max args). Each
-#: call compiles to ONE SQL window expression (_ExprParser._serial).
-_SERIAL_FNS = {
-    "prev": ("x [, offset [, default]]", 1, 3),
-    "next": ("x [, offset [, default]]", 1, 3),
-    "row_number": ("[StartingIndex [, Restart]]", 0, 2),
-    "row_cumsum": ("x [, Restart]", 1, 2),
-    "row_rank_dense": ("Term", 1, 1),
-    "row_rank_min": ("Term", 1, 1),
-}
 _ROWS_TO_HERE = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 
@@ -12693,9 +12619,20 @@ class KqlCompiler:
             name, sql = _named_expr(g, df, f"key{i}")
             keys.append((name, sql))
         bynames = [n for n, _ in keys]
+        # a timespan or datetime value rides its µs carrier and each
+        # percentile is cast back, as in the fold
+        kt = _kt(vw[0])
+        v = f"unix_micros({vw[0]})" if kt == "datetime" else vw[0]
+
+        def typed(c: Column, name: str) -> Column:
+            if kt == "timespan":
+                return c.cast("long").alias(name, metadata=_TIMESPAN_META)
+            if kt == "datetime":
+                return F.timestamp_micros(c.cast("long")).alias(name)
+            return c.alias(name)
         base = df.select(
             *[_named(s, n) for n, s in keys],
-            F.expr(vw[0]).cast("double").alias("__pwv"),
+            F.expr(v).cast("double").alias("__pwv"),
             F.expr(vw[1]).cast("double").alias("__pww"))
         # Single-pass spine (r14 optimization): rows failing the weight
         # filter previously required a SECOND full input scan (key
@@ -12724,9 +12661,9 @@ class KqlCompiler:
                   .withColumn("__pwt", F.sum("__pws").over(
                       _W.partitionBy(*bynames))))
         return cum.groupBy(*bynames).agg(*[
-            F.min(F.when(
+            typed(F.min(F.when(
                 F.col("__pwc") >= F.lit(p / 100.0) * F.col("__pwt"),
-                F.col("__pwv"))).alias(name)
+                F.col("__pwv"))), name)
             for name, p in specs])
 
     def _summarize(self, df: DataFrame, rest: str):
@@ -12819,10 +12756,9 @@ class KqlCompiler:
                 alias = f"__tup{i}"
                 aggs.append(F.expr(sql).alias(alias))
                 post.append((names, alias))
-                if array_form == "percentiles_array":
-                    # each split column takes the value's Kusto type
-                    tuple_kt[alias] = _kt(_parse_expr(
-                        _split_top_commas(call[2:-1])[0], df))
+                # each split column takes the value's Kusto type
+                tuple_kt[alias] = _kt(_parse_expr(
+                    _split_top_commas(call[2:-1])[0], df))
                 continue
             star = (len(g) >= 5 and g[0].kind == "ident"
                     and g[0].text.lower() in ("arg_max", "arg_min")

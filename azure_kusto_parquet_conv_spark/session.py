@@ -64,6 +64,11 @@ _RUNTIME_CONFS = {
     # untruncated PushedFilters/ReadSchema in plan strings, so plan
     # assertions (plans/explain.py) see the full metadata
     "spark.sql.maxMetadataStringLength": "10000",
+    # Name each whole-stage class without its codegen stage id. AQE
+    # numbers re-planned stages in the order they finish, so with the id
+    # in the class name the same pipeline compiles its classes again
+    # under new names (a cache miss in the codegen cache).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

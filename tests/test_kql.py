@@ -8010,6 +8010,27 @@ def test_tostring_timespan_kusto_text(spark, sf_dir):
      " | summarize (a, b) = percentiles(ts, 50, 100)"
      " | project v = format_datetime(a, 'yyyy-MM-dd HH:mm')",
      "2024-01-02 00:00"),
+    # weighted percentiles keep the value's type too: the
+    # percentilew-only summarize plan and, beside another aggregate,
+    # the fold
+    ("datatable(t:timespan, w:long) [1h, 1, 2h, 1] | summarize a = "
+     "percentilew(t, w, 10) | project v = tostring(a)", "01:00:00"),
+    ("datatable(t:timespan, w:long) [1h, 1, 2h, 1] | summarize (a, b) = "
+     "percentilesw(t, w, 10, 90) | project v = tostring(b)", "02:00:00"),
+    ("datatable(t:timespan, w:long) [1h, 1, 2h, 1] | summarize a = "
+     "percentilew(t, w, 90), n = count() | project v = tostring(a)",
+     "02:00:00"),
+    ("datatable(t:timespan, w:long) [1h, 1, 2h, 1] | summarize (a, b) = "
+     "percentilesw(t, w, 10, 90), n = count() | project v = tostring(b)",
+     "02:00:00"),
+    ("datatable(ts:datetime, w:long) [datetime(2024-01-01), 1, "
+     "datetime(2024-01-03), 1] | summarize (a, b) = percentilesw(ts, w, "
+     "50, 100) | project v = format_datetime(b, 'yyyy-MM-dd HH:mm')",
+     "2024-01-03 00:00"),
+    ("datatable(ts:datetime, w:long) [datetime(2024-01-01), 1, "
+     "datetime(2024-01-03), 1] | summarize a = percentilew(ts, w, 100), "
+     "n = count() | project v = format_datetime(a, 'yyyy-MM-dd HH:mm')",
+     "2024-01-03 00:00"),
 ])
 def test_kusto_typed_values(spark, sf_dir, query, expected):
     """Each expression carries its Kusto type: a real literal is a real
@@ -8018,6 +8039,21 @@ def test_kusto_typed_values(spark, sf_dir, query, expected):
     and summarize columns, so tostring prints Kusto's [d.]hh:mm:ss."""
     v = kql(spark, sf_dir, query).collect()[0]["v"]
     assert type(v) is type(expected) and v == expected
+
+
+def test_percentilesw_array_keeps_temporal_elements(spark, sf_dir):
+    """percentilesw_array over a datetime is an array of datetimes and
+    over a timespan an array of its µs carrier (both were doubles)."""
+    df = kql(spark, sf_dir, """
+      datatable(ts:datetime, t:timespan, w:long)
+        [datetime(2024-01-01), 1h, 1, datetime(2024-01-03), 2h, 1]
+      | summarize d = percentilesw_array(ts, w, 50, 100),
+                  s = percentilesw_array(t, w, 50, 100)""")
+    assert df.schema.simpleString() == \
+        "struct<d:array<timestamp>,s:array<bigint>>"
+    r = df.collect()[0]
+    assert [x.day for x in r["d"]] == [1, 3]
+    assert r["s"] == [3600000000, 7200000000]
 
 
 def test_date_difference_is_timespan(spark, sf_dir):

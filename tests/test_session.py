@@ -12,7 +12,8 @@ from azure_kusto_parquet_conv_spark.session import (
 def test_prepare_session_applies_runtime_confs_to_a_foreign_session(spark):
     """A session handed in from outside has none of the engine's runtime
     confs and no preparation marker; one prepare_session call sets them
-    all, among them the switch that lets AQE coalesce persisted plans."""
+    all, among them the switch that lets AQE coalesce persisted plans
+    and the one that keeps stage ids out of generated class names."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     try:
         for k in _RUNTIME_CONFS:
@@ -21,6 +22,8 @@ def test_prepare_session_applies_runtime_confs_to_a_foreign_session(spark):
         assert spark.conf.get(key) == "false"
         assert prepare_session(spark) is spark
         assert spark.conf.get(key) == "true"
+        assert spark.conf.get("spark.sql.codegen.useIdInClassName") == \
+            "false"
         assert {k: spark.conf.get(k) for k in _RUNTIME_CONFS} == \
             _RUNTIME_CONFS
         assert spark._aks_prepared
