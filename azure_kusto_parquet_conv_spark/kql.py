@@ -1533,9 +1533,8 @@ class _ExprParser:
         # pack('k1', v1, 'k2', v2, ...) -> dynamic property bag on
         # VARIANT (JSON round-trip through named_struct); keys must
         # be string literals, like Kusto's common usage
-        if len(args) < 2 or len(args) % 2:
-            raise ValueError(f"KQL: {fname}('k1', v1, ...) needs "
-                             f"key/value pairs")
+        if len(args) % 2:
+            raise ValueError(f"KQL: {_FNS[fname].usage}")
         for k in args[::2]:
             if not k.startswith("'"):
                 raise ValueError(
@@ -2190,9 +2189,7 @@ class _ExprParser:
         # rand() -> [0,1) real; rand(n) -> integer in [0, n)
         if len(args) == 0:
             return "rand()"
-        if len(args) == 1:
-            return (f"CAST(floor(rand() * ({args[0]})) AS BIGINT)")
-        raise ValueError("KQL: rand([n])")
+        return f"CAST(floor(rand() * ({args[0]})) AS BIGINT)"
 
     @_fn("parse_csv", 1, 1, None, "parse_csv(record)")
     def _fn_parse_csv(self, fname: str, args: list[str]) -> str:
@@ -3789,10 +3786,8 @@ class _ExprParser:
     @_fn("case", 3, None, slice(1, None, 2),
          "case(pred1, val1, ..., default) needs an odd number of args >= 3")
     def _fn_case(self, fname: str, args: list[str]) -> str:
-        if len(args) < 3 or len(args) % 2 == 0:
-            raise ValueError(
-                "KQL: case(pred1, val1, ..., default) needs an odd "
-                "number of args >= 3")
+        if len(args) % 2 == 0:
+            raise ValueError(f"KQL: {_FNS[fname].usage}")
         whens = "".join(
             f" WHEN {args[i]} THEN {args[i + 1]}"
             for i in range(0, len(args) - 1, 2))
@@ -3854,6 +3849,10 @@ class _ExprParser:
 
     @_fn("now", 0, 1, "datetime", "now([offset])")
     def _fn_now(self, fname: str, args: list[str]) -> str:
+        # now(offset): the current time plus a timespan (µs)
+        if args:
+            return (f"timestampadd(MICROSECOND, {args[0]}, "
+                    f"current_timestamp())")
         return "current_timestamp()"
 
     @_fn("ago", 1, 1, "datetime", "ago(timespan)")
@@ -13283,10 +13282,9 @@ class KqlCompiler:
         ``args`` holds the compiled SQL of each call argument."""
         import pandas as pd
 
-        if len(args) not in (3, 4):
-            raise ValueError(
-                "KQL: row_window_session(expr, max_from_first, "
-                "max_between [, restart])")
+        fn = _FNS["row_window_session"]
+        if not fn.lo <= len(args) <= fn.hi:
+            raise ValueError(f"KQL: {fn.usage}")
         expr_sql, mf_sql, mb_sql = args[:3]
         restart_sql = args[3] if len(args) == 4 else None
 

@@ -75,6 +75,9 @@ _RING = ('{"type":"LineString","coordinates":[[10,10],[11,10],[11,11],'
     ("print v = iif(1 > 0, 'y', 'n')", "y"),
     ("print v = min_of(3, 1, 2)", 1),
     ("print v = int(5)", 5),
+    # now(offset) is the query's current time plus the offset
+    ("print v = now(1h) - now() == 1h", True),
+    ("print v = now(-1d) - now() == -1d", True),
     ("print v = isnull(guid(null))", True),
     ("print v = convert_force(1, 'Kilonewton', 'Newton')", 1000.0),
     ("print v = convert_power(1, 'Kilowatt', 'Watt')", 1000.0),

@@ -32,6 +32,12 @@ def test_prepare_session_applies_runtime_confs_to_a_foreign_session(spark):
         prepare_session(spark)
 
 
+def _compiles(spark) -> int:
+    """Janino compilations so far in this JVM (CodegenMetrics)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def test_codegen_cache_holds_a_cycle_of_query_shapes(spark):
     """A long-lived session cycles through more query shapes than
     Spark's default codegen cache (100 classes) holds. Each plan below
@@ -40,19 +46,33 @@ def test_codegen_cache_holds_a_cycle_of_query_shapes(spark):
     class must come from the cache, with no Janino compilation."""
     key = "spark.sql.codegen.cache.maxEntries"
     assert spark.conf.get(key) == _BUILD_TIME_CONFS[key]
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-
-    def compiles() -> int:
-        return metrics.METRIC_COMPILATION_TIME().getCount()
 
     def cycle() -> int:
-        before = compiles()
+        before = _compiles(spark)
         for k in range(64):
             rows = spark.range(4).selectExpr(
                 f"id * {k + 2} + {k} AS x").collect()
             assert [r.x for r in rows] == [i * (k + 2) + k
                                            for i in range(4)]
-        return compiles() - before
+        return _compiles(spark) - before
 
     assert cycle() > 100  # the cycle outgrows Spark's default cache
     assert cycle() == 0
+
+
+def test_a_repeated_adaptive_query_compiles_no_class_again(spark, sf_dir):
+    """AQE re-plans q_tfidf's stages and numbers them in the order they
+    finish. With the stage id kept out of generated class names, a
+    second run of the same query finds every class in the codegen
+    cache; with it in the names, the re-planned stages compile again
+    under new names."""
+    from azure_kusto_parquet_conv_spark.queries import QUERIES
+
+    def run() -> int:
+        before = _compiles(spark)
+        QUERIES["q_tfidf"](spark, sf_dir).write.format("noop") \
+            .mode("overwrite").save()
+        return _compiles(spark) - before
+
+    run()
+    assert run() == 0
